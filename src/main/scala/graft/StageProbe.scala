@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Scratch per-stage profiler (not part of the driver contract): runs a
-  * declared query twice (cold, warm) and prints the WARM run's per-job /
-  * per-stage breakdown — wall duration, task count, input and shuffle
+  * declared query twice (cold, warm) and prints the WARM run's (with
+  * SPARK_GRAFT_PROBE_RUN=cold, only the COLD run's) per-job / per-stage
+  * breakdown — wall duration, task count, input and shuffle
   * bytes — so optimization targets the stage that actually costs (guide
   * §1). Usage: sbt "runMain graft.StageProbe llm_fuzzy_pairs ..." */
 object StageProbe {
@@ -69,7 +70,10 @@ object StageProbe {
       val recordCold = sys.env.get("SPARK_GRAFT_PROBE_RUN").contains("cold")
       if (recordCold) { stages.clear(); jobs.clear(); record = true }
       val cold = run()
-      if (!recordCold) { stages.clear(); jobs.clear(); record = true }
+      // cold mode stops recording here, so the warm run stays out of
+      // the printed profile
+      if (recordCold) record = false
+      else { stages.clear(); jobs.clear(); record = true }
       val warm = run()
       record = false
       println(f"\n=== $name cold=$cold%.2f s warm=$warm%.2f s ===")

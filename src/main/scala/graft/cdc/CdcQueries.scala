@@ -47,8 +47,8 @@ object CdcQueries {
     * DuckDB oracle can replay it declaratively. */
   val cdcConsumerState: Q = (s, d) => {
     val store = new ConsumerStateStore(s, tmp("graft-state"))
-    val feed = new ChangeFeed(s, d, store)
-    feed.pollAndDeliver("c1", limit = 100)(_.count())
+    scala.util.Using.resource(new ChangeFeed(s, d, store))(
+      _.pollAndDeliver("c1", limit = 100)(_.count()))
     val st = store.get("c1")
     import s.implicits._
     Seq((st.syncName, st.lastSyncVersion, st.lastProcessedId))
@@ -59,9 +59,10 @@ object CdcQueries {
     * cursor to (0, 0) for full re-delivery (server.js:424-451). */
   val cdcReset: Q = (s, d) => {
     val store = new ConsumerStateStore(s, tmp("graft-state"))
-    val feed = new ChangeFeed(s, d, store)
-    feed.pollAndDeliver("c1", limit = 50)(_.count())
-    feed.resetConsumer("c1")
+    scala.util.Using.resource(new ChangeFeed(s, d, store)) { feed =>
+      feed.pollAndDeliver("c1", limit = 50)(_.count())
+      feed.resetConsumer("c1")
+    }
     val st = store.get("c1")
     import s.implicits._
     Seq((st.syncName, st.lastSyncVersion, st.lastProcessedId))
@@ -212,6 +213,16 @@ object CdcQueries {
         .repartition(pages.size, col("__page"))
         .write.mode("overwrite").partitionBy("__page").parquet(tmp)
       fs.mkdirs(new org.apache.hadoop.fs.Path(src))
+      // each page dir must hold exactly one part file: staging only the
+      // first of several would silently drop the others' rows from the
+      // drained view
+      def onlyPart(pdir: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path = {
+        val parts = fs.listStatus(pdir).map(_.getPath)
+          .filter(_.getName.startsWith("part-"))
+        require(parts.length == 1,
+          s"graft aggview: $pdir holds ${parts.length} part files, expected 1")
+        parts.head
+      }
       val t0 = System.currentTimeMillis()
       pages.indices.foreach { i =>
         val pdir = new org.apache.hadoop.fs.Path(s"$tmp/__page=$i")
@@ -221,8 +232,7 @@ object CdcQueries {
         // a missing page would silently diverge the drained view
         if (fs.exists(dst)) fs.delete(dst, false)
         if (fs.exists(pdir)) {
-          val part = fs.listStatus(pdir)
-            .map(_.getPath).find(_.getName.startsWith("part-")).get
+          val part = onlyPart(pdir)
           if (!fs.rename(part, dst))
             throw new java.io.IOException(s"graft aggview: cannot stage $dst")
         } else {
@@ -231,8 +241,7 @@ object CdcQueries {
           val (lo, hi) = pages(i)
           TombstoneCdc.changedInvoicesOps(s, d, lo, hi)
             .coalesce(1).write.mode("overwrite").parquet(s"$base/stage-$i")
-          val part = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/stage-$i"))
-            .map(_.getPath).find(_.getName.startsWith("part-")).get
+          val part = onlyPart(new org.apache.hadoop.fs.Path(s"$base/stage-$i"))
           if (!fs.rename(part, dst))
             throw new java.io.IOException(s"graft aggview: cannot stage $dst")
           fs.delete(new org.apache.hadoop.fs.Path(s"$base/stage-$i"), true)
@@ -598,8 +607,8 @@ object CdcQueries {
     * lands on the 100th oldest change, the head is max(version). */
   val cdcFreshness: Q = (s, d) => {
     val store = new ConsumerStateStore(s, tmp("graft-state"))
-    val feed = new ChangeFeed(s, d, store)
-    feed.pollAndDeliver("c1", limit = 100)(_.count())
+    scala.util.Using.resource(new ChangeFeed(s, d, store))(
+      _.pollAndDeliver("c1", limit = 100)(_.count()))
     val st = store.get("c1")
     val cur = InvoiceCdc.currentVersion(s, d)
     import s.implicits._

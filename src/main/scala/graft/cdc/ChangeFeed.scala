@@ -1,7 +1,13 @@
 package graft.cdc
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** One delivered page plus the metadata the reference returns in its
   * HTTP response (fromVersion/toVersion/count/hasMore, server.js:276-299).
@@ -14,10 +20,74 @@ case class Page(data: DataFrame,
 
 /** Per-stage latency of one delivered poll — the reference's performance
   * summary block (readState / queryDatabase / saveBSON / updateState,
-  * server.js:286-293). */
+  * server.js:286-293). `indexBuildMs` is the time the poll spent
+  * (re)building the feed index for a new snapshot — 0 on an index hit —
+  * kept out of `queryMs` so a rebuild shows as its own stage. */
 case class PollTimings(readStateMs: Long, queryMs: Long,
-                       sinkMs: Long, commitMs: Long) {
-  def totalMs: Long = readStateMs + queryMs + sinkMs + commitMs
+                       sinkMs: Long, commitMs: Long,
+                       indexBuildMs: Long = 0L) {
+  def totalMs: Long = readStateMs + indexBuildMs + queryMs + sinkMs + commitMs
+}
+
+/** The files one feed snapshot was read from: for every file relation of
+  * the feed's plan, its root paths, its read options and (path, length,
+  * modification time) of each input file. Rows held in the plan itself
+  * (a local relation) are part of the plan the index was built from, so
+  * they add nothing to compare. */
+private final case class FeedSnapshot(sources: Seq[FeedSnapshot.Source]) {
+  /** One driver-side listing of every root: the snapshot is unchanged
+    * when it finds exactly the same files. */
+  def unchanged(spark: SparkSession): Boolean =
+    sources.forall(s => s.relist(spark) == s.files)
+}
+
+private object FeedSnapshot {
+  final case class Source(roots: Seq[Path], options: Map[String, String],
+                          files: Seq[(String, Long, Long)]) {
+    def relist(spark: SparkSession): Seq[(String, Long, Long)] =
+      listing(new InMemoryFileIndex(spark, roots, options, None))
+  }
+
+  private def listing(ix: InMemoryFileIndex): Seq[(String, Long, Long)] =
+    ix.allFiles().map(st =>
+      (st.getPath.toString, st.getLen, st.getModificationTime)).sorted
+
+  /** The snapshot `df` reads, from the listing its file relations already
+    * hold. None when a leaf's content cannot be pinned that way (e.g. a
+    * JDBC relation): such a feed rebuilds its index every poll. */
+  def of(df: DataFrame): Option[FeedSnapshot] = {
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    val sources = leaves.flatMap {
+      case r: LogicalRelation => r.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case ix: InMemoryFileIndex =>
+            Some(Source(ix.rootPaths, h.options, listing(ix)))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
+    val inPlan = leaves.count(_.isInstanceOf[LocalRelation])
+    if (sources.size + inPlan == leaves.size) Some(FeedSnapshot(sources))
+    else None
+  }
+}
+
+/** The collapsed feed of one snapshot: newest version per entity over
+  * (0, to], persisted in executor storage and range-sorted by
+  * (change_version, invoice_id), so a page lookup prunes the cached
+  * batches before the cursor. */
+private final class FeedIndex(val to: Long, val snapshot: Option[FeedSnapshot],
+                              val keys: DataFrame)
+
+private object FeedIndex {
+  /** Tags every build's cached plan, so two builds over the same plan
+    * (another ChangeFeed on the same dir, or a snapshot whose files
+    * changed under an unchanged `to`) never share or serve each other's
+    * cache entry. */
+  private val builds = new AtomicLong()
+  def nextBuild(): Long = builds.incrementAndGet()
 }
 
 /** The batch-incremental exactly-once poll protocol — the heart of the
@@ -36,6 +106,28 @@ case class PollTimings(readStateMs: Long, queryMs: Long,
   *  5. `hasMore` = raw page hit the limit (server.js:282) → caller loops
   *     immediately (consumer.js:34-37).
   *
+  * Polls are served from a FEED INDEX — the reference's page query reads
+  * a version-keyed change table (CHANGETABLE, storedprocedure.sql:16-26)
+  * rather than re-collapsing the feed per call, and so does this. The
+  * index is `changedEntities(0, to)`, newest version per entity, for the
+  * snapshot bound `to = currentVersion`; it is built once per feed
+  * snapshot and held in executor storage (persisted, never collected),
+  * so it scales with the entity count. Each poll checks the snapshot's
+  * identity with one driver-side listing — the path, length and
+  * modification time of every input file of the feed relations — and
+  * rebuilds the index (unpersisting the old one) when anything differs.
+  * The check and the build run under the instance's lock, so concurrent
+  * consumers build it once.
+  *
+  * The index is exact, not a cache that may lag: for a newest-version
+  * collapse, collapsing over `(lastSync - 1, to]` and then applying the
+  * resume filter equals collapsing over `(0, to]` and then applying it.
+  * An entity whose newest version is > lastSync - 1 has that same
+  * newest version in both; one whose newest is ≤ lastSync - 1 is absent
+  * from the first and fails the resume filter in the second. So pages,
+  * `hasMore`, `toVersion` and the committed cursor are the ones the
+  * per-poll collapse gave.
+  *
   * The bounded page CURSOR — ≤limit (version, id) pairs, the same rowset
   * the reference's recordset iteration holds in JS (server.js:154-168) —
   * is collected to the driver once; the resume filter runs inside the
@@ -43,9 +135,11 @@ case class PollTimings(readStateMs: Long, queryMs: Long,
   * locally. The document payload stays a DataFrame:
   * rehydration + nesting + the sink write are distributed, driven by the
   * collected key page as a broadcast. One pass over the changefeed per
-  * poll; per-poll work is O(limit) afterwards, independent of table size.
+  * snapshot; per-poll work is a lookup in the index afterwards.
+  * [[close]] releases the index.
   */
-class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore) {
+class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
+  extends AutoCloseable {
 
   /** The feed surface, overridable so generic feeds (e.g. with version
     * ties across entities) reuse the same poll protocol. Defaults bind to
@@ -66,32 +160,71 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore) {
     * permanently if ≥limit entities share one change_version: the page is
     * all duplicates, the cursor can't advance, yet hasMore stays true.
     * Filtering pre-limit keeps hasMore and cursor advancement consistent
-    * for any feed.) The deliberate `since - 1` overlap re-read is kept:
-    * it is what makes a crash between sink-write and offset-commit safe. */
+    * for any feed.) The deliberate `since - 1` overlap re-read stays
+    * covered — it is what makes a crash between sink-write and
+    * offset-commit safe — because the index holds the whole snapshot
+    * and the resume filter alone decides what is fresh. */
   def poll(syncName: String, limit: Int): Page = {
     require(limit > 0, s"page limit must be positive, got $limit " +
       "(limit = 0 would report hasMore on every empty page and stall drain)")
-    pollFrom(store.get(syncName), limit)
+    pollFrom(store.get(syncName), limit)._1
+  }
+
+  /** The feed index, guarded by this instance's lock. */
+  private var index: Option[FeedIndex] = None
+
+  /** The index of the feed's current snapshot, and the milliseconds spent
+    * building it (0 on a hit). On a hit the only work is the identity
+    * check: the roots of the files the index was built from, listed again
+    * and compared. On a miss the index is rebuilt from a fresh
+    * `currentVersion`, and its identity is the listing the build itself
+    * read, so files that change during a build make the next poll
+    * rebuild, never serve a stale page. */
+  private def currentIndex(): (FeedIndex, Long) = synchronized {
+    val t0 = System.nanoTime()
+    index.filter(_.snapshot.exists(_.unchanged(spark))) match {
+      case Some(ix) => (ix, 0L)
+      case None =>
+        val to = currentVersion
+        val feed = changedEntities(0L, to)
+        val keys = feed
+          .select(col("invoice_id"), col("change_version"),
+            lit(FeedIndex.nextBuild()).as("index_build"))
+          .repartitionByRange(spark.sparkContext.defaultParallelism,
+            col("change_version"), col("invoice_id"))
+          .sortWithinPartitions(col("change_version"), col("invoice_id"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try keys.count()
+        catch { case e: Throwable => keys.unpersist(); throw e }
+        val built = new FeedIndex(to, FeedSnapshot.of(feed), keys)
+        index.foreach(_.keys.unpersist())
+        index = Some(built)
+        (built, (System.nanoTime() - t0) / 1000000L)
+    }
   }
 
   /** The query stages of a poll, separated from the offset read so the
-    * timed flavor can attribute latency per stage. */
-  private def pollFrom(st: SyncState, limit: Int): Page = {
-    val overlapSince = if (st.lastSyncVersion > 0) st.lastSyncVersion - 1 else 0L
-    val to = currentVersion
-    // one job: collapse the feed, dedup the overlap, take the oldest-first
-    // key page (shared cursor ordering: InvoiceCdc.collectKeyPage) —
-    // every row that survives is fresh
+    * timed flavor can attribute latency per stage. Returns the page and
+    * the milliseconds spent building the feed index (0 on a hit). */
+  private def pollFrom(st: SyncState, limit: Int): (Page, Long) = {
+    val (ix, buildMs) = currentIndex()
+    // one job: the resume filter over the snapshot's collapsed feed,
+    // then the oldest-first key page (shared cursor ordering:
+    // InvoiceCdc.collectKeyPage) — every row that survives is fresh.
+    // Exact: it equals the per-poll collapse over (lastSync - 1, to]
+    // with the same filter (see the class doc), so the deliberate
+    // overlap re-read of step 2 needs no separate window here.
     val keys = InvoiceCdc.collectKeyPage(
-      changedEntities(overlapSince, to)
-        .filter(InvoiceCdc.resumeCursor(st.lastSyncVersion, st.lastProcessedId)),
+      ix.keys
+        .filter(InvoiceCdc.resumeCursor(st.lastSyncVersion, st.lastProcessedId))
+        .select(col("invoice_id"), col("change_version")),
       limit)
     val (lastV, lastId) = keys.lastOption
       .map { case (id, v) => (v, id) }
       .getOrElse((st.lastSyncVersion, st.lastProcessedId))
     val delivered = rehydrate(keys.toSeq)
-    Page(delivered, st.lastSyncVersion, to,
-      keys.length, keys.length == limit, lastV, lastId)
+    (Page(delivered, st.lastSyncVersion, ix.to,
+      keys.length, keys.length == limit, lastV, lastId), buildMs)
   }
 
   /** Poll → sink → commit-on-success (step 4). The cursor advances only if
@@ -104,7 +237,8 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore) {
 
   /** pollAndDeliver with the reference's per-stage performance summary
     * (server.js:286-293): how long the offset read, the page query, the
-    * sink write, and the offset commit each took. */
+    * sink write, and the offset commit each took — plus the feed index
+    * build when this poll saw a new snapshot. */
   def pollAndDeliverTimed(syncName: String, limit: Int)
                          (sink: DataFrame => Unit): (Page, PollTimings) = {
     require(limit > 0, s"page limit must be positive, got $limit " +
@@ -114,8 +248,8 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore) {
     val st = store.get(syncName)
     val readStateMs = ms(tState)
     val tQuery = System.nanoTime()
-    val page = pollFrom(st, limit)
-    val queryMs = ms(tQuery)
+    val (page, indexBuildMs) = pollFrom(st, limit)
+    val queryMs = ms(tQuery) - indexBuildMs
     var sinkMs = 0L
     var commitMs = 0L
     if (page.count > 0) {
@@ -126,7 +260,7 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore) {
       store.commit(syncName, page.lastVersion, page.lastId)
       commitMs = ms(tCommit)
     }
-    (page, PollTimings(readStateMs, queryMs, sinkMs, commitMs))
+    (page, PollTimings(readStateMs, queryMs, sinkMs, commitMs, indexBuildMs))
   }
 
   /** Drain the feed: poll until !hasMore (consumer.js:34-37 catch-up loop). */
@@ -146,4 +280,11 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore) {
 
   /** T7 — consumer reset → full replay from version 0 (server.js:424-451). */
   def resetConsumer(syncName: String): Unit = store.reset(syncName)
+
+  /** Release the feed index from executor storage. The feed stays usable:
+    * the next poll builds the index again. */
+  override def close(): Unit = synchronized {
+    index.foreach(_.keys.unpersist())
+    index = None
+  }
 }

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** S4-S6 — the versioned document sink.
@@ -48,60 +48,62 @@ object DocumentSink {
   /** Write one page of documents, segregating invalid records to the
     * error dir (server.js:34,40-42 error path). `valid` defaults to the
     * reference's implicit contract: a document must have an invoice
-    * number and a version. */
+    * number and a version.
+    *
+    * One pass over the page: the valid-row write counts the invalid rows
+    * it filters out through an [[org.apache.spark.sql.Observation]], and
+    * only a positive count re-derives them for the error dir — a clean
+    * page (the normal case) runs no second job and creates no error dir. */
   def writeVersioned(df: DataFrame, dir: String, errorDir: String): Unit = {
-    val stamped = withDocName(df).cache()
-    try {
-      // a tombstone is a VALID document despite its null payload — it is
-      // the delete notification itself (dropping it to the error dir
-      // would re-create the reference's ghost-state bug downstream)
-      // `<=>` (null-safe): a null is_tombstone must evaluate the OR to
-      // false, not SQL NULL — with `===`, a malformed row (null number
-      // AND null flag) fails BOTH filter(ok) and filter(!ok) and is
-      // silently dropped instead of landing in the error dir
-      val ok =
-        if (df.columns.contains("is_tombstone"))
-          (col("invoice_number").isNotNull || (col("is_tombstone") <=> 1)) &&
-            col("change_version").isNotNull
-        else
-          col("invoice_number").isNotNull && col("change_version").isNotNull
-      val valid = stamped.filter(ok)
-      val invalid = stamped.filter(!ok)
-      // co-locate each bucket's documents in one task before the
-      // partitioned write: one file per bucket dir instead of one per
-      // (task × bucket) — the small-files guard that matters at scale
-      // integral `div`, not `/`: Spark's `/` computes in double, which can
-      // cross a bucket boundary for versions beyond 2^53 and diverge from
-      // readVersion's exact Long division
-      val spark = df.sparkSession
-      val bucketed = valid.withColumn("version_bucket",
-          expr(s"change_version div $VersionsPerBucket"))
-        .repartition(col("version_bucket"))
-      if (graft.streaming.DirSwap.appendsAreManifest(spark, dir)) {
-        // MANIFEST protocol (round-14): each delivered page is one
-        // immutable generation listed by the keyed manifest — the
-        // object-store-sound sink layout. The key is fresh per call
-        // (delivery is at-least-once BY DESIGN here; exactly-once
-        // lives in [[deduplicated]]'s read-side collapse, same as the
-        // rename protocol's mode=append). Inside the generation the
-        // page is partitioned by a `vb_part` twin while
-        // `version_bucket` stays a DATA column, so [[readVersion]]
-        // prunes to one leaf dir per generation and plain reads need
-        // no partition discovery across generation roots.
-        graft.streaming.ManifestSwap.appendKeyed(spark, dir, "sink",
-          "page-" + java.util.UUID.randomUUID().toString) { gen =>
-          bucketed.withColumn("vb_part", col("version_bucket"))
-            .write.mode("overwrite").partitionBy("vb_part").json(gen)
-        }
-      } else
-        bucketed
-          .write.mode("append").partitionBy("version_bucket").json(dir)
-      if (!invalid.isEmpty)
-        invalid.write.mode("append").json(errorDir)
-    } finally stamped.unpersist()
-    // finally: a failing write is retried by the delivery protocol —
-    // leaking one cached page per retry would accumulate executor
-    // storage for the life of a long-running consumer
+    val stamped = withDocName(df)
+    // a tombstone is a VALID document despite its null payload — it is
+    // the delete notification itself (dropping it to the error dir
+    // would re-create the reference's ghost-state bug downstream)
+    // `<=>` (null-safe): a null is_tombstone must evaluate the OR to
+    // false, not SQL NULL — with `===`, a malformed row (null number
+    // AND null flag) fails BOTH filter(ok) and filter(!ok) and is
+    // silently dropped instead of landing in the error dir
+    val ok =
+      if (df.columns.contains("is_tombstone"))
+        (col("invoice_number").isNotNull || (col("is_tombstone") <=> 1)) &&
+          col("change_version").isNotNull
+      else
+        col("invoice_number").isNotNull && col("change_version").isNotNull
+    val invalidRows = Observation()
+    val valid = stamped
+      .observe(invalidRows, count(when(!ok, lit(1))).as("invalid"))
+      .filter(ok)
+    // co-locate each bucket's documents in one task before the
+    // partitioned write: one file per bucket dir instead of one per
+    // (task × bucket) — the small-files guard that matters at scale
+    // integral `div`, not `/`: Spark's `/` computes in double, which can
+    // cross a bucket boundary for versions beyond 2^53 and diverge from
+    // readVersion's exact Long division
+    val spark = df.sparkSession
+    val bucketed = valid.withColumn("version_bucket",
+        expr(s"change_version div $VersionsPerBucket"))
+      .repartition(col("version_bucket"))
+    if (graft.streaming.DirSwap.appendsAreManifest(spark, dir)) {
+      // MANIFEST protocol (round-14): each delivered page is one
+      // immutable generation listed by the keyed manifest — the
+      // object-store-sound sink layout. The key is fresh per call
+      // (delivery is at-least-once BY DESIGN here; exactly-once
+      // lives in [[deduplicated]]'s read-side collapse, same as the
+      // rename protocol's mode=append). Inside the generation the
+      // page is partitioned by a `vb_part` twin while
+      // `version_bucket` stays a DATA column, so [[readVersion]]
+      // prunes to one leaf dir per generation and plain reads need
+      // no partition discovery across generation roots.
+      graft.streaming.ManifestSwap.appendKeyed(spark, dir, "sink",
+        "page-" + java.util.UUID.randomUUID().toString) { gen =>
+        bucketed.withColumn("vb_part", col("version_bucket"))
+          .write.mode("overwrite").partitionBy("vb_part").json(gen)
+      }
+    } else
+      bucketed
+        .write.mode("append").partitionBy("version_bucket").json(dir)
+    if (invalidRows.get("invalid").asInstanceOf[Long] > 0L)
+      stamped.filter(!ok).write.mode("append").json(errorDir)
   }
 
   /** The sink's json leaf directories under the MANIFEST protocol:

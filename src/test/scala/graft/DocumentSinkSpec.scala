@@ -48,6 +48,15 @@ class DocumentSinkSpec extends SparkSpec {
     assert(bad.select("invoice_id").head().getLong(0) == 3L)
   }
 
+  test("S4: a clean page writes no error dir") {
+    val dir = tmpDir("sink")
+    val err = s"${tmpDir("sinkerr")}/errors"
+    DocumentSink.writeVersioned(samplePage().filter($"invoice_number".isNotNull), dir, err)
+    assert(DocumentSink.readBack(spark, dir).count() == 2)
+    assert(!new java.io.File(err).exists(),
+      "a page with no invalid row must not create the error dir")
+  }
+
   test("S6: read-by-version prunes to one bucket dir and row-filters inside") {
     val dir = tmpDir("sink")
     val err = tmpDir("e")
