@@ -49,6 +49,7 @@ object CdcQueries {
     val store = new ConsumerStateStore(s, tmp("graft-state"))
     scala.util.Using.resource(new ChangeFeed(s, d, store))(
       _.pollAndDeliver("c1", limit = 100)(_.count()))
+    InvoiceCdc.releaseState(s, d)
     val st = store.get("c1")
     import s.implicits._
     Seq((st.syncName, st.lastSyncVersion, st.lastProcessedId))
@@ -63,6 +64,7 @@ object CdcQueries {
       feed.pollAndDeliver("c1", limit = 50)(_.count())
       feed.resetConsumer("c1")
     }
+    InvoiceCdc.releaseState(s, d)
     val st = store.get("c1")
     import s.implicits._
     Seq((st.syncName, st.lastSyncVersion, st.lastProcessedId))
@@ -609,6 +611,7 @@ object CdcQueries {
     val store = new ConsumerStateStore(s, tmp("graft-state"))
     scala.util.Using.resource(new ChangeFeed(s, d, store))(
       _.pollAndDeliver("c1", limit = 100)(_.count()))
+    InvoiceCdc.releaseState(s, d)
     val st = store.get("c1")
     val cur = InvoiceCdc.currentVersion(s, d)
     import s.implicits._

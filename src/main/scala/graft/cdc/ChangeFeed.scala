@@ -21,8 +21,9 @@ case class Page(data: DataFrame,
 /** Per-stage latency of one delivered poll — the reference's performance
   * summary block (readState / queryDatabase / saveBSON / updateState,
   * server.js:286-293). `indexBuildMs` is the time the poll spent
-  * (re)building the feed index for a new snapshot — 0 on an index hit —
-  * kept out of `queryMs` so a rebuild shows as its own stage. */
+  * (re)building the feed index or the current-state index for a new
+  * snapshot — 0 when both were hits — kept out of `queryMs` so a rebuild
+  * shows as its own stage. */
 case class PollTimings(readStateMs: Long, queryMs: Long,
                        sinkMs: Long, commitMs: Long,
                        indexBuildMs: Long = 0L) {
@@ -132,11 +133,23 @@ private object FeedIndex {
   * the reference's recordset iteration holds in JS (server.js:154-168) —
   * is collected to the driver once; the resume filter runs inside the
   * page query (pre-limit, see poll), and only last-row bookkeeping runs
-  * locally. The document payload stays a DataFrame:
-  * rehydration + nesting + the sink write are distributed, driven by the
-  * collected key page as a broadcast. One pass over the changefeed per
-  * snapshot; per-poll work is a lookup in the index afterwards.
-  * [[close]] releases the index.
+  * locally. The document payload stays a DataFrame: the collected key
+  * page is broadcast into a lookup in InvoiceCdc's CURRENT-STATE INDEX —
+  * `orders` FULL OUTER JOIN the nested `lineitem`, one row per invoice id,
+  * hash-partitioned by id and persisted in executor storage — and the
+  * sink write runs that lookup. The state index has the same identity
+  * rule as the feed index (the relisted (path, length, mtime) of the two
+  * tables' files; any difference rebuilds it and unpersists the old
+  * one), but it lives in a registry per (SparkContext, dir), shared with
+  * TombstoneFeed polls and CdcPipeline micro-batches. It is exact: the
+  * FULL OUTER join keeps every id with a header, lines or both, so
+  * keeping ids with a header is the inner rehydration join on `orders`
+  * and the lines attached are the page-pruned nest's. One pass over the
+  * changefeed per feed snapshot and one over current state per state
+  * snapshot; per-poll work is two lookups afterwards. A poll that
+  * (re)builds either index reports that time as `indexBuildMs`.
+  * [[close]] releases the feed index; InvoiceCdc.releaseState releases
+  * the state index.
   */
 class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
   extends AutoCloseable {
@@ -205,7 +218,8 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
 
   /** The query stages of a poll, separated from the offset read so the
     * timed flavor can attribute latency per stage. Returns the page and
-    * the milliseconds spent building the feed index (0 on a hit). */
+    * the milliseconds spent building the feed index and the current-state
+    * index (0 when both were hits). */
   private def pollFrom(st: SyncState, limit: Int): (Page, Long) = {
     val (ix, buildMs) = currentIndex()
     // one job: the resume filter over the snapshot's collapsed feed,
@@ -222,9 +236,9 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
     val (lastV, lastId) = keys.lastOption
       .map { case (id, v) => (v, id) }
       .getOrElse((st.lastSyncVersion, st.lastProcessedId))
-    val delivered = rehydrate(keys.toSeq)
+    val (delivered, stateBuildMs) = InvoiceCdc.timeStateBuilds(rehydrate(keys.toSeq))
     (Page(delivered, st.lastSyncVersion, ix.to,
-      keys.length, keys.length == limit, lastV, lastId), buildMs)
+      keys.length, keys.length == limit, lastV, lastId), buildMs + stateBuildMs)
   }
 
   /** Poll → sink → commit-on-success (step 4). The cursor advances only if
@@ -237,8 +251,8 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
 
   /** pollAndDeliver with the reference's per-stage performance summary
     * (server.js:286-293): how long the offset read, the page query, the
-    * sink write, and the offset commit each took — plus the feed index
-    * build when this poll saw a new snapshot. */
+    * sink write, and the offset commit each took — plus the feed or
+    * state index build when this poll saw a new snapshot. */
   def pollAndDeliverTimed(syncName: String, limit: Int)
                          (sink: DataFrame => Unit): (Page, PollTimings) = {
     require(limit > 0, s"page limit must be positive, got $limit " +

@@ -37,8 +37,10 @@ import graft.Tables
   *
   * Scale notes (100 TB): identical plan shape to InvoiceCdc.pageQuery —
   * the operation rides the existing collapse shuffle as one extra
-  * column; the tombstone projection is per-row; the LEFT rehydration
-  * join broadcasts the ≤limit page exactly like the inner one did.
+  * column; the tombstone projection is per-row. The poll path rehydrates
+  * with a LEFT lookup in InvoiceCdc's current-state index (see its scale
+  * notes), so it shares one cached copy of current state with the
+  * invoice feed and the streaming pipeline.
   */
 object TombstoneCdc {
 
@@ -134,8 +136,8 @@ object TombstoneCdc {
   /** Rehydrate an already-collected ops key page — the ChangeFeed poll
     * path (see InvoiceCdc.rehydratePage): the ≤limit
     * (invoice_id, change_version, change_operation) cursor rows were
-    * collected driver-side, so document assembly joins against a
-    * literal broadcast page with one pass over the big tables. */
+    * collected driver-side, so document assembly is one lookup of the
+    * literal broadcast page in the current-state index. */
   def rehydrateTombstonePage(spark: SparkSession, dir: String,
                              keys: Seq[(Long, Long, String)]): DataFrame = {
     import spark.implicits._
@@ -145,19 +147,13 @@ object TombstoneCdc {
 
   /** DataFrame flavor of [[rehydrateTombstonePage]] — the page is any
     * bounded (invoice_id, change_version, change_operation) relation
-    * (typically a LocalTableScan of collected cursor rows). */
+    * (typically a LocalTableScan of collected cursor rows). A LEFT
+    * lookup in the current-state index (InvoiceCdc.withState): a deleted
+    * entity may be gone from current state, and one with lines but no
+    * header keeps its lines. */
   def rehydratePageDf(spark: SparkSession, dir: String,
-                      pageDf: DataFrame): DataFrame = {
-    val page = broadcast(pageDf)
-    val hdr = Tables.orders(spark, dir)
-    val lines = InvoiceCdc.nestedLines(Tables.lineitem(spark, dir)
-      .join(broadcast(pageDf.select(col("invoice_id").as("l_orderkey"))),
-        Seq("l_orderkey"), "left_semi"))
-    projectWithTombstones(
-      page
-        .join(hdr, page("invoice_id") === hdr("o_orderkey"), "left")
-        .join(broadcast(lines), Seq("invoice_id"), "left"))
-  }
+                      pageDf: DataFrame): DataFrame =
+    projectWithTombstones(InvoiceCdc.withState(spark, dir, pageDf))
 }
 
 /** The exactly-once poll protocol over a delete-carrying feed: same

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -126,13 +127,16 @@ object VectorFunctions {
         arity(SIMHASH, exprs, 1); SimHashSig(exprs(0))
       }))
 
-  /** Idempotently register the custom functions on a session (temp
-    * function registry; cluster-wide flavor = GraftExtensions via
-    * spark.sql.extensions). */
+  /** Register the custom functions on a session once (temp function
+    * registry; cluster-wide flavor = GraftExtensions via
+    * spark.sql.extensions). Names the registry already has are skipped,
+    * so a repeat call neither replaces them nor logs "replaced a
+    * previously registered function". */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 

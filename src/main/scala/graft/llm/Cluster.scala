@@ -42,11 +42,9 @@ object Cluster {
     * bound is ever hit the loop throws rather than returning a
     * half-converged labeling. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // r16 (advice): a non-positive bound throws BEFORE the eager
-    // round-1 compute + checkpoint below ever runs
-    if (maxIter <= 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
+    // a non-positive bound is a caller error (IllegalArgumentException),
+    // thrown BEFORE the eager round-1 compute + checkpoint below ever runs
+    require(maxIter > 0, s"connectedComponents needs maxIter > 0, got $maxIter")
     // materialize the edge list ONCE, before both the symmetrizing
     // union and the per-round joins: without the checkpoint every
     // downstream use would re-run the upstream pair pipeline (for

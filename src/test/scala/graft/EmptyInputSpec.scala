@@ -73,7 +73,7 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("connectedComponents maxIter<=0 throws without computing") {
-    assertThrows[IllegalStateException] {
+    assertThrows[IllegalArgumentException] {
       Cluster.connectedComponents(
         Seq((1L, 2L)).toDF("id_a", "id_b"), maxIter = 0)
     }

@@ -1,6 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import graft.functions.{BloomFunctions, VectorFunctions}
 
 /** The spark.sql.extensions injector must expose the native expressions
   * to a fresh session with zero per-session setup (pure-SQL clients). */
@@ -94,5 +102,45 @@ class GraftExtensionsSpec extends SparkSpec {
       active.foreach(SparkSession.setActiveSession)
       default.foreach(SparkSession.setDefaultSession)
     }
+  }
+
+  /** The messages logged anywhere while `body` runs. */
+  private def logged(body: => Unit): Seq[String] = {
+    val msgs = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("register-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = msgs.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(appender)
+    try body finally { root.removeAppender(appender); appender.stop() }
+    msgs.toArray(Array.empty[String]).toSeq
+  }
+
+  test("register twice: no function is replaced, nothing is logged, all resolve") {
+    val replaced = (m: String) => m.contains("replaced a previously registered function")
+    val reg = spark.sessionState.functionRegistry
+    // the capture sees the warning an unguarded re-registration logs
+    // (under a probe name, so the engine's own names never log it)
+    val probe = FunctionIdentifier("graft_register_probe")
+    val builder = VectorFunctions.builders.head._3
+    assert(logged {
+      reg.createOrReplaceTempFunction(probe.funcName, builder, "built-in")
+      reg.createOrReplaceTempFunction(probe.funcName, builder, "built-in")
+    }.exists(replaced))
+    reg.dropFunction(probe)
+
+    val msgs = logged {
+      VectorFunctions.register(spark); BloomFunctions.register(spark)
+      VectorFunctions.register(spark); BloomFunctions.register(spark)
+    }
+    assert(!msgs.exists(replaced), msgs.filter(replaced).mkString("\n"))
+    for ((n, _, _) <- VectorFunctions.builders ++ BloomFunctions.builders)
+      assert(reg.functionExists(FunctionIdentifier(n)), s"$n is not registered")
+    assert(spark.sql("SELECT graft_vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
+      .head().getDouble(0) == 11.0)
+    assert(spark.sql("SELECT size(graft_shingle_hashes(split('a b c d', ' '), 3))")
+      .head().getInt(0) == 2)
   }
 }
