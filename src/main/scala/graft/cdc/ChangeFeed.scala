@@ -2,12 +2,11 @@ package graft.cdc
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.{FeedSnapshot, SnapshotSlot}
 
 /** One delivered page plus the metadata the reference returns in its
   * HTTP response (fromVersion/toVersion/count/hasMore, server.js:276-299).
@@ -30,57 +29,11 @@ case class PollTimings(readStateMs: Long, queryMs: Long,
   def totalMs: Long = readStateMs + indexBuildMs + queryMs + sinkMs + commitMs
 }
 
-/** The files one feed snapshot was read from: for every file relation of
-  * the feed's plan, its root paths, its read options and (path, length,
-  * modification time) of each input file. Rows held in the plan itself
-  * (a local relation) are part of the plan the index was built from, so
-  * they add nothing to compare. */
-private final case class FeedSnapshot(sources: Seq[FeedSnapshot.Source]) {
-  /** One driver-side listing of every root: the snapshot is unchanged
-    * when it finds exactly the same files. */
-  def unchanged(spark: SparkSession): Boolean =
-    sources.forall(s => s.relist(spark) == s.files)
-}
-
-private object FeedSnapshot {
-  final case class Source(roots: Seq[Path], options: Map[String, String],
-                          files: Seq[(String, Long, Long)]) {
-    def relist(spark: SparkSession): Seq[(String, Long, Long)] =
-      listing(new InMemoryFileIndex(spark, roots, options, None))
-  }
-
-  private def listing(ix: InMemoryFileIndex): Seq[(String, Long, Long)] =
-    ix.allFiles().map(st =>
-      (st.getPath.toString, st.getLen, st.getModificationTime)).sorted
-
-  /** The snapshot `df` reads, from the listing its file relations already
-    * hold. None when a leaf's content cannot be pinned that way (e.g. a
-    * JDBC relation): such a feed rebuilds its index every poll. */
-  def of(df: DataFrame): Option[FeedSnapshot] = {
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    val sources = leaves.flatMap {
-      case r: LogicalRelation => r.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case ix: InMemoryFileIndex =>
-            Some(Source(ix.rootPaths, h.options, listing(ix)))
-          case _ => None
-        }
-        case _ => None
-      }
-      case _ => None
-    }
-    val inPlan = leaves.count(_.isInstanceOf[LocalRelation])
-    if (sources.size + inPlan == leaves.size) Some(FeedSnapshot(sources))
-    else None
-  }
-}
-
 /** The collapsed feed of one snapshot: newest version per entity over
   * (0, to], persisted in executor storage and range-sorted by
   * (change_version, invoice_id), so a page lookup prunes the cached
   * batches before the cursor. */
-private final class FeedIndex(val to: Long, val snapshot: Option[FeedSnapshot],
-                              val keys: DataFrame)
+private final class FeedIndex(val to: Long, val keys: DataFrame)
 
 private object FeedIndex {
   /** Tags every build's cached plan, so two builds over the same plan
@@ -117,8 +70,8 @@ private object FeedIndex {
   * identity with one driver-side listing — the path, length and
   * modification time of every input file of the feed relations — and
   * rebuilds the index (unpersisting the old one) when anything differs.
-  * The check and the build run under the instance's lock, so concurrent
-  * consumers build it once.
+  * The check and the build run under the index's lock (a
+  * graft.SnapshotSlot), so concurrent consumers build it once.
   *
   * The index is exact, not a cache that may lag: for a newest-version
   * collapse, collapsing over `(lastSync - 1, to]` and then applying the
@@ -183,8 +136,8 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
     pollFrom(store.get(syncName), limit)._1
   }
 
-  /** The feed index, guarded by this instance's lock. */
-  private var index: Option[FeedIndex] = None
+  /** The feed index of the current feed snapshot. */
+  private val index = new SnapshotSlot[FeedIndex](_.keys.unpersist())
 
   /** The index of the feed's current snapshot, and the milliseconds spent
     * building it (0 on a hit). On a hit the only work is the identity
@@ -193,27 +146,25 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
     * `currentVersion`, and its identity is the listing the build itself
     * read, so files that change during a build make the next poll
     * rebuild, never serve a stale page. */
-  private def currentIndex(): (FeedIndex, Long) = synchronized {
+  private def currentIndex(): (FeedIndex, Long) = {
     val t0 = System.nanoTime()
-    index.filter(_.snapshot.exists(_.unchanged(spark))) match {
-      case Some(ix) => (ix, 0L)
-      case None =>
-        val to = currentVersion
-        val feed = changedEntities(0L, to)
-        val keys = feed
-          .select(col("invoice_id"), col("change_version"),
-            lit(FeedIndex.nextBuild()).as("index_build"))
-          .repartitionByRange(spark.sparkContext.defaultParallelism,
-            col("change_version"), col("invoice_id"))
-          .sortWithinPartitions(col("change_version"), col("invoice_id"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try keys.count()
-        catch { case e: Throwable => keys.unpersist(); throw e }
-        val built = new FeedIndex(to, FeedSnapshot.of(feed), keys)
-        index.foreach(_.keys.unpersist())
-        index = Some(built)
-        (built, (System.nanoTime() - t0) / 1000000L)
+    var built = false
+    val ix = index.current(spark) {
+      built = true
+      val to = currentVersion
+      val feed = changedEntities(0L, to)
+      val keys = feed
+        .select(col("invoice_id"), col("change_version"),
+          lit(FeedIndex.nextBuild()).as("index_build"))
+        .repartitionByRange(spark.sparkContext.defaultParallelism,
+          col("change_version"), col("invoice_id"))
+        .sortWithinPartitions(col("change_version"), col("invoice_id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try keys.count()
+      catch { case e: Throwable => keys.unpersist(); throw e }
+      (new FeedIndex(to, keys), FeedSnapshot.of(feed))
     }
+    (ix, if (built) (System.nanoTime() - t0) / 1000000L else 0L)
   }
 
   /** The query stages of a poll, separated from the offset read so the
@@ -297,8 +248,5 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
 
   /** Release the feed index from executor storage. The feed stays usable:
     * the next poll builds the index again. */
-  override def close(): Unit = synchronized {
-    index.foreach(_.keys.unpersist())
-    index = None
-  }
+  override def close(): Unit = index.clear()
 }

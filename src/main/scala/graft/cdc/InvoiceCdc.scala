@@ -1,13 +1,11 @@
 package graft.cdc
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.Tables
+import graft.{FeedSnapshot, SnapshotRegistry, Tables}
 
 /** The reference's change-data-capture page query re-expressed as one
   * declarative Spark plan.
@@ -189,48 +187,8 @@ object InvoiceCdc {
   private val stateColumns =
     Seq("invoice_id", "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice", "lines")
 
-  /** The current-state index of one (SparkContext, dir), guarded by its
-    * own lock: the snapshot check and the build run under it, so
-    * concurrent polls and micro-batches build it once. */
-  private final class StateRegistry {
-    private var state: Option[(DataFrame, Option[FeedSnapshot])] = None
-
-    /** The index of the state's current snapshot. On a hit the only work
-      * is the relist of the two tables' roots; on a miss the index is
-      * rebuilt from fresh reads, its identity is the listing the build
-      * itself read, and the old index is unpersisted after the new one
-      * is built. */
-    def current(spark: SparkSession, dir: String): DataFrame = synchronized {
-      state.filter(_._2.exists(_.unchanged(spark))) match {
-        case Some((rows, _)) => rows
-        case None =>
-          val t0 = System.nanoTime()
-          val hdr = Tables.orders(spark, dir)
-          val lines = nestedLines(Tables.lineitem(spark, dir))
-          val joined = hdr.join(lines, hdr("o_orderkey") === lines("invoice_id"), "full_outer")
-          val rows = joined
-            .select(
-              coalesce(hdr("o_orderkey"), lines("invoice_id")).cast("long").as("invoice_id"),
-              col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_totalprice"),
-              col("lines"), lit(stateBuilds.incrementAndGet()).as("state_build"))
-            .repartition(spark.sparkContext.defaultParallelism, col("invoice_id"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          try rows.count()
-          catch { case e: Throwable => rows.unpersist(); throw e }
-          release()
-          state = Some((rows, FeedSnapshot.of(joined)))
-          buildMs.set(buildMs.get + (System.nanoTime() - t0) / 1000000L)
-          rows
-      }
-    }
-
-    def release(): Unit = synchronized {
-      state.foreach(_._1.unpersist())
-      state = None
-    }
-  }
-
-  private val registries = new ConcurrentHashMap[(SparkContext, String), StateRegistry]()
+  /** The current-state index of every (SparkContext, dir). */
+  private val stateIndexes = new SnapshotRegistry[DataFrame](_.unpersist())
 
   /** Current-state index builds in this JVM — each tags its cached plan,
     * so two builds (another SparkContext, or a snapshot whose files
@@ -244,11 +202,24 @@ object InvoiceCdc {
     * SparkContext: `invoice_id`, the header columns and nested `lines`,
     * one row per id that has a header, lines or both, plus the build tag.
     * Entries of a stopped SparkContext are dropped, never served. */
-  private[graft] def stateIndex(spark: SparkSession, dir: String): DataFrame = {
-    registries.keySet.removeIf(_._1.isStopped)
-    registries.computeIfAbsent((spark.sparkContext, dir), _ => new StateRegistry)
-      .current(spark, dir)
-  }
+  private[graft] def stateIndex(spark: SparkSession, dir: String): DataFrame =
+    stateIndexes.current(spark, dir) {
+      val t0 = System.nanoTime()
+      val hdr = Tables.orders(spark, dir)
+      val lines = nestedLines(Tables.lineitem(spark, dir))
+      val joined = hdr.join(lines, hdr("o_orderkey") === lines("invoice_id"), "full_outer")
+      val rows = joined
+        .select(
+          coalesce(hdr("o_orderkey"), lines("invoice_id")).cast("long").as("invoice_id"),
+          col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_totalprice"),
+          col("lines"), lit(stateBuilds.incrementAndGet()).as("state_build"))
+        .repartition(spark.sparkContext.defaultParallelism, col("invoice_id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try rows.count()
+      catch { case e: Throwable => rows.unpersist(); throw e }
+      buildMs.set(buildMs.get + (System.nanoTime() - t0) / 1000000L)
+      (rows, FeedSnapshot.of(joined))
+    }
 
   private def stateRows(spark: SparkSession, dir: String): DataFrame =
     stateIndex(spark, dir).select(stateColumns.map(col): _*)
@@ -265,7 +236,7 @@ object InvoiceCdc {
   /** Unpersist the current-state index of `dir` on the session's
     * SparkContext. Lookups stay usable: the next one builds it again. */
   def releaseState(spark: SparkSession, dir: String): Unit =
-    Option(registries.get((spark.sparkContext, dir))).foreach(_.release())
+    stateIndexes.clear(spark, dir)
 
   /** Rows of a bounded `page` keyed by `invoice_id` joined to the current
     * state of their id, keeping only ids that have a header — the inner

@@ -246,29 +246,25 @@ object Curate {
     * `minShared` distinct word `n`-grams with the eval set — the
     * any-collision long-n-gram method, which catches PARTIAL overlap
     * (an eval question embedded in a larger page) that the exact-
-    * fingerprint [[decontaminate]] misses. Scale shape: the eval side
-    * collapses to a distinct gram set and BROADCASTS (an eval set is
-    * small by definition); the corpus side explodes grams at the scan
-    * into the broadcast join, and only the contaminated ids — bounded
-    * by the leak count, not the corpus — reach a shuffle. */
+    * fingerprint [[decontaminate]] misses. Both sides become gram tables
+    * of 64-bit gram hashes at the scan; the grams the eval set shares
+    * with the corpus are checked for hash collisions first, and the join
+    * is [[GramLayer.dropContaminated]], the one the declared key runs. */
   def decontaminateNgrams(corpus: DataFrame, evalSet: DataFrame,
                           idCol: String, textCol: String,
                           n: Int = 8, minShared: Long = 1L,
                           evalTextCol: Option[String] = None): DataFrame = {
     require(n > 0 && minShared >= 1)
-    def grams(df: DataFrame, text: String, cols: Column*) = df.select(
-      (cols :+ explode(array_distinct(TextOps.ngrams(col(text), n)))
-        .as("gram")): _*)
     // eval sets often name their text differently (question/prompt);
     // default to the corpus column name
-    val evalGrams = grams(evalSet,
-      evalTextCol.getOrElse(textCol)).select("gram").distinct()
-    val bad = grams(graft.Tables.widen(corpus), textCol, col(idCol))
-      .join(broadcast(evalGrams), "gram")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-      .select(idCol)
-    corpus.join(bad, Seq(idCol), "left_anti")
+    val evalText = evalTextCol.getOrElse(textCol)
+    val evalGrams = GramLayer.gramRows(evalSet, evalText, n)
+    GramLayer.requireNoCollisions(GramLayer.gramPairs(corpus, textCol, n)
+      .union(GramLayer.gramPairs(evalSet, evalText, n))
+      .join(broadcast(evalGrams.select("gram_hash").distinct()), "gram_hash"))
+    GramLayer.dropContaminated(corpus,
+      GramLayer.gramRows(graft.Tables.widen(corpus), textCol, n, idCol),
+      evalGrams, idCol, minShared)
   }
 
   /** Bloom-filter decontamination — the scale path of [[decontaminate]]

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -547,11 +548,14 @@ object LlmQueries {
 
   /** N6''+ — n-gram decontamination: any document sharing an 8-gram
     * with the eval set (every 97th doc) is removed — catches partial
-    * overlap the fingerprint method misses. */
+    * overlap the fingerprint method misses. Both sides are the gram
+    * layer's 8-gram table, joined by [[GramLayer.dropContaminated]], the
+    * core of [[Curate.decontaminateNgrams]]. */
   val decontaminateNgramQ: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-    Curate.decontaminateNgrams(docs,
-      docs.filter(pmod(col("doc_id"), lit(97)) === 0), "doc_id", "text")
+    val layer = GramLayer.of(s, d)
+    val g8 = layer.grams(8)
+    GramLayer.dropContaminated(layer.docs, g8,
+        g8.filter(pmod(col("doc_id"), lit(97)) === 0), "doc_id", 1L)
       .select("doc_id").orderBy("doc_id")
   }
 
@@ -1032,15 +1036,22 @@ object LlmQueries {
       .orderBy("lang")
 
   /** N4'' — corpus-frequent 3-grams (C4-style boilerplate detection):
-    * doc-frequency of each distinct 3-gram, top-20. The aggregate is
-    * partial (map-side combine) on the gram key; the final top-20 is a
-    * TakeOrderedAndProject, k rows to the driver. */
-  val boilerplateNgrams: Q = (s, d) =>
-    Tables.widen(Tables.documents(s, d))
-      .select(explode(array_distinct(TextOps.ngrams(col("text"), 3))).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("doc_freq"))
+    * doc-frequency of each distinct 3-gram, top-20. The aggregate
+    * runs on the gram layer's trigram hashes ([[GramLayer]]); only
+    * grams reaching the 20th-highest doc_freq (boundary ties included,
+    * so the `gram` tie-break stays exact) join back to their strings. */
+  val boilerplateNgrams: Q = (s, d) => {
+    val layer = GramLayer.of(s, d)
+    val freq = layer.grams(3).filter(col("first_in_doc"))
+      .groupBy(col("gram_hash")).agg(count(lit(1)).as("doc_freq"))
+    val cut = freq.orderBy(col("doc_freq").desc).limit(20)
+      .agg(min(col("doc_freq")).as("__cut"))
+    freq.crossJoin(broadcast(cut)).filter(col("doc_freq") >= col("__cut"))
+      .join(layer.strings(3), "gram_hash")
       .orderBy(col("doc_freq").desc, col("gram"))
+      .select("gram", "doc_freq")
       .limit(20)
+  }
 
   /** N3''' — IVF assignment: every vector to its best of 8 fixed
     * centroids (vectors 0-7), with per-cell counts and cosine mass —
@@ -1249,22 +1260,18 @@ object LlmQueries {
     * half of the corpus and the odd-id half is scored by its average
     * add-one-smoothed bigram credit, `round(1e4·Σ(1+c(g))/n)`. Kept
     * integer-rational (raw counts, no log) so the oracle hashes
-    * exactly — the [[tfidfTopTermQ]] determinism rule. Scale: the gram
-    * table stages once (localCheckpoint — it feeds both the count
-    * aggregate and the scoring probe, the tfidf_top_term lesson); the
-    * count aggregate and the scoring join both shuffle on the gram —
-    * bigram vocabulary is high-cardinality, spreads evenly, and is NOT
-    * assumed broadcastable (at 100 TB it is billions of types); the
-    * per-doc fold is a partial sum. */
+    * exactly — the [[tfidfTopTermQ]] determinism rule. Scale: both
+    * halves read the gram layer's bigram table ([[GramLayer]]); the
+    * count aggregate and the scoring join key on the gram hash, which
+    * the table is already partitioned by — bigram vocabulary is
+    * high-cardinality and NOT assumed broadcastable (at 100 TB it is
+    * billions of types); the per-doc fold is a partial sum. */
   val lmScoreQ: Q = (s, d) => {
-    val grams = Tables.widen(Tables.documents(s, d))
-      .select(col("doc_id"),
-        explode(TextOps.ngrams(col("text"), 2)).as("gram"))
-      .localCheckpoint(true)
+    val grams = GramLayer.of(s, d).grams(2)
     val counts = grams.filter(pmod(col("doc_id"), lit(2)) === 0)
-      .groupBy(col("gram")).agg(count(lit(1)).as("c"))
+      .groupBy(col("gram_hash")).agg(count(lit(1)).as("c"))
     grams.filter(pmod(col("doc_id"), lit(2)) === 1)
-      .join(counts, Seq("gram"), "left")
+      .join(counts, Seq("gram_hash"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("c"), lit(0L)) + 1).as("credit"))
@@ -1578,17 +1585,15 @@ object LlmQueries {
     * distinct bigram types over total bigram tokens per source — the
     * corpus-health probe that catches template-generated or
     * over-duplicated sources before training (a low TTR source is
-    * boilerplate; Self-BLEU's cheap cousin). Scale: gram explosion at
-    * the scan; the distinct count is a two-phase (source, gram)
-    * aggregate — high-cardinality shuffle key, spreads evenly; no
-    * window anywhere. */
+    * boilerplate; Self-BLEU's cheap cousin). Scale: the gram layer's
+    * bigram table ([[GramLayer]]); the distinct count is a two-phase
+    * (source, gram hash) aggregate — high-cardinality key, spreads
+    * evenly; no window anywhere. */
   val diversityNgramQ: Q = (s, d) =>
-    Tables.widen(Tables.documents(s, d))
-      .select(col("source"),
-        explode(TextOps.ngrams(col("text"), 2)).as("gram"))
+    GramLayer.of(s, d).grams(2)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_grams"),
-        countDistinct(col("gram")).as("n_types"))
+        countDistinct(col("gram_hash")).as("n_types"))
       .withColumn("ttr_e4",
         round(lit(10000.0) * col("n_types") / col("n_grams")).cast("long"))
       .orderBy("source")
@@ -1600,28 +1605,23 @@ object LlmQueries {
     * is the [[RelationalOps.aggCorrManual]] recipe: the log points are
     * e6-quantized integers, the sufficient statistics are EXACT
     * decimal sums, and only the final slope formula runs in double —
-    * bit-identical across engines. Scale: the (source, gram) frequency
-    * table is a two-phase aggregate; the per-source rank rides
-    * [[graft.ops.ScalableRank]] (banded, bounded per-task sorts — a
-    * plain per-source window would serialize a source's whole
-    * vocabulary through one task); the fit consumes five sums per
-    * source. */
+    * bit-identical across engines. Scale: no vocabulary sort — the
+    * grams of frequency f hold the consecutive ranks after every gram
+    * of higher frequency, whatever their tie order, so a window over
+    * each source's frequency-of-frequencies histogram (≤ √(2·tokens)
+    * rows) gives the same (rank, f) points; the fit takes five sums. */
   val tokenZipfQ: Q = (s, d) => {
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    // stage the frequency table once (localCheckpoint — the tfidf
-    // lesson): ScalableRank consumes it THREE times (band-boundary
-    // sampling, the ranked pass, the count table), and each would
-    // otherwise re-run the tokenize + (source, gram) aggregate
-    val freq = Tables.widen(Tables.documents(s, d))
+    val hist = GramLayer.of(s, d).grams(2)
+      .groupBy(col("source"), col("gram_hash")).agg(count(lit(1)).as("f"))
+      .groupBy(col("source"), col("f")).agg(count(lit(1)).as("__nf"))
+      .withColumn("__upto", sum(col("__nf")).over(
+        Window.partitionBy(col("source")).orderBy(col("f").desc)))
+    val pts = hist.select(col("source"), col("f"),
+        explode(sequence(col("__upto") - col("__nf") + 1, col("__upto"))).as("__r"))
       .select(col("source"),
-        explode(TextOps.ngrams(col("text"), 2)).as("gram"))
-      .groupBy(col("source"), col("gram")).agg(count(lit(1)).as("f"))
-      .localCheckpoint(true)
-    val ranked = graft.ops.ScalableRank.withRank(freq, col("source"),
-      Seq(col("f").desc, col("gram").asc), -col("f"), "__r", "__n")
-    val pts = ranked.select(col("source"),
-      round(lit(1000000.0) * log(col("__r"))).cast("long").as("lx"),
-      round(lit(1000000.0) * log(col("f"))).cast("long").as("ly"))
+        round(lit(1000000.0) * log(col("__r"))).cast("long").as("lx"),
+        round(lit(1000000.0) * log(col("f"))).cast("long").as("ly"))
     pts.groupBy(col("source")).agg(
         count(lit(1)).cast("double").as("n"),
         sum(col("lx").cast(dec)).cast("double").as("sx"),
@@ -1713,18 +1713,15 @@ object LlmQueries {
     * doc_id order — the ingest order) is this document. The
     * "new content vs recombination" curation signal: a crawl that
     * stops contributing novel grams has been exhausted; a duplicate's
-    * novelty is exactly 0. Scale: one gram explode, a (gram) shuffle
-    * for the min-doc aggregate (high-cardinality), a gram-keyed join
-    * back, a doc-keyed fold — all linear; the (doc, gram) table
-    * stages once (the tfidf lesson). */
+    * novelty is exactly 0. Scale: the distinct (doc, gram) rows of the
+    * gram layer's bigram table ([[GramLayer]]), a min-doc aggregate and
+    * a join back on the gram hash the table is partitioned by, a
+    * doc-keyed fold — all linear. */
   val ngramNoveltyQ: Q = (s, d) => {
-    val dg = Tables.widen(Tables.documents(s, d))
-      .select(col("doc_id"),
-        explode(array_distinct(TextOps.ngrams(col("text"), 2))).as("gram"))
-      .localCheckpoint(true)
-    val first = dg.groupBy(col("gram"))
+    val dg = GramLayer.of(s, d).grams(2).filter(col("first_in_doc"))
+    val first = dg.groupBy(col("gram_hash"))
       .agg(min(col("doc_id")).as("__first"))
-    dg.join(first, "gram")
+    dg.join(first, "gram_hash")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum((col("__first") === col("doc_id")).cast("long")).as("n_novel"))

@@ -267,16 +267,19 @@ class MaterializedView(spark: SparkSession, dir: String, path: String,
       // generation dirs carry `bucket` IN the data files (the
       // bucket_part twin was the partition column); cast long→int and
       // re-order for exact schema parity with the dir-mode read
-      val cols = flatView(None).schema.map(_.name)
       spark.read.parquet(dirs.toIndexedSeq: _*)
         .withColumn("bucket", col("bucket").cast("int"))
-        .select(cols.map(col): _*)
+        .select(MaterializedView.Columns.map(col): _*)
     } else
       spark.read.option("basePath", path).parquet(dirs.toIndexedSeq: _*)
   }
 }
 
 object MaterializedView {
+  /** The view's columns in `flatView`'s order: a read names them without
+    * planning `flatView`, whose two table reads each infer a schema. */
+  private val Columns = Seq("invoice_id", "customer_key", "invoice_date", "status",
+    "line_no", "part_key", "qty", "price_cents", "bucket")
   private val BakName = """bucket=(\d+)\.mview-bak""".r
   private val DataName = """bucket=\d+""".r
   /** Test-only failpoint: crash [[MaterializedView.refresh]] between
