@@ -1047,7 +1047,7 @@ object LlmQueries {
     val cut = freq.orderBy(col("doc_freq").desc).limit(20)
       .agg(min(col("doc_freq")).as("__cut"))
     freq.crossJoin(broadcast(cut)).filter(col("doc_freq") >= col("__cut"))
-      .join(layer.strings(3), "gram_hash")
+      .hint("shuffle_hash").join(layer.strings(3), "gram_hash")
       .orderBy(col("doc_freq").desc, col("gram"))
       .select("gram", "doc_freq")
       .limit(20)
@@ -1271,7 +1271,7 @@ object LlmQueries {
     val counts = grams.filter(pmod(col("doc_id"), lit(2)) === 0)
       .groupBy(col("gram_hash")).agg(count(lit(1)).as("c"))
     grams.filter(pmod(col("doc_id"), lit(2)) === 1)
-      .join(counts, Seq("gram_hash"), "left")
+      .join(counts.hint("shuffle_hash"), Seq("gram_hash"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("c"), lit(0L)) + 1).as("credit"))
@@ -1721,7 +1721,7 @@ object LlmQueries {
     val dg = GramLayer.of(s, d).grams(2).filter(col("first_in_doc"))
     val first = dg.groupBy(col("gram_hash"))
       .agg(min(col("doc_id")).as("__first"))
-    dg.join(first, "gram_hash")
+    dg.join(first.hint("shuffle_hash"), "gram_hash")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum((col("__first") === col("doc_id")).cast("long")).as("n_novel"))
