@@ -7,6 +7,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.storage.StorageLevel
 
 /** The files one snapshot of a plan was read from: for every file
   * relation of the plan, its root paths, its read options and (path,
@@ -82,6 +83,17 @@ private[graft] final class SnapshotSlot[V](release: V => Unit) {
   def clear(): Unit = synchronized {
     entry.foreach(e => release(e._1))
     entry = None
+  }
+}
+
+private[graft] object SnapshotSlot {
+  /** `df` persisted in executor storage and computed once, so a value is
+    * whole when it is served; a failed build leaves nothing cached. */
+  def materialize(df: DataFrame): DataFrame = {
+    val out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try out.count()
+    catch { case e: Throwable => out.unpersist(); throw e }
+    out
   }
 }
 

@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.{FeedSnapshot, SnapshotSlot}
 
@@ -153,15 +152,12 @@ class ChangeFeed(spark: SparkSession, dir: String, store: ConsumerStateStore)
       built = true
       val to = currentVersion
       val feed = changedEntities(0L, to)
-      val keys = feed
+      val keys = SnapshotSlot.materialize(feed
         .select(col("invoice_id"), col("change_version"),
           lit(FeedIndex.nextBuild()).as("index_build"))
         .repartitionByRange(spark.sparkContext.defaultParallelism,
           col("change_version"), col("invoice_id"))
-        .sortWithinPartitions(col("change_version"), col("invoice_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try keys.count()
-      catch { case e: Throwable => keys.unpersist(); throw e }
+        .sortWithinPartitions(col("change_version"), col("invoice_id")))
       (new FeedIndex(to, keys), FeedSnapshot.of(feed))
     }
     (ix, if (built) (System.nanoTime() - t0) / 1000000L else 0L)

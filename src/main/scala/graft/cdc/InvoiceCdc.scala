@@ -4,8 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import graft.{FeedSnapshot, SnapshotRegistry, Tables}
+import graft.{FeedSnapshot, SnapshotRegistry, SnapshotSlot, Tables}
 
 /** The reference's change-data-capture page query re-expressed as one
   * declarative Spark plan.
@@ -208,15 +207,12 @@ object InvoiceCdc {
       val hdr = Tables.orders(spark, dir)
       val lines = nestedLines(Tables.lineitem(spark, dir))
       val joined = hdr.join(lines, hdr("o_orderkey") === lines("invoice_id"), "full_outer")
-      val rows = joined
+      val rows = SnapshotSlot.materialize(joined
         .select(
           coalesce(hdr("o_orderkey"), lines("invoice_id")).cast("long").as("invoice_id"),
           col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_totalprice"),
           col("lines"), lit(stateBuilds.incrementAndGet()).as("state_build"))
-        .repartition(spark.sparkContext.defaultParallelism, col("invoice_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try rows.count()
-      catch { case e: Throwable => rows.unpersist(); throw e }
+        .repartition(spark.sparkContext.defaultParallelism, col("invoice_id")))
       buildMs.set(buildMs.get + (System.nanoTime() - t0) / 1000000L)
       (rows, FeedSnapshot.of(joined))
     }

@@ -6,9 +6,8 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.{FeedSnapshot, SnapshotRegistry, Tables}
+import graft.{FeedSnapshot, SnapshotRegistry, SnapshotSlot, Tables}
 import graft.functions.VectorFunctions
 
 /** The word n-grams of one snapshot of a corpus's `documents`, tokenized
@@ -75,14 +74,8 @@ final class GramLayer private (
     * in storage. */
   private def persisted(df: DataFrame): DataFrame =
     if (released) df
-    else {
-      val out = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-          col("gram_hash"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try out.count()
-      catch { case e: Throwable => out.unpersist(); throw e }
-      out
-    }
+    else SnapshotSlot.materialize(
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism, col("gram_hash")))
 
   private def release(): Unit = synchronized {
     released = true

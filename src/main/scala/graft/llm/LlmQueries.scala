@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -1598,6 +1597,10 @@ object LlmQueries {
         round(lit(10000.0) * col("n_types") / col("n_grams")).cast("long"))
       .orderBy("source")
 
+  /** Most ranks one row of [[tokenZipfQ]]'s rank expansion covers, so a
+    * large block (the hapaxes) spreads over many tasks. */
+  private val ZipfRankChunk = 1L << 20
+
   /** N4++++++ — per-source ZIPF SLOPE of the bigram rank-frequency
     * curve: least-squares fit of ln(freq) on ln(rank), the power-law
     * exponent corpus-health check (natural text sits near −1; a
@@ -1607,18 +1610,31 @@ object LlmQueries {
     * decimal sums, and only the final slope formula runs in double —
     * bit-identical across engines. Scale: no vocabulary sort — the
     * grams of frequency f hold the consecutive ranks after every gram
-    * of higher frequency, whatever their tie order, so a window over
-    * each source's frequency-of-frequencies histogram (≤ √(2·tokens)
-    * rows) gives the same (rank, f) points; the fit takes five sums. */
+    * of higher frequency, whatever their tie order, so each source's
+    * frequency-of-frequencies histogram gives the same (rank, f)
+    * points. The histogram has at most √(2·tokens) rows per source
+    * (distinct frequencies sum to at most the token count), so its
+    * running sums are taken on the driver, and each block of ranks is
+    * cut into chunks of at most [[ZipfRankChunk]] before the points are
+    * expanded back across the cluster; the fit takes five sums. */
   val tokenZipfQ: Q = (s, d) => {
+    import s.implicits._
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
     val hist = GramLayer.of(s, d).grams(2)
       .groupBy(col("source"), col("gram_hash")).agg(count(lit(1)).as("f"))
-      .groupBy(col("source"), col("f")).agg(count(lit(1)).as("__nf"))
-      .withColumn("__upto", sum(col("__nf")).over(
-        Window.partitionBy(col("source")).orderBy(col("f").desc)))
-    val pts = hist.select(col("source"), col("f"),
-        explode(sequence(col("__upto") - col("__nf") + 1, col("__upto"))).as("__r"))
+      .groupBy(col("source"), col("f")).agg(count(lit(1)).as("nf"))
+      .as[(String, Long, Long)].collect()
+    val chunks = hist.groupBy(_._1).toSeq.flatMap { case (src, rows) =>
+      var upTo = 0L
+      rows.sortBy(-_._2).toSeq.flatMap { case (_, f, nf) =>
+        val lo = upTo + 1
+        upTo += nf
+        (lo to upTo by ZipfRankChunk).map(a => (src, f, a, math.min(a + ZipfRankChunk - 1, upTo)))
+      }
+    }
+    val pts = chunks.toDF("source", "f", "__lo", "__hi")
+      .select(col("source"), col("f"),
+        explode(sequence(col("__lo"), col("__hi"))).as("__r"))
       .select(col("source"),
         round(lit(1000000.0) * log(col("__r"))).cast("long").as("lx"),
         round(lit(1000000.0) * log(col("f"))).cast("long").as("ly"))
