@@ -548,8 +548,7 @@ object LlmQueries {
   /** N6''+ — n-gram decontamination: any document sharing an 8-gram
     * with the eval set (every 97th doc) is removed — catches partial
     * overlap the fingerprint method misses. Both sides are the gram
-    * layer's 8-gram table, joined by [[GramLayer.dropContaminated]], the
-    * core of [[Curate.decontaminateNgrams]]. */
+    * layer's 8-gram table ([[GramLayer.dropContaminated]]). */
   val decontaminateNgramQ: Q = (s, d) => {
     val layer = GramLayer.of(s, d)
     val g8 = layer.grams(8)
@@ -1035,10 +1034,9 @@ object LlmQueries {
       .orderBy("lang")
 
   /** N4'' — corpus-frequent 3-grams (C4-style boilerplate detection):
-    * doc-frequency of each distinct 3-gram, top-20. The aggregate
-    * runs on the gram layer's trigram hashes ([[GramLayer]]); only
-    * grams reaching the 20th-highest doc_freq (boundary ties included,
-    * so the `gram` tie-break stays exact) join back to their strings. */
+    * doc-frequency of each distinct 3-gram over the gram layer's hashes
+    * ([[GramLayer]]), top-20; only grams at or above the 20th doc_freq
+    * (ties included: the `gram` tie-break stays exact) get strings. */
   val boilerplateNgrams: Q = (s, d) => {
     val layer = GramLayer.of(s, d)
     val freq = layer.grams(3).filter(col("first_in_doc"))
@@ -1261,10 +1259,9 @@ object LlmQueries {
     * integer-rational (raw counts, no log) so the oracle hashes
     * exactly — the [[tfidfTopTermQ]] determinism rule. Scale: both
     * halves read the gram layer's bigram table ([[GramLayer]]); the
-    * count aggregate and the scoring join key on the gram hash, which
-    * the table is already partitioned by — bigram vocabulary is
-    * high-cardinality and NOT assumed broadcastable (at 100 TB it is
-    * billions of types); the per-doc fold is a partial sum. */
+    * count aggregate and the scoring join stay inside its gram-hash
+    * partitioning — bigram vocabulary is NOT assumed broadcastable (at
+    * 100 TB it is billions of types); the per-doc fold is a partial sum. */
   val lmScoreQ: Q = (s, d) => {
     val grams = GramLayer.of(s, d).grams(2)
     val counts = grams.filter(pmod(col("doc_id"), lit(2)) === 0)
@@ -1597,10 +1594,6 @@ object LlmQueries {
         round(lit(10000.0) * col("n_types") / col("n_grams")).cast("long"))
       .orderBy("source")
 
-  /** Most ranks one row of [[tokenZipfQ]]'s rank expansion covers, so a
-    * large block (the hapaxes) spreads over many tasks. */
-  private val ZipfRankChunk = 1L << 20
-
   /** N4++++++ — per-source ZIPF SLOPE of the bigram rank-frequency
     * curve: least-squares fit of ln(freq) on ln(rank), the power-law
     * exponent corpus-health check (natural text sits near −1; a
@@ -1608,15 +1601,12 @@ object LlmQueries {
     * is the [[RelationalOps.aggCorrManual]] recipe: the log points are
     * e6-quantized integers, the sufficient statistics are EXACT
     * decimal sums, and only the final slope formula runs in double —
-    * bit-identical across engines. Scale: no vocabulary sort — the
-    * grams of frequency f hold the consecutive ranks after every gram
-    * of higher frequency, whatever their tie order, so each source's
-    * frequency-of-frequencies histogram gives the same (rank, f)
-    * points. The histogram has at most √(2·tokens) rows per source
-    * (distinct frequencies sum to at most the token count), so its
-    * running sums are taken on the driver, and each block of ranks is
-    * cut into chunks of at most [[ZipfRankChunk]] before the points are
-    * expanded back across the cluster; the fit takes five sums. */
+    * bit-identical across engines. Scale: no vocabulary sort — grams of
+    * frequency f hold the consecutive ranks after every gram of higher
+    * frequency, so each source's frequency-of-frequencies histogram
+    * (≤ √(2·tokens) rows) is summed on the driver and its rank blocks
+    * expand on the cluster in chunks of ≤ 2^20 ranks (the hapax block
+    * spreads over many tasks); the fit takes five sums. */
   val tokenZipfQ: Q = (s, d) => {
     import s.implicits._
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
@@ -1624,12 +1614,12 @@ object LlmQueries {
       .groupBy(col("source"), col("gram_hash")).agg(count(lit(1)).as("f"))
       .groupBy(col("source"), col("f")).agg(count(lit(1)).as("nf"))
       .as[(String, Long, Long)].collect()
+    val chunk = 1L << 20
     val chunks = hist.groupBy(_._1).toSeq.flatMap { case (src, rows) =>
       var upTo = 0L
       rows.sortBy(-_._2).toSeq.flatMap { case (_, f, nf) =>
-        val lo = upTo + 1
         upTo += nf
-        (lo to upTo by ZipfRankChunk).map(a => (src, f, a, math.min(a + ZipfRankChunk - 1, upTo)))
+        (upTo - nf + 1 to upTo by chunk).map(a => (src, f, a, math.min(a + chunk - 1, upTo)))
       }
     }
     val pts = chunks.toDF("source", "f", "__lo", "__hi")
@@ -1729,10 +1719,9 @@ object LlmQueries {
     * doc_id order — the ingest order) is this document. The
     * "new content vs recombination" curation signal: a crawl that
     * stops contributing novel grams has been exhausted; a duplicate's
-    * novelty is exactly 0. Scale: the distinct (doc, gram) rows of the
-    * gram layer's bigram table ([[GramLayer]]), a min-doc aggregate and
-    * a join back on the gram hash the table is partitioned by, a
-    * doc-keyed fold — all linear. */
+    * novelty is exactly 0. Scale: the gram layer's first-in-doc bigram
+    * rows ([[GramLayer]]), a min-doc aggregate and a join back inside
+    * their gram-hash partitioning, a doc-keyed fold — all linear. */
   val ngramNoveltyQ: Q = (s, d) => {
     val dg = GramLayer.of(s, d).grams(2).filter(col("first_in_doc"))
     val first = dg.groupBy(col("gram_hash"))
