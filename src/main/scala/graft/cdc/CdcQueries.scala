@@ -108,7 +108,7 @@ object CdcQueries {
   /** T9''/A5'' — STREAMING incremental view maintenance end-to-end:
     * the synthetic ops feed staged as four version-page files, drained
     * by the foreachBatch maintainer (idempotent log append +
-    * generation-stamped DirSwap view fold — graft.streaming.
+    * generation-stamped manifest view fold — graft.streaming.
     * StreamingAggView), final view read back. The oracle is the direct
     * view over the WHOLE feed — the streamed fold must land exactly
     * there whatever the page boundaries (crash/redelivery windows are
@@ -651,7 +651,7 @@ object CdcQueries {
     // threads (or executing the returned lazy frame while a re-run
     // rewrites the dir) could observe a one-page or torn directory —
     // fine for the serial verify/bench harness; a concurrent driver
-    // would stage into a fresh subdir and DirSwap-install instead
+    // would stage into a fresh subdir and ManifestSwap-install instead
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft-evolve-${s.sparkContext.applicationId}").getPath
     val o = Tables.orders(s, d)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.sinks.DocumentSink
-import graft.streaming.DirSwap
+import graft.streaming.ManifestSwap
 
 /** T6 end-to-end maintenance window — ONE job wiring the pieces that
   * existed separately ([[Retention]], [[DocumentSink.compact]]):
@@ -32,9 +32,10 @@ import graft.streaming.DirSwap
   *     so pruned serving reads grow one file per ingest until this
   *     fold bounds them again.
   *
-  * Both rewrites install via the rollback-safe [[DirSwap]], so a crash
-  * mid-maintenance leaves the previous generation restorable and every
-  * reader self-heals. Rerunnable: a second run is a no-op on rows.
+  * Every rewrite commits one [[ManifestSwap]] generation with one atomic
+  * pointer write, so a crash mid-maintenance leaves readers on the
+  * previous complete snapshot. Rerunnable: a second run is a no-op on
+  * rows.
   * File counts after the job are bounded by `nFiles` + bucket count —
   * not by how many polls were ever delivered.
   */
@@ -88,65 +89,45 @@ object Maintenance {
     math.min(requested, math.max(consumerBound, lagFloor))
   }
 
-  /** Expire + log-compact + version-ordered rewrite of a parquet
-    * change table, in place (DirSwap tag "retain"). The table follows
-    * the feed schema contract the cdc source also relies on:
-    * `entity_id` + `change_version` columns (CdcFiles). */
-  /** Append one change page to the table, protocol-aware — the write
-    * entry point feed producers use so the retention rewrite below has
-    * a sound layout on every store: rename-capable filesystems keep
-    * the plain in-place `mode=append` (what every producer did
-    * already); manifest-mode filesystems get one immutable generation
-    * per page, keyed by the page's content fingerprint, listed by the
-    * table's manifest — which also makes a crashed-and-retried page
-    * append structurally idempotent, something the plain append never
-    * was. Readers (the graft-cdc source, [[maintainChangeTable]])
-    * resolve the layout structurally. */
+  /** Append one change page to the table: one immutable generation
+    * per page, keyed by the page's content fingerprint and listed by
+    * the table's manifest — which also makes a crashed-and-retried
+    * page append structurally idempotent, something a plain
+    * `mode=append` never was. A table a producer wrote in place must
+    * go through one [[maintainChangeTable]] first (the keyed append
+    * refuses to hide its raw rows). Readers (the graft-cdc source,
+    * [[maintainChangeTable]]) resolve the layout structurally. */
   def appendChangePage(spark: SparkSession, changeDir: String,
                        page: org.apache.spark.sql.DataFrame): Unit =
-    if (DirSwap.appendsAreManifest(spark, changeDir))
-      graft.streaming.StagedAppend.contentTag(page).foreach { tag =>
-        graft.streaming.ManifestSwap.appendKeyed(spark, changeDir,
-          "retain", tag)(gen => page.write.mode("overwrite").parquet(gen))
-      }
-    else page.write.mode("append").parquet(changeDir)
+    graft.streaming.StagedAppend.append(changeDir, page, "retain")(gen =>
+      page.write.mode("overwrite").parquet(gen))
 
+  /** Expire + log-compact + version-ordered rewrite of a parquet
+    * change table (tag "retain"). The table follows the feed schema
+    * contract the cdc source also relies on: `entity_id` +
+    * `change_version` columns (CdcFiles). The rewrite folds the base +
+    * every appended page generation into ONE new base in one atomic
+    * pointer commit (consumers resolve a complete before-or-after
+    * snapshot, never a mid-rewrite directory), dropping the absorbed
+    * page keys — page tags are content fingerprints whose idempotence
+    * window only needs to span producer retries, not retention cycles,
+    * and an unbounded ledger would grow the manifest forever. A table
+    * its producer wrote in place (no committed manifest yet) is read
+    * through [[ManifestSwap.dataPaths]] and becomes the first base. */
   def maintainChangeTable(spark: SparkSession, changeDir: String,
                           watermark: Long, compactUpTo: Long,
                           nFiles: Int): Unit = {
-    // Manifest-capable since round 14: the rewrite folds the base +
-    // every appended page generation into ONE new base in one atomic
-    // pointer commit (consumers resolve a complete before-or-after
-    // snapshot, never a mid-rewrite directory), dropping the absorbed
-    // page keys — page tags are content fingerprints whose idempotence
-    // window only needs to span producer retries, not retention
-    // cycles, and an unbounded ledger would grow the manifest forever.
-    val manifest = DirSwap.appendsAreManifest(spark, changeDir)
     // dirs and absorbed keys from ONE resolution (foldSnapshot) so a
-    // page committing mid-rewrite keeps its own generation; an
-    // in-place table under a manifest config folds into the first
-    // manifest base here — the migration step
-    val (dirs, absorbed) =
-      if (manifest) {
-        val (d, a) = graft.streaming.ManifestSwap.foldSnapshot(
-          spark, changeDir)
-        if (d.nonEmpty) (d, a)
-        else (DirSwap.readDataPaths(spark, changeDir, "retain"),
-          Set.empty[String])
-      } else
-        (DirSwap.readDataPaths(spark, changeDir, "retain"),
-          Set.empty[String])
+    // page committing mid-rewrite keeps its own generation
+    val (d0, absorbed) = ManifestSwap.foldSnapshot(spark, changeDir)
+    val dirs =
+      if (d0.nonEmpty) d0 else ManifestSwap.dataPaths(spark, changeDir)
     if (dirs.isEmpty) return
     val kept = logCompactRows(
       Retention.expire(spark.read.parquet(dirs: _*), watermark),
       compactUpTo)
-    if (manifest)
-      graft.streaming.ManifestSwap.installFold(spark, changeDir, "retain",
-        absorbed, keepLedger = false)(
-        Retention.writeCompacted(kept, _, nFiles))
-    else
-      DirSwap.install(spark, changeDir, "retain")(tmp =>
-        Retention.writeCompacted(kept, tmp, nFiles))
+    ManifestSwap.installFold(spark, changeDir, "retain", absorbed,
+      keepLedger = _ => false)(Retention.writeCompacted(kept, _, nFiles))
   }
 
   /** A serving IVF-PQ vector index due for its periodic
@@ -163,11 +144,11 @@ object Maintenance {
 
   /** Retrain the PQ codebooks from the CURRENT corpus and rebuild the
     * IVF-PQ layout — codes and codebook written as ONE new generation
-    * into the swap tmp dir, installed via the rollback-safe
-    * [[DirSwap]] (tag "vecidx"): probes either read the full old
-    * generation or the full new one, never a mix of new codes with an
-    * old codebook, and the probe path heals a crash window
-    * ([[graft.llm.Pq.indexCodebook]] restores before reading). Cost is
+    * and committed as the whole snapshot (tag "vecidx"): probes either
+    * read the full old generation or the full new one, never a mix of
+    * new codes with an old codebook. The install drops every appended
+    * batch key — the retrain re-encodes the full corpus, so those
+    * appends are superseded, never replayed into the new layout. Cost is
     * the training passes (`iters` corpus scans) + one encode pass +
     * the bucket-partitioned write — the same shape as the initial
     * build, budgeted like every other rewrite in this window. */
@@ -192,30 +173,18 @@ object Maintenance {
         "a re-embedding was appended past the membership guard's " +
         "probed buckets (appendIvfPq's documented blind spot); " +
         "resolve the corpus to one row per id before retraining")
-    // Manifest-capable since round 14: under the manifest protocol the
-    // install below writes codes + codebook + _APPGEN into ONE
-    // generation and the pointer commit REPLACES the whole payload —
-    // dropping every appended-batch key, which IS the superseded-
-    // generation sweep the rename protocol does via _APPGEN. Probes
-    // resolve the committed base + appends structurally
-    // (DirSwap.readDataPaths).
-    DirSwap.install(spark, vi.layoutPath, "vecidx") { tmp =>
+    ManifestSwap.install(spark, vi.layoutPath, "vecidx") { tmp =>
       val cb = graft.llm.Pq.trainCodebooks(emb, vi.idCol, vi.vecCol,
         vi.m, vi.dims, vi.ks, vi.iters)
       graft.llm.Pq.writeIvfPq(emb, vi.idCol, vi.vecCol, cb,
         vi.m, vi.dims, vi.planes, tmp)
       cb.write.mode("overwrite")
         .parquet(tmp.stripSuffix("/") + "/_codebook")
-      // the retrain re-encodes the FULL current corpus, superseding
-      // every prior incremental append — mint a fresh append
-      // generation (atomic with the layout swap) so staged appends of
-      // the old layout are swept, never replayed into this one
-      graft.streaming.StagedAppend.mintGeneration(spark, tmp)
     }
   }
 
   /** A manifest-published table root due for generation GC in this
-    * window ([[graft.streaming.ManifestSwap.gc]]) with its PER-TABLE
+    * window ([[ManifestSwap.gc]]) with its PER-TABLE
     * grace. SIZING RULE (round-13 verdict finding #2): the reader
     * guarantee — "a snapshot resolved at time T stays readable until
     * T + graceMs" — only protects scans that FINISH inside the grace,
@@ -227,7 +196,7 @@ object Maintenance {
     * reaps under a sub-default grace. */
   case class ManifestGc(root: String,
                         graceMs: Long =
-                          graft.streaming.ManifestSwap.DefaultGraceMs,
+                          ManifestSwap.DefaultGraceMs,
                         keepManifests: Int = 2)
 
   /** A z-ordered layout ([[graft.ops.ZOrder]]) that has accumulated
@@ -266,7 +235,7 @@ object Maintenance {
       graft.streaming.StreamingAggView.compactLog(spark, _))
     // manifest-published roots: reap superseded/orphan generations
     // under each table's own grace (see [[ManifestGc]]'s sizing rule)
-    manifestGcs.foreach(g => graft.streaming.ManifestSwap.gc(
+    manifestGcs.foreach(g => ManifestSwap.gc(
       spark, g.root, g.keepManifests, g.graceMs))
     // through the Hadoop FileSystem like every other path here — a
     // java.io walk would silently report 0 on hdfs://-style stores
@@ -279,11 +248,11 @@ object Maintenance {
         if (it.next().getPath.getName.endsWith(suffix)) n += 1
       n
     }
-    // report over the SERVED layout: the in-place root, or the
-    // committed manifest generations (counting a manifest root's whole
-    // tree would double-count superseded generations until gc)
-    val changeDirs = DirSwap.readDataPaths(spark, changeDir, "retain")
-    val sinkDirs = DirSwap.readDataPaths(spark, sinkDir, "compact")
+    // report over the SERVED layout: the committed generations
+    // (counting a root's whole tree would double-count superseded
+    // generations until gc)
+    val changeDirs = ManifestSwap.dataPaths(spark, changeDir)
+    val sinkDirs = ManifestSwap.readDataPaths(spark, sinkDir)
     Report(
       changeRows = spark.read.parquet(changeDirs: _*).count(),
       changeFiles = changeDirs.map(filesUnder(_, ".parquet")).sum,

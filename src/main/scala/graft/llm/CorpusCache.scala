@@ -48,7 +48,7 @@ object CorpusCache {
     * every one of them, sentinels last.
     *
     * Concurrency: a build writes into a UUID-salted TEMP SIBLING and
-    * publishes with one atomic rename (the DirSwap idiom), so two
+    * publishes with one atomic directory rename, so two
     * sessions racing the same key can never interleave writes into the
     * served directory — the first complete build wins, the loser
     * discards its own and serves the winner's. Within one JVM a

@@ -227,10 +227,9 @@ object LlmQueries {
     * per corpus identity, shared by every lexical-serving query). */
   private def postingsResolved(s: SparkSession, d: String): String =
     CorpusCache.resolve(s, s"$d/documents.parquet",
-        // v2: _N and the applied-batch ledger moved inside the df
-        // generation (the retry-idempotent append protocol) — a v1
-        // layout must rebuild, not serve
-        "graft-postings", "tok-v2|b64", Seq("_POSTINGS_OK")) { dir =>
+        // v3: postings and df are manifest-published roots inside the
+        // cache dir — an older in-place layout must rebuild, not serve
+        "graft-postings", "tok-v3|b64", Seq("_POSTINGS_OK")) { dir =>
       SimSearch.buildPostingsIndex(Tables.documents(s, d), "doc_id",
         "text", dir.getPath)
       CorpusCache.touchMarker(dir, "_POSTINGS_OK")

@@ -196,7 +196,10 @@ object Pq {
     * lever) holding only (id, codes) rows (this file's memory lever):
     * the index stores 8 bytes per vector, true vectors never enter it
     * and are fetched only for the k·overfetch rerank. Bucket
-    * co-location before the write keeps it one file per bucket. */
+    * co-location before the write keeps it one file per bucket.
+    * Writes in place into `path`: a staging dir (the generation
+    * [[graft.cdc.Maintenance.maintainVectorIndex]] publishes, or a
+    * [[CorpusCache]] temp sibling). */
   def writeIvfPq(emb: DataFrame, idCol: String, vecCol: String,
                  cb: DataFrame, m: Int, dims: Int, planes: Int,
                  path: String): Unit = {
@@ -225,10 +228,6 @@ object Pq {
                   path: String): Unit = {
     val spark = batch.sparkSession
     graft.functions.VectorFunctions.register(spark)
-    graft.streaming.DirSwap.restoreIfTorn(spark, path, "vecidx")
-    // publish any committed-but-unpublished stage FIRST so the
-    // membership guard below reads every row the ledger counts
-    graft.streaming.StagedAppend.recover(spark, path)
     // ONE signature pass, materialized: the bucket probe list, the
     // membership anti-join, the tag aggregate, and the staging write
     // below all read this frame instead of re-evaluating the
@@ -237,10 +236,10 @@ object Pq {
         SimSearch.hyperplaneSignature(col(vecCol), planes).as("bucket"))
       .localCheckpoint(true)
     // RETRY-STRADDLES-RETRAIN guard (round-9 ADVICE): a crash BEFORE
-    // the ledger commit followed by a retrain (which re-encodes the
-    // full current corpus, batch included, and mints a fresh _APPGEN)
-    // leaves the retried batch invisible to both the new ledger and
-    // the generation sweep — a naive retry would double-ingest it.
+    // the commit followed by a retrain (which re-encodes the full
+    // current corpus, batch included, and drops every append key)
+    // leaves the retried batch unknown to the new manifest — a naive
+    // retry would double-ingest it.
     // The guard drops every batch id already present in the layout —
     // but only if it carries the SAME vector (loud-check below).
     // Cost: the (id, bucket, codes) columns of the bucket directories
@@ -252,9 +251,9 @@ object Pq {
     // A first-ever ingest (no layout yet) bootstraps: nothing to probe.
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // protocol-aware locations: the in-place layout, or the committed
-    // base + appended generations of a manifest root
-    val dirs = graft.streaming.DirSwap.readDataPaths(spark, path, "vecidx")
+    // the committed base + appended generations (or a layout written
+    // in place, a CorpusCache build)
+    val dirs = graft.streaming.ManifestSwap.dataPaths(spark, path)
     val fresh =
       if (dirs.isEmpty) signed
       else {
@@ -271,7 +270,7 @@ object Pq {
               .filter(col("bucket").isin(buckets: _*))
               .select(col(idCol), col("bucket").cast("long"), col("codes")))
           else
-            // manifest root: one read per existing (generation, probed
+            // published root: one read per existing (generation, probed
             // bucket) leaf dir — the same IO pruning, the partition
             // value re-attached from the enumeration (None = no probed
             // bucket exists anywhere yet: the whole batch is fresh)
@@ -330,44 +329,32 @@ object Pq {
         // across the tag agg + staging write below
         }
       }
-    // staged append (round 9) — retry-idempotent; generation-scoped:
-    // the periodic retrain ([[graft.cdc.Maintenance
-    // .maintainVectorIndex]]) re-encodes the FULL current corpus and
-    // mints a fresh _APPGEN, which orphans (and sweeps) any staged
-    // appends of the superseded layout instead of replaying them.
-    // Tagged over (id, vec) only — the tag must not depend on planes.
-    graft.streaming.StagedAppend.contentTag(
-        fresh.select(col(idCol), col(vecCol))).foreach { tag =>
-      graft.streaming.StagedAppend.append(spark, path, tag) { pending =>
-        fresh.select(col(idCol), col("bucket"))
-          .join(encode(fresh.select(col(idCol), col(vecCol)),
-            idCol, vecCol, cb, m, dims), Seq(idCol))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(pending)
-      }
+    // content-keyed append (round 9) — retry-idempotent; the periodic
+    // retrain ([[graft.cdc.Maintenance.maintainVectorIndex]])
+    // re-encodes the FULL current corpus and its install drops every
+    // append key, so appends of the superseded layout are never
+    // replayed into the new one. Tagged over (id, vec) only — the tag
+    // must not depend on planes.
+    val rows = fresh.select(col(idCol), col(vecCol))
+    graft.streaming.StagedAppend.append(path, rows) { gen =>
+      fresh.select(col(idCol), col("bucket"))
+        .join(encode(rows, idCol, vecCol, cb, m, dims), Seq(idCol))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(gen)
     }
   }
 
   /** Codebook of a serving index directory: the `_codebook` subdir a
     * [[writeIvfPq]]-shaped layout carries (underscore-prefixed, so the
-    * code read never sees it). Heals a torn maintenance swap first —
-    * a probe arriving inside [[graft.cdc.Maintenance]]'s rebuild
-    * crash window restores the previous generation instead of reading
-    * an absent dir. */
+    * code read never sees it). The retrain
+    * ([[graft.cdc.Maintenance.maintainVectorIndex]]) installs codes and
+    * codebook in ONE generation, so the committed base carries the
+    * matching `_codebook`; a layout written in place carries its own. */
   def indexCodebook(spark: org.apache.spark.sql.SparkSession,
                     layoutPath: String): DataFrame = {
-    if (graft.streaming.DirSwap.isManifestRoot(spark, layoutPath)) {
-      // the codebook swaps in WITH its codes as one generation (the
-      // retrain installs both into the same commit), so the resolved
-      // base generation carries the matching `_codebook`
-      val base = graft.streaming.ManifestSwap.readPath(spark, layoutPath)
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"graft ivfpq: no committed base generation at $layoutPath"))
-      return spark.read.parquet(base.stripSuffix("/") + "/_codebook")
-    }
-    graft.streaming.DirSwap.restoreIfTorn(spark, layoutPath, "vecidx")
-    spark.read.parquet(
-      layoutPath.stripSuffix("/") + "/_codebook")
+    val base = graft.streaming.ManifestSwap.readPath(spark, layoutPath)
+      .getOrElse(layoutPath)
+    spark.read.parquet(base.stripSuffix("/") + "/_codebook")
   }
 
   /** Probe the [[writeIvfPq]] index: the hamming-ball probe set is
@@ -376,7 +363,7 @@ object Pq {
     * probed/2^planes of ~3 TB of codes); ADC ranks the probed codes
     * off the lookup-table literal, then the exact rerank touches true
     * vectors for k·overfetch ids only. Returns (idCol, cos_e6).
-    * Torn-swap-healing like [[indexCodebook]]. */
+    * Resolves the committed layout like [[indexCodebook]]. */
   def ivfPqTopK(emb: DataFrame, layoutPath: String, cb: DataFrame,
                 idCol: String, vecCol: String, queryId: Long, k: Int,
                 m: Int, dims: Int, ks: Int, planes: Int,
@@ -394,7 +381,6 @@ object Pq {
                       probeHamming: Int,
                       overfetch: Int): (Seq[Float], DataFrame) = {
     val spark = emb.sparkSession
-    graft.streaming.DirSwap.restoreIfTorn(spark, layoutPath, "vecidx")
     graft.functions.VectorFunctions.register(spark)
     val qRow = emb.filter(col(idCol) === queryId)
       .select(col(vecCol),
@@ -403,14 +389,14 @@ object Pq {
     val probes = SimSearch.probeBuckets(qRow.getLong(1), planes, probeHamming)
     val lutLit = array(
       lutFor(qv, cb, m, ks, dims / m).toIndexedSeq.map(lit): _*)
-    val dirs = graft.streaming.DirSwap.readDataPaths(spark, layoutPath,
-      "vecidx")
+    val dirs = graft.streaming.ManifestSwap.dataPaths(spark, layoutPath)
     val codes =
       if (dirs == Seq(layoutPath))
+        // a layout written in place (a CorpusCache build)
         spark.read.parquet(layoutPath)
           .filter(col("bucket").isin(probes: _*)) // prunes at the file index
       else {
-        // manifest root: enumerate the probe buckets' leaf dirs across
+        // published root: enumerate the probe buckets' leaf dirs across
         // the committed generations (same IO pruning; the `_codebook`
         // subdir is invisible to this walk by name)
         val fs = new org.apache.hadoop.fs.Path(layoutPath)

@@ -134,26 +134,21 @@ object SimSearch {
   def writeBucketed(emb: DataFrame, idCol: String, vecCol: String,
                     planes: Int, path: String): Unit = {
     val spark = emb.sparkSession
-    if (graft.streaming.DirSwap.appendsAreManifest(spark, path)) {
-      // manifest protocol: one committed generation. The rebuild is
-      // corpus-derived (row-superseding), but the append LEDGER must
-      // survive it — in the rename protocol the `.applied` sibling
-      // outlives the overwrite, so a late retry of an already-ingested
-      // batch still skips; keepLedger preserves that exact semantics.
-      val absorbed = graft.streaming.ManifestSwap.appliedKeys(spark, path)
-      graft.streaming.ManifestSwap.installFold(spark, path, "ivflayout",
-        absorbed, keepLedger = true)(
-        writeBucketedRaw(emb, idCol, vecCol, planes, _))
-      return
-    }
-    writeBucketedRaw(emb, idCol, vecCol, planes, path)
+    // one committed generation. The rebuild is corpus-derived
+    // (row-superseding), but the append LEDGER must survive it, so a
+    // late retry of an already-ingested batch still skips —
+    // keepLedger retires the append keys instead of dropping them.
+    val absorbed = graft.streaming.ManifestSwap.appliedKeys(spark, path)
+    graft.streaming.ManifestSwap.installFold(spark, path, "ivflayout",
+      absorbed, keepLedger = _ => true)(
+      writeBucketedRaw(emb, idCol, vecCol, planes, _))
   }
 
-  /** The raw bucket-partitioned write into `dir` — for the protocol
-    * branches above AND for builders targeting an UNPUBLISHED staging
-    * dir ([[CorpusCache]] temp siblings, published by one atomic local
+  /** The raw bucket-partitioned write into `dir` — for the publish
+    * above AND for writes into an UNPUBLISHED staging dir
+    * ([[CorpusCache]] temp siblings, published by one atomic local
     * rename): those are invisible until publish by construction, so
-    * routing them through a swap protocol would only displace the
+    * routing them through the manifest would only displace the
     * `_SUCCESS` completion sentinel the cache checks. */
   private[graft] def writeBucketedRaw(emb: DataFrame, idCol: String,
                                       vecCol: String, planes: Int,
@@ -182,18 +177,14 @@ object SimSearch {
   def appendBucketed(batch: DataFrame, idCol: String, vecCol: String,
                      planes: Int, path: String): Unit = {
     VectorFunctions.register(batch.sparkSession)
-    // staged append (round 9): a crashed ingest retried must not land
-    // the batch's vectors twice — duplicate ids would surface twice
-    // in a probe's top-k
-    graft.streaming.StagedAppend.contentTag(
-        batch.select(col(idCol), col(vecCol))).foreach { tag =>
-      graft.streaming.StagedAppend.append(
-          batch.sparkSession, path, tag) { pending =>
-        batch.select(col(idCol), col(vecCol),
-          hyperplaneSignature(col(vecCol), planes).as("bucket"))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(pending)
-      }
+    // content-keyed append (round 9): a crashed ingest retried must
+    // not land the batch's vectors twice — duplicate ids would surface
+    // twice in a probe's top-k
+    val rows = batch.select(col(idCol), col(vecCol))
+    graft.streaming.StagedAppend.append(path, rows) { gen =>
+      rows.withColumn("bucket", hyperplaneSignature(col(vecCol), planes))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(gen)
     }
   }
 
@@ -245,18 +236,18 @@ object SimSearch {
       .select(col(vecCol), hyperplaneSignature(col(vecCol), planes)).head()
     val qv = qRow.getSeq[Float](0)
     val probes = probeBuckets(qRow.getLong(1), planes, probeHamming)
-    val dirs = graft.streaming.DirSwap.readDataPaths(spark, layoutPath,
-      "ivflayout")
+    val dirs = graft.streaming.ManifestSwap.dataPaths(spark, layoutPath)
     val fs = new org.apache.hadoop.fs.Path(layoutPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cand =
       if (dirs == Seq(layoutPath))
-        // rename protocol: the root IS the partitioned layout — the
-        // bucket IN-list prunes at the file index as before
+        // a layout written in place (a CorpusCache build): the root IS
+        // the partitioned layout — the bucket IN-list prunes at the
+        // file index
         spark.read.parquet(layoutPath)
           .filter(col("bucket").isin(probes: _*))
       else {
-        // manifest protocol: enumerate the probe buckets' leaf dirs
+        // published layout: enumerate the probe buckets' leaf dirs
         // across the committed generations — the same IO pruning, one
         // existence probe per (generation, bucket); the partition
         // column is implied by the enumeration, not needed downstream
@@ -459,28 +450,23 @@ object SimSearch {
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
       .withColumn("tbkt", pmod(xxhash64(col("term")),
         lit(termBuckets.toLong)))
-    val manifest = graft.streaming.DirSwap.appendsAreManifest(
-      spark, s"$path/postings")
-    def writePostings(dir: String): Unit =
+    // base generation of the keyed-append root (appends become
+    // app:-keyed generations; compaction folds back to one base)
+    graft.streaming.ManifestSwap.install(spark, s"$path/postings",
+      "postings") { dir =>
       tf.repartition(termBuckets, col("tbkt"))
         .write.mode("overwrite").partitionBy("tbkt").parquet(dir)
-    if (manifest)
-      // base generation of the keyed-append root (appends become
-      // app:-keyed generations; compaction folds back to one base)
-      graft.streaming.ManifestSwap.install(spark, s"$path/postings",
-        "postings")(writePostings)
-    else writePostings(s"$path/postings")
+    }
     // df from the WRITTEN postings — no second tokenize pass. The
     // corpus row count and the applied-batch ledger live INSIDE the
-    // df directory so every [[appendPostingsIndex]] commit swaps all
-    // three atomically (one DirSwap generation).
+    // df generation so every [[appendPostingsIndex]] commit publishes
+    // all three atomically.
     val postingsRows = spark.read.parquet(
-      graft.streaming.DirSwap.readDataPaths(
-        spark, s"$path/postings", "postings"): _*)
+      graft.streaming.ManifestSwap.readDataPaths(spark, s"$path/postings"): _*)
     val dfRows = postingsRows
       .groupBy(col("tbkt"), col("term")).agg(count(lit(1)).as("df"))
     val n = docs.count()
-    graft.streaming.DirSwap.install(spark, s"$path/df",
+    graft.streaming.ManifestSwap.install(spark, s"$path/df",
       "postingsdf") { tmp =>
       dfRows.repartition(termBuckets, col("tbkt"))
         .write.mode("overwrite").partitionBy("tbkt").parquet(tmp)
@@ -513,17 +499,11 @@ object SimSearch {
     finally out.close()
   }
 
-  /** The df table's CURRENT data dir (heals/resolves per protocol),
-    * or None before the first build. STRUCTURAL resolution
-    * (readDataPaths, not the config-driven readPath): a rename-built
-    * index — e.g. a CorpusCache layout from before a protocol switch —
-    * must keep serving in place under a manifest-mode config (caught
-    * by the round-14 forced-manifest registry gate). The df root holds
-    * exactly one data entry, so head is the dir. */
+  /** The df table's committed data dir, or None before the first
+    * build. */
   private def dfDataDir(spark: org.apache.spark.sql.SparkSession,
                         path: String): Option[String] =
-    graft.streaming.DirSwap.readDataPaths(spark, s"$path/df",
-      "postingsdf").headOption
+    graft.streaming.ManifestSwap.readPath(spark, s"$path/df")
 
   private def readSidecar(spark: org.apache.spark.sql.SparkSession,
                           dir: String, name: String): Option[String] = {
@@ -552,153 +532,55 @@ object SimSearch {
   /** Incremental ingest into the [[buildPostingsIndex]] layout — the
     * growing-corpus twin ([[appendBucketed]] / Dedup.incrementalExact
     * precedent): tokenize ONLY the new batch (docs not already
-    * indexed), land its postings in the bucket directories, fold its
+    * indexed), land its postings in a generation of their own, fold its
     * per-term counts into the df table (vocab-sized rewrite, never a
-    * postings re-scan), and bump `_N`. Serving needs no change —
-    * partition pruning sees old and new files alike, and the scoring
-    * integers (df, N) equal a fresh rebuild's, so a query over the
-    * appended index is BIT-IDENTICAL to one over a rebuilt index
-    * (spec-pinned).
+    * postings re-scan), and bump `_N`. The scoring integers (df, N)
+    * equal a fresh rebuild's, so a query over the appended index is
+    * BIT-IDENTICAL to one over a rebuilt index (spec-pinned).
     *
-    * RETRY-IDEMPOTENT TWO-PHASE COMMIT (round 9 — the DirSwap-site
-    * crash matrix surfaced that a naive `mode=append` retried after a
-    * crash double-counts the batch):
-    *  1. STAGE — the batch's postings overwrite `pending-<tag>/`,
-    *     where `tag` is a content fingerprint of the batch (same
-    *     batch ⇒ same tag ⇒ the stage is an idempotent overwrite).
-    *  2. COMMIT — ONE DirSwap install of the df dir folds the batch
-    *     counts AND records the tag in `_APPLIED` AND carries the
-    *     bumped `_N`: the fold, the ledger, and the corpus count
-    *     swap as one atomic generation. A retry consults the ledger
-    *     and never re-folds an applied batch.
-    *  3. PUBLISH — per-file rename of the staged postings into their
-    *     bucket dirs under tag-prefixed names (each rename atomic,
-    *     the set resumable: moved files leave the pending dir), then
-    *     drop the pending dir.
-    * A crash at any point converges on retry, and serving/compaction
-    * first publish any APPLIED-but-unpublished pending generation
-    * ([[recoverPendingPostings]]) so the df a query joins never
-    * counts rows its bucket read cannot see. An UNapplied pending
-    * dir is an uncommitted stage — ignored by readers, overwritten
-    * by the retry. CrashMatrixSpec kills every window.
-    *
-    * Writer contract: ONE maintainer per index, the same single-writer
-    * contract as every state maintainer here (the CDC consumer model —
-    * ingest is a consumer of the document feed, serialized by its
-    * cursor); concurrent readers are always safe. Two DIFFERENT
-    * batches folded concurrently would race the df swap — that is an
-    * ops error, not a crash mode, and the feed's exactly-once cursor
-    * prevents it upstream. */
-  def appendPostingsIndex(batch: DataFrame, docIdCol: String,
-                          textCol: String, path: String): Unit = {
-    val spark = batch.sparkSession
-    if (graft.streaming.DirSwap.appendsAreManifest(spark, s"$path/postings")) {
-      appendPostingsManifest(batch, docIdCol, textCol, path)
-      return
-    }
-    graft.streaming.DirSwap.restoreIfTorn(spark, s"$path/df",
-      tag = "postingsdf")
-    recoverPendingPostings(spark, path)
-    // content-derived batch tag: bit_xor of per-doc hashes + the
-    // multiset SUM of the same hashes (mod 2^64; decimal so ANSI never
-    // overflows) + count — a pure function of the batch row MULTISET,
-    // so a crashed call retried with the same batch resumes ITS OWN
-    // protocol state. xor alone self-cancels duplicate rows (round-9
-    // ADVICE: {r1,r1,b} vs {r2,r2,b} would collide and silently skip
-    // the second batch); the sum breaks every multiset difference.
-    val fpRow = batchFingerprint(batch, docIdCol, textCol)
-    if (fpRow.isNullAt(0) || fpRow.getLong(2) == 0L) return // empty batch
-    val tag = graft.streaming.StagedAppend.assembleTag(
-      fpRow.getLong(0), fpRow.getDecimal(1), fpRow.getLong(2))
-    val applied0 = appliedTags(spark, path)
-    // a batch committed under the pre-upgrade tag format counts as
-    // committed (recoverPendingPostings above published its pending).
-    // The alias string is legacy-format by construction so it can only
-    // match a legacy ledger line — and each commit below retires
-    // those, bounding the alias window (StagedAppend.legacyTag
-    // scaladoc: the single serialized maintainer committing a NEW
-    // batch proves every older batch was acked, so retirement cannot
-    // orphan a future retry, and a post-retirement xor-aliasing new
-    // batch is no longer silently skipped)
-    val applied = applied0.contains(tag) ||
-      graft.streaming.StagedAppend.legacyTag(tag).exists(applied0.contains)
-    val pending = new java.io.File(s"$path/pending-$tag")
-    if (applied && !pending.exists()) return // fully committed earlier
-    if (!applied) {
-      // 1. STAGE
-      batch
-        .select(col(docIdCol).as("doc_id"),
-          explode(TextOps.tokens(col(textCol))).as("term"))
-        .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
-        .withColumn("tbkt", pmod(xxhash64(col("term")),
-          lit(termBuckets.toLong)))
-        .repartition(col("tbkt"))
-        .write.mode("overwrite").partitionBy("tbkt")
-        .parquet(pending.getPath)
-      // 2. COMMIT — fold + ledger + _N in one swapped generation
-      val staged = spark.read.schema(postingsSchema)
-        .parquet(pending.getPath).select("term", "doc_id", "tf", "tbkt")
-      val oldDf = spark.read.schema(dfSchema).parquet(s"$path/df")
-        .select("term", "df", "tbkt")
-      val nextDf = oldDf.unionByName(
-          staged.groupBy(col("term"), col("tbkt"))
-            .agg(count(lit(1)).as("df")).select("term", "df", "tbkt"))
-        .groupBy(col("term"), col("tbkt")).agg(sum(col("df")).as("df"))
-        .localCheckpoint(true) // materialize BEFORE the dir it reads swaps
-      val n = dfDataDir(spark, path)
-        .flatMap(readSidecar(spark, _, "_N")).get.trim.toLong
-      val nNext = n + fpRow.getLong(2)
-      val ledger = appliedTags(spark, path)
-        .filterNot(graft.streaming.StagedAppend.isLegacyLine) :+ tag
-      graft.streaming.DirSwap.install(spark, s"$path/df",
-        tag = "postingsdf") { tmp =>
-        nextDf.repartition(termBuckets, col("tbkt"))
-          .write.mode("overwrite").partitionBy("tbkt").parquet(tmp)
-        writeSidecar(spark, tmp, "_N", nNext.toString)
-        writeSidecar(spark, tmp, "_APPLIED", ledger.mkString("\n"))
-      }
-    }
-    // 3. PUBLISH
-    publishPending(path, tag)
-  }
-
-  /** Content fingerprint of an ingest batch (the [[graft.streaming
-    * .StagedAppend.contentTag]] recipe over (id, text)): xor + multiset
-    * sum + count — shared by both protocol branches so the tag can
-    * never drift between them. */
-  private def batchFingerprint(batch: DataFrame, docIdCol: String,
-                               textCol: String): org.apache.spark.sql.Row =
-    batch.agg(
-      expr(s"bit_xor(xxhash64(cast($docIdCol AS string), $textCol))"),
-      expr(s"sum(cast(xxhash64(cast($docIdCol AS string), $textCol)" +
-        " as decimal(38,0)))"),
-      count(lit(1))).head()
-
-  /** MANIFEST-protocol ingest (round-14): the same three-phase shape
-    * as the rename branch, with the manifest pointer as the publish
-    * step — and the same load-bearing invariant, "df never counts rows
-    * the bucket read cannot see", kept by the same ORDER:
+    * RETRY-IDEMPOTENT THREE-PHASE COMMIT (round 9 — the crash matrix
+    * surfaced that a naive `mode=append` retried after a crash
+    * double-counts the batch), keyed by a content fingerprint of the
+    * batch (same batch ⇒ same tag), with the load-bearing invariant
+    * "df never counts rows the bucket read cannot see":
     *  1. STAGE — the batch's postings land in a fresh generation of
     *     `postings/` (invisible: no manifest references it);
     *  2. COMMIT — ONE df install folds the counts, bumps `_N`, and
     *     ledgers `tag<TAB>generation` (the generation name recorded so
     *     phase 3 is recoverable);
     *  3. PUBLISH — the generation is keyed into the postings manifest
-    *     ([[ManifestSwap]] CAS).
-    * A crash between 2 and 3 leaves df counting rows no reader sees —
-    * exactly the rename protocol's committed-but-unpublished window —
+    *     ([[graft.streaming.ManifestSwap]] CAS).
+    * A crash between 2 and 3 leaves df counting rows no reader sees,
     * healed by [[recoverManifestPostings]], which every serving read
     * and compaction runs first: any ledgered generation missing its
     * manifest key is keyed in (generations are never gc'd outside the
     * compaction path, so the ledger's generation reference stays
-    * live). Retries converge at every phase: same content ⇒ same tag ⇒
-    * the ledger decides phase 2, the manifest key phase 3. */
-  private def appendPostingsManifest(batch: DataFrame, docIdCol: String,
-                                     textCol: String,
-                                     path: String): Unit = {
+    * live). Retries converge at every phase: the ledger decides
+    * phase 2, the manifest key phase 3. CrashMatrixSpec kills every
+    * window.
+    *
+    * Writer contract: ONE maintainer per index, the same single-writer
+    * contract as every state maintainer here (the CDC consumer model —
+    * ingest is a consumer of the document feed, serialized by its
+    * cursor); concurrent readers are always safe. Two DIFFERENT
+    * batches folded concurrently would race the df install — that is
+    * an ops error, not a crash mode, and the feed's exactly-once
+    * cursor prevents it upstream. */
+  def appendPostingsIndex(batch: DataFrame, docIdCol: String,
+                          textCol: String, path: String): Unit = {
     val spark = batch.sparkSession
     recoverManifestPostings(spark, path)
-    val fpRow = batchFingerprint(batch, docIdCol, textCol)
+    // content-derived batch tag: bit_xor of per-doc hashes + the
+    // multiset SUM of the same hashes (mod 2^64; decimal so ANSI never
+    // overflows) + count — a pure function of the batch row MULTISET.
+    // xor alone self-cancels duplicate rows (round-9 ADVICE: {r1,r1,b}
+    // vs {r2,r2,b} would collide and silently skip the second batch);
+    // the sum breaks every multiset difference.
+    val fpRow = batch.agg(
+      expr(s"bit_xor(xxhash64(cast($docIdCol AS string), $textCol))"),
+      expr(s"sum(cast(xxhash64(cast($docIdCol AS string), $textCol)" +
+        " as decimal(38,0)))"),
+      count(lit(1))).head()
     if (fpRow.isNullAt(0) || fpRow.getLong(2) == 0L) return // empty batch
     val tag = graft.streaming.StagedAppend.assembleTag(
       fpRow.getLong(0), fpRow.getDecimal(1), fpRow.getLong(2))
@@ -732,8 +614,8 @@ object SimSearch {
       val nNext = n + fpRow.getLong(2)
       val lines = (ledger + (tag -> gen)).toSeq.sorted
         .map { case (t, g) => s"$t\t$g" }
-      graft.streaming.DirSwap.install(spark, s"$path/df",
-        tag = "postingsdf") { tmp =>
+      graft.streaming.ManifestSwap.install(spark, s"$path/df",
+        "postingsdf") { tmp =>
         nextDf.repartition(termBuckets, col("tbkt"))
           .write.mode("overwrite").partitionBy("tbkt").parquet(tmp)
         writeSidecar(spark, tmp, "_N", nNext.toString)
@@ -744,9 +626,8 @@ object SimSearch {
     recoverManifestPostings(spark, path)
   }
 
-  /** The manifest-mode ledger: `tag -> generation` lines from the df
-    * table's `_APPLIED` sidecar (rename-format plain-tag lines have no
-    * generation and are not expected under this protocol). */
+  /** The ledger: `tag -> generation` lines from the df table's
+    * `_APPLIED` sidecar. */
   private def manifestLedger(spark: org.apache.spark.sql.SparkSession,
                              path: String): Map[String, String] =
     dfDataDir(spark, path).flatMap(readSidecar(spark, _, "_APPLIED"))
@@ -756,8 +637,8 @@ object SimSearch {
       }.toMap).getOrElse(Map.empty)
 
   /** Key any ledgered-but-unkeyed postings generation into the
-    * manifest — the manifest twin of [[recoverPendingPostings]] (the
-    * crash window between an append's df commit and its publish). */
+    * manifest — the crash window between an append's df commit and
+    * its publish. */
   def recoverManifestPostings(spark: org.apache.spark.sql.SparkSession,
                               path: String): Unit = {
     val ledger = manifestLedger(spark, path)
@@ -773,66 +654,6 @@ object SimSearch {
     }
   }
 
-  private def appliedTags(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Seq[String] =
-    // exists→read can straddle a live maintainer's df swap (the dir is
-    // absent for two renames); empty is the safe answer — a healer
-    // then treats in-flight stages as uncommitted and leaves them
-    dfDataDir(spark, path).flatMap(readSidecar(spark, _, "_APPLIED"))
-      .map(_.linesIterator.filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-
-  /** Move every staged parquet of `pending-<tag>` into its bucket dir
-    * under a tag-prefixed name, then drop the pending dir. Resumable:
-    * each rename is atomic and removes its source, so a crashed
-    * publish picks up exactly the files still staged. */
-  private def publishPending(path: String, tag: String): Unit = {
-    val pending = new java.io.File(s"$path/pending-$tag")
-    if (!pending.exists()) return
-    Option(pending.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("tbkt="))
-      .foreach { bktDir =>
-        val target = new java.io.File(s"$path/postings/${bktDir.getName}")
-        target.mkdirs()
-        Option(bktDir.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet"))
-          .foreach { f =>
-            val dst = new java.io.File(target, s"$tag-${f.getName}")
-            // re-check after a failed rename: recoverPendingPostings
-            // runs on the SERVING path, so a reader healing the same
-            // tag can win the rename race between our exists check and
-            // our rename (round-9 ADVICE). dst appearing or the source
-            // vanishing means the other party published this file.
-            if (dst.exists() || f.renameTo(dst)
-                || dst.exists() || !f.exists()) ()
-            else throw new java.io.IOException(
-              s"graft postings: cannot publish $f -> $dst")
-          }
-      }
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete(); ()
-    }
-    rmTree(pending)
-  }
-
-  /** Publish any APPLIED-but-unpublished pending generation (the
-    * crash window between an append's commit and its publish) so df
-    * never over-counts what the bucket reads can see; uncommitted
-    * pending dirs are left for their appender's retry. */
-  def recoverPendingPostings(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Unit = {
-    val root = new java.io.File(path)
-    val pendings = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith("pending-"))
-    if (pendings.isEmpty) return
-    val applied = appliedTags(spark, path).toSet
-    pendings.foreach { p =>
-      val tag = p.getName.stripPrefix("pending-")
-      if (applied(tag)) publishPending(path, tag)
-    }
-  }
-
   /** Fold [[appendPostingsIndex]]'s growth back to one file per term
     * bucket — the T6-window compaction of this index family (the
     * [[graft.cdc.Maintenance]] precedent: every append adds a file set
@@ -840,69 +661,50 @@ object SimSearch {
     * a query's pruned read opens all of them). Row-identical rewrite
     * (spec-pinned: serving output unchanged); the df table and `_N`
     * are untouched because the append path already folds them to one
-    * generation. Rollback-safe via [[graft.streaming.DirSwap]]. */
+    * generation. One atomic pointer commit publishes the fold. */
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String): Unit = {
-    if (graft.streaming.DirSwap.isManifestRoot(spark, s"$path/postings")) {
-      // key any ledgered-but-unkeyed generation first (same reason the
-      // rename branch publishes first: the fold must hold every row
-      // the df already counts), then fold base + appends into ONE
-      // generation. keepLedger = true: the postings manifest keys
-      // double as the publish-recovery marker — dropping a folded key
-      // would make recoverManifestPostings re-key its (absorbed)
-      // generation from the df ledger and serve its rows twice.
-      recoverManifestPostings(spark, path)
-      // ONE resolution for dirs + absorbed keys (foldSnapshot): a
-      // batch committing mid-compaction keeps its own generation
-      val (dirs, absorbed) = graft.streaming.ManifestSwap.foldSnapshot(
-        spark, s"$path/postings")
-      if (dirs.isEmpty) return
-      // one flat read over the generations' tbkt= LEAF dirs (a multi-
-      // root partitioned read trips Spark's conflicting-base-path
-      // check); tbkt is re-derived from the term for the fold's own
-      // partitioned write
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val leafs = dirs.flatMap { d =>
-        (try fs.listStatus(new org.apache.hadoop.fs.Path(d)).toSeq
-        catch { case _: java.io.FileNotFoundException => Seq.empty })
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("tbkt="))
-          .map(_.getPath.toString)
-      }
-      if (leafs.isEmpty) return
-      val rows = spark.read.schema(org.apache.spark.sql.types.StructType(
-          postingsSchema.filterNot(_.name == "tbkt")))
-        .parquet(leafs: _*)
-        .select(col("term"), col("doc_id"), col("tf"))
-        .withColumn("tbkt", pmod(xxhash64(col("term")),
-          lit(termBuckets.toLong)))
-      graft.streaming.ManifestSwap.installFold(spark, s"$path/postings",
-        "postings", absorbed, keepLedger = true) { gen =>
-        rows.repartition(termBuckets, col("tbkt"))
-          .write.mode("overwrite").partitionBy("tbkt").parquet(gen)
-      }
-      // superseded/orphan generations are reaped HERE and only here —
-      // the append path's ledgered generations must never be gc'd
-      // before their publish recovery can key them
-      graft.streaming.ManifestSwap.gc(spark, s"$path/postings")
-      return
+    // key any ledgered-but-unkeyed generation first (the fold must
+    // hold every row the df already counts), then fold base + appends
+    // into ONE generation. keepLedger = true: the postings manifest keys
+    // double as the publish-recovery marker — dropping a folded key
+    // would make recoverManifestPostings re-key its (absorbed)
+    // generation from the df ledger and serve its rows twice.
+    recoverManifestPostings(spark, path)
+    // ONE resolution for dirs + absorbed keys (foldSnapshot): a
+    // batch committing mid-compaction keeps its own generation
+    val (dirs, absorbed) = graft.streaming.ManifestSwap.foldSnapshot(
+      spark, s"$path/postings")
+    if (dirs.isEmpty) return
+    // one flat read over the generations' tbkt= LEAF dirs (a multi-
+    // root partitioned read trips Spark's conflicting-base-path
+    // check); tbkt is re-derived from the term for the fold's own
+    // partitioned write
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val leafs = dirs.flatMap { d =>
+      (try fs.listStatus(new org.apache.hadoop.fs.Path(d)).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty })
+        .filter(st => st.isDirectory &&
+          st.getPath.getName.startsWith("tbkt="))
+        .map(_.getPath.toString)
     }
-    graft.streaming.DirSwap.restoreIfTorn(spark, s"$path/postings",
-      "postings")
-    // publish any applied-but-unpublished append first — compaction
-    // rewrites postings from what it reads, so staged rows the df
-    // already counts must be inside before the fold
-    graft.streaming.DirSwap.restoreIfTorn(spark, s"$path/df",
-      tag = "postingsdf")
-    recoverPendingPostings(spark, path)
-    val rows = spark.read.schema(postingsSchema)
-      .parquet(s"$path/postings").select("term", "doc_id", "tf", "tbkt")
-    graft.streaming.DirSwap.install(spark, s"$path/postings",
-      "postings") { tmp =>
+    if (leafs.isEmpty) return
+    val rows = spark.read.schema(org.apache.spark.sql.types.StructType(
+        postingsSchema.filterNot(_.name == "tbkt")))
+      .parquet(leafs: _*)
+      .select(col("term"), col("doc_id"), col("tf"))
+      .withColumn("tbkt", pmod(xxhash64(col("term")),
+        lit(termBuckets.toLong)))
+    graft.streaming.ManifestSwap.installFold(spark, s"$path/postings",
+      "postings", absorbed, keepLedger = _ => true) { gen =>
       rows.repartition(termBuckets, col("tbkt"))
-        .write.mode("overwrite").partitionBy("tbkt").parquet(tmp)
+        .write.mode("overwrite").partitionBy("tbkt").parquet(gen)
     }
+    // superseded/orphan generations are reaped HERE and only here —
+    // the append path's ledgered generations must never be gc'd
+    // before their publish recovery can key them
+    graft.streaming.ManifestSwap.gc(spark, s"$path/postings")
   }
 
   /** The lexical top-`poolSize` served from the postings index: read
@@ -915,45 +717,31 @@ object SimSearch {
                                  queryTerms: Seq[String], poolSize: Int)
       : DataFrame = {
     val bkts = queryTerms.map(termBucket).distinct
-    val manifest = graft.streaming.DirSwap.isManifestRoot(
+    // publish any committed-but-unkeyed append generation before
+    // reading, so df never counts rows the bucket read misses
+    recoverManifestPostings(spark, indexPath)
+    // prune to the query terms' bucket leaf dirs across the committed
+    // generations (same IO pruning as a partition filter; tbkt is
+    // implied by the enumeration)
+    val dirs = graft.streaming.ManifestSwap.readDataPaths(
       spark, s"$indexPath/postings")
-    // the df table swaps on incremental append — restore a torn swap
-    // and publish any applied-but-unpublished append generation
-    // before reading, so df never counts rows the bucket read misses
-    if (manifest) recoverManifestPostings(spark, indexPath)
-    else {
-      graft.streaming.DirSwap.restoreIfTorn(spark, s"$indexPath/df",
-        tag = "postingsdf")
-      recoverPendingPostings(spark, indexPath)
-    }
+    val fs = new org.apache.hadoop.fs.Path(indexPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val leafs = for {
+      d <- dirs; b <- bkts
+      p = new org.apache.hadoop.fs.Path(d, s"tbkt=$b")
+      if fs.exists(p)
+    } yield p.toString
     val posts =
-      if (manifest) {
-        // prune to the query terms' bucket leaf dirs across the
-        // committed generations (same IO pruning as the partition
-        // filter; tbkt is implied by the enumeration)
-        val dirs = graft.streaming.DirSwap.readDataPaths(
-          spark, s"$indexPath/postings", "postings")
-        val fs = new org.apache.hadoop.fs.Path(indexPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val leafs = for {
-          d <- dirs; b <- bkts
-          p = new org.apache.hadoop.fs.Path(d, s"tbkt=$b")
-          if fs.exists(p)
-        } yield p.toString
-        if (leafs.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            postingsSchema)
-            .filter(col("term").isin(queryTerms: _*))
-        else spark.read.schema(org.apache.spark.sql.types.StructType(
-            postingsSchema.filterNot(_.name == "tbkt")))
-          .parquet(leafs: _*)
+      if (leafs.isEmpty)
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          postingsSchema)
           .filter(col("term").isin(queryTerms: _*))
-      } else
-        spark.read.schema(postingsSchema)
-          .parquet(s"$indexPath/postings")
-          .filter(col("tbkt").isin(bkts: _*) &&
-            col("term").isin(queryTerms: _*))
+      else spark.read.schema(org.apache.spark.sql.types.StructType(
+          postingsSchema.filterNot(_.name == "tbkt")))
+        .parquet(leafs: _*)
+        .filter(col("term").isin(queryTerms: _*))
     val dfDir = dfDataDir(spark, indexPath).getOrElse(
       throw new java.io.FileNotFoundException(
         s"graft postings: no df table under $indexPath"))

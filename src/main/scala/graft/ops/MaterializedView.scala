@@ -4,74 +4,47 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.streaming.{DirSwap, ManifestSwap}
+import graft.streaming.ManifestSwap
 
 /** Incrementally-maintained materialization of the denormalized BI view
   * (vw_invoice_header_line) — the Superset serving layer kept fresh from
   * the changefeed instead of rebuilt.
   *
-  * Layout: parquet under `bucket = pmod(invoice_id, nBuckets)` partition
-  * directories. A change page touches a bounded set of invoices → a
-  * bounded set of bucket partitions; `refresh` recomputes ONLY those
+  * Layout: a [[ManifestSwap]] root whose manifest holds one
+  * `bucket=N -> generation-relative dir` entry per bucket of
+  * `pmod(invoice_id, nBuckets)`. A change page touches a bounded set of
+  * invoices → a bounded set of buckets; `refresh` recomputes ONLY those
   * buckets (join reduced by the bucket predicate — honest note: that
   * prunes ROWS, not IO, since `pmod(invoice_id)` is no partition
   * column of the base tables; at deployment scale the recompute side
   * reads a bucket-aligned state layout
   * ([[graft.plans.StateLayout]]-style) so touched-bucket IO is pruned
-  * too) and swaps each one in via
-  * the rollback-safe [[DirSwap]] (tag "mview"): one staging write job
-  * for the whole page, then a metadata-only rename pair per bucket. At
-  * 100 TB a poll-page refresh REWRITES O(page) buckets while the other
-  * ~nBuckets stay untouched — write cost proportional to the change
-  * rate, not the view size.
+  * too), writes them into ONE fresh generation and CAS-commits the
+  * bucket→dir map. At 100 TB a poll-page refresh REWRITES O(page)
+  * buckets while the other ~nBuckets keep serving their old
+  * generations — write cost proportional to the change rate, not the
+  * view size.
   *
-  * Why not dynamic partition overwrite: Spark's committer DELETES each
-  * touched partition directory before moving the new files in, so a
-  * reader that planned against the old files has an unhealable window
-  * (its inputs are simply gone, and a crash inside the commit leaves
-  * NO copy of the bucket). The per-bucket DirSwap keeps the standard
-  * invariant instead — a crash at any window leaves a generation
-  * restorable, and [[read]] heals torn buckets before listing, the
-  * same serving posture as every other swap site.
+  * The whole page cuts over in ONE atomic pointer commit: a reader can
+  * never observe a half-refreshed page, a crash leaves only an
+  * invisible orphan generation (no heal step), and the protocol is
+  * sound on object stores. Dynamic partition overwrite would not do:
+  * Spark's committer DELETES each touched partition directory before
+  * moving the new files in, so a reader that planned against the old
+  * files loses its inputs, and a crash inside the commit leaves NO
+  * copy of the bucket.
   *
-  * PROTOCOLS (round-13): `protocol = "dir"` is the per-bucket DirSwap
-  * above; `"manifest"` publishes through [[ManifestSwap]]'s keyed
-  * manifest — every refresh writes ONE immutable generation holding
-  * the recomputed buckets and CAS-commits the bucket→dir map, so the
-  * whole page cuts over atomically (readers can never observe a
-  * half-refreshed page, which the bucket-by-bucket rename protocol
-  * permits), crashes leave only invisible orphans (no heal step at
-  * all), and the protocol is sound on object stores where directory
-  * rename is not. `"auto"` follows [[DirSwap]]'s scheme gate. The
-  * declared `view_materialized` key pins `"manifest"` so the
-  * object-store publish path sits under the DuckDB correctness gate
-  * every round. */
+  * `protocol` names the publish protocol and accepts only "manifest",
+  * the one protocol there is; it remains a parameter because callers
+  * written when a rename protocol also existed pass it by name. */
 class MaterializedView(spark: SparkSession, dir: String, path: String,
-                       nBuckets: Int = 64, protocol: String = "auto",
+                       nBuckets: Int = 64, protocol: String = "manifest",
                        gcGraceMs: Long = ManifestSwap.DefaultGraceMs) {
-  require(Set("auto", "dir", "manifest")(protocol),
-    s"unknown mview protocol '$protocol'")
+  require(protocol == "manifest",
+    s"unknown mview protocol '$protocol' (only \"manifest\" exists)")
 
   private def fs = new Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** True when this view publishes through [[ManifestSwap]]'s keyed
-    * manifest (one `bucket=N -> generation-relative dir` entry per
-    * bucket) instead of per-bucket DirSwap renames. "auto" follows the
-    * scheme gate — object stores get the manifest, rename-capable
-    * filesystems the swap; "manifest" pins it (the declared
-    * `view_materialized` key runs pinned, so the object-store publish
-    * path is exercised by the correctness gate on every round even
-    * though the build can only run local-fs). The manifest mode is
-    * strictly STRONGER than the per-bucket swap here: a refresh page
-    * touching k buckets cuts over in ONE atomic pointer commit, so a
-    * reader can never observe a half-refreshed page — the per-bucket
-    * rename protocol publishes bucket-by-bucket and cannot. */
-  private val manifestMode: Boolean = protocol match {
-    case "manifest" => true
-    case "dir"      => false
-    case _          => DirSwap.manifestMode(fs)
-  }
 
   private def flatView(onlyBuckets: Option[Seq[Int]]): DataFrame = {
     val o = Tables.orders(spark, dir)
@@ -99,54 +72,50 @@ class MaterializedView(spark: SparkSession, dir: String, path: String,
     out.repartition(nBuckets, col("bucket"))
   }
 
-  /** Full build — done once; later refreshes are incremental. No
-    * readers exist before the first build, so the plain overwrite is
-    * fine here in dir mode; manifest mode publishes the same way a
-    * refresh does (one generation + one pointer commit). */
+  /** Full build — done once; later refreshes are incremental. Published
+    * the same way a refresh is (one generation + one pointer commit). */
   def build(): Unit =
-    if (manifestMode) publishManifest(flatView(None), removeAbsent = true)
-    else flatView(None).write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket").parquet(path)
+    publish(flatView(None), removeAbsent = true)
 
-  /** MANIFEST-MODE publish shared by build and refresh: write the
-    * recomputed buckets into ONE fresh generation (partitioned by a
-    * `bucket_part` twin column so the real `bucket` column stays in
-    * the data files — resolved generation dirs are read WITHOUT
-    * partition discovery), then CAS-merge the bucket→dir map: touched
-    * present buckets point into the new generation, recomputed-empty
-    * buckets leave the map (the dir-mode stale-delete, but atomic with
-    * the installs instead of a separate crash window), untouched
-    * buckets keep serving their old generations. Superseded/orphan
-    * generations are reaped by [[ManifestSwap.gc]] after the commit —
-    * age-graced, so a reader mid-scan on the old snapshot never loses
-    * its files. */
-  private def publishManifest(out: DataFrame,
-                              removeAbsent: Boolean,
-                              touched: Seq[Int] = Nil): Unit = {
-    val (gen, genDir) = ManifestSwap.newGeneration(spark, path)
-    // r16 (verdict #4): the present-bucket set used to come from a
-    // cache() + distinct().collect() BEFORE the write — a full extra
-    // materialization of the view (measured 2.9 s of the 6 s cold
-    // build at sf0.1). The partitioned write itself publishes exactly
-    // one `bucket_part=N` dir per present bucket, so ONE pass writes
-    // the generation and the present set is a driver listing of it
-    // (a row-less bucket writes no dir, the same emptiness the
-    // distinct saw).
-    out.withColumn("bucket_part", col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket_part").parquet(genDir)
-    val present = fs.listStatus(new Path(genDir))
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("bucket_part=") =>
-        n.stripPrefix("bucket_part=").toInt }
-      .toSet
-    val adds = present.toSeq.sorted
-      .map(b => s"bucket=$b" -> s"$gen/bucket_part=$b")
-    val drops =
-      if (removeAbsent) (0 until nBuckets).filterNot(present)
-      else touched.filterNot(present)
-    ManifestSwap.commitUpdate(spark, path, "mview")(m =>
-      m -- drops.map(b => s"bucket=$b") ++ adds)
+  /** The publish shared by build and refresh: write the recomputed
+    * buckets into ONE fresh generation (partitioned by a `bucket_part`
+    * twin column so the real `bucket` column stays in the data files —
+    * resolved generation dirs are read WITHOUT partition discovery),
+    * then CAS-merge the bucket→dir map: touched present buckets point
+    * into the new generation, recomputed-empty buckets leave the map
+    * (atomic with the installs, so an emptied bucket never serves its
+    * dead rows), untouched buckets keep serving their old generations.
+    * Superseded/orphan generations are reaped by [[ManifestSwap.gc]]
+    * after the commit — age-graced, so a reader mid-scan on the old
+    * snapshot never loses its files. */
+  private def publish(out: DataFrame, removeAbsent: Boolean,
+                      touched: Seq[Int] = Nil): Unit = {
+    var present = Set.empty[Int]
+    ManifestSwap.publish(spark, path, "mview") { genDir =>
+      // r16 (verdict #4): the present-bucket set used to come from a
+      // cache() + distinct().collect() BEFORE the write — a full extra
+      // materialization of the view (measured 2.9 s of the 6 s cold
+      // build at sf0.1). The partitioned write itself publishes exactly
+      // one `bucket_part=N` dir per present bucket, so ONE pass writes
+      // the generation and the present set is one listing of it
+      // (a row-less bucket writes no dir, the same emptiness the
+      // distinct saw).
+      out.withColumn("bucket_part", col("bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket_part").parquet(genDir)
+      present = fs.listStatus(new Path(genDir))
+        .map(_.getPath.getName)
+        .collect { case n if n.startsWith("bucket_part=") =>
+          n.stripPrefix("bucket_part=").toInt }
+        .toSet
+    } { (gen, m) =>
+      val adds = present.toSeq.sorted
+        .map(b => s"bucket=$b" -> s"$gen/bucket_part=$b")
+      val drops =
+        if (removeAbsent) (0 until nBuckets).filterNot(present)
+        else touched.filterNot(present)
+      m -- drops.map(b => s"bucket=$b") ++ adds
+    }
     // per-table grace (round-13 verdict #2): size it above the
     // longest plausible scan of one committed snapshot — a reader
     // that resolved at T keeps its files until T + gcGraceMs
@@ -154,108 +123,26 @@ class MaterializedView(spark: SparkSession, dir: String, path: String,
     ()
   }
 
-  /** Incremental refresh from a change page: recompute and swap only
-    * the buckets containing changed invoices. One staging job writes
-    * every recomputed bucket next to the view
-    * (`<path>.mview-stage`), then each bucket directory is installed
-    * with [[DirSwap]] — the write step is a rename out of staging, so
-    * the per-bucket cost is metadata-only. A bucket whose recompute
-    * came back empty (its last invoice was deleted) would keep serving
-    * stale rows forever, so empty-recompute buckets are deleted
-    * explicitly after the swaps; a crash between the swaps and those
-    * deletes (the failAfterOverwrite window CrashMatrixSpec kills)
-    * converges on the retried refresh, exactly as before. */
+  /** Incremental refresh from a change page: recompute and publish only
+    * the buckets containing changed invoices, in one commit. A bucket
+    * whose recompute came back empty (its last invoice was deleted)
+    * leaves the manifest in the same commit. */
   def refresh(changedInvoiceIds: Seq[Long]): Unit = {
     if (changedInvoiceIds.isEmpty) return
-    heal()
     val buckets = changedInvoiceIds
       .map(id => (((id % nBuckets) + nBuckets) % nBuckets).toInt).distinct
-    if (manifestMode) {
-      publishManifest(flatView(Some(buckets)), removeAbsent = false,
-        touched = buckets)
-      return
-    }
-    val staging = path.stripSuffix("/") + ".mview-stage"
-    try {
-      // r16 (verdict #4): one pass — the staging write's own
-      // `bucket=N` dirs ARE the present set (see publishManifest);
-      // the cache() + distinct().collect() pre-pass recomputed the
-      // whole page join once more
-      flatView(Some(buckets)).write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket").parquet(staging)
-      val present = fs.listStatus(new Path(staging))
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("bucket=") =>
-          n.stripPrefix("bucket=").toLong }
-        .toSet
-      buckets.filter(b => present(b.toLong)).foreach { b =>
-        DirSwap.install(spark, s"$path/bucket=$b", "mview") { tmp =>
-          val tmpP = new Path(tmp)
-          if (fs.exists(tmpP)) fs.delete(tmpP, true)
-          if (!fs.rename(new Path(s"$staging/bucket=$b"), tmpP))
-            throw new java.io.IOException(
-              s"graft mview: cannot stage bucket $b")
-        }
-      }
-      // crash window: the bucket swaps committed but the stale-bucket
-      // deletes below have not run — an emptied bucket keeps serving
-      // its dead rows until the NEXT refresh of the same page
-      // recomputes-empty again and deletes it (refresh is the
-      // converging retry; CrashMatrixSpec kills here)
-      if (MaterializedView.failAfterOverwrite)
-        throw new RuntimeException(
-          "graft failpoint: mview@afterOverwrite")
-      val stale = buckets.filterNot(b => present(b.toLong))
-      stale.foreach { b =>
-        fs.delete(new Path(s"$path/bucket=$b"), true)
-      }
-    } finally {
-      fs.delete(new Path(staging), true)
-      ()
-    }
+    publish(flatView(Some(buckets)), removeAbsent = false,
+      touched = buckets)
   }
 
-  /** Restore any bucket a crashed (or in-flight) swap left torn — the
-    * serving-path heal, run before every read and refresh. Scans for
-    * `bucket=N.mview-bak` siblings; each is the standard DirSwap torn
-    * shape for its bucket directory. */
-  def heal(): Unit = {
-    if (manifestMode) return // no torn window: generations are
-    // invisible until their pointer commits, and pointers are atomic
-    val p = new Path(path)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).map(_.getPath.getName).foreach {
-      case MaterializedView.BakName(b) =>
-        DirSwap.restoreIfTorn(spark, s"$path/bucket=$b", "mview")
-      case _ => ()
-    }
-  }
-
-  /** Serving read: heal torn buckets, then read exactly the committed
-    * bucket directories (explicit leaf list + basePath, so in-flight
-    * swap siblings — `*.mview-tmp` / `*.mview-bak` / the staging dir —
-    * are never mistaken for partitions). */
+  /** Serving read: resolve ONE committed snapshot and read exactly its
+    * generation dirs — an atomic view of the last whole refresh page. */
   def read(): DataFrame = {
-    heal()
-    val dirs: Array[String] =
-      if (manifestMode)
-        // resolve ONE committed snapshot and read exactly its
-        // generation dirs — atomic view of the last whole refresh page
-        ManifestSwap.resolveRaw(spark, path)
-          .map(_._2.toSeq.sortBy(_._1)
-            .map { case (_, rel) => ManifestSwap.entryPath(path, rel) }
-            .toArray)
-          .getOrElse(Array.empty)
-      else {
-        val p = new Path(path)
-        if (!fs.exists(p)) Array.empty[String]
-        else fs.listStatus(p).map(_.getPath)
-          .filter(d => MaterializedView.DataName.matches(d.getName))
-          .map(_.toString).sorted
-      }
+    val dirs = ManifestSwap.resolveRaw(spark, path)
+      .map(_._2.toSeq.sortBy(_._1)
+        .map { case (_, rel) => ManifestSwap.entryPath(path, rel) })
+      .getOrElse(Seq.empty)
     if (dirs.isEmpty) {
-      // same schema as the non-empty branch: partition inference types
-      // the bucket dir names as INT, not flatView's long
       val schema = org.apache.spark.sql.types.StructType(
         flatView(None).schema.map(f =>
           if (f.name == "bucket")
@@ -263,15 +150,13 @@ class MaterializedView(spark: SparkSession, dir: String, path: String,
           else f))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else if (manifestMode) {
+    } else
       // generation dirs carry `bucket` IN the data files (the
-      // bucket_part twin was the partition column); cast long→int and
-      // re-order for exact schema parity with the dir-mode read
-      spark.read.parquet(dirs.toIndexedSeq: _*)
+      // bucket_part twin was the partition column); `bucket` reads as
+      // int, the type partition discovery gave the bucket dirs
+      spark.read.parquet(dirs: _*)
         .withColumn("bucket", col("bucket").cast("int"))
         .select(MaterializedView.Columns.map(col): _*)
-    } else
-      spark.read.option("basePath", path).parquet(dirs.toIndexedSeq: _*)
   }
 }
 
@@ -280,9 +165,4 @@ object MaterializedView {
     * planning `flatView`, whose two table reads each infer a schema. */
   private val Columns = Seq("invoice_id", "customer_key", "invoice_date", "status",
     "line_no", "part_key", "qty", "price_cents", "bucket")
-  private val BakName = """bucket=(\d+)\.mview-bak""".r
-  private val DataName = """bucket=\d+""".r
-  /** Test-only failpoint: crash [[MaterializedView.refresh]] between
-    * the bucket swaps and the stale-bucket deletes. */
-  @volatile private[graft] var failAfterOverwrite: Boolean = false
 }

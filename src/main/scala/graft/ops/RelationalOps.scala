@@ -1167,8 +1167,8 @@ object RelationalOps {
 
   /** S13 — the MATERIALIZED BI view as a declared query: full build
     * ONCE per (session, corpus), then a change-driven refresh of a
-    * bounded invoice page (recomputes and swaps ONLY the touched
-    * bucket partitions — O(page) of the view, per
+    * bounded invoice page (recomputes and republishes ONLY the touched
+    * buckets — O(page) of the view, per
     * [[MaterializedView]]) and a serving read off the parquet layout
     * on EVERY call. Deployment builds a materialized view a single
     * time and keeps it fresh from the changefeed — rebuilding the
@@ -1186,14 +1186,7 @@ object RelationalOps {
     // never an overwrite race on one path
     val path = scratch(s,
       "mview-" + java.lang.Integer.toHexString(d.hashCode))
-    // protocol = "manifest": the declared serving key drives the
-    // object-store publish path (immutable generations + atomic
-    // pointer commit) through the full DuckDB oracle gate every round;
-    // output is identical by construction — the protocol is
-    // output-invisible, and the atomic whole-page cutover is STRONGER
-    // than the per-bucket rename swap it replaces here
-    val mv = new MaterializedView(s, d, path, nBuckets = 16,
-      protocol = "manifest")
+    val mv = new MaterializedView(s, d, path, nBuckets = 16)
     val key = s"${s.sparkContext.applicationId}|$d"
     if (!mvBuilt.contains(key)) mvBuilt.synchronized {
       if (!mvBuilt.contains(key)) { mv.build(); mvBuilt.add(key) }

@@ -141,15 +141,10 @@ object ZOrder {
     * parquet readers off it). The index is one aggregate over the
     * written files, file-count rows to the driver. */
   def layoutN(df: DataFrame, path: String, dims: Seq[Dim],
-              files: Int): Unit = {
-    val spark = df.sparkSession
-    if (isManifest(spark, path))
-      // manifest protocol: the build is one committed generation (the
-      // plain overwrite would mint in-place files nobody resolves)
-      graft.streaming.DirSwap.install(spark, path, "zorder")(
-        rawLayout(df, _, dims, files))
-    else rawLayout(df, path, dims, files)
-  }
+              files: Int): Unit =
+    // the build is one committed generation
+    graft.streaming.ManifestSwap.install(df.sparkSession, path, "zorder")(
+      rawLayout(df, _, dims, files))
 
   /** One complete layout generation written INTO `dir`: the z-sorted
     * data files plus their `_ZSTATS` index. */
@@ -167,9 +162,6 @@ object ZOrder {
       .drop("__z")
       .write.mode("overwrite").parquet(dir)
 
-  private def isManifest(spark: SparkSession, path: String): Boolean =
-    graft.streaming.DirSwap.appendsAreManifest(spark, path)
-
   /** 2-D [[layoutN]] — the original form. */
   def layout(df: DataFrame, path: String,
              colA: String, aMin: Long, aMax: Long,
@@ -180,53 +172,29 @@ object ZOrder {
 
   /** Incremental ingest into a [[layoutN]]: z-sort the batch UNDER THE
     * LAYOUT'S ORIGINAL BOUNDS (so old and new files share one curve)
-    * and append its files, then extend the stats index with ONLY the
-    * new files' envelopes (existing files are immutable, their lines
-    * carry over) — no rewrite of existing data, cost ∝ batch (the
-    * growing-corpus twin of the bucketed vector layouts' append).
+    * into its own generation with its own stats index (existing files
+    * are immutable, their lines carry over) — no rewrite of existing
+    * data, cost ∝ batch (the growing-corpus twin of the bucketed
+    * vector layouts' append).
     * Each append adds `files` files; fold back with a periodic
     * [[rebuild]] — wired into [[graft.cdc.Maintenance]], the same
     * maintenance-window trade the change table makes with log
     * compaction. Out-of-bounds batch values are safe: [[scaleBits]]
     * clamps their codes to the curve's edge cells and the index
     * records the files' TRUE envelopes, so pruning stays conservative
-    * (edge files just carry wider envelopes until a rebuild). A crash
-    * between the data commit and the index refresh is also safe:
-    * [[prunedScanN]] treats files the index doesn't know as hot. */
+    * (edge files just carry wider envelopes until a rebuild). */
   def appendN(batch: DataFrame, path: String, dims: Seq[Dim],
-              files: Int): Unit = {
-    val spark = batch.sparkSession
+              files: Int): Unit =
     // RETRY-IDEMPOTENT (round 9): a crashed append retried must not
-    // land the batch's rows twice — the staged-append protocol
-    // (stage → ledger commit → per-file atomic publish) makes the
-    // whole ingest a pure function of the batch content. The stats
-    // index refresh below is already idempotent (it indexes exactly
-    // the files the listing has that the index lacks) and
-    // crash-safe (unknown files are treated hot by prunedScanN).
-    if (isManifest(spark, path)) {
-      // manifest protocol: the batch's `_ZSTATS` rides INSIDE its
-      // immutable generation (files never move, so their index lines
-      // never go stale) and commits atomically with the data — the
-      // post-publish index extension below exists only because the
-      // rename protocol renames staged files to tag-prefixed names
-      graft.streaming.StagedAppend.contentTag(batch).foreach { tag =>
-        graft.streaming.StagedAppend.append(spark, path, tag) { gen =>
-          writeSorted(batch, gen, dims, files)
-          writeStats(spark, gen, dims.map(_.name))
-        }
-      }
-      return
+    // land the batch's rows twice — the content-keyed append makes the
+    // whole ingest a pure function of the batch content. The batch's
+    // `_ZSTATS` rides INSIDE its immutable generation (files never
+    // move, so their index lines never go stale) and commits
+    // atomically with the data.
+    graft.streaming.StagedAppend.append(path, batch) { gen =>
+      writeSorted(batch, gen, dims, files)
+      writeStats(batch.sparkSession, gen, dims.map(_.name))
     }
-    graft.streaming.StagedAppend.contentTag(batch).foreach { tag =>
-      graft.streaming.StagedAppend.append(spark, path, tag) { pending =>
-        writeSorted(batch, pending, dims, files)
-      }
-    }
-    val known = readStatsLines(spark, path)
-      .map(_.takeWhile(_ != '\t')).toSet
-    val newFiles = listDataFiles(spark, path).filterNot(known)
-    writeStats(spark, path, dims.map(_.name), onlyFiles = Some(newFiles))
-  }
 
   /** 2-D [[appendN]] — the original form. */
   def append(batch: DataFrame, path: String,
@@ -238,51 +206,26 @@ object ZOrder {
 
   /** Fold a layout that has accumulated append generations back to
     * `files` files (and a `files`-line `_ZSTATS`): one re-clustered
-    * generation written behind the rollback-safe
-    * [[graft.streaming.DirSwap]] (tag "zorder") — readers either see
-    * the old complete layout or the new one, and [[prunedScanN]]
-    * heals the crash window. The periodic rebuild is also where
-    * drifted bounds tighten: pass the CURRENT min/max so edge-clamped
-    * appends re-spread over the full curve. */
+    * generation committed as the new base in one atomic pointer write
+    * — readers either see the old complete layout or the new one. The
+    * periodic rebuild is also where drifted bounds tighten: pass the
+    * CURRENT min/max so edge-clamped appends re-spread over the full
+    * curve.
+    *
+    * Row-preserving: the fold absorbs the base + every committed
+    * append into ONE generation, and the absorbed append keys retire
+    * to ledger lines in the SAME commit, so a late retry of an
+    * already-folded batch still finds its key and skips. Dirs and
+    * absorbed keys come from ONE resolution (foldSnapshot), so a
+    * concurrently-committed append is neither double-served nor lost. */
   def rebuild(spark: SparkSession, path: String, dims: Seq[Dim],
               files: Int): Unit = {
-    if (isManifest(spark, path)) {
-      // row-preserving fold: absorb the base + every committed append
-      // into ONE generation; absorbed append keys retire to ledger
-      // lines in the SAME atomic commit, so a late retry of an
-      // already-folded batch still finds its key and skips — the
-      // manifest twin of "the ledger carries across the rebuild".
-      // Reading the old generations while writing the new one is safe:
-      // they stay committed until the fold's pointer lands (and
-      // gc-graced after), so no localCheckpoint barrier is needed.
-      // dirs and absorbed keys come from ONE resolution (foldSnapshot)
-      // so a concurrently-committed append is neither double-served
-      // nor lost.
-      // an in-place layout under a manifest config folds into the
-      // first manifest base here — the migration step appendN's guard
-      // points at (the maintainChangeTable pattern; without it the
-      // family deadlocked: rebuild no-opped on the empty snapshot
-      // while appendN refused until a rebuild ran — round-14 ADVICE)
-      val (d0, absorbed) =
-        graft.streaming.ManifestSwap.foldSnapshot(spark, path)
-      val dirs =
-        if (d0.nonEmpty) d0
-        else graft.streaming.DirSwap.readDataPaths(spark, path, "zorder")
-      if (dirs.isEmpty) return
-      graft.streaming.ManifestSwap.installFold(spark, path, "zorder",
-        absorbed, keepLedger = true)(
-        rawLayout(spark.read.parquet(dirs: _*), _, dims, files))
-      return
-    }
-    // publish any committed-but-unpublished staged append first — the
-    // fold reads the layout, and committed rows must be inside it.
-    // The fold PRESERVES rows (no supersession), so the append ledger
-    // and generation carry across: a late retry of an already-folded
-    // batch still finds its ledger entry and skips.
-    graft.streaming.StagedAppend.recover(spark, path)
-    graft.streaming.DirSwap.install(spark, path, "zorder") { tmp =>
-      rawLayout(spark.read.parquet(path), tmp, dims, files)
-    }
+    val (dirs, absorbed) =
+      graft.streaming.ManifestSwap.foldSnapshot(spark, path)
+    if (dirs.isEmpty) return
+    graft.streaming.ManifestSwap.installFold(spark, path, "zorder",
+      absorbed, keepLedger = _ => true)(
+      rawLayout(spark.read.parquet(dirs: _*), _, dims, files))
   }
 
   private def fsOf(spark: SparkSession,
@@ -313,42 +256,25 @@ object ZOrder {
     }
   }
 
-  /** (Re)build the `_ZSTATS` index — or, with `onlyFiles`, aggregate
-    * just those files' envelopes and carry the existing lines over
-    * (append cost ∝ batch). Line format: file, then (lo, hi) per
-    * dimension, tab-separated. Installed via write-temp-then-rename
-    * so a racing reader sees either the previous or the new COMPLETE
-    * index, never a truncated one. */
-  private def writeStats(spark: SparkSession, path: String,
-                         cols: Seq[String],
-                         onlyFiles: Option[Seq[String]] = None): Unit = {
-    val scan = onlyFiles match {
-      case Some(fs) if fs.isEmpty => return
-      case Some(fs) => spark.read.parquet(fs: _*)
-      case None => spark.read.parquet(path)
-    }
+  /** Build the `_ZSTATS` index of the data files in `dir`, a
+    * generation being staged (unpublished, so a plain write is safe).
+    * Line format: file, then (lo, hi) per dimension, tab-separated. */
+  private def writeStats(spark: SparkSession, dir: String,
+                         cols: Seq[String]): Unit = {
     val envelope = cols.flatMap(c =>
       Seq(min(col(c)).as(s"${c}_lo"), max(col(c)).as(s"${c}_hi")))
-    val stats = scan
+    val stats = spark.read.parquet(dir)
       .groupBy(input_file_name().as("file"))
       .agg(envelope.head, envelope.tail: _*)
       .collect() // one row per aggregated file
-    val fresh = stats.map { r =>
+    val body = stats.map { r =>
       (r.getString(0) +: (1 until r.length).map(r.getLong(_).toString))
         .mkString("\t")
-    }
-    val carried =
-      if (onlyFiles.isEmpty) Nil else readStatsLines(spark, path)
-    val body = (carried ++ fresh).sorted.distinct.mkString("", "\n", "\n")
-    val fs = fsOf(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(path, "._ZSTATS-tmp")
-    val out = fs.create(tmp, true)
+    }.sorted.mkString("", "\n", "\n")
+    val out = fsOf(spark, dir)
+      .create(new org.apache.hadoop.fs.Path(dir, "_ZSTATS"), true)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(path, "_ZSTATS")
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"graft zstats: cannot install $dst")
   }
 
   /** Scan the z-layout at `path` reading ONLY the files whose `_ZSTATS`
@@ -356,8 +282,7 @@ object ZOrder {
     * file-level skipping off the driver-side index (file-count-sized),
     * the move a table-format scan makes from its manifest.
     * CONSERVATIVE on every edge: a data file the index doesn't know
-    * (crash between a data commit and the index refresh, or no index
-    * at all) is treated as hot and scanned; a stats line with a
+    * is treated as hot and scanned; a stats line with a
     * different dimension count (pre-rebuild generation) never skips —
     * only a recorded non-intersecting envelope ever skips a file. The
     * box filter is re-applied to the surviving rows (envelopes are
@@ -366,12 +291,11 @@ object ZOrder {
     * with the layout's schema. */
   def prunedScanN(spark: SparkSession, path: String,
                   box: Seq[(String, Long, Long)]): DataFrame = {
-    // protocol-aware locations: the healed root itself (rename), or
-    // the committed base + appended generations (manifest) — each dir
-    // carries its own immutable `_ZSTATS`, concatenated here (the
-    // manifest-list read: stats of absorbed appends vanished WITH
-    // their generations in the same fold commit, so lines never lie)
-    val dirs = graft.streaming.DirSwap.readDataPaths(spark, path, "zorder")
+    // the committed base + appended generations — each dir carries its
+    // own immutable `_ZSTATS`, concatenated here (the manifest-list
+    // read: stats of absorbed appends vanished WITH their generations
+    // in the same fold commit, so lines never lie)
+    val dirs = graft.streaming.ManifestSwap.readDataPaths(spark, path)
     if (dirs.isEmpty)
       return spark.read.parquet(path) // preserve the missing-layout error
     val n = box.length

@@ -11,12 +11,16 @@ import org.apache.spark.sql.functions._
   * segregated to an error dir; a listing endpoint (newest first, with
   * size); and per-document read-back.
   *
-  * Spark-first shape: documents are JSON-lines records written
-  * `partitionBy(version_bucket)` where `version_bucket =
-  * change_version / 1000` (the reference's default poll page size,
-  * server.js:89) — append-only, written in parallel, idempotent under
-  * redelivery (re-appended records are deduplicated by `doc_name` on
-  * read). The reference's filename becomes a `doc_name` column — at
+  * Spark-first shape: each delivered page is one immutable
+  * [[graft.streaming.ManifestSwap]] generation of JSON-lines records
+  * partitioned by `version_bucket = change_version / 1000` (the
+  * reference's default poll page size, server.js:89) — append-only,
+  * written in parallel, idempotent under redelivery (re-appended
+  * records are deduplicated by `doc_name` on read). Read the sink
+  * through [[listSink]], [[readBack]], [[readVersion]] or
+  * [[deduplicated]]: they resolve one committed snapshot, where a
+  * plain directory listing would also see uncommitted and superseded
+  * generations. The reference's filename becomes a `doc_name` column — at
   * 100 TB one-file-per-document is a small-files catastrophe, and so is
   * one-DIRECTORY-per-version (a busy feed mints millions of versions);
   * bucketing bounds the directory count at versions/1000 while keeping
@@ -83,165 +87,135 @@ object DocumentSink {
     val bucketed = valid.withColumn("version_bucket",
         expr(s"change_version div $VersionsPerBucket"))
       .repartition(col("version_bucket"))
-    if (graft.streaming.DirSwap.appendsAreManifest(spark, dir)) {
-      // MANIFEST protocol (round-14): each delivered page is one
-      // immutable generation listed by the keyed manifest — the
-      // object-store-sound sink layout. The key is fresh per call
-      // (delivery is at-least-once BY DESIGN here; exactly-once
-      // lives in [[deduplicated]]'s read-side collapse, same as the
-      // rename protocol's mode=append). Inside the generation the
-      // page is partitioned by a `vb_part` twin while
-      // `version_bucket` stays a DATA column, so [[readVersion]]
-      // prunes to one leaf dir per generation and plain reads need
-      // no partition discovery across generation roots.
-      graft.streaming.ManifestSwap.appendKeyed(spark, dir, "sink",
-        "page-" + java.util.UUID.randomUUID().toString) { gen =>
-        bucketed.withColumn("vb_part", col("version_bucket"))
-          .write.mode("overwrite").partitionBy("vb_part").json(gen)
-      }
-    } else
-      bucketed
-        .write.mode("append").partitionBy("version_bucket").json(dir)
+    // each delivered page is one immutable generation listed by the
+    // sink's keyed manifest. The key is fresh per call (delivery is
+    // at-least-once BY DESIGN here; exactly-once lives in
+    // [[deduplicated]]'s read-side collapse). Inside the generation the
+    // page is partitioned by a `vb_part` twin while `version_bucket`
+    // stays a DATA column, so [[readVersion]] prunes to one leaf dir
+    // per generation and reads need no partition discovery across
+    // generation roots.
+    graft.streaming.ManifestSwap.appendKeyed(spark, dir, "sink",
+      "page-" + java.util.UUID.randomUUID().toString) { gen =>
+      writeBuckets(bucketed, gen)
+    }
     if (invalidRows.get("invalid").asInstanceOf[Long] > 0L)
       stamped.filter(!ok).write.mode("append").json(errorDir)
   }
 
-  /** The sink's json leaf directories under the MANIFEST protocol:
-    * every `vb_part=` partition dir across the committed generations,
-    * optionally pruned to one bucket (the [[readVersion]] path — one
-    * existence-filtered listing per generation, never a sink walk). */
-  private def manifestLeafDirs(spark: SparkSession, dir: String,
-                               onlyBucket: Option[Long]): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
+  /** One generation's json layout: a `vb_part=` dir per version bucket,
+    * `version_bucket` kept as a data column. */
+  private def writeBuckets(docs: DataFrame, gen: String): Unit =
+    docs.withColumn("vb_part", col("version_bucket"))
+      .write.mode("overwrite").partitionBy("vb_part").json(gen)
+
+  /** The sink's json leaf directories: every `vb_part=` partition dir
+    * across the committed generations, optionally pruned to one bucket
+    * (the [[readVersion]] path — one existence-filtered listing per
+    * generation, never a sink walk). */
+  private def leafDirs(spark: SparkSession, gens: Seq[String],
+                       onlyBucket: Option[Long]): Seq[String] = {
+    val fs = new org.apache.hadoop.fs.Path(gens.headOption.getOrElse("/"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.DirSwap.readDataPaths(spark, dir, "compact")
-      .flatMap { g =>
-        val entries =
-          try fs.listStatus(new org.apache.hadoop.fs.Path(g)).toSeq
-          catch { case _: java.io.FileNotFoundException => Seq.empty }
-        entries.filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("vb_part=") &&
-            onlyBucket.forall(b => st.getPath.getName == s"vb_part=$b"))
-          .map(_.getPath.toString)
-      }
+    gens.flatMap { g =>
+      val entries =
+        try fs.listStatus(new org.apache.hadoop.fs.Path(g)).toSeq
+        catch { case _: java.io.FileNotFoundException => Seq.empty }
+      entries.filter(st => st.isDirectory &&
+          st.getPath.getName.startsWith("vb_part=") &&
+          onlyBucket.forall(b => st.getPath.getName == s"vb_part=$b"))
+        .map(_.getPath.toString)
+    }
   }
+
+  /** The documents in `leafs`, or an empty frame of `schema`; without
+    * a schema there is nothing to shape an empty result with, so an
+    * empty leaf set throws `empty`'s message. */
+  private def readLeafs(spark: SparkSession, leafs: Seq[String],
+                        schema: Option[org.apache.spark.sql.types.StructType],
+                        empty: => String): DataFrame =
+    if (leafs.isEmpty) schema match {
+      case Some(s) => spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+        .drop("version_bucket")
+      case None => throw new IllegalArgumentException(empty)
+    } else schema.fold(spark.read)(s => spark.read.schema(s))
+      .json(leafs: _*).drop("version_bucket")
 
   /** S5 — sink listing, newest first with size (server.js:368-398).
     * binaryFile gives (path, modificationTime, length) without reading
-    * content — a distributed `ls`. Restores a compaction interrupted
-    * between its two renames first (the sink would otherwise read as
-    * missing until manual intervention); a manifest sink lists the
-    * committed generations instead (nothing to heal). */
+    * content — a distributed `ls` over the committed generations.
+    *
+    * The sink directory is a [[graft.streaming.ManifestSwap]] root:
+    * its documents live in generation dirs under `_gens/`, and
+    * superseded or uncommitted generations sit beside the live ones
+    * until gc. A consumer that lists a plain directory (the reference
+    * consumer's shape) must therefore go through this listing or
+    * [[readBack]]/[[readVersion]]/[[deduplicated]] — the supported
+    * readers, which resolve one committed snapshot per call. */
   def listSink(spark: SparkSession, dir: String): DataFrame = {
-    val base = spark.read.format("binaryFile")
+    val paths = graft.streaming.ManifestSwap.readDataPaths(spark, dir)
+    // a sink before its first commit has nothing to list — load() with
+    // zero paths throws "path not specified" (round-14 ADVICE)
+    if (paths.isEmpty)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("path",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("length",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("modificationTime",
+            org.apache.spark.sql.types.TimestampType))))
+    spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.json")
-    val loaded =
-      if (graft.streaming.DirSwap.isManifestRoot(spark, dir)) {
-        val paths = graft.streaming.DirSwap
-          .readDataPaths(spark, dir, "compact")
-        // a manifest root before its first commit has nothing to
-        // list — load() with zero paths throws "path not specified"
-        // instead of the empty listing the rename branch returns for
-        // an empty dir (round-14 ADVICE)
-        if (paths.isEmpty)
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("path",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("length",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("modificationTime",
-                org.apache.spark.sql.types.TimestampType))))
-        base.option("recursiveFileLookup", "true").load(paths: _*)
-      } else {
-        graft.streaming.DirSwap.restoreIfTorn(spark, dir, "compact")
-        base.load(dir)
-      }
-    loaded
+      .option("recursiveFileLookup", "true").load(paths: _*)
       .select(col("path"), col("length"), col("modificationTime"))
       .orderBy(col("modificationTime").desc, col("path"))
   }
 
   /** S6 — document read-back (server.js:401-421). Pass `schema` when the
     * page shape is known — JSON schema inference costs a full extra pass
-    * over every sink file. Restores a torn compaction first. */
+    * over every sink file. `version_bucket` is a DATA column inside the
+    * generations (the vb_part twin held the partitioning), so the
+    * multi-dir read needs no partition discovery. */
   def readBack(spark: SparkSession, dir: String,
-               schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    if (graft.streaming.DirSwap.isManifestRoot(spark, dir)) {
-      // manifest sink: version_bucket is a DATA column inside the
-      // generations (the vb_part twin held the partitioning), so the
-      // multi-dir read needs no partition discovery
-      val leafs = manifestLeafDirs(spark, dir, None)
-      if (leafs.isEmpty) schema match {
-        case Some(s) => return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-          .drop("version_bucket")
-        case None => throw new IllegalArgumentException(
-          s"graft sink: $dir has no delivered documents; pass a schema " +
-            "to get an empty result instead")
-      }
-      return schema.fold(spark.read)(s => spark.read.schema(s))
-        .json(leafs: _*).drop("version_bucket")
-    }
-    graft.streaming.DirSwap.restoreIfTorn(spark, dir, "compact")
-    schema.fold(spark.read)(s => spark.read.schema(s)).json(dir)
-      .drop("version_bucket")
-  }
+               schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    readLeafs(spark,
+      leafDirs(spark, graft.streaming.ManifestSwap.readDataPaths(spark, dir),
+        None),
+      schema,
+      s"graft sink: $dir has no delivered documents; pass a schema " +
+        "to get an empty result instead")
 
   /** Read the documents of one change version. The bucket directory is
-    * derivable from the version, so ONLY that directory is listed, read —
-    * and, when no schema is passed, schema-inferred — regardless of sink
-    * size (pointing inference at the whole sink would cost a full pass
-    * even though the scan itself prunes). A version whose bucket was
-    * never written returns empty when a schema is provided (the
-    * existence-probe contract); without a schema there is nothing to
-    * shape an empty result with, so it throws a named error. */
+    * derivable from the version, so ONLY that bucket's leaf dir in each
+    * generation is listed, read — and, when no schema is passed,
+    * schema-inferred — regardless of sink size (pointing inference at
+    * the whole sink would cost a full pass even though the scan itself
+    * prunes). A version whose bucket was never written returns empty
+    * when a schema is provided (the existence-probe contract); without
+    * a schema there is nothing to shape an empty result with, so it
+    * throws a named error. */
   def readVersion(spark: SparkSession, dir: String, version: Long,
-                  schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    if (graft.streaming.DirSwap.isManifestRoot(spark, dir)) {
-      // one pruned leaf dir per generation holding this version's
-      // bucket — the same read-one-bucket contract, manifest-resolved
-      val leafs = manifestLeafDirs(spark, dir,
-        Some(version / VersionsPerBucket))
-      if (leafs.isEmpty) schema match {
-        case Some(s) => return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-          .drop("version_bucket")
-        case None => throw new IllegalArgumentException(
-          s"graft sink: version $version was never delivered under " +
-            s"$dir; pass a schema to get an empty result instead")
-      }
-      return schema.fold(spark.read)(s => spark.read.schema(s))
-        .json(leafs: _*)
-        .filter(col("change_version") === version)
-        .drop("version_bucket")
-    }
-    val bucketDir = new org.apache.hadoop.fs.Path(
-      dir, s"version_bucket=${version / VersionsPerBucket}")
-    val fs = bucketDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(bucketDir)) schema match {
-      case Some(s) =>
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-          .drop("version_bucket")
-      case None => throw new IllegalArgumentException(
-        s"graft sink: version $version was never delivered " +
-          s"(no ${bucketDir.getName} under $dir); pass a schema to get " +
-          "an empty result instead")
-    }
-    schema.fold(spark.read)(s => spark.read.schema(s)).json(bucketDir.toString)
+                  schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    readLeafs(spark,
+      leafDirs(spark, graft.streaming.ManifestSwap.readDataPaths(spark, dir),
+        Some(version / VersionsPerBucket)),
+      schema,
+      s"graft sink: version $version was never delivered under " +
+        s"$dir; pass a schema to get an empty result instead")
       .filter(col("change_version") === version)
-      .drop("version_bucket") // tolerate callers whose schema includes it
-  }
 
   /** Exactly-once on redelivery: the same (invoice, version) appended
     * twice collapses to one document — last-writer-wins on the stamp.
     * THE single survivor rule: [[compact]] physically materializes this
     * exact DataFrame, so the two can never drift. */
   def deduplicated(spark: SparkSession, dir: String,
-                   schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val docs = readBack(spark, dir, schema)
+                   schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
+    survivors(readBack(spark, dir, schema))
+
+  private def survivors(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("invoice_id"), col("change_version"))
       .orderBy(col("doc_name").desc)
@@ -249,77 +223,35 @@ object DocumentSink {
       .filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** Maintenance compaction: the append-only sink accumulates one file
-    * per (poll × bucket) plus redelivered duplicates; a month of polls
-    * degrades every read-back. This job rewrites the sink to the
-    * [[deduplicated]] survivors — last-writer-wins per (invoice,
-    * version) — repartitioned one file per bucket dir, then swaps the
-    * directory in. Read-back before and after is IDENTICAL by
-    * construction (the survivors keep their doc_name stamps).
-    *
-    * The swap is rename-based, not atomic: a reader racing the two
-    * renames can see a missing directory, and a crash between them
-    * leaves the data intact under `<dir>.compact-bak` — every sink
-    * reader restores it automatically ([[graft.streaming.DirSwap]]).
-    * Run it like the reference runs its retention cleanup: as a
-    * scheduled maintenance window, not concurrent with delivery. */
+  /** Maintenance compaction: the append-only sink accumulates one
+    * generation per delivered page plus redelivered duplicates; a month
+    * of polls degrades every read-back. This job folds every committed
+    * generation into ONE holding the [[deduplicated]] survivors —
+    * last-writer-wins per (invoice, version) — one file per version
+    * bucket, committed as the new base in one atomic pointer write
+    * ([[graft.streaming.ManifestSwap.installFold]]): a reader sees the
+    * whole sink before or after, never half. Read-back before and after
+    * is IDENTICAL by construction (the survivors keep their doc_name
+    * stamps). The absorbed page keys just drop: sink pages carry no
+    * content-keyed idempotence contract (read-side dedup is the
+    * exactly-once layer). The survivors are derived from the SAME
+    * resolution as the absorbed keys (foldSnapshot), so a page landing
+    * mid-compaction keeps its own generation, neither folded nor
+    * hidden. Run it like the reference runs its retention cleanup: as
+    * a scheduled maintenance window. */
   def compact(spark: SparkSession, dir: String,
               schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    if (graft.streaming.DirSwap.appendsAreManifest(spark, dir)) {
-      // MANIFEST protocol: fold every delivered generation into one —
-      // an atomic whole-sink cutover readers can never see half of.
-      // keepLedger = false: sink pages carry no content-keyed
-      // idempotence contract (read-side dedup is the exactly-once
-      // layer), so absorbed page keys just drop. The survivors are
-      // derived from the SAME resolution as the absorbed keys
-      // (foldSnapshot) — a page landing mid-compaction keeps its own
-      // generation, neither folded nor hidden.
-      val (dirs, absorbed) =
-        graft.streaming.ManifestSwap.foldSnapshot(spark, dir)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val survivors =
-        if (dirs.isEmpty) {
-          // MIGRATION: an in-place sink under a manifest-mode config —
-          // this full-snapshot fold is the documented migration step
-          // (appendKeyed's guard points here); the structural read
-          // serves the in-place files one last time
-          if (!fs.exists(new org.apache.hadoop.fs.Path(dir))) return
-          deduplicated(spark, dir, schema)
-        } else {
-          val leafs = dirs.flatMap { g =>
-            (try fs.listStatus(new org.apache.hadoop.fs.Path(g)).toSeq
-            catch { case _: java.io.FileNotFoundException => Seq.empty })
-              .filter(st => st.isDirectory &&
-                st.getPath.getName.startsWith("vb_part="))
-              .map(_.getPath.toString)
-          }
-          if (leafs.isEmpty) return
-          val docs = schema.fold(spark.read)(s => spark.read.schema(s))
-            .json(leafs: _*).drop("version_bucket")
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("invoice_id"), col("change_version"))
-            .orderBy(col("doc_name").desc)
-          docs.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1).drop("_rn")
-        }
-      graft.streaming.ManifestSwap.installFold(spark, dir, "compact",
-        absorbed, keepLedger = false) { gen =>
-        survivors
-          .withColumn("version_bucket",
-            expr(s"change_version div $VersionsPerBucket"))
-          .repartition(col("version_bucket"))
-          .withColumn("vb_part", col("version_bucket"))
-          .write.mode("overwrite").partitionBy("vb_part").json(gen)
-      }
-      return
-    }
-    val survivors = deduplicated(spark, dir, schema)
-    graft.streaming.DirSwap.install(spark, dir, "compact")(tmp =>
-      survivors
+    val (gens, absorbed) =
+      graft.streaming.ManifestSwap.foldSnapshot(spark, dir)
+    val leafs = leafDirs(spark, gens, None)
+    if (leafs.isEmpty) return
+    val docs = readLeafs(spark, leafs, schema, "")
+    graft.streaming.ManifestSwap.installFold(spark, dir, "compact",
+      absorbed, keepLedger = _ => false) { gen =>
+      writeBuckets(survivors(docs)
         .withColumn("version_bucket",
           expr(s"change_version div $VersionsPerBucket"))
-        .repartition(col("version_bucket"))
-        .write.mode("overwrite").partitionBy("version_bucket").json(tmp))
+        .repartition(col("version_bucket")), gen)
+    }
   }
 }

@@ -5,11 +5,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Object-store-safe publish protocol: immutable generation directories
-  * plus one atomic single-file pointer commit — the twin of [[DirSwap]]
-  * for filesystems whose directory "rename" is a non-atomic copy+delete
-  * emulation (s3a/gs/abfs/...), where the two-rename swap is unsound
-  * (round-12 verdict ask #1). The industry-standard shape (the
+/** The publish protocol of every graft-managed table: immutable
+  * generation directories plus one atomic single-file pointer commit.
+  * It runs unchanged on local disks, HDFS and object stores, because
+  * nothing in it renames a directory. The industry-standard shape (the
   * Delta-log / Iceberg-snapshot commit, re-derived here over the plain
   * Hadoop FileSystem API):
   *
@@ -18,15 +17,15 @@ import org.apache.spark.sql.types.StructType
   *    until the pointer lands, so there is no torn window at all;
   *  - the current snapshot is named by the HIGHEST numbered manifest
   *    file `<path>/_ptr/<%020d>.mf`, whose payload maps logical keys
-  *    to generation-relative data dirs (the single-dir twin stores one
-  *    key, [[ManifestSwap.DataKey]]; the materialized view stores one
-  *    key per bucket — a whole refresh page cuts over in ONE commit,
-  *    which the per-bucket DirSwap could never do);
+  *    to generation-relative data dirs (a whole-snapshot table stores
+  *    one key, [[ManifestSwap.DataKey]]; the materialized view stores
+  *    one key per bucket, so a whole refresh page cuts over in ONE
+  *    commit);
   *  - a commit is a CREATE-IF-ABSENT of the next manifest number:
-  *    write-tmp + an atomic link(2) claim on local filesystems (the
-  *    testable branch — NOT a no-replace rename, which for files is
-  *    check-then-act and lost a commit under the round-14 disjoint-key
-  *    property; see [[commitPtr]]), a single conditional object PUT
+  *    write-tmp + an atomic link(2) claim on local filesystems (NOT a
+  *    no-replace rename, which for files is check-then-act and lost a
+  *    commit under the round-14 disjoint-key property; see
+  *    [[commitPtr]]), a single conditional object PUT
   *    (`FileSystem.create(overwrite = false)`, the
   *    If-None-Match/ifGenerationMatch=0 mapping) on stores that have
   *    PROVEN that contract ([[requireConditionalCreate]] — stock s3a
@@ -38,10 +37,14 @@ import org.apache.spark.sql.types.StructType
   * nothing visible; after it but before the pointer — an ORPHAN
   * generation no reader ever resolves ([[gc]] reaps it after a grace
   * age); after the pointer — fully committed, superseded generations
-  * linger until [[gc]]. Readers therefore need NO heal step (the
-  * [[DirSwap.restoreIfTorn]] twin is a no-op here); their only
+  * linger until [[gc]]. Readers therefore need NO heal step; their only
   * obligation is to resolve the pointer before reading and to treat
   * the resolved generation as immutable.
+  *
+  * Data that never went through this protocol — producer-written
+  * change tables, the testdata, [[graft.llm.CorpusCache]] layouts —
+  * is read structurally by [[dataPaths]]: a root with no committed
+  * manifest serves its in-place files.
   *
   * GC safety: [[gc]] guarantees a resolved snapshot stays readable for
   * at least `graceMs` after the resolve — the grace is measured from
@@ -51,21 +54,21 @@ import org.apache.spark.sql.types.StructType
   * superseded data costs storage, never correctness. */
 private[graft] object ManifestSwap {
 
-  /** The single logical key used by the [[DirSwap]]-twin API, where a
+  /** The single logical key of a whole-snapshot table, where a
     * snapshot is one whole data directory. */
   val DataKey = "data"
 
-  /** Test-only failpoint, the [[DirSwap.failpoint]] convention: when
-    * set to (tag, window), [[install]]/[[commitUpdate]] for a matching
-    * tag throws at that window — "afterGenWrite" (generation staged,
-    * pointer untouched: the orphan window), "beforeCommit" (between
+  /** Test-only failpoint: when set to (tag, window), every publish
+    * ([[publish]], [[commitUpdate]]) for a matching tag throws at that
+    * window — "afterGenWrite" (generation staged, pointer untouched:
+    * the orphan window), "beforeCommit" (between
     * resolving the next number and the atomic create: the CAS window),
     * "afterCommit" (pointer landed, superseded generations not yet
     * GC'd). */
   @volatile private[graft] var failpoint: Option[(String, String)] = None
-  /** Test-only non-throwing window hook (the [[DirSwap.windowAction]]
-    * convention): runs `body` at the window, one-shot, for landing a
-    * concurrent reader/writer INSIDE the commit window. */
+  /** Test-only non-throwing window hook: runs `body` at the window,
+    * one-shot, for landing a concurrent reader/writer INSIDE the
+    * commit window. */
   @volatile private[graft] var windowAction
       : Option[(String, String, () => Unit)] = None
   private def trip(tag: String, window: String): Unit = {
@@ -131,7 +134,7 @@ private[graft] object ManifestSwap {
     fs match {
       case _: org.apache.hadoop.fs.LocalFileSystem |
            _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        return // rename branch — atomicity comes from rename(2)
+        return // local branch — atomicity comes from link(2)
       case _ => ()
     }
     val scheme = Option(fs.getUri).flatMap(u => Option(u.getScheme))
@@ -306,8 +309,8 @@ private[graft] object ManifestSwap {
         // Claim the number with link(2), NOT a no-replace rename: for
         // FILES, NIO's no-REPLACE_EXISTING move is an exists-check
         // followed by rename(2), and rename(2) silently REPLACES an
-        // existing destination file (the ENOTEMPTY refusal that makes
-        // DirSwap's DIRECTORY swaps sound does not exist for files) —
+        // existing destination file (rename(2)'s ENOTEMPTY refusal
+        // exists only for directories) —
         // so two same-number committers could both "win" and the later
         // one overwrote the earlier manifest: the exact lost-commit
         // race this CAS exists to prevent, found live by the round-14
@@ -394,18 +397,28 @@ private[graft] object ManifestSwap {
         "(many maintainers on one table), not contention to absorb")
   }
 
-  // ------------------------------------------------ DirSwap-twin API --
+  // ------------------------------------------------------- publish --
 
-  /** Write one immutable generation via `write(genDir)` and commit it
-    * as the whole snapshot — the [[DirSwap.install]] twin. Concurrent
-    * installs converge exactly as DirSwap's did: last committed pointer
-    * wins, and every committed pointer names a COMPLETE generation. */
-  def install(spark: SparkSession, path: String, tag: String = "merge")
-             (write: String => Unit): Unit = {
+  /** THE publish step every write here shares: stage one immutable
+    * generation via `write(genDir)`, then CAS-merge `update(gen, m)`
+    * over the freshest manifest `m`. Returns the committed map. */
+  private[graft] def publish(spark: SparkSession, path: String, tag: String)
+      (write: String => Unit)
+      (update: (String, Map[String, String]) => Map[String, String])
+      : Map[String, String] = {
     val (gen, dir) = newGeneration(spark, path)
     write(dir)
     trip(tag, "afterGenWrite")
-    commitUpdate(spark, path, tag)(_ => Map(DataKey -> gen))
+    commitUpdate(spark, path, tag)(update(gen, _))
+  }
+
+  /** Write one immutable generation via `write(genDir)` and commit it
+    * as the whole snapshot, dropping every other key. Concurrent
+    * installs converge: last committed pointer wins, and every
+    * committed pointer names a COMPLETE generation. */
+  def install(spark: SparkSession, path: String, tag: String = "merge")
+             (write: String => Unit): Unit = {
+    publish(spark, path, tag)(write)((gen, _) => Map(DataKey -> gen))
     ()
   }
 
@@ -415,7 +428,8 @@ private[graft] object ManifestSwap {
     resolveRaw(spark, path).flatMap(_._2.get(DataKey))
       .map(entryPath(path, _))
 
-  /** The [[DirSwap.readOrEmpty]] twin. */
+  /** The current snapshot read with `schema`, or an empty relation
+    * with `schema` before the first install. */
   def readOrEmpty(spark: SparkSession, path: String,
                   schema: StructType): DataFrame =
     readPath(spark, path) match {
@@ -423,6 +437,34 @@ private[graft] object ManifestSwap {
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
+
+  /** Does `root` hold in-place data — any entry not `_`/`.`-prefixed?
+    * True for raw-written inputs; a protocol root keeps everything
+    * under `_gens`/`_ptr`. */
+  private def hasInPlaceData(fs: FileSystem, root: Path): Boolean =
+    fs.exists(root) && fs.listStatus(root).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** The data directories a reader of `path` scans, resolved per call
+    * so a concurrent commit's cutover is picked up: a root with a
+    * COMMITTED manifest serves its base plus every unfolded append
+    * ([[readDataPaths]]); a root with in-place data and no committed
+    * manifest is raw input that never went through this protocol
+    * (producer-written change tables, the testdata, CorpusCache
+    * layouts) and serves itself; anything else is empty.
+    *
+    * "Committed", not "`_ptr` exists": the first commit mkdirs `_ptr`
+    * before its pointer file lands, so a crash in that window leaves
+    * an empty `_ptr` over whatever raw data the root held — keying on
+    * existence served NOTHING instead of that data (round-14 ADVICE). */
+  def dataPaths(spark: SparkSession, path: String): Seq[String] = {
+    val fs = fsOf(spark, path)
+    if (hasCommittedFs(fs, path)) readDataPathsFs(fs, path)
+    else if (hasInPlaceData(fs, new Path(path.stripSuffix("/")))) Seq(path)
+    else Seq.empty
+  }
 
   // ------------------------------------- keyed-append (Iceberg shape) --
 
@@ -440,9 +482,8 @@ private[graft] object ManifestSwap {
     * row-preserving compaction ([[installFold]]) absorbed the batch's
     * rows into the new base, but the KEY must survive as the
     * applied-batch ledger — a late retry of an already-folded batch
-    * finds its key and skips, exactly the rename-protocol ledger
-    * semantics ([[StagedAppend]]'s `.applied` file, here folded into
-    * the same atomic commit as the data). */
+    * finds its key and skips (the ledger line rides the same atomic
+    * commit as the data). */
   private[graft] val FoldedVal = "~folded"
 
   /** Idempotent keyed append — the manifest IS the ledger: stage one
@@ -457,33 +498,26 @@ private[graft] object ManifestSwap {
     * post-append manifest, never a partial batch. */
   def appendKeyed(spark: SparkSession, path: String, tag: String,
                   key: String)(write: String => Unit): Unit = {
-    // MIGRATION GUARD: appending a manifest entry into a root that
-    // already holds IN-PLACE data without a COMMITTED manifest would
-    // publish a manifest listing ONLY the new batch — readers
-    // resolving it would silently lose everything written before the
-    // protocol switch. (A full-snapshot install is migration-sound; a
-    // keyed append is not. Fold the in-place layout into a base
-    // generation first.) The guard keys on hasCommittedFs, not `_ptr`
+    // IN-PLACE GUARD: appending a manifest entry into a root that holds
+    // raw in-place data (a producer-written table) without a COMMITTED
+    // manifest would publish a manifest listing ONLY the new batch —
+    // readers resolving it would silently lose every raw row. A
+    // full-snapshot fold that reads the raw rows through [[dataPaths]]
+    // (the change table's retention rewrite) must commit first; only
+    // then may keyed appends land. The guard keys on hasCommittedFs, not `_ptr`
     // existence — a first-commit crash leaves an empty `_ptr` that
     // must not wave the append through (round-14 ADVICE).
     val fs = fsOf(spark, path)
-    val root = new Path(path.stripSuffix("/"))
-    if (!hasCommittedFs(fs, path) && fs.exists(root) &&
-        fs.listStatus(root).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        })
+    if (!hasCommittedFs(fs, path) &&
+        hasInPlaceData(fs, new Path(path.stripSuffix("/"))))
       throw new UnsupportedOperationException(
         s"graft manifest: $path holds in-place (non-manifest) data — a " +
           "keyed append would publish a manifest that hides it. " +
-          "Migrate first: rewrite the layout through its rebuild/" +
+          "Fold it first: rewrite the layout through its rebuild/" +
           "compaction (a full-snapshot install), then append.")
     val full = AppPrefix + key
     if (resolveRaw(spark, path).exists(_._2.contains(full))) return
-    val (gen, dir) = newGeneration(spark, path)
-    write(dir)
-    trip(tag, "afterGenWrite")
-    commitUpdate(spark, path, tag)(m =>
+    publish(spark, path, tag)(write)((gen, m) =>
       if (m.contains(full)) m else m + (full -> gen))
     ()
   }
@@ -534,28 +568,27 @@ private[graft] object ManifestSwap {
 
   /** Row-PRESERVING compaction of a keyed-append root: write the folded
     * snapshot into one generation, then CAS it in as the new base while
-    * the `absorbed` append keys either retire to [[FoldedVal]] ledger
-    * lines (`keepLedger = true` — content-keyed families whose late
-    * retries must keep skipping, the z-order/vector/postings shape) or
-    * drop entirely (`keepLedger = false` — families with no append
-    * idempotence contract, the document sink). Append keys committed
+    * each `absorbed` append key either retires to a [[FoldedVal]]
+    * ledger line (`keepLedger(key)` — content-keyed families whose late
+    * retries must keep skipping, the z-order/vector/postings shape, and
+    * the aggview log's batches that stay in the folded tail) or drops
+    * entirely (families with no append idempotence contract, the
+    * document sink). Append keys committed
     * AFTER the caller snapshotted (not in `absorbed`) keep their data
     * entries — their rows are not in the fold, so they stay served.
     * Contrast [[install]], the row-SUPERSEDING rebuild: it replaces the
     * whole payload, dropping every append key (a retrain re-derives
-    * all rows; replaying an old batch into it is the caller-contract
-    * violation it is under the rename protocol too). */
+    * all rows; replaying an old batch into it violates the single-
+    * maintainer caller contract). */
   def installFold(spark: SparkSession, path: String, tag: String,
-                  absorbed: Set[String], keepLedger: Boolean)
+                  absorbed: Set[String], keepLedger: String => Boolean)
                  (write: String => Unit): Unit = {
-    val (gen, dir) = newGeneration(spark, path)
-    write(dir)
-    trip(tag, "afterGenWrite")
-    commitUpdate(spark, path, tag) { m =>
+    publish(spark, path, tag)(write) { (gen, m) =>
       val folded = m.flatMap {
         case (k, _) if k.startsWith(AppPrefix) &&
             absorbed(k.stripPrefix(AppPrefix)) =>
-          if (keepLedger) Some(k -> FoldedVal) else None
+          if (keepLedger(k.stripPrefix(AppPrefix))) Some(k -> FoldedVal)
+          else None
         case kv => Some(kv)
       }
       folded + (DataKey -> gen)

@@ -1,88 +1,23 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Retry-idempotent STAGED APPEND for the file-append ingest layouts
-  * (z-order [[graft.ops.ZOrder.appendN]], the bucketed vector layout
-  * [[graft.llm.SimSearch.appendBucketed]], the IVF-PQ incremental
-  * encode [[graft.llm.Pq.appendIvfPq]]). A naive partitioned
-  * `mode=append` retried after a crash lands the batch's rows twice —
-  * the same double-count hole the round-9 crash matrix surfaced in
-  * the postings append. Protocol, keyed by a content-derived batch
-  * tag scoped to the layout's GENERATION:
-  *
-  *  1. STAGE — the batch writes (mode=overwrite, idempotent) into a
-  *     sibling `<layout>.pending-<gen>-<tag>` dir with the target's
-  *     internal structure (flat files or `bucket=K/` subdirs).
-  *  2. COMMIT — the tag is appended to the ledger, a one-file
-  *     DirSwap-managed sibling dir (`<layout>.applied`): atomic, and
-  *     a committed tag is never re-staged.
-  *  3. PUBLISH — every staged data file moves into the layout under
-  *     a tag-prefixed name, one atomic rename per file; moves remove
-  *     their source, so a crashed publish resumes with exactly the
-  *     files still staged. The pending dir drops last.
-  *
-  * A crash anywhere converges on retry of the same batch (same
-  * content ⇒ same tag ⇒ the committed ledger decides whether to
-  * re-fold); a third call is a no-op. [[recover]] publishes any
-  * committed-but-unpublished stage and is run by every appender
-  * first, so maintenance folds ([[graft.ops.ZOrder.rebuild]]) see
-  * every committed row.
-  *
-  * GENERATIONS: a maintenance rebuild that SUPERSEDES prior appends
-  * (the IVF-PQ retrain — it re-encodes the full current corpus, so
-  * committed-but-unpublished appends must NOT be replayed into the
-  * new layout) mints a fresh generation id ([[mintGeneration]],
-  * `_APPGEN` inside the swapped-in layout). Pending dirs and ledger
-  * entries carry the generation; [[recover]] publishes only
-  * current-generation stages and SWEEPS orphans from superseded
-  * generations. Folding rebuilds (z-order — rows are preserved, not
-  * re-derived) keep the generation, so a late retry of an
-  * already-folded batch still finds its ledger entry and skips.
+/** Content-derived batch keys for the retry-idempotent file-append
+  * ingests (z-order [[graft.ops.ZOrder.appendN]], the bucketed vector
+  * layout [[graft.llm.SimSearch.appendBucketed]], the IVF-PQ
+  * incremental encode [[graft.llm.Pq.appendIvfPq]], the change-table
+  * page append [[graft.cdc.Maintenance.appendChangePage]]). A naive
+  * partitioned `mode=append` retried after a crash lands the batch's
+  * rows twice; each of these ingests is instead one
+  * [[ManifestSwap.appendKeyed]] keyed by the batch's content, so a
+  * retried batch finds its key in the manifest and is skipped — the
+  * commit and the ledger line are the same atomic pointer write.
   *
   * Writer contract (same as every maintainer here): ONE ingest
   * maintainer per layout, serialized with its maintenance window by
-  * the feed's consumer cursor; concurrent readers always safe.
-  *
-  * MANIFEST protocol (round-14): on manifest-mode filesystems
-  * [[append]] routes to [[ManifestSwap.appendKeyed]] — the batch tag
-  * becomes the manifest ledger key, the stage is an invisible
-  * generation, and commit+ledger are one atomic pointer write, so the
-  * pending/publish/heal machinery below (which exists to make an
-  * IN-PLACE append crash-safe) is not needed at all. Readers locate
-  * data through [[DirSwap.readDataPaths]]. [[recover]] is a no-op. */
+  * the feed's consumer cursor; concurrent readers always safe. */
 private[graft] object StagedAppend {
-
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def ledgerDir(path: String): String =
-    path.stripSuffix("/") + ".applied"
-
-  /** Read `p`, or `default` when the file vanished between the
-    * caller's exists check and the open — the exists→read pair can
-    * straddle a live maintainer's directory swap (the dir is absent
-    * for two renames), and the default must be the SAFE answer: a
-    * healer reading it treats in-flight stages as uncommitted and
-    * leaves them for their appender. */
-  private def readAllOrElse(fs: FileSystem, p: Path,
-                            default: String): String =
-    try readAll(fs, p)
-    catch { case _: java.io.FileNotFoundException => default }
-
-  private def readAll(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray,
-        java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
-  }
 
   /** Content fingerprint of the batch: bit_xor of per-row hashes over
     * ALL columns + the multiset SUM of the same hashes (mod 2^64) +
@@ -122,273 +57,13 @@ private[graft] object StagedAppend {
     f"$xor%016x" + "s" + sumMod.toString(16) + "-" + count
   }
 
-  /** The PRE-multiset-sum tag of the same batch (`<xor16hex>-<count>`),
-    * derived from the current tag's own components: a ledger written
-    * before the format upgrade must still recognize its batches, or a
-    * crash-retry spanning the upgrade re-ingests an already-applied
-    * batch — the exact double-count the ledger exists to prevent.
-    * (xor hex never contains 's', so the separator is unambiguous.)
-    *
-    * The alias is TRANSITIONAL (round-10 ADVICE): a legacy tag is
-    * xor-only, so a genuinely NEW batch can alias a pre-upgrade ledger
-    * line ({r1,r1,b} legacy-committed, then {r2,r2,b} arrives — same
-    * xor, same count). Every commit therefore RETIRES the remaining
-    * legacy-format lines from the ledger it rewrites: the recover() at
-    * append entry has already published any committed legacy stage,
-    * and the single serialized maintainer committing a NEW batch
-    * proves every older batch was acked (it retries a batch until
-    * success before moving on), so no retry of a legacy batch can
-    * arrive after retirement. This bounds the alias exposure to the
-    * window between the format upgrade and the first post-upgrade
-    * commit, instead of forever. */
-  private[graft] def legacyTag(tag: String): Option[String] = {
-    val s = tag.indexOf('s'); val d = tag.lastIndexOf('-')
-    if (s == 16 && d > s) Some(tag.take(16) + tag.substring(d)) else None
-  }
-
-  /** A ledger line in the pre-multiset-sum format: no 's' separator
-    * anywhere (generation ids are "g0" or UUID hex — never contain
-    * 's'; post-upgrade batch tags always do). */
-  private[graft] def isLegacyLine(line: String): Boolean =
-    !line.contains('s')
-
-  /** The layout's append generation, or None when the read cannot be
-    * trusted: the `_APPGEN` file vanished between the exists check and
-    * the open (a live maintainer's layout swap in flight), or the
-    * layout directory itself is absent (mid-swap — indistinguishable
-    * from a not-yet-bootstrapped layout). Callers whose next action is
-    * DESTRUCTIVE ([[recover]]'s superseded-generation sweep) must bail
-    * out on None instead of guessing (round-11 ADVICE: a straddled
-    * "g0" guess fed the sweep, and its safety rested entirely on the
-    * single-maintainer contract rather than on this code). */
-  private def generationIfStable(spark: SparkSession,
-                                 path: String): Option[String] = {
-    val fs = fsOf(spark, path)
-    val layout = new Path(path.stripSuffix("/"))
-    val p = new Path(path.stripSuffix("/") + "/_APPGEN")
-    if (fs.exists(p))
-      try Some(readAll(fs, p).trim)
-      catch { case _: java.io.FileNotFoundException => None }
-    else if (fs.exists(layout)) {
-      // the layout can materialize BETWEEN the two probes (a healer's
-      // restore or an installer's swap completing — both whole-dir
-      // renames, so any _APPGEN arrives WITH the directory): only a
-      // layout still carrying no _APPGEN after it was seen present is
-      // a genuine never-minted g0. Without this re-check, a restore
-      // landing in the probe gap yielded a confident wrong Some("g0")
-      // during the exact straddle this function exists to detect
-      // (round-12 review).
-      if (fs.exists(p)) None else Some("g0")
-    }
-    else None
-  }
-
-  /** The layout's append generation: `_APPGEN` inside the layout dir,
-    * or "g0" for layouts that never superseded their appends (and, as
-    * the SAFE non-destructive default, for a read straddling a live
-    * layout swap — see [[generationIfStable]] for callers that must
-    * not guess). */
-  def generation(spark: SparkSession, path: String): String =
-    generationIfStable(spark, path).getOrElse("g0")
-
-  /** Write a fresh `_APPGEN` into a layout directory being built —
-    * call INSIDE the DirSwap install lambda of a superseding rebuild
-    * so the generation swaps in atomically with the new layout.
-    * Through the Hadoop FileSystem (not java.nio): under the manifest
-    * protocol the install lambda's target is a `_gens/` generation
-    * whose path may not be a local file at all. (The marker is only
-    * CONSULTED by the rename protocol's sweep; under the manifest
-    * protocol the superseding install drops the append keys in the
-    * same commit, which is the sweep, structurally.) */
-  def mintGeneration(spark: SparkSession, dir: String): Unit = {
-    val out = fsOf(spark, dir).create(
-      new Path(dir.stripSuffix("/"), "_APPGEN"), true)
-    try out.write(java.util.UUID.randomUUID().toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  def appliedTags(spark: SparkSession, path: String): Seq[String] = {
-    if (DirSwap.appendsAreManifest(spark, path))
-      return ManifestSwap.appliedKeys(spark, path).toSeq.sorted
-    val fs = fsOf(spark, path)
-    val p = new Path(ledgerDir(path) + "/tags")
-    if (!fs.exists(p)) return Seq.empty
-    readAllOrElse(fs, p, "").linesIterator.filter(_.nonEmpty).toSeq
-  }
-
-  /** The staged append: stage on a ledger miss, commit, publish.
-    * `writeBatch(pendingDir)` must write the batch with
-    * mode=overwrite in the layout's internal structure.
-    *
-    * CALLER CONTRACT (load-bearing, not advisory): ONE serialized
-    * maintainer per layout, and it retries a failed batch to success
-    * BEFORE submitting any newer batch. Two protocol decisions lean on
-    * it — the legacy-line retirement below assumes every batch older
-    * than a new commit was already acked (an out-of-band re-submission
-    * of a legacy-committed batch AFTER retirement would be silently
-    * re-ingested; retirements are logged so that shape is diagnosable),
-    * and [[recover]]'s superseded-generation sweep assumes a rebuild
-    * never overlaps an in-flight append. */
-  def append(spark: SparkSession, path: String, batchTag: String)
-            (writeBatch: String => Unit): Unit = {
-    // MANIFEST protocol (round-14): the staged-append machinery below
-    // (pending dirs, ledger file, per-file publish, generations) exists
-    // to make an IN-PLACE append retry-idempotent under crashes — the
-    // keyed manifest gets all of it from one primitive, because the
-    // commit and the ledger line are the same atomic pointer write and
-    // a superseding rebuild's install drops the append keys wholesale
-    // (the _APPGEN sweep, structurally). writeBatch targets a fresh
-    // invisible generation instead of a pending sibling.
-    if (DirSwap.appendsAreManifest(spark, path)) {
-      ManifestSwap.appendKeyed(spark, path, "stagedapp", batchTag)(writeBatch)
-      return
-    }
-    recover(spark, path)
-    val gen = generation(spark, path)
-    val fullTag = s"$gen-$batchTag"
-    val pending = path.stripSuffix("/") + s".pending-$fullTag"
-    val fs = fsOf(spark, path)
-    val tags = appliedTags(spark, path)
-    // a batch committed under the pre-upgrade tag format counts as
-    // committed (its pending dir, if any, carries the legacy name and
-    // is published by the recover() above). The alias string is
-    // legacy-format by construction so it can only ever match a
-    // legacy ledger line — and each commit below retires those, which
-    // bounds the alias window (see [[legacyTag]])
-    val committed = tags.contains(fullTag) ||
-      legacyTag(batchTag).exists(lt => tags.contains(s"$gen-$lt"))
-    if (committed && !fs.exists(new Path(pending))) return
-    if (!committed) {
-      writeBatch(pending)
-      val all = appliedTags(spark, path)
-      val retired = all.filter(isLegacyLine)
-      // retirement must be LOUD (round-11 ADVICE): if the caller
-      // contract above is ever violated by an out-of-band retry of a
-      // legacy-committed batch arriving after this commit, the
-      // re-ingest is silent — this line is the forensic anchor that
-      // makes it attributable
-      if (retired.nonEmpty)
-        System.err.println(
-          s"graft staged append: retiring ${retired.size} legacy-format " +
-            s"ledger line(s) at $path on commit of $fullTag: " +
-            retired.mkString(", "))
-      val tags = all.filterNot(isLegacyLine) :+ fullTag
-      DirSwap.install(spark, ledgerDir(path), "appledger") { tmp =>
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(tmp))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, "tags"),
-          tags.mkString("\n").getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-      }
-    }
-    publish(spark, path, fullTag)
-  }
-
-  /** Move every staged data file of `pending-<fullTag>` into the
-    * layout under a tag-prefixed name; resumable (each rename removes
-    * its source), pending dir dropped last. */
-  private def publish(spark: SparkSession, path: String,
-                      fullTag: String): Unit = {
-    val fs = fsOf(spark, path)
-    val pending = new Path(path.stripSuffix("/") + s".pending-$fullTag")
-    if (!fs.exists(pending)) return
-    // Concurrent healers are benign (round-9 ADVICE): a reader's
-    // recover() can race the appender's own publish of the same tag.
-    // Every step below therefore treats "the other party already did
-    // it" as success — a dir vanishing mid-walk, a rename losing to
-    // an identical rename, a source file already moved.
-    def walk(dir: Path, rel: String): Unit = {
-      val entries =
-        try fs.listStatus(dir)
-        catch { case _: java.io.FileNotFoundException => return }
-      entries.foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          if (!name.startsWith("_") && !name.startsWith("."))
-            walk(st.getPath, if (rel.isEmpty) name else s"$rel/$name")
-        } else if (!name.startsWith("_") && !name.startsWith(".")) {
-          val targetDir = new Path(
-            if (rel.isEmpty) path else s"${path.stripSuffix("/")}/$rel")
-          fs.mkdirs(targetDir)
-          val dst = new Path(targetDir, s"$fullTag-$name")
-          if (fs.exists(dst)) fs.delete(st.getPath, false)
-          else {
-            // RawLocalFileSystem.rename THROWS FileNotFoundException
-            // (not false) when the source vanished — i.e. when a
-            // concurrent healer already moved it
-            val renamed =
-              try fs.rename(st.getPath, dst)
-              catch { case _: java.io.FileNotFoundException => false }
-            // re-checked after the failed rename: dst appearing or the
-            // source vanishing means a concurrent healer won the race
-            if (!renamed && !fs.exists(dst) && fs.exists(st.getPath))
-              throw new java.io.IOException(
-                s"graft staged append: cannot publish ${st.getPath} -> $dst")
-          }
-        }
-      }
-    }
-    walk(pending, "")
-    try fs.delete(pending, true)
-    catch { case _: java.io.FileNotFoundException => () }
-  }
-
-  /** Publish every committed-but-unpublished stage of the CURRENT
-    * generation; sweep stages of superseded generations (their rows
-    * were re-derived by the rebuild that minted the new generation).
-    * Uncommitted current-generation stages are left for their
-    * appender's retry. */
-  def recover(spark: SparkSession, path: String): Unit = {
-    // manifest protocol: nothing to recover — a keyed append commits
-    // atomically (no committed-but-unpublished window exists) and
-    // superseded generations are gc's job, not a healer's
-    if (DirSwap.appendsAreManifest(spark, path)) return
-    // a commit crash can leave the ledger swap torn — heal before
-    // any tag lookup (bak holds the only copy in that window)
-    DirSwap.restoreIfTorn(spark, ledgerDir(path), "appledger")
-    val fs = fsOf(spark, path)
-    val p = new Path(path.stripSuffix("/"))
-    val parent = p.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val prefix = p.getName + ".pending-"
-    val pendings = fs.listStatus(parent).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-    if (pendings.isEmpty) return
-    val gen = generationIfStable(spark, path) match {
-      case Some(g) => g
-      case None =>
-        // the generation read straddled a live layout swap (or hit a
-        // not-yet-bootstrapped layout): BOTH halves of recovery are
-        // unsafe under an unknown generation — the sweep could delete
-        // a committed pending of a generation a crashed rebuild is
-        // about to roll back to, and a publish could land a superseded
-        // stage inside the swap window. Do neither. The swap is two
-        // renames wide and every reader recovers before reading, so
-        // the next recover sees the settled generation and converges;
-        // a bootstrap append publishes its own stage after this call.
-        return
-    }
-    val applied = appliedTags(spark, path).toSet
-    pendings.foreach { st =>
-      val fullTag = st.getPath.getName.stripPrefix(prefix)
-      if (!fullTag.startsWith(s"$gen-"))
-        fs.delete(st.getPath, true) // superseded generation — sweep
-      else if (applied(fullTag)) {
-        // re-validate at the last moment: a retrain swap COMPLETING
-        // between the generation snapshot above and this publish would
-        // otherwise land a superseded stage inside the new layout.
-        // The residual window is one exists+read against a whole-dir
-        // rename — and reaching it at all requires a retrain running
-        // while a committed-but-unpublished pending exists, which the
-        // maintenance contract already forbids (the maintainer retries
-        // an append to success before entering a maintenance window);
-        // this check is defense in depth for that contract, not a
-        // replacement (round-12 review).
-        if (generationIfStable(spark, path).contains(gen))
-          publish(spark, path, fullTag)
-      }
-    }
-  }
+  /** The keyed append of `batch` into the append-style root `path`:
+    * a no-op for an empty batch, otherwise one
+    * [[ManifestSwap.appendKeyed]] under the batch's [[contentTag]].
+    * `write(genDir)` writes the batch in the layout's internal
+    * structure. */
+  def append(path: String, batch: DataFrame, tag: String = "stagedapp")
+            (write: String => Unit): Unit =
+    contentTag(batch).foreach(key =>
+      ManifestSwap.appendKeyed(batch.sparkSession, path, tag, key)(write))
 }

@@ -13,9 +13,10 @@ import graft.cdc.{AggView, Merge}
   * micro-batch folding in only its contribution deltas.
   *
   * Layout under `root`:
-  *  - `log/batch_id=N/` — the change LOG, appended one partition per
-  *    micro-batch (never rewritten; [[graft.cdc.Maintenance]]'s
-  *    log-compaction pattern bounds it in steady state);
+  *  - `log/` — the change LOG, one keyed [[ManifestSwap]] generation
+  *    per micro-batch (`batch_id` rides in the data; never rewritten —
+  *    [[graft.cdc.Maintenance]]'s log-compaction pattern bounds it in
+  *    steady state);
   *  - `statecp/ebkt=K/` — the COMPACTED per-entity state checkpoint,
   *    bucketed by entity hash ([[graft.plans.StateLayout]]'s layout
   *    idea applied to the maintainer's own state): one pre-collapsed
@@ -23,28 +24,28 @@ import graft.cdc.{AggView, Merge}
   *    out-version them), partition-pruned by the batch's touched
   *    buckets at read time; `_gen` inside = the last batch folded in;
   *  - `view/` — the current (grp, n_rows, sum_cents) view, installed
-  *    by [[DirSwap]], carrying its own `_gen` marker (the id of the
-  *    last batch folded in) INSIDE the directory.
+  *    as one [[ManifestSwap]] generation carrying its own `_gen` marker
+  *    (the id of the last batch folded in) INSIDE the generation.
   *
   * Exactly-once without a two-directory transaction: the log append is
-  * idempotent (dynamic overwrite of THIS batch's partition — a
-  * redelivered batch rewrites identical bytes), and the view fold is
-  * idempotent by generation — the marker rides the view's own DirSwap
-  * rename, so view content and generation commit in ONE atomic step
+  * idempotent (keyed by the batch id — a redelivered batch finds its
+  * key and appends nothing), and the view fold is idempotent by
+  * generation — the marker rides the view's own pointer commit, so
+  * view content and generation commit in ONE atomic step
   * and no crash can leave a folded view that claims otherwise. The
   * delta is always computed against the log RESTRICTED to
   * `batch_id < batchId`, so a crash in any window — after the append,
-  * after the view swap, before the checkpoint commit — replays to the
+  * after the view commit, before the checkpoint commit — replays to the
   * same state: the recomputed delta never sees the current batch's own
   * log rows, whether or not they reached disk before the crash.
   *
   * Scale shape (100 TB): per batch the log gains a batch-sized
-  * partition, and the prior state of the batch's keys is a
+  * generation, and the prior state of the batch's keys is a
   * PARTITION-PRUNED scan of the touched `statecp` buckets plus the
   * uncompacted tail, semi-joined to the batch keys BELOW the collapse
   * — never a feed-wide aggregate (the round-6 weak this layout
   * closes); the view join is group-cardinality. Nothing is rewritten
-  * but the view — kilobytes — and the batch's own log partition; the
+  * but the view — kilobytes — and the batch's own log generation; the
   * bucketed checkpoint rewrites only inside the T6 maintenance
   * window. This mirrors the reference's O(1) state read per poll
   * (invoice-api/server.js:100-106).
@@ -82,22 +83,15 @@ object StreamingAggView {
 
   /** The id of the last batch folded into the view at
     * `root/<viewDir>`, or -1. The generation marker lives INSIDE the
-    * view directory (`_gen`, invisible to the parquet reader like any
-    * underscore file), so the DirSwap rename that installs the view
-    * commits the marker in the SAME atomic step — there is no window
-    * where the view is folded but the generation says otherwise (a
-    * separate marker file would reopen the double-apply hazard this
-    * module exists to close). */
+    * view's committed generation (`_gen`, invisible to the parquet
+    * reader like any underscore file), so the pointer commit that
+    * installs the view commits the marker in the SAME atomic step —
+    * there is no window where the view is folded but the generation
+    * says otherwise (a separate marker file would reopen the
+    * double-apply hazard this module exists to close). */
   def viewGen(spark: SparkSession, root: String,
-              viewDir: String = "view",
-              tag: String = "aggview"): Long = {
-    // tag travels WITH the directory name (never derived from it): a
-    // third view family must declare its own (dir, tag) pair, so a torn
-    // swap can only ever restore that family's own .bak. readPath is
-    // the protocol-aware locate: the healed dir itself (rename), or the
-    // current committed generation (manifest), whose in-dir _gen marker
-    // still rides the SAME atomic commit as the view data
-    DirSwap.readPath(spark, s"$root/$viewDir", tag) match {
+              viewDir: String = "view"): Long = {
+    ManifestSwap.readPath(spark, s"$root/$viewDir") match {
       case None => -1L
       case Some(dataDir) =>
         val fs = fsOf(spark, root)
@@ -141,14 +135,10 @@ object StreamingAggView {
   private def stateCpSchema: StructType = batchSchema.add("ebkt", LongType)
 
   /** The log read with its DECLARED schema — an empty (fully
-    * compacted) log dir must read as zero rows, not fail inference.
-    * Protocol-aware (round-14 ADVICE): a manifest-published log is its
-    * committed base + appended batch generations (batch_id rides in
-    * the data there); the in-place log is the dir itself, healed first
-    * — previously a trim crash window read as an EMPTY log until the
-    * next compaction healed it. */
+    * compacted) log must read as zero rows, not fail inference. The
+    * log is its committed base + appended batch generations. */
   private def readLog(spark: SparkSession, root: String): DataFrame = {
-    val dirs = DirSwap.readDataPaths(spark, s"$root/log", "aggviewlog")
+    val dirs = ManifestSwap.readDataPaths(spark, s"$root/log")
     if (dirs.nonEmpty) spark.read.schema(logSchema).parquet(dirs: _*)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
@@ -157,11 +147,10 @@ object StreamingAggView {
   /** The id of the last batch folded into the compacted state
     * checkpoint, or -1 before the first compaction. */
   def stateGen(spark: SparkSession, root: String): Long =
-    viewGen(spark, root, "statecp", "aggviewstate")
+    viewGen(spark, root, "statecp")
 
   private def readStateCp(spark: SparkSession, root: String): DataFrame =
-    DirSwap.readOrEmpty(spark, s"$root/statecp", stateCpSchema,
-      tag = "aggviewstate")
+    ManifestSwap.readOrEmpty(spark, s"$root/statecp", stateCpSchema)
 
   /** The live prior state STRICTLY before `batchId`: compacted
     * checkpoint + uncompacted log tail, collapsed latest-op-wins,
@@ -206,7 +195,7 @@ object StreamingAggView {
   /** Shared per-batch mechanics: idempotent log append, then the
     * prior/touched/merged states derived from checkpoint + log
     * STRICTLY before this batch — stable under redelivery whether or
-    * not this batch's partition reached disk. Derivations are LAZY:
+    * not this batch's log generation committed. Derivations are LAZY:
     * a view selection that never consults prior state (the sketch
     * fold) pays only the append. */
   private final class BatchState(val page: DataFrame,
@@ -221,27 +210,20 @@ object StreamingAggView {
   private def appendAndDerive(spark: SparkSession, root: String,
                               batch: DataFrame, batchId: Long): BatchState = {
     val logDir = s"$root/log"
-    // r16: the log partition IS the page's materialization — the
+    // r16: the log generation IS the page's materialization — the
     // collapse runs once inside the append write, and every fold reads
-    // the page back from the just-committed log partition instead of a
+    // the page back from the just-committed log generation instead of a
     // separate localCheckpoint (one fewer eager action per batch; the
     // read-back is the same bytes the replay path would see, so
     // redelivery semantics are unchanged by construction)
     val collapsed = collapse(batch)
-    if (DirSwap.appendsAreManifest(spark, logDir))
-      // manifest protocol (round-14 ADVICE: the log was the one
-      // append-style root the protocol guard missed): each batch is
-      // one keyed generation — the key makes redelivery a structural
-      // no-op where the rename protocol re-wrote identical bytes
-      ManifestSwap.appendKeyed(spark, logDir, "aggviewlog",
-        s"batch-$batchId") { gen =>
-        collapsed.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(gen)
-      }
-    else
+    // each batch is one keyed generation — the key makes redelivery a
+    // structural no-op
+    ManifestSwap.appendKeyed(spark, logDir, "aggviewlog",
+      s"batch-$batchId") { gen =>
       collapsed.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(logDir)
+        .write.mode("overwrite").parquet(gen)
+    }
     val page = readLog(spark, root)
       .filter(col("batch_id") === batchId)
       .select("invoice_id", "change_version", "change_operation")
@@ -251,17 +233,16 @@ object StreamingAggView {
   private def foldCountSum(spark: SparkSession, sfDir: String, root: String,
                            st: BatchState, batchId: Long): Unit = {
     if (viewGen(spark, root) >= batchId) return
-    val oldView = DirSwap.readOrEmpty(spark, s"$root/view", viewSchema,
-      tag = "aggview")
+    val oldView = ManifestSwap.readOrEmpty(spark, s"$root/view", viewSchema)
     // r16: no checkpoint — newView's one consumer is the install
-    // write below (the old view dir is read inside the write job,
-    // strictly before the swap, so laziness is crash-equivalent); an
+    // write below (the old view generation is immutable, so laziness is
+    // crash-equivalent); an
     // eager stage here was one more driver action per batch, and the
     // per-batch action count IS the streaming cold cost at small SFs
     val newView = AggView.applyDelta(oldView,
       AggView.contributions(spark, sfDir, st.touched0),
       AggView.contributions(spark, sfDir, st.newLive))
-    DirSwap.install(spark, s"$root/view", tag = "aggview") { tmp =>
+    ManifestSwap.install(spark, s"$root/view", "aggview") { tmp =>
       newView.coalesce(1).write.mode("overwrite").parquet(tmp)
       writeGenInto(spark, tmp, batchId)
     }
@@ -272,11 +253,11 @@ object StreamingAggView {
     * newLive — the v1 state derived from the log, no extra pass. */
   private def foldMinMax(spark: SparkSession, sfDir: String, root: String,
                          st: BatchState, batchId: Long): Unit = {
-    if (viewGen(spark, root, "viewmm", "aggviewmm") >= batchId) return
+    if (viewGen(spark, root, "viewmm") >= batchId) return
     val snap1 = st.snapFull().join(st.page.select("invoice_id"),
       Seq("invoice_id"), "left_anti").unionByName(st.newLive)
-    val oldView = DirSwap.readOrEmpty(spark, s"$root/viewmm", minMaxSchema,
-      tag = "aggviewmm")
+    val oldView = ManifestSwap.readOrEmpty(spark, s"$root/viewmm",
+      minMaxSchema)
     // r16: no checkpoint — single consumer (see foldCountSum)
     val newView = AggView.applyMinMaxDelta(oldView,
       AggView.contributions(spark, sfDir, st.touched0),
@@ -284,7 +265,7 @@ object StreamingAggView {
       groups => AggView.viewMinMax(
         AggView.contributions(spark, sfDir, snap1)
           .join(groups, Seq("grp"), "left_semi")))
-    DirSwap.install(spark, s"$root/viewmm", tag = "aggviewmm") { tmp =>
+    ManifestSwap.install(spark, s"$root/viewmm", "aggviewmm") { tmp =>
       newView.coalesce(1).write.mode("overwrite").parquet(tmp)
       writeGenInto(spark, tmp, batchId)
     }
@@ -304,9 +285,9 @@ object StreamingAggView {
     * scales. */
   private def foldSketch(spark: SparkSession, root: String,
                          st: BatchState, batchId: Long): Unit = {
-    if (viewGen(spark, root, "viewsk", "aggviewsk") >= batchId) return
-    val oldView = DirSwap.readOrEmpty(spark, s"$root/viewsk",
-      sketchViewSchema, tag = "aggviewsk")
+    if (viewGen(spark, root, "viewsk") >= batchId) return
+    val oldView = ManifestSwap.readOrEmpty(spark, s"$root/viewsk",
+      sketchViewSchema)
     // lgNomEntries 18 (262k retained hashes) keeps the sketch in its
     // EXACT regime through the verify scales — the oracle depends on
     // it; the union must carry the same size or it would compress the
@@ -326,7 +307,7 @@ object StreamingAggView {
       .groupBy("grp")
       .agg(expr("theta_union_agg(sketch, 18)").as("sketch"),
         sum(col("n_rows")).as("n_rows"))
-    DirSwap.install(spark, s"$root/viewsk", tag = "aggviewsk") { tmp =>
+    ManifestSwap.install(spark, s"$root/viewsk", "aggviewsk") { tmp =>
       newView.coalesce(1).write.mode("overwrite").parquet(tmp)
       writeGenInto(spark, tmp, batchId)
     }
@@ -365,9 +346,9 @@ object StreamingAggView {
   private def foldTopK(spark: SparkSession, root: String,
                        st: BatchState, batchId: Long,
                        capacity: Int = TopKCapacity): Unit = {
-    if (viewGen(spark, root, "viewtk", "aggviewtk") >= batchId) return
-    val oldView = DirSwap.readOrEmpty(spark, s"$root/viewtk",
-      topkViewSchema, tag = "aggviewtk")
+    if (viewGen(spark, root, "viewtk") >= batchId) return
+    val oldView = ManifestSwap.readOrEmpty(spark, s"$root/viewtk",
+      topkViewSchema)
     val batchCounts = st.page
       .groupBy(col("change_operation").as("grp"),
         col("invoice_id").as("id"))
@@ -406,7 +387,7 @@ object StreamingAggView {
     }) // r16: no second checkpoint — `merged` is already staged for
        // its three consumers; the exact-regime fast path was
        // re-materializing it verbatim, the capped path has one consumer
-    DirSwap.install(spark, s"$root/viewtk", tag = "aggviewtk") { tmp =>
+    ManifestSwap.install(spark, s"$root/viewtk", "aggviewtk") { tmp =>
       newView.coalesce(1).write.mode("overwrite").parquet(tmp)
       writeGenInto(spark, tmp, batchId)
     }
@@ -473,9 +454,9 @@ object StreamingAggView {
       "select at least one view to maintain")
     // the two crash-window hooks CrashMatrixSpec drives: a kill after
     // onLogAppended leaves an appended-but-unfolded (torn) log
-    // partition; a kill after onBatchFolded leaves every view folded
+    // batch; a kill after onBatchFolded leaves every view folded
     // but the checkpoint uncommitted, so the batch is REDELIVERED —
-    // the log partition rewrites identical bytes and each fold skips
+    // the log append finds its batch key and each fold skips
     // on its generation stamp. Both must converge on restart at every
     // batch position.
     spark.readStream.schema(batchSchema)
@@ -504,12 +485,12 @@ object StreamingAggView {
     * out-version — into `statecp/ebkt=K/` (entity-hash partitions, one
     * file each), then trim the log to the uncompacted tail. Only
     * batches up to `upTo` CLAMPED to the last FOLDED generation are
-    * folded in — an appended-but-unfolded partition from a torn crash
-    * window stays a log partition whatever the caller asks. The two
-    * installs are separately atomic and crash-ordered: the state swap
-    * commits `_gen = bound` first, and [[priorState]]'s
+    * folded in — an appended-but-unfolded batch from a torn crash
+    * window stays in the log whatever the caller asks. The two
+    * commits are separately atomic and crash-ordered: the state
+    * install commits `_gen = bound` first, and [[priorState]]'s
     * `batch_id > stateGen` tail filter makes any not-yet-trimmed log
-    * partition invisible, so a crash between the installs double-counts
+    * batch invisible, so a crash between the commits double-counts
     * nothing and the next compaction retries the trim. Run it from the
     * T6 maintenance window; between compactions the per-batch
     * prior-state read costs touched-buckets + tail, the standard
@@ -522,14 +503,11 @@ object StreamingAggView {
     // fold bound = the oldest generation any MAINTAINED view has
     // reached (a view dir that was never started doesn't hold the
     // compaction hostage); an explicit upTo is CLAMPED there too — a
-    // caller must never fold an appended-but-unfolded (torn) partition
+    // caller must never fold an appended-but-unfolded (torn) batch
     // into the checkpoint, or its batch would replay to a zero delta
     // and vanish from the view
-    // viewGen restores a torn swap before looking, so an
-    // installed-but-torn view still bounds the compaction
-    val gens = Seq("view" -> "aggview", "viewmm" -> "aggviewmm",
-        "viewsk" -> "aggviewsk", "viewtk" -> "aggviewtk")
-      .map { case (g, t) => viewGen(spark, root, g, t) }.filter(_ >= 0)
+    val gens = Seq("view", "viewmm", "viewsk", "viewtk")
+      .map(viewGen(spark, root, _)).filter(_ >= 0)
     val folded = if (gens.isEmpty) -1L else gens.min
     val bound = math.min(upTo.getOrElse(folded), folded)
     if (bound < 0) return
@@ -542,8 +520,8 @@ object StreamingAggView {
             .filter(col("batch_id") > g && col("batch_id") <= bound)
             .select("invoice_id", "change_version", "change_operation")))
         .withColumn("ebkt", ebktOf(col("invoice_id")))
-        .localCheckpoint(true) // materialize BEFORE the dir it reads swaps
-      DirSwap.install(spark, s"$root/statecp", tag = "aggviewstate") { tmp =>
+        .localCheckpoint(true)
+      ManifestSwap.install(spark, s"$root/statecp", "aggviewstate") { tmp =>
         // repartition on ebkt so every bucket dir is written by exactly
         // one task — one file per bucket, the pruning-friendly layout
         next.repartition(stateBuckets, col("ebkt"))
@@ -551,52 +529,40 @@ object StreamingAggView {
         writeGenInto(spark, tmp, bound)
       }
     }
-    if (DirSwap.appendsAreManifest(spark, logDir)) {
-      // trim = fold the tail into a fresh base and DROP the absorbed
-      // batch keys (no ledger retention: batch ids are checkpoint-
-      // monotonic and never reused, and a redelivered pre-bound batch
-      // re-appends rows the `batch_id > stateGen` filter already hides
-      // — the exact rename-protocol semantics; keeping one ledger line
-      // per batch forever would grow the manifest without bound).
-      // Tail rows and absorbed keys come from ONE resolution
-      // (foldSnapshot): a batch appended mid-trim keeps its own
-      // generation instead of being dropped or double-served.
-      val (d0, absorbed) = ManifestSwap.foldSnapshot(spark, logDir)
-      val dirs =
-        if (d0.nonEmpty) d0
-        else DirSwap.readDataPaths(spark, logDir, "aggviewlog") // migration
-      if (dirs.isEmpty) return
-      val tail = spark.read.schema(logSchema).parquet(dirs: _*)
-        .filter(col("batch_id") > bound)
-        .localCheckpoint(true)
-      ManifestSwap.installFold(spark, logDir, "aggviewlog", absorbed,
-        keepLedger = false)(gen =>
-        tail.write.mode("overwrite").parquet(gen))
-    } else {
-      val tail = readLog(spark, root).filter(col("batch_id") > bound)
-        .localCheckpoint(true)
-      DirSwap.install(spark, logDir, tag = "aggviewlog") { tmp =>
-        tail.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-      }
-    }
+    // trim = fold the tail into a fresh base. The keys of batches at or
+    // below the bound DROP (batch ids are checkpoint-monotonic and never
+    // reused, and a redelivered pre-bound batch re-appends rows the
+    // `batch_id > stateGen` filter already hides; keeping one ledger
+    // line per batch forever would grow the manifest without bound).
+    // The keys of TAIL batches stay as ledger lines: their rows live on
+    // in the new base, so a redelivered tail batch must still find its
+    // key — re-appending it would serve its rows twice to the fold.
+    // Tail rows and absorbed keys come from ONE resolution
+    // (foldSnapshot): a batch appended mid-trim keeps its own
+    // generation instead of being dropped or double-served.
+    val (dirs, absorbed) = ManifestSwap.foldSnapshot(spark, logDir)
+    if (dirs.isEmpty) return
+    val tail = spark.read.schema(logSchema).parquet(dirs: _*)
+      .filter(col("batch_id") > bound)
+      .localCheckpoint(true)
+    ManifestSwap.installFold(spark, logDir, "aggviewlog", absorbed,
+      keepLedger = _.stripPrefix("batch-").toLong > bound)(gen =>
+      tail.write.mode("overwrite").parquet(gen))
   }
 
   /** The current view (empty before the first fold). */
   def currentView(spark: SparkSession, root: String): DataFrame =
-    DirSwap.readOrEmpty(spark, s"$root/view", viewSchema, tag = "aggview")
+    ManifestSwap.readOrEmpty(spark, s"$root/view", viewSchema)
 
   /** The current min/max view (empty before the first fold). */
   def currentMinMaxView(spark: SparkSession, root: String): DataFrame =
-    DirSwap.readOrEmpty(spark, s"$root/viewmm", minMaxSchema,
-      tag = "aggviewmm")
+    ManifestSwap.readOrEmpty(spark, s"$root/viewmm", minMaxSchema)
 
   /** The current sketch view (empty before the first fold). */
   def currentSketchView(spark: SparkSession, root: String): DataFrame =
-    DirSwap.readOrEmpty(spark, s"$root/viewsk", sketchViewSchema,
-      tag = "aggviewsk")
+    ManifestSwap.readOrEmpty(spark, s"$root/viewsk", sketchViewSchema)
 
   /** The current heavy-hitters view (empty before the first fold). */
   def currentTopKView(spark: SparkSession, root: String): DataFrame =
-    DirSwap.readOrEmpty(spark, s"$root/viewtk", topkViewSchema,
-      tag = "aggviewtk")
+    ManifestSwap.readOrEmpty(spark, s"$root/viewtk", topkViewSchema)
 }

@@ -16,18 +16,18 @@ import graft.cdc.Merge
   * delivery.
   *
   * Exactly-once: the checkpoint offset log marks a batch done only
-  * after the state swap; a crash between swap and commit redelivers
-  * the batch, and the version-compare merge is IDEMPOTENT (MergeSpec),
-  * so replay converges to the same state. The swap itself is the
-  * rename pair DocumentSink.compact uses — a crash between renames
-  * leaves the previous state under `<state>.merge-bak`, never lost.
+  * after the state commit; a crash between it and the checkpoint
+  * commit redelivers the batch, and the version-compare merge is
+  * IDEMPOTENT (MergeSpec), so replay converges to the same state. Each new state is one
+  * [[ManifestSwap]] generation committed by one atomic pointer write —
+  * a crash anywhere leaves readers on the previous complete state.
   *
   * Scale notes (100 TB): per batch the change side is a bounded page;
   * the state side is the big table. Here the state is rewritten per
   * batch (full outer join → overwrite) — at warehouse scale the same
   * merge runs against a BUCKETED state layout (StateLayout) so only
   * the buckets containing changed entities rewrite, which is how
-  * table-format MERGE compiles. The collapse, join, and swap shapes
+  * table-format MERGE compiles. The collapse, join, and publish shapes
   * are identical either way.
   */
 object StreamingMerge {
@@ -35,10 +35,10 @@ object StreamingMerge {
   private val stateSchema = StructType.fromDDL(
     "invoice_id LONG, change_version LONG, change_operation STRING")
 
-  /** Current state table (empty relation before the first batch;
-    * restores a torn swap first — see [[DirSwap.readOrEmpty]]). */
+  /** Current state table: the committed snapshot (empty relation
+    * before the first batch). */
   def stateTable(spark: SparkSession, statePath: String): DataFrame =
-    DirSwap.readOrEmpty(spark, statePath, stateSchema)
+    ManifestSwap.readOrEmpty(spark, statePath, stateSchema)
 
   /** Collapse one micro-batch of change records latest-op-wins per
     * entity — same single-aggregate shape as
@@ -51,17 +51,17 @@ object StreamingMerge {
         col("m.change_operation").as("change_operation"))
 
   /** One maintenance step: merge a collapsed batch into the state
-    * table and swap the new state in ([[DirSwap]], rollback-safe). */
+    * table and publish the new state ([[ManifestSwap.install]]). */
   private[graft] def applyBatch(spark: SparkSession, statePath: String,
                                     collapsed: DataFrame): Unit = {
     val next = Merge.mergeUpsert(stateTable(spark, statePath), collapsed)
-    DirSwap.install(spark, statePath)(tmp =>
+    ManifestSwap.install(spark, statePath)(tmp =>
       next.write.mode("overwrite").parquet(tmp))
   }
 
   /** Launch continuous state maintenance over a change-table file —
     * scaffold contract in [[ChangeStream.maintain]];
-    * `onBatchMerged(batchId)` fires after the swap, before the
+    * `onBatchMerged(batchId)` fires after the state commit, before the
     * checkpoint commit (the T2 crash window). */
   def maintain(spark: SparkSession, changeTablePath: String,
                versionColumn: String, entityColumn: String,

@@ -31,15 +31,15 @@ object StreamingScd2 {
     "invoice_id LONG, change_operation STRING, valid_from LONG, " +
       "valid_to LONG, is_current LONG")
 
-  /** Current history table (empty before the first batch; restores a
-    * torn swap first — see [[DirSwap.readOrEmpty]]). */
+  /** Current history table: the committed snapshot (empty before the
+    * first batch). */
   def historyTable(spark: SparkSession, historyPath: String): DataFrame =
-    DirSwap.readOrEmpty(spark, historyPath, historySchema)
+    ManifestSwap.readOrEmpty(spark, historyPath, historySchema)
 
   /** One maintenance step: rebuild the touched entities' histories
     * from (stored changes ∪ batch changes), pass untouched entities
-    * through, swap. `batch` columns: (invoice_id, change_version,
-    * change_operation). */
+    * through, publish ([[ManifestSwap.install]]). `batch` columns:
+    * (invoice_id, change_version, change_operation). */
   private[graft] def applyBatch(spark: SparkSession, historyPath: String,
                                     batch: DataFrame): Unit = {
     val hist = historyTable(spark, historyPath)
@@ -53,7 +53,7 @@ object StreamingScd2 {
     val untouched = hist.join(touched, Seq("invoice_id"), "left_anti")
     val next = untouched.unionByName(
       rebuilt.select(untouched.columns.toIndexedSeq.map(col): _*))
-    DirSwap.install(spark, historyPath)(tmp =>
+    ManifestSwap.install(spark, historyPath)(tmp =>
       next.write.mode("overwrite").parquet(tmp))
   }
 

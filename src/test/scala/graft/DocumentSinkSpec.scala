@@ -14,6 +14,14 @@ class DocumentSinkSpec extends SparkSpec {
       (3L, null.asInstanceOf[String], "CUST-3", 12L) // invalid: no number
     ).toDF("invoice_id", "invoice_number", "customer_code", "change_version")
 
+  /** The version-bucket dirs of the sink's committed generations. */
+  private def bucketDirs(dir: String): Seq[java.io.File] =
+    graft.streaming.ManifestSwap.readDataPaths(spark, dir).flatMap { g =>
+      new java.io.File(new org.apache.hadoop.fs.Path(g).toUri.getPath)
+        .listFiles().toSeq
+        .filter(f => f.isDirectory && f.getName.startsWith("vb_part="))
+    }
+
   test("S4: valid docs land partitioned by version bucket; invalid go to error dir") {
     val dir = tmpDir("sink")
     val err = tmpDir("sinkerr")
@@ -23,8 +31,7 @@ class DocumentSinkSpec extends SparkSpec {
     assert(docs.columns.contains("doc_name"))
     assert(!docs.columns.contains("version_bucket"), "bucket is layout, not data")
     // partition dirs carry the version bucket (bounded count at scale)
-    val sub = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("version_bucket="))
-    assert(sub.toSet == Set("version_bucket=0"))
+    assert(bucketDirs(dir).map(_.getName).toSet == Set("vb_part=0"))
     val bad = spark.read.json(err)
     assert(bad.count() == 1)
   }
@@ -65,15 +72,15 @@ class DocumentSinkSpec extends SparkSpec {
         .toDF("invoice_id", "invoice_number", "customer_code", "change_version"))
     DocumentSink.writeVersioned(page, dir, err)
     // two buckets on disk: 0 (v10, v11) and 2 (v2500)
-    val sub = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("version_bucket="))
-    assert(sub.toSet == Set("version_bucket=0", "version_bucket=2"))
+    assert(bucketDirs(dir).map(_.getName).toSet ==
+      Set("vb_part=0", "vb_part=2"))
     val one = DocumentSink.readVersion(spark, dir, 2500L)
     assert(one.count() == 1)
     assert(one.select("invoice_id").head().getLong(0) == 9L)
     // only the target bucket's directory is listed/read/inferred
     assert(one.inputFiles.nonEmpty &&
-      one.inputFiles.forall(_.contains("version_bucket=2")),
-      s"expected reads confined to version_bucket=2, got ${one.inputFiles.toSeq}")
+      one.inputFiles.forall(_.contains("vb_part=2")),
+      s"expected reads confined to vb_part=2, got ${one.inputFiles.toSeq}")
     // never-delivered version: empty with a schema, named error without
     val probeSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "invoice_id LONG, change_version LONG")
@@ -108,10 +115,9 @@ class DocumentSinkSpec extends SparkSpec {
     DocumentSink.compact(spark, dir)
 
     // one file per bucket dir — bounded no matter how many polls ran
-    val bucketDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("version_bucket="))
-    assert(bucketDirs.nonEmpty)
-    bucketDirs.foreach { b =>
+    val compacted = bucketDirs(dir)
+    assert(compacted.nonEmpty)
+    compacted.foreach { b =>
       val n = b.listFiles().count(_.getName.endsWith(".json"))
       assert(n == 1, s"${b.getName}: $n files after compaction")
     }

@@ -2,28 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Second-JVM half of the cross-process racing-healer matrix
-  * (HealRaceSpec). The round-10 hammer proved heal-race safety within
-  * ONE JVM (shared Hadoop FileSystem object, shared locks); the
-  * deployment contract — "concurrent readers always safe" — spans
-  * PROCESSES with independent FileSystem instances and nothing shared
-  * but the directory tree. This child drives the three heal paths
-  * against windows the parent staged, each heal hammered on 4 local
-  * threads while the parent hammers the same path from its own JVM:
-  *
-  *   1. `staged`   — [[graft.streaming.StagedAppend.recover]] over a
-  *                   committed-but-unpublished bucketed-layout append.
-  *   2. `postings` — [[graft.llm.SimSearch.recoverPendingPostings]]
-  *                   over a committed-but-unpublished postings append.
-  *   3. `dirswap`  — [[graft.streaming.DirSwap.restoreIfTorn]] over a
-  *                   torn swap, repeated for `rounds` fresh windows
-  *                   (the heal is a single rename, so repetition is
-  *                   what buys overlap probability).
+/** Second-JVM half of the cross-process publish-protocol race matrix
+  * (HealRaceSpec). A single-JVM race shares one Hadoop FileSystem
+  * object; the deployment contract — "concurrent readers always safe"
+  * — spans PROCESSES with independent FileSystem instances and nothing
+  * shared but the directory tree. This child loops readers, a rival
+  * writer, a slow scan and a slow stage against the roots the parent
+  * publishes into under hot gc.
   *
   * File-based handshake: the parent touches `go-<phase>`; this child
-  * heals and touches `done-<phase>`. Any throwable fails the run
-  * (exit 1) — the contract under test is that a healer losing a
-  * rename race treats "the other party already did it" as success. */
+  * runs the phase and touches `done-<phase>`. Any throwable fails the
+  * run (exit 1). */
 object HealRaceChild {
   private def waitFor(f: java.io.File, ms: Long = 120000): Unit = {
     val deadline = System.currentTimeMillis() + ms
@@ -39,29 +28,8 @@ object HealRaceChild {
     ()
   }
 
-  /** Run `body` on 4 threads at once; rethrow the first failure. */
-  private def hammer(body: => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val tasks = (1 to 4).map { _ =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          gate.await()
-          try body catch { case t: Throwable => errs.add(t) }
-        }
-      })
-    }
-    gate.countDown()
-    tasks.foreach(_.get())
-    pool.shutdown()
-    if (!errs.isEmpty) throw errs.peek()
-  }
-
   def main(args: Array[String]): Unit = {
-    val Array(ctl, layout, idx, swapDir, swapTag, roundsS,
-      retainDir, mvCorpus, mvPath, sinkDir, zPath, mfRoot) = args.take(12)
-    val rounds = roundsS.toInt
+    val Array(ctl, mfRoot, zmRoot, p11a, p11b) = args.take(5)
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("healrace-child")
@@ -70,90 +38,6 @@ object HealRaceChild {
     spark.sparkContext.setLogLevel("ERROR")
     def ctlFile(n: String) = new java.io.File(ctl, n)
     touch(ctlFile("ready"))
-
-    waitFor(ctlFile("go-staged"))
-    hammer(graft.streaming.StagedAppend.recover(spark, layout))
-    touch(ctlFile("done-staged"))
-
-    waitFor(ctlFile("go-postings"))
-    hammer(graft.llm.SimSearch.recoverPendingPostings(spark, idx))
-    touch(ctlFile("done-postings"))
-
-    for (i <- 0 until rounds) {
-      waitFor(ctlFile(s"go-swap-$i"))
-      hammer(graft.streaming.DirSwap.restoreIfTorn(spark, swapDir, swapTag))
-      touch(ctlFile(s"done-swap-$i"))
-    }
-
-    // phase 4: a LIVE appender in the parent runs the full staged
-    // append while this process loops the healer — the serving-path
-    // posture (readers recover() before every read) racing an active
-    // maintainer's own stage+commit+publish, across processes. Loop
-    // until the parent says stop; any throw fails the child.
-    waitFor(ctlFile("go-live"))
-    val stop = ctlFile("stop-live")
-    while (!stop.exists()) {
-      graft.streaming.StagedAppend.recover(spark, layout)
-      Thread.sleep(1)
-    }
-    graft.streaming.StagedAppend.recover(spark, layout) // once post-stop
-    touch(ctlFile("done-live"))
-
-    // phase 5: a LIVE retention maintainer (full expire+logcompact
-    // rewrite through DirSwap tag "retain") in the parent, raced by
-    // this process looping the change table's designated healer — the
-    // round-12 verdict ask: the retention site's write pattern (whole
-    // table rewritten per window) differs from the staged-append
-    // ledger's one-file swap, so it gets its own live cell.
-    waitFor(ctlFile("go-retain"))
-    val stopR = ctlFile("stop-retain")
-    while (!stopR.exists()) {
-      graft.streaming.DirSwap.restoreIfTorn(spark, retainDir, "retain")
-      Thread.sleep(1)
-    }
-    graft.streaming.DirSwap.restoreIfTorn(spark, retainDir, "retain")
-    touch(ctlFile("done-retain"))
-
-    // phase 6: a LIVE materialized-view refresher (per-bucket DirSwap
-    // installs, several independent swap windows per refresh) in the
-    // parent, raced by this process looping the view's serving-path
-    // heal (scan for torn buckets, restore each).
-    waitFor(ctlFile("go-mview"))
-    val stopM = ctlFile("stop-mview")
-    val mv = new graft.ops.MaterializedView(spark, mvCorpus, mvPath,
-      nBuckets = 8)
-    while (!stopM.exists()) { mv.heal(); Thread.sleep(1) }
-    mv.heal()
-    touch(ctlFile("done-mview"))
-
-    // phase 7: a LIVE sink compaction (whole-sink dedup rewrite through
-    // DirSwap tag "compact") in the parent, raced by this process
-    // looping the sink reader's heal (every listSink/readBack restores
-    // a torn compaction before reading).
-    waitFor(ctlFile("go-sink"))
-    val stopS = ctlFile("stop-sink")
-    while (!stopS.exists()) {
-      graft.streaming.DirSwap.restoreIfTorn(spark, sinkDir, "compact")
-      Thread.sleep(1)
-    }
-    graft.streaming.DirSwap.restoreIfTorn(spark, sinkDir, "compact")
-    touch(ctlFile("done-sink"))
-
-    // phase 8: a LIVE z-order maintainer (staged-append ingest + full
-    // re-cluster rebuild through DirSwap tag "zorder") in the parent,
-    // raced by this process looping the layout reader's heal pair —
-    // prunedScanN's torn-swap restore plus the staged-append publish
-    // every layout reader performs before listing files.
-    waitFor(ctlFile("go-zorder"))
-    val stopZ = ctlFile("stop-zorder")
-    while (!stopZ.exists()) {
-      graft.streaming.DirSwap.restoreIfTorn(spark, zPath, "zorder")
-      graft.streaming.StagedAppend.recover(spark, zPath)
-      Thread.sleep(1)
-    }
-    graft.streaming.DirSwap.restoreIfTorn(spark, zPath, "zorder")
-    graft.streaming.StagedAppend.recover(spark, zPath)
-    touch(ctlFile("done-zorder"))
 
     // phase 9: a LIVE manifest publisher + hot gc in the parent
     // (round-13 — the ManifestSwap protocol's own cross-process cell),
@@ -229,7 +113,6 @@ object HealRaceChild {
     // assert the settled layout is the exactly-once union.
     waitFor(ctlFile("go-zmanifest"))
     val stopZm = ctlFile("stop-zmanifest")
-    val zmRoot = args(12)
     val zmDims = Seq(graft.ops.ZOrder.Dim("a", 0, 999),
       graft.ops.ZOrder.Dim("b", 0, 999))
     def zmBatch(i: Int) = spark.range(i * 100L, i * 100L + 50L)
@@ -273,7 +156,6 @@ object HealRaceChild {
     // supersession (its age already exceeded the grace when we
     // resolved); the supersession-measured grace must carry this scan.
     waitFor(ctlFile("go-gcread"))
-    val p11a = args(13)
     val slowPath = graft.streaming.ManifestSwap.readPath(spark, p11a)
       .getOrElse(sys.error("phase 11: nothing to resolve at " + p11a))
     touch(ctlFile("gcread-resolved"))
@@ -291,7 +173,6 @@ object HealRaceChild {
     // dir-mtime orphan aging would reap it at any grace; the
     // newest-object floor must protect it until the commit.
     waitFor(ctlFile("go-gcstage"))
-    val p11b = args(14)
     graft.streaming.ManifestSwap.appendKeyed(spark, p11b, "hr11",
       "slow-batch") { dir =>
       spark.range(1000L, 1050L).selectExpr("id AS v")

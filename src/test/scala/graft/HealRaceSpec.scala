@@ -1,28 +1,19 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** CROSS-PROCESS racing-healer matrix (round-11 — the round-10 verdict
-  * ask). The single-JVM 8-thread hammer (CrashMatrixSpec) shares one
-  * Hadoop FileSystem instance across its racers; the deployment
-  * contract — "concurrent readers always safe" — spans PROCESSES with
-  * independent FileSystem objects and nothing shared but the directory
-  * tree. This spec extends the [[CorpusCacheRaceChild]] two-JVM
-  * precedent to the three heal paths: the parent stages a
-  * committed-but-unpublished (or torn-swap) window exactly as a killed
-  * writer would leave it, then BOTH JVMs hammer the same healer — 4
-  * threads each side, 8 concurrent healers across 2 processes. Every
-  * rename race must resolve to "the other party already did it", never
-  * an exception, and the healed state must equal the clean truth. A
-  * final LIVE phase races the child's continuous healer loop against an
-  * active appender running the full staged-append protocol in this JVM —
-  * the actual serving posture (readers recover before every read, the
-  * one maintainer keeps ingesting), which exercises the mid-install
-  * ledger-swap window DirSwap.install now re-takes after a concurrent
-  * heal. */
+/** CROSS-PROCESS race matrix for the publish protocol (round-11 — the
+  * round-10 verdict ask, manifest phases since round 13). A single-JVM
+  * race shares one Hadoop FileSystem instance across its racers; the
+  * deployment contract — "concurrent readers always safe" — spans
+  * PROCESSES with independent FileSystem objects and nothing shared
+  * but the directory tree. This spec extends the
+  * [[CorpusCacheRaceChild]] two-JVM precedent: the parent runs a LIVE
+  * publisher (whole-snapshot installs, keyed appends with folds) under
+  * hot gc while the child ([[HealRaceChild]]) loops readers that must
+  * only ever observe complete committed snapshots, commits as a rival
+  * writer through the same CAS, and holds slow scans and slow stages
+  * open across supersessions. */
 class HealRaceSpec extends SparkSpec {
   import spark.implicits._
-  import graft.llm.SimSearch
 
   private def waitFor(f: java.io.File, ms: Long = 180000): Unit = {
     val deadline = System.currentTimeMillis() + ms
@@ -37,220 +28,16 @@ class HealRaceSpec extends SparkSpec {
     java.nio.file.Files.write(f.toPath, Array.emptyByteArray); ()
   }
 
-  /** 4 local threads, started together; returns the failures. */
-  private def hammer(body: => Unit): Seq[Throwable] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val tasks = (1 to 4).map { _ =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          gate.await()
-          try body catch { case t: Throwable => errs.add(t) }
-        }
-      })
-    }
-    gate.countDown()
-    tasks.foreach(_.get())
-    pool.shutdown()
-    errs.toArray(Array.empty[Throwable]).toSeq
-  }
-
-  test("a heal landing INSIDE install's two-rename window neither nests " +
-      "nor loses the new generation (the local-fs rename copy-fallback)") {
-    // Hadoop's local rename onto an occupied directory returns TRUE and
-    // NESTS the source inside it (measured against the build's own
-    // jars) — a swap protocol trusting that boolean would serve the old
-    // generation forever while reporting success. The window hook lands
-    // a full heal exactly between install's two renames.
-    val dir = tmpDir("swapwin") + "/state"
-    def write(v: Long)(d: String): Unit =
-      Seq(v).toDF("v").write.mode("overwrite").parquet(d)
-    graft.streaming.DirSwap.install(spark, dir, "swtag")(write(1L))
-    graft.streaming.DirSwap.windowAction = Some(("swtag", "afterMoveAside",
-      () => graft.streaming.DirSwap.restoreIfTorn(spark, dir, "swtag")))
-    try graft.streaming.DirSwap.install(spark, dir, "swtag")(write(2L))
-    finally graft.streaming.DirSwap.windowAction = None
-    assert(spark.read.parquet(dir).as[Long].collect().toSeq == Seq(2L),
-      "the raced install must still serve the NEW generation")
-    val junk = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.getName.contains("-tmp") || f.getName.contains("-bak"))
-    assert(junk.isEmpty, s"nested swap junk inside the state dir: " +
-      junk.toSeq.map(_.getName))
-    val siblings = Option(new java.io.File(dir).getParentFile.listFiles())
-      .getOrElse(Array.empty).map(_.getName).toSet
-    assert(siblings == Set("state"),
-      s"leftover swap siblings after the raced install: $siblings")
-  }
-
-  test("a heal whose restore loses to a completing install backs off " +
-      "instead of nesting the old generation inside the new one") {
-    val dir = tmpDir("swapwin2") + "/state"
-    def write(v: Long)(d: String): Unit =
-      Seq(v).toDF("v").write.mode("overwrite").parquet(d)
-    graft.streaming.DirSwap.install(spark, dir, "swtag2")(write(1L))
-    // tear the swap with the new generation already staged: p missing,
-    // bak = gen 1, tmp = gen 2 (the resumed-maintainer shape)
-    graft.streaming.DirSwap.failpoint = Some(("swtag2", "afterMoveAside"))
-    try intercept[Exception] {
-      graft.streaming.DirSwap.install(spark, dir, "swtag2")(write(2L))
-    } finally graft.streaming.DirSwap.failpoint = None
-    // the healer arrives; INSIDE its check→rename window the maintainer
-    // finishes the install (tmp → p) — without no-replace semantics the
-    // healer's rename would then nest gen 1 inside the live gen 2 dir
-    graft.streaming.DirSwap.restoreWindowAction = Some(() =>
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(
-          graft.streaming.DirSwap.tmpPath(dir, "swtag2")),
-        java.nio.file.Paths.get(dir)))
-    try graft.streaming.DirSwap.restoreIfTorn(spark, dir, "swtag2")
-    finally graft.streaming.DirSwap.restoreWindowAction = None
-    assert(spark.read.parquet(dir).as[Long].collect().toSeq == Seq(2L),
-      "the healer must back off from the completed install")
-    val junk = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.getName.contains("-tmp") || f.getName.contains("-bak"))
-    assert(junk.isEmpty,
-      s"the losing heal nested junk inside the live dir: " +
-        junk.toSeq.map(_.getName))
-    // the surviving bak is the standard beforeBakDrop crash shape the
-    // next install clears; the essential point is p stayed clean
-  }
-
   test("TWO PROCESSES x 4 threads racing every heal path: staged-append " +
       "recover, postings recover, torn-swap restore — no exception, no " +
       "lost or doubled state") {
-    val swapRounds = 6
+    // (name kept from the rename-protocol heal phases, deleted with the
+    // rename protocol; the manifest phases below race the publish
+    // protocol's writers, readers and gc across processes)
     val ctl = new java.io.File(tmpDir("healrace-ctl"))
-
-    // ---- fixture 1: bucketed-layout staged append, committed but
-    // unpublished (the StagedAppend.recover window)
-    val emb = Tables.embeddings(spark, sf)
-    val vbase = emb.filter($"vec_id" % 2 === 0)
-    val vbatch = emb.filter($"vec_id" % 2 === 1)
-    def ids(path: String) = spark.read.parquet(path)
-      .select($"vec_id").as[Long].collect().toSeq.sorted
-    val vclean = tmpDir("healrace-sa-clean") + "/layout"
-    SimSearch.writeBucketed(vbase, "vec_id", "embedding", 4, vclean)
-    SimSearch.appendBucketed(vbatch, "vec_id", "embedding", 4, vclean)
-    val layout = tmpDir("healrace-sa") + "/layout"
-    SimSearch.writeBucketed(vbase, "vec_id", "embedding", 4, layout)
-    graft.streaming.DirSwap.failpoint = Some(("appledger", "beforeBakDrop"))
-    try intercept[Exception] {
-      SimSearch.appendBucketed(vbatch, "vec_id", "embedding", 4, layout)
-    } finally graft.streaming.DirSwap.failpoint = None
-
-    // ---- fixture 2: postings append, committed but unpublished (the
-    // recoverPendingPostings window)
-    val docs = Tables.documents(spark, sf)
-    val pbase = docs.filter($"doc_id" % 2 === 0)
-    val pbatch = docs.filter($"doc_id" % 2 === 1)
-    def postings(idx: String) = spark.read.parquet(s"$idx/postings")
-      .select($"term", $"doc_id", $"tf")
-      .as[(String, Long, Long)].collect().toSet
-    val pclean = tmpDir("healrace-p-clean") + "/idx"
-    SimSearch.buildPostingsIndex(pbase, "doc_id", "text", pclean)
-    SimSearch.appendPostingsIndex(pbatch, "doc_id", "text", pclean)
-    val idx = tmpDir("healrace-p") + "/idx"
-    SimSearch.buildPostingsIndex(pbase, "doc_id", "text", idx)
-    graft.streaming.DirSwap.failpoint = Some(("postingsdf", "beforeBakDrop"))
-    try intercept[Exception] {
-      SimSearch.appendPostingsIndex(pbatch, "doc_id", "text", idx)
-    } finally graft.streaming.DirSwap.failpoint = None
-    graft.streaming.DirSwap.restoreIfTorn(spark, s"$idx/df", "postingsdf")
-
-    // ---- fixture 3: a genuinely torn swap (afterMoveAside — the sole
-    // surviving copy under the bak path)
-    val swapDir = tmpDir("healrace-swap") + "/state"
-    def writeOne(dir: String): Unit =
-      Seq(1L).toDF("v").write.mode("overwrite").parquet(dir)
-    def tearSwap(): Unit = {
-      graft.streaming.DirSwap.install(spark, swapDir, "hrtag")(writeOne)
-      graft.streaming.DirSwap.failpoint = Some(("hrtag", "afterMoveAside"))
-      try intercept[Exception] {
-        graft.streaming.DirSwap.install(spark, swapDir, "hrtag")(writeOne)
-      } finally graft.streaming.DirSwap.failpoint = None
-    }
-    tearSwap()
-
-    // ---- fixture 4: a change table under live retention maintenance
-    // (phase 5) — a version-keyed op feed paged like the crash matrix's
-    def opPage(i: Int) = Tables.events(spark, sf).select(
-        col("user_id").as("entity_id"),
-        col("event_id").as("change_version"),
-        element_at(array(lit("I"), lit("U"), lit("D")),
-          (col("event_id") % 3 + 1).cast("int")).as("change_operation"))
-      .filter(col("change_version") > i * 200L &&
-        col("change_version") <= (i + 1) * 200L)
-    def chgRows(dir: String) = spark.read.parquet(dir)
-      .select($"entity_id", $"change_version", $"change_operation")
-      .as[(Long, Long, String)].collect().toSet
-    val retainDir = tmpDir("healrace-retain") + "/chg"
-    val retainTwin = tmpDir("healrace-retain-twin") + "/chg"
-    for (d <- Seq(retainDir, retainTwin); i <- 0 until 2)
-      opPage(i).write.mode("append").parquet(d)
-
-    // ---- fixture 5: a bucket-partitioned materialized view under live
-    // refresh (phase 6) — two corpus snapshots so consecutive refreshes
-    // flip real content through the per-bucket DirSwap installs
-    val mvRoot = tmpDir("healrace-mv")
-    val corpusA = s"$mvRoot/corpusA"; val corpusB = s"$mvRoot/corpusB"
-    val mvPath = s"$mvRoot/view"
-    for (t <- Seq("orders", "lineitem"))
-      spark.read.parquet(s"$sf/$t.parquet")
-        .write.mode("overwrite").parquet(s"$corpusA/$t.parquet")
-    val mvIds = spark.read.parquet(s"$corpusA/orders.parquet")
-      .select($"o_orderkey").orderBy($"o_orderkey")
-      .limit(12).as[Long].collect().toSeq
-    val victims = mvIds.filter(_ % 2 == 0)
-    spark.read.parquet(s"$corpusA/orders.parquet")
-      .filter(!$"o_orderkey".isin(victims: _*))
-      .write.mode("overwrite").parquet(s"$corpusB/orders.parquet")
-    spark.read.parquet(s"$corpusA/lineitem.parquet")
-      .write.mode("overwrite").parquet(s"$corpusB/lineitem.parquet")
-    new graft.ops.MaterializedView(spark, corpusA, mvPath, nBuckets = 8)
-      .build()
-
-    // ---- fixture 6: a versioned document sink under live compaction
-    // (phase 7) — paged delivery with redeliveries so each compaction
-    // rewrite (DirSwap tag "compact") has real duplicates to collapse
-    import graft.sinks.DocumentSink
-    def docPage(i: Int) = Tables.orders(spark, sf).select(
-        col("o_orderkey").as("invoice_id"),
-        concat(lit("INV-"), lpad(col("o_orderkey").cast("string"), 9, "0"))
-          .as("invoice_number"),
-        concat(lit("CUST-"), col("o_custkey")).as("customer_code"),
-        col("o_orderkey").as("change_version"))
-      .filter(col("o_orderkey") % 6 === i)
-    def sinkRows(dir: String) = DocumentSink.deduplicated(spark, dir)
-      .select($"invoice_id", $"change_version", $"invoice_number",
-        $"customer_code")
-      .as[(Long, Long, String, String)].collect().toSet
-    val sinkDir = tmpDir("healrace-sink") + "/sink"
-    val sinkTwin = tmpDir("healrace-sink-twin") + "/sink"
-    val sinkErr = tmpDir("healrace-sink-err")
-    for (d <- Seq(sinkDir, sinkTwin); i <- 0 until 2)
-      DocumentSink.writeVersioned(docPage(i), d, sinkErr)
-
-    // ---- fixture 7: a z-order layout under live ingest + fold
-    // (phase 8) — staged appends then full re-cluster rebuilds, the
-    // two-protocol site (append ledger + DirSwap tag "zorder")
     import graft.ops.ZOrder
-    val zDims = Seq(ZOrder.Dim("user_id", 0L, 15L),
-      ZOrder.Dim("event_id", 0L, 999L))
-    def zBatch(i: Int) = Tables.events(spark, sf)
-      .select($"event_id", $"user_id", $"event_type")
-      .filter($"event_id" % 5 === i)
-    def zRows(dir: String) = spark.read.parquet(dir)
-      .select($"event_id", $"user_id", $"event_type")
-      .as[(Long, Long, String)].collect().toSet
-    val zDir = tmpDir("healrace-z") + "/layout"
-    val zTwin = tmpDir("healrace-z-twin") + "/layout"
-    for (d <- Seq(zDir, zTwin))
-      ZOrder.layoutN(zBatch(0), d, zDims, files = 3)
 
-    // ---- fixture 8: a manifest-published state table (phase 9) — the
+    // ---- fixture 1: a manifest-published state table (phase 9) — the
     // round-13 object-store publish path under a live cross-process
     // writer/reader/gc race
     val mfRoot = tmpDir("healrace-mf") + "/state"
@@ -261,20 +48,16 @@ class HealRaceSpec extends SparkSpec {
       }
     mfInstall(0L)
 
-    // ---- fixture 9: a MANIFEST z-order layout (phase 10, round-14 —
-    // the keyed-append family across processes). Built once under the
-    // forceManifest hook; every later operation routes STRUCTURALLY
-    // (the root carries _ptr), so neither JVM needs the hook again.
+    // ---- fixture 2: a MANIFEST z-order layout (phase 10, round-14 —
+    // the keyed-append family across processes)
     val zmRoot = tmpDir("healrace-zm") + "/layout"
     val zmDims = Seq(ZOrder.Dim("a", 0, 999), ZOrder.Dim("b", 0, 999))
     def zmBatch(i: Int) = spark.range(i * 100L, i * 100L + 50L)
       .selectExpr("id % 1000 AS a", "(id * 37) % 1000 AS b",
         "id AS payload")
-    graft.streaming.DirSwap.forceManifest = true
-    try ZOrder.layoutN(zmBatch(0), zmRoot, zmDims, 2)
-    finally graft.streaming.DirSwap.forceManifest = false
+    ZOrder.layoutN(zmBatch(0), zmRoot, zmDims, 2)
 
-    // ---- fixtures 10/11: the phase-11 gc-race roots (round-15 —
+    // ---- fixtures 3/4: the phase-11 gc-race roots (round-15 —
     // round-14 verdict ask #5). p11a: whole-snapshot installs the
     // child slow-scans across a supersession; p11b: a keyed-append
     // root the child slow-STAGES into with lying directory mtimes
@@ -301,9 +84,8 @@ class HealRaceSpec extends SparkSpec {
     val cmd = Seq(
       s"${System.getProperty("java.home")}/bin/java") ++ jvmOpts ++ Seq(
       "-Xmx2g", "-cp", System.getProperty("java.class.path"),
-      "graft.HealRaceChild", ctl.getPath, layout, idx, swapDir, "hrtag",
-      swapRounds.toString, retainDir, corpusA, mvPath, sinkDir, zDir,
-      mfRoot, zmRoot, p11aRoot, p11bRoot)
+      "graft.HealRaceChild", ctl.getPath, mfRoot, zmRoot, p11aRoot,
+      p11bRoot)
     // child output goes to a FILE, not a pipe: the parent only drains
     // output at the end, so a chatty child could fill the pipe buffer
     // and block mid-phase — and on a timeout the pipe's contents were
@@ -315,172 +97,6 @@ class HealRaceSpec extends SparkSpec {
       scala.io.Source.fromFile(childLog).getLines().toVector
     try {
       waitFor(new java.io.File(ctl, "ready"))
-
-      // phase 1: 8 healers (4 here + 4 in the child) race the
-      // staged-append publish
-      touch(new java.io.File(ctl, "go-staged"))
-      val e1 = hammer(graft.streaming.StagedAppend.recover(spark, layout))
-      assert(e1.isEmpty, s"parent staged healers threw: ${e1.mkString("; ")}")
-      waitFor(new java.io.File(ctl, "done-staged"))
-      assert(ids(layout) == ids(vclean),
-        "cross-process staged-append healers corrupted the layout")
-
-      // phase 2: the postings publish
-      touch(new java.io.File(ctl, "go-postings"))
-      val e2 = hammer(SimSearch.recoverPendingPostings(spark, idx))
-      assert(e2.isEmpty,
-        s"parent postings healers threw: ${e2.mkString("; ")}")
-      waitFor(new java.io.File(ctl, "done-postings"))
-      assert(postings(idx) == postings(pclean),
-        "cross-process postings healers corrupted the published postings")
-
-      // phase 3: the torn-swap restore, repeated over fresh windows —
-      // the heal is one rename, so repetition buys overlap probability
-      for (i <- 0 until swapRounds) {
-        if (i > 0) tearSwap()
-        touch(new java.io.File(ctl, s"go-swap-$i"))
-        val e3 = hammer(
-          graft.streaming.DirSwap.restoreIfTorn(spark, swapDir, "hrtag"))
-        assert(e3.isEmpty,
-          s"parent torn-swap healers threw (round $i): ${e3.mkString("; ")}")
-        waitFor(new java.io.File(ctl, s"done-swap-$i"))
-        assert(spark.read.parquet(swapDir).count() == 1,
-          s"round $i: racing healers lost the sole surviving generation")
-      }
-
-      // phase 4: a LIVE appender races the child's healer loop — the
-      // serving-path posture (every reader recovers first) against an
-      // active maintainer's full stage+commit+publish, across
-      // processes. The child hammers recover() the whole time; the
-      // two appends below cross its loop thousands of times,
-      // including the ledger-swap window (DirSwap.install re-takes a
-      // healed swap) and the shared-tag publish walk.
-      touch(new java.io.File(ctl, "go-live"))
-      val batch2 = emb.select(($"vec_id" + 1000000000L).as("vec_id"),
-        $"embedding")
-      val batch3 = emb.select(($"vec_id" + 2000000000L).as("vec_id"),
-        $"embedding").filter($"vec_id" % 3 === 0)
-      SimSearch.appendBucketed(batch2, "vec_id", "embedding", 4, layout)
-      SimSearch.appendBucketed(batch3, "vec_id", "embedding", 4, layout)
-      touch(new java.io.File(ctl, "stop-live"))
-      waitFor(new java.io.File(ctl, "done-live"))
-      SimSearch.appendBucketed(batch2, "vec_id", "embedding", 4, vclean)
-      SimSearch.appendBucketed(batch3, "vec_id", "embedding", 4, vclean)
-      assert(ids(layout) == ids(vclean),
-        "a healer racing a LIVE appender corrupted the layout")
-
-      // phase 5: a LIVE retention maintainer (whole-table rewrite per
-      // window, DirSwap tag "retain") races the child's healer loop —
-      // the round-12 verdict ask. Four windows, each preceded by a
-      // fresh page append so every rewrite installs new content.
-      touch(new java.io.File(ctl, "go-retain"))
-      for (i <- 2 until 6) {
-        opPage(i).write.mode("append").parquet(retainDir)
-        graft.cdc.Maintenance.maintainChangeTable(spark, retainDir,
-          watermark = i * 120L, compactUpTo = i * 180L, nFiles = 3)
-      }
-      touch(new java.io.File(ctl, "stop-retain"))
-      waitFor(new java.io.File(ctl, "done-retain"))
-      for (i <- 2 until 6) { // the never-raced twin
-        opPage(i).write.mode("append").parquet(retainTwin)
-        graft.cdc.Maintenance.maintainChangeTable(spark, retainTwin,
-          watermark = i * 120L, compactUpTo = i * 180L, nFiles = 3)
-      }
-      assert(chgRows(retainDir) == chgRows(retainTwin),
-        "a healer racing a LIVE retention rewrite corrupted the table")
-
-      // phase 6: a LIVE materialized-view refresher races the child's
-      // bucket-heal loop. Alternating corpus snapshots flip real rows
-      // through each per-bucket swap; the last refresh is from corpusA,
-      // so the settled view must equal a never-raced corpusA build.
-      touch(new java.io.File(ctl, "go-mview"))
-      for (i <- 1 to 6) {
-        val corpus = if (i % 2 == 0) corpusA else corpusB
-        new graft.ops.MaterializedView(spark, corpus, mvPath, nBuckets = 8)
-          .refresh(mvIds)
-      }
-      touch(new java.io.File(ctl, "stop-mview"))
-      waitFor(new java.io.File(ctl, "done-mview"))
-      def mvRows(path: String, corpus: String) =
-        new graft.ops.MaterializedView(spark, corpus, path, nBuckets = 8)
-          .read()
-          .select($"invoice_id", $"line_no", $"qty", $"price_cents",
-            $"bucket".cast("long"))
-          .as[(Long, Int, Long, Long, Long)].collect().toSet
-      val twinPath = s"$mvRoot/view-twin"
-      new graft.ops.MaterializedView(spark, corpusA, twinPath, nBuckets = 8)
-        .build()
-      assert(mvRows(mvPath, corpusA) == mvRows(twinPath, corpusA),
-        "a healer racing LIVE per-bucket view refreshes corrupted the view")
-      val leftovers = Option(new java.io.File(mvPath).listFiles())
-        .getOrElse(Array.empty).map(_.getName)
-        .filter(n => n.contains(".mview-tmp") || n.contains(".mview-bak"))
-      assert(leftovers.isEmpty,
-        s"raced refreshes left swap litter in the view: ${leftovers.toSeq}")
-
-      // phase 7: a LIVE sink compaction races the child's reader-heal
-      // loop — compaction is a whole-sink dedup rewrite (DirSwap tag
-      // "compact"), so every cycle is a fresh two-rename window the
-      // healer can land inside. Redeliver a page per cycle so each
-      // rewrite collapses real duplicates.
-      touch(new java.io.File(ctl, "go-sink"))
-      for (i <- 2 until 6) {
-        DocumentSink.writeVersioned(docPage(i), sinkDir, sinkErr)
-        DocumentSink.writeVersioned(docPage(i), sinkDir, sinkErr) // redelivery
-        DocumentSink.compact(spark, sinkDir)
-      }
-      touch(new java.io.File(ctl, "stop-sink"))
-      waitFor(new java.io.File(ctl, "done-sink"))
-      for (i <- 2 until 6) { // the never-raced twin
-        DocumentSink.writeVersioned(docPage(i), sinkTwin, sinkErr)
-        DocumentSink.writeVersioned(docPage(i), sinkTwin, sinkErr)
-        DocumentSink.compact(spark, sinkTwin)
-      }
-      assert(sinkRows(sinkDir) == sinkRows(sinkTwin),
-        "a healer racing LIVE sink compactions corrupted the sink")
-      val sinkLitter = Option(
-        new java.io.File(sinkDir).getParentFile.listFiles())
-        .getOrElse(Array.empty).map(_.getName)
-        .filter(n => n.contains("-tmp") || n.contains("-bak"))
-      assert(sinkLitter.isEmpty,
-        s"raced compactions left swap litter beside the sink: " +
-          sinkLitter.toSeq)
-
-      // phase 8: a LIVE z-order maintainer (staged-append ingest, then
-      // a full re-cluster rebuild per cycle) races the child's
-      // reader-heal pair (torn-"zorder" restore + staged publish) —
-      // the one site where BOTH protocols' windows interleave.
-      touch(new java.io.File(ctl, "go-zorder"))
-      for (i <- 1 until 5) {
-        ZOrder.appendN(zBatch(i), zDir, zDims, files = 2)
-        ZOrder.rebuild(spark, zDir, zDims, files = 3)
-      }
-      touch(new java.io.File(ctl, "stop-zorder"))
-      waitFor(new java.io.File(ctl, "done-zorder"))
-      for (i <- 1 until 5) { // the never-raced twin
-        ZOrder.appendN(zBatch(i), zTwin, zDims, files = 2)
-        ZOrder.rebuild(spark, zTwin, zDims, files = 3)
-      }
-      assert(zRows(zDir) == zRows(zTwin),
-        "a healer racing a LIVE z-order ingest+fold corrupted the layout")
-      // the pruned serving read over the raced layout equals a plain
-      // filter over the never-raced twin (index skipping stayed
-      // conservative through every raced window)
-      val box = Seq(("user_id", 3L, 9L), ("event_id", 100L, 700L))
-      val prunedGot = ZOrder.prunedScanN(spark, zDir, box)
-        .select($"event_id", $"user_id", $"event_type")
-        .as[(Long, Long, String)].collect().toSet
-      val prunedWant = zRows(zTwin).filter(r =>
-        r._2 >= 3L && r._2 <= 9L && r._1 >= 100L && r._1 <= 700L)
-      assert(prunedGot == prunedWant,
-        "pruned scan over the raced z-order layout diverged from truth")
-      val zLitter = Option(
-        new java.io.File(zDir).getParentFile.listFiles())
-        .getOrElse(Array.empty).map(_.getName)
-        .filter(n => n.contains("-tmp") || n.contains("-bak"))
-      assert(zLitter.isEmpty,
-        s"raced rebuilds left swap litter beside the layout: " +
-          zLitter.toSeq)
 
       // phase 9: a LIVE manifest publisher + gc races the child's
       // reader loop and rival installer across processes. gc runs HOT
@@ -661,8 +277,8 @@ class HealRaceSpec extends SparkSpec {
       assert(sawDirLie,
         "the dir-mtime lie was never observed live — the red/green " +
           "contrast did not exercise (slow stage too fast?)")
-      val p11Settled = spark.read.parquet(graft.streaming.DirSwap
-          .readDataPaths(spark, p11bRoot, "hr11"): _*)
+      val p11Settled = spark.read.parquet(graft.streaming.ManifestSwap
+          .readDataPaths(spark, p11bRoot): _*)
         .select($"v").as[Long].collect().toSeq.sorted
       assert(p11Settled == ((0L until 50L) ++ (1000L until 1050L) ++
           (2000L until 2050L)).sorted,

@@ -355,9 +355,15 @@ class LlmSpec extends SparkSpec {
     val postScans = scans(served.queryExecution.executedPlan).filter(
       _.relation.location.rootPaths.exists(_.toString.contains(idx)))
     assert(postScans.nonEmpty, "expected parquet scans of the index")
-    assert(postScans.forall(_.partitionFilters.nonEmpty),
-      "index scans must carry a tbkt partition filter")
-    val maxBkts = terms.map(SimSearch.termBucket).distinct.size
+    // pruned either by a tbkt partition filter (the df generation) or
+    // by reading only the terms' tbkt= leaf dirs (the postings
+    // generations, enumerated off the manifest)
+    val termBkts = terms.map(SimSearch.termBucket).distinct
+      .map(b => s"tbkt=$b").toSet
+    assert(postScans.forall(sc => sc.partitionFilters.nonEmpty ||
+        sc.relation.location.rootPaths.forall(p => termBkts(p.getName))),
+      "index scans must read only the terms' tbkt buckets")
+    val maxBkts = termBkts.size
     postScans.foreach { sc =>
       val files = sc.metrics("numFiles").value
       assert(files <= maxBkts,
@@ -415,9 +421,11 @@ class LlmSpec extends SparkSpec {
     assert(a.collect().toSeq == b.collect().toSeq,
       "appended index diverges from a fresh rebuild")
     // the scoring integers themselves agree, not just the fused top-k
-    val dfA = spark.read.parquet(s"$appended/df")
+    def dfOf(idx: String) = spark.read.parquet(
+      graft.streaming.ManifestSwap.readPath(spark, s"$idx/df").get)
+    val dfA = dfOf(appended)
       .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val dfB = spark.read.parquet(s"$rebuilt/df")
+    val dfB = dfOf(rebuilt)
       .select("term", "df").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(dfA == dfB, "df tables diverge after append")
   }
@@ -497,7 +505,9 @@ class LlmSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val path = tmpDir("ivf")
     SimSearch.writeBucketed(emb, "vec_id", "embedding", planes = 6, path)
-    val corpus = spark.read.parquet(path)
+    // the layout's one committed generation, bucket-partitioned
+    val corpus = spark.read.parquet(
+      graft.streaming.ManifestSwap.readPath(spark, path).get)
     // the query's bucket
     graft.functions.VectorFunctions.register(spark)
     val qBucket = corpus.filter($"vec_id" === 0L)
@@ -526,21 +536,23 @@ class LlmSpec extends SparkSpec {
     assert(bucketed.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))) ==
       inMem.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))),
       "IVF-served ANN must return exactly the in-memory ANN result")
-    // the scan is pruned to the probe set: scanned == layout dirs that
-    // are probe buckets, strictly fewer than the layout's dirs
-    val qBucket = spark.read.parquet(path).filter($"vec_id" === 0L)
+    // the scan is pruned to the probe set: the bucket dirs read ==
+    // layout dirs that are probe buckets, strictly fewer than the
+    // layout's dirs (the published layout is read as its committed
+    // generation's probed leaf dirs)
+    val layout = spark.read.parquet(
+      graft.streaming.ManifestSwap.readPath(spark, path).get)
+    val qBucket = layout.filter($"vec_id" === 0L)
       .select($"bucket".cast("long")).as[Long].head()
     val probes = SimSearch.probeBuckets(qBucket, planes = 8, probeHamming = 2).toSet
-    val layoutBuckets = spark.read.parquet(path)
+    val layoutBuckets = layout
       .select($"bucket".cast("long")).distinct().as[Long].collect().toSet
-    val expectScanned = layoutBuckets.intersect(probes).size
-    val scanned = bucketed.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.partitionCount
-    }
-    assert(scanned.contains(expectScanned),
-      s"expected a scan of $expectScanned probed partitions, got $scanned")
-    assert(expectScanned < layoutBuckets.size,
+    val expectScanned = layoutBuckets.intersect(probes)
+    val scanned = bucketed.inputFiles.toSet
+      .map((f: String) => new org.apache.hadoop.fs.Path(f).getParent.getName)
+    assert(scanned == expectScanned.map(b => s"bucket=$b"),
+      s"expected a scan of the probed partitions $expectScanned, got $scanned")
+    assert(expectScanned.size < layoutBuckets.size,
       "probe must not touch the whole layout")
   }
 

@@ -16,6 +16,11 @@ class MaintenanceSpec extends SparkSpec {
     walk(new java.io.File(dir)).map(_.getName).filter(_.endsWith(suffix))
   }
 
+  /** The committed data dirs of a published (or producer-written) root. */
+  private def served(root: String): Seq[String] =
+    graft.streaming.ManifestSwap.dataPaths(spark, root)
+      .map(new org.apache.hadoop.fs.Path(_).toUri.getPath)
+
   test("safeWatermark: consumers pin expiry, a straggler is capped explicitly") {
     val store = new graft.cdc.ConsumerStateStore(spark, tmpDir("msw"))
     // no consumers: the requested (time-based) watermark stands
@@ -69,10 +74,7 @@ class MaintenanceSpec extends SparkSpec {
       aggViewRoots = Seq(root))
     // both folded batches moved into the bucketed state checkpoint (r7
     // layout): the log is left empty and the checkpoint carries gen 1
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/log"))
-      .map(_.getPath.getName).filter(_.startsWith("batch_id=")).toSet
+    val parts = graft.streaming.ManifestSwap.appliedKeys(spark, s"$root/log")
     assert(parts.isEmpty, s"window did not compact the view log: $parts")
     assert(graft.streaming.StreamingAggView.stateGen(spark, root) == 1L,
       "state checkpoint generation must be the folded bound")
@@ -162,18 +164,18 @@ class MaintenanceSpec extends SparkSpec {
       ZOrder.Dim("change_version", 0L, 1000L))
     ZOrder.layoutN(pages(0).toDF(), zdir, zdims, 2)
     ZOrder.appendN(pages(1).toDF(), zdir, zdims, 2)
-    val zRows = spark.read.parquet(zdir).count()
+    val zRows = spark.read.parquet(served(zdir): _*).count()
 
     val report = Maintenance.run(spark, changeDir, sinkDir,
       watermark = 200L, compactUpTo = 600L, nFiles = 4,
       zLayouts = Seq(Maintenance.ZLayout(zdir, zdims, 2)))
-    assert(filesUnder(zdir, ".parquet").size == 2 &&
-      spark.read.parquet(zdir).count() == zRows,
+    assert(served(zdir).flatMap(filesUnder(_, ".parquet")).size == 2 &&
+      spark.read.parquet(served(zdir): _*).count() == zRows,
       "the window must fold the z-layout to its target file count")
 
     // change table: expired prefix gone, one newest FULL row per entity
     // in the compacted segment, tail untouched, bounded file count
-    val after = spark.read.parquet(changeDir).cache()
+    val after = spark.read.parquet(served(changeDir): _*).cache()
     assert(after.agg(min($"change_version")).head().getLong(0) > 200L)
     val oldSeg = after.filter($"change_version" <= 600L)
     assert(oldSeg.groupBy($"entity_id").count().filter($"count" > 1).isEmpty,
@@ -200,8 +202,9 @@ class MaintenanceSpec extends SparkSpec {
       .select("invoice_id", "invoice_number", "change_version", "doc_name")
       .as[(Long, String, Long, String)].collect().toSet
     assert(sinkAfter == sinkBefore, "sink read-back must be identical")
-    val buckets = new java.io.File(sinkDir).listFiles()
-      .count(_.getName.startsWith("version_bucket="))
+    val buckets = served(sinkDir)
+      .flatMap(g => new java.io.File(g).listFiles().toSeq)
+      .count(_.getName.startsWith("vb_part="))
     assert(report.sinkFiles == buckets.toLong,
       s"expected one file per bucket ($buckets), got ${report.sinkFiles}")
 
@@ -251,15 +254,17 @@ class MaintenanceSpec extends SparkSpec {
     info(s"recall before=$before after=$after")
     assert(after >= 0.5 && after > before,
       s"retrain must recover ADC ranking: before=$before after=$after")
-    // crash window: the generation moved aside but not yet installed —
-    // the next probe heals it (DirSwap restore) and serves the SAME
-    // rebuilt generation
-    val fs = new org.apache.hadoop.fs.Path(layout).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(layout),
-      new org.apache.hadoop.fs.Path(layout + ".vecidx-bak")))
-    assert(recall() == after, "a probe in the crash window must heal " +
-      "the swap and serve the rebuilt generation")
+    // crash window: a second retrain dies with its generation written
+    // and its pointer not yet committed — the next probe serves the
+    // SAME rebuilt generation
+    graft.streaming.ManifestSwap.failpoint = Some(("vecidx", "beforeCommit"))
+    try intercept[RuntimeException] {
+      Maintenance.maintainVectorIndex(spark,
+        Maintenance.VectorIndex(embDir, layout, m = m, dims = dims,
+          ks = ks, planes = planes, iters = 2))
+    } finally graft.streaming.ManifestSwap.failpoint = None
+    assert(recall() == after, "a probe in the crash window must serve " +
+      "the committed rebuilt generation")
     // rerunnable: a second window keeps the index probe-green
     Maintenance.maintainVectorIndex(spark,
       Maintenance.VectorIndex(embDir, layout, m = m, dims = dims, ks = ks,
@@ -282,7 +287,8 @@ class MaintenanceSpec extends SparkSpec {
     def serve() = SimSearch.hybridTopKIndexed(emb, idx, "doc_id",
       "vec_id", "embedding", terms, queryId = 0L, k = 20)
       .orderBy("doc_id").collect().toSeq
-    def postingFiles() = filesUnder(s"$idx/postings", ".parquet")
+    def postingFiles() =
+      served(s"$idx/postings").flatMap(filesUnder(_, ".parquet"))
     val before = serve()
     val filesBefore = postingFiles().size
     // two ingests stacked extra file generations onto the touched buckets
@@ -325,9 +331,10 @@ class MaintenanceSpec extends SparkSpec {
     // must be invisible to it
     Maintenance.maintainChangeTable(spark, dir,
       watermark = 0L, compactUpTo = 3L, nFiles = 2)
-    Seq((2L, 5L, "U"))
-      .toDF("entity_id", "change_version", "change_operation")
-      .write.mode("append").parquet(dir)
+    // once the table carries a manifest, the producer appends through
+    // the table's keyed page append
+    Maintenance.appendChangePage(spark, dir, Seq((2L, 5L, "U"))
+      .toDF("entity_id", "change_version", "change_operation"))
     drain()
     val out = spark.read.parquet(sink)
       .select("entity_id", "change_version")

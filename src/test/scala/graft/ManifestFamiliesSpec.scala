@@ -2,25 +2,18 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.streaming.{DirSwap, ManifestSwap}
+import graft.streaming.ManifestSwap
 
-/** Round-14 verdict ask #1 — the APPEND-STYLE families gain
-  * manifest-native layouts (generation-relative appends + a
-  * file-listing manifest, the Iceberg shape): z-order, bucketed vector
-  * layout, IVF-PQ layout, document sink, retention change table,
-  * postings index, and the streaming aggview log (round-14 ADVICE: the
-  * one append root the protocol guard missed). Every family is
-  * exercised here under `DirSwap.forceManifest` against its
-  * rename-protocol twin — identical serving output, append idempotence
-  * under retry, fold/compaction correctness with ledger semantics, and
-  * crash windows at the manifest failpoints. */
+/** Round-14 verdict ask #1 — the APPEND-STYLE families' manifest
+  * layouts (generation-relative appends + a file-listing manifest, the
+  * Iceberg shape): z-order, bucketed vector layout, IVF-PQ layout,
+  * document sink, retention change table, postings index, and the
+  * streaming aggview log. Every family is checked against a test-local
+  * recompute from its inputs — identical serving output, append
+  * idempotence under retry, fold/compaction correctness with ledger
+  * semantics, and crash windows at the manifest failpoints. */
 class ManifestFamiliesSpec extends SparkSpec {
   import spark.implicits._
-
-  private def manifest[A](body: => A): A = {
-    DirSwap.forceManifest = true
-    try body finally DirSwap.forceManifest = false
-  }
 
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -38,30 +31,27 @@ class ManifestFamiliesSpec extends SparkSpec {
       .toDF("a", "b", "payload")
     def box(p: String) =
       ZOrder.prunedScanN(spark, p, Seq(("a", 100L, 300L), ("b", 0L, 999L)))
-    // rename twin
-    val pR = tmpDir("zr") + "/lay"
-    ZOrder.layoutN(base, pR, dims, 4)
-    ZOrder.appendN(batch, pR, dims, 2)
-    val want = canon(box(pR))
-    manifest {
-      val pM = tmpDir("zm") + "/lay"
-      ZOrder.layoutN(base, pM, dims, 4)
-      ZOrder.appendN(batch, pM, dims, 2)
-      ZOrder.appendN(batch, pM, dims, 2) // crashed-retry replay: same tag
-      assert(canon(box(pM)) == want,
-        "manifest layout+append must serve the rename twin's rows " +
-          "(double append collapses on the manifest ledger)")
-      assert(lsGens(pM).size == 2, "base + ONE appended generation")
-      // fold: one generation, ledger lines retired but kept
-      ZOrder.rebuild(spark, pM, dims, 4)
-      assert(canon(box(pM)) == want, "rebuild must preserve rows")
-      val keys = ManifestSwap.appliedKeys(spark, pM)
-      assert(keys.size == 1, s"folded ledger line must survive: $keys")
-      // late retry of the already-folded batch: the ledger line skips it
-      ZOrder.appendN(batch, pM, dims, 2)
-      assert(canon(box(pM)) == want,
-        "a late retry of a folded batch must not re-ingest")
-    }
+    // (the "rename twin" of the name is now a test-local recompute
+    // from the inputs — the rename protocol is gone)
+    val want = canon(base.unionByName(batch)
+      .filter($"a".between(100L, 300L) && $"b".between(0L, 999L)))
+    val pM = tmpDir("zm") + "/lay"
+    ZOrder.layoutN(base, pM, dims, 4)
+    ZOrder.appendN(batch, pM, dims, 2)
+    ZOrder.appendN(batch, pM, dims, 2) // crashed-retry replay: same tag
+    assert(canon(box(pM)) == want,
+      "layout+append must serve exactly the inputs' rows " +
+        "(double append collapses on the manifest ledger)")
+    assert(lsGens(pM).size == 2, "base + ONE appended generation")
+    // fold: one generation, ledger lines retired but kept
+    ZOrder.rebuild(spark, pM, dims, 4)
+    assert(canon(box(pM)) == want, "rebuild must preserve rows")
+    val keys = ManifestSwap.appliedKeys(spark, pM)
+    assert(keys.size == 1, s"folded ledger line must survive: $keys")
+    // late retry of the already-folded batch: the ledger line skips it
+    ZOrder.appendN(batch, pM, dims, 2)
+    assert(canon(box(pM)) == want,
+      "a late retry of a folded batch must not re-ingest")
   }
 
   private def lsGens(root: String): Seq[String] =
@@ -79,21 +69,19 @@ class ManifestFamiliesSpec extends SparkSpec {
       .map(i => (i % 1000, (i * 37) % 1000, i)).toDF("a", "b", "payload")
     def full(p: String) =
       ZOrder.prunedScanN(spark, p, Seq(("a", 0L, 999L), ("b", 0L, 999L)))
-    manifest {
-      for (w <- Seq("afterGenWrite", "beforeCommit")) {
-        val p = tmpDir(s"zc-$w") + "/lay"
-        ZOrder.layoutN(base, p, dims, 4)
-        val before = canon(full(p))
-        ManifestSwap.failpoint = Some(("stagedapp", w))
-        val e = try intercept[RuntimeException] {
-          ZOrder.appendN(batch, p, dims, 2)
-        } finally ManifestSwap.failpoint = None
-        assert(e.getMessage.contains("failpoint"), s"$w: $e")
-        assert(canon(full(p)) == before,
-          s"$w: a crashed append must stay invisible")
+    for (w <- Seq("afterGenWrite", "beforeCommit")) {
+      val p = tmpDir(s"zc-$w") + "/lay"
+      ZOrder.layoutN(base, p, dims, 4)
+      val before = canon(full(p))
+      ManifestSwap.failpoint = Some(("stagedapp", w))
+      val e = try intercept[RuntimeException] {
         ZOrder.appendN(batch, p, dims, 2)
-        assert(canon(full(p)).size == 250, s"$w: retry did not converge")
-      }
+      } finally ManifestSwap.failpoint = None
+      assert(e.getMessage.contains("failpoint"), s"$w: $e")
+      assert(canon(full(p)) == before,
+        s"$w: a crashed append must stay invisible")
+      ZOrder.appendN(batch, p, dims, 2)
+      assert(canon(full(p)).size == 250, s"$w: retry did not converge")
     }
   }
 
@@ -109,26 +97,26 @@ class ManifestFamiliesSpec extends SparkSpec {
     def top(p: String) = SimSearch.annTopKBucketed(
       emb, "vec_id", "embedding", queryId = 0L, k = 10,
       layoutPath = p, planes = 6, probeHamming = 2)
+    // (the "rename twin" of the name is now a test-local recompute
+    // from the inputs — the rename protocol is gone)
+    // an in-place (CorpusCache-shaped) layout of the same rows
     val pR = tmpDir("vr") + "/lay"
-    SimSearch.writeBucketed(base, "vec_id", "embedding", 6, pR)
-    SimSearch.appendBucketed(batch, "vec_id", "embedding", 6, pR)
+    SimSearch.writeBucketedRaw(emb, "vec_id", "embedding", 6, pR)
     val want = canon(top(pR))
-    manifest {
-      val pM = tmpDir("vm") + "/lay"
-      SimSearch.writeBucketed(base, "vec_id", "embedding", 6, pM)
-      SimSearch.appendBucketed(batch, "vec_id", "embedding", 6, pM)
-      SimSearch.appendBucketed(batch, "vec_id", "embedding", 6, pM) // retry
-      assert(canon(top(pM)) == want,
-        "manifest ANN serving must equal the rename twin")
-      // corpus-derived rebuild: one base again, ledger kept
-      SimSearch.writeBucketed(emb, "vec_id", "embedding", 6, pM)
-      assert(canon(top(pM)) == want, "rebuild changed the serving")
-      assert(ManifestSwap.appliedKeys(spark, pM).size == 1,
-        "the append ledger must survive the corpus-derived rebuild")
-      SimSearch.appendBucketed(batch, "vec_id", "embedding", 6, pM)
-      assert(canon(top(pM)) == want,
-        "a late retry after the rebuild must skip on the kept ledger")
-    }
+    val pM = tmpDir("vm") + "/lay"
+    SimSearch.writeBucketed(base, "vec_id", "embedding", 6, pM)
+    SimSearch.appendBucketed(batch, "vec_id", "embedding", 6, pM)
+    SimSearch.appendBucketed(batch, "vec_id", "embedding", 6, pM) // retry
+    assert(canon(top(pM)) == want,
+      "published ANN serving must equal the in-place layout's")
+    // corpus-derived rebuild: one base again, ledger kept
+    SimSearch.writeBucketed(emb, "vec_id", "embedding", 6, pM)
+    assert(canon(top(pM)) == want, "rebuild changed the serving")
+    assert(ManifestSwap.appliedKeys(spark, pM).size == 1,
+      "the append ledger must survive the corpus-derived rebuild")
+    SimSearch.appendBucketed(batch, "vec_id", "embedding", 6, pM)
+    assert(canon(top(pM)) == want,
+      "a late retry after the rebuild must skip on the kept ledger")
   }
 
   test("IVF-PQ layout, manifest: retrain installs codes+codebook as one " +
@@ -147,37 +135,36 @@ class ManifestFamiliesSpec extends SparkSpec {
       canon(graft.llm.Pq.ivfPqTopK(emb, p, cb, "vec_id", "embedding",
         queryId = 0L, k = 10, m = 8, dims = 64, ks = 16, planes = 6))
     }
-    def build(p: String): Unit = {
-      val cb = graft.llm.Pq.trainCodebooks(base, "vec_id", "embedding",
-        8, 64, 16, 1)
-      DirSwap.install(spark, p, "vecidx") { tmp =>
-        graft.llm.Pq.writeIvfPq(base, "vec_id", "embedding", cb, 8, 64,
-          6, tmp)
-        cb.write.mode("overwrite").parquet(tmp.stripSuffix("/") +
-          "/_codebook")
-        graft.streaming.StagedAppend.mintGeneration(spark, tmp)
-      }
-      graft.llm.Pq.appendIvfPq(batch, "vec_id", "embedding", cb, 8, 64,
-        6, p)
-    }
+    val cb = graft.llm.Pq.trainCodebooks(base, "vec_id", "embedding",
+      8, 64, 16, 1).localCheckpoint(true)
+    // (the "rename twin" of the name is now a test-local recompute
+    // from the inputs — the rename protocol is gone)
+    // an in-place (CorpusCache-shaped) layout of base ∪ batch, encoded
+    // under the same codebook
     val pR = tmpDir("pqr") + "/lay"
-    build(pR)
+    graft.llm.Pq.writeIvfPq(emb, "vec_id", "embedding", cb, 8, 64, 6, pR)
+    cb.write.mode("overwrite").parquet(pR + "/_codebook")
     val want = serve(pR)
-    manifest {
-      val pM = tmpDir("pqm") + "/lay"
-      build(pM)
-      assert(serve(pM) == want,
-        "manifest IVF-PQ serving must equal the rename twin")
-      assert(ManifestSwap.appliedKeys(spark, pM).nonEmpty,
-        "the incremental append must be manifest-keyed")
-      // the retrain re-encodes the FULL corpus: append keys must drop
-      Maintenance.maintainVectorIndex(spark, vi(pM))
-      assert(ManifestSwap.appliedKeys(spark, pM).isEmpty,
-        "a superseding retrain must sweep the append keys")
-      val served = serve(pM)
-      assert(served.nonEmpty && served.size == want.size,
-        "post-retrain probes must serve k rows")
+    val pM = tmpDir("pqm") + "/lay"
+    ManifestSwap.install(spark, pM, "vecidx") { tmp =>
+      graft.llm.Pq.writeIvfPq(base, "vec_id", "embedding", cb, 8, 64,
+        6, tmp)
+      cb.write.mode("overwrite").parquet(tmp.stripSuffix("/") +
+        "/_codebook")
     }
+    graft.llm.Pq.appendIvfPq(batch, "vec_id", "embedding", cb, 8, 64,
+      6, pM)
+    assert(serve(pM) == want,
+      "published base + append must serve the in-place layout's probe")
+    assert(ManifestSwap.appliedKeys(spark, pM).nonEmpty,
+      "the incremental append must be manifest-keyed")
+    // the retrain re-encodes the FULL corpus: append keys must drop
+    Maintenance.maintainVectorIndex(spark, vi(pM))
+    assert(ManifestSwap.appliedKeys(spark, pM).isEmpty,
+      "a superseding retrain must sweep the append keys")
+    val served = serve(pM)
+    assert(served.nonEmpty && served.size == want.size,
+      "post-retrain probes must serve k rows")
   }
 
   // ---------------------------------------------------- document sink --
@@ -197,34 +184,32 @@ class ManifestFamiliesSpec extends SparkSpec {
     val p2 = feed.filter($"change_version" % 2 === 1)
     def docs(dir: String) = DocumentSink.deduplicated(spark, dir)
       .select("invoice_id", "invoice_number", "change_version")
-    val dR = tmpDir("skr") + "/sink"; val eR = tmpDir("skr") + "/err"
-    DocumentSink.writeVersioned(p1, dR, eR)
-    DocumentSink.writeVersioned(p2, dR, eR)
-    DocumentSink.writeVersioned(p2, dR, eR) // redelivery
-    val want = canon(docs(dR))
+    // (the "rename twin" of the name is now a test-local recompute
+    // from the inputs — the rename protocol is gone)
+    // every (invoice, version) of the feed, exactly once
+    val want = canon(feed.select("invoice_id", "invoice_number",
+      "change_version").distinct())
     val v = feed.select($"change_version").as[Long].head()
-    val wantV = canon(DocumentSink.readVersion(spark, dR, v)
-      .select("invoice_id", "change_version"))
-    manifest {
-      val dM = tmpDir("skm") + "/sink"; val eM = tmpDir("skm") + "/err"
-      DocumentSink.writeVersioned(p1, dM, eM)
-      DocumentSink.writeVersioned(p2, dM, eM)
-      DocumentSink.writeVersioned(p2, dM, eM) // redelivery
-      assert(canon(docs(dM)) == want,
-        "manifest sink dedup read-back must equal the rename twin")
-      assert(canon(DocumentSink.readVersion(spark, dM, v)
-        .select("invoice_id", "change_version")) == wantV,
-        "read-by-version must prune and match")
-      assert(DocumentSink.listSink(spark, dM).count() > 0, "listing")
-      val gensBefore = lsGens(dM).size
-      assert(gensBefore == 3, s"one generation per page: $gensBefore")
-      DocumentSink.compact(spark, dM)
-      assert(canon(docs(dM)) == want, "compaction changed read-back")
-      assert(ManifestSwap.appliedKeys(spark, dM).isEmpty,
-        "sink pages carry no ledger contract — absorbed keys drop")
-      assert(ManifestSwap.readDataPaths(spark, dM).size == 1,
-        "compaction folds to one served generation")
-    }
+    val wantV = canon(feed.filter($"change_version" === v)
+      .select("invoice_id", "change_version").distinct())
+    val dM = tmpDir("skm") + "/sink"; val eM = tmpDir("skm") + "/err"
+    DocumentSink.writeVersioned(p1, dM, eM)
+    DocumentSink.writeVersioned(p2, dM, eM)
+    DocumentSink.writeVersioned(p2, dM, eM) // redelivery
+    assert(canon(docs(dM)) == want,
+      "sink dedup read-back must equal the delivered feed")
+    assert(canon(DocumentSink.readVersion(spark, dM, v)
+      .select("invoice_id", "change_version")) == wantV,
+      "read-by-version must prune and match")
+    assert(DocumentSink.listSink(spark, dM).count() > 0, "listing")
+    val gensBefore = lsGens(dM).size
+    assert(gensBefore == 3, s"one generation per page: $gensBefore")
+    DocumentSink.compact(spark, dM)
+    assert(canon(docs(dM)) == want, "compaction changed read-back")
+    assert(ManifestSwap.appliedKeys(spark, dM).isEmpty,
+      "sink pages carry no ledger contract — absorbed keys drop")
+    assert(ManifestSwap.readDataPaths(spark, dM).size == 1,
+      "compaction folds to one served generation")
   }
 
   test("document sink, manifest: a crash inside a page delivery (gen " +
@@ -237,21 +222,19 @@ class ManifestFamiliesSpec extends SparkSpec {
           .as("invoice_number"),
         $"event_id".as("change_version"))
       .localCheckpoint(true)
-    manifest {
-      val d = tmpDir("skc") + "/sink"; val e = tmpDir("skc") + "/err"
-      DocumentSink.writeVersioned(feed.limit(10), d, e)
-      val before = DocumentSink.deduplicated(spark, d).count()
-      ManifestSwap.failpoint = Some(("sink", "afterGenWrite"))
-      val ex = try intercept[RuntimeException] {
-        DocumentSink.writeVersioned(feed, d, e)
-      } finally ManifestSwap.failpoint = None
-      assert(ex.getMessage.contains("failpoint"))
-      assert(DocumentSink.deduplicated(spark, d).count() == before,
-        "a crashed page must stay invisible")
+    val d = tmpDir("skc") + "/sink"; val e = tmpDir("skc") + "/err"
+    DocumentSink.writeVersioned(feed.limit(10), d, e)
+    val before = DocumentSink.deduplicated(spark, d).count()
+    ManifestSwap.failpoint = Some(("sink", "afterGenWrite"))
+    val ex = try intercept[RuntimeException] {
       DocumentSink.writeVersioned(feed, d, e)
-      assert(DocumentSink.deduplicated(spark, d).count() >= before,
-        "redelivery converged")
-    }
+    } finally ManifestSwap.failpoint = None
+    assert(ex.getMessage.contains("failpoint"))
+    assert(DocumentSink.deduplicated(spark, d).count() == before,
+      "a crashed page must stay invisible")
+    DocumentSink.writeVersioned(feed, d, e)
+    assert(DocumentSink.deduplicated(spark, d).count() >= before,
+      "redelivery converged")
   }
 
   // --------------------------------------------------- change table --
@@ -269,29 +252,26 @@ class ManifestFamiliesSpec extends SparkSpec {
     def sourceRows(dir: String) = spark.read.format("graft-cdc")
       .option("path", dir).load()
       .select("entity_id", "change_version")
-    // rename twin
-    val dR = tmpDir("ctr") + "/chg"
-    pages.foreach(Maintenance.appendChangePage(spark, dR, _))
-    val wantAll = canon(sourceRows(dR))
-    manifest {
-      val dM = tmpDir("ctm") + "/chg"
-      pages.foreach(Maintenance.appendChangePage(spark, dM, _))
-      pages.foreach(Maintenance.appendChangePage(spark, dM, _)) // retries
-      assert(canon(sourceRows(dM)) == wantAll,
-        "manifest change table must serve the rename twin through the " +
-          "DSv2 source (retried pages dedup on their content keys)")
-      val watermark = pages.flatMap(_.select("change_version").as[Long]
-        .collect()).sorted.apply(100)
-      Maintenance.maintainChangeTable(spark, dM, watermark, watermark, 2)
-      assert(sourceRows(dM).filter($"change_version" <= watermark).isEmpty,
-        "expiry must hold through the manifest fold")
-      assert(ManifestSwap.readDataPaths(spark, dM).size == 1,
-        "the rewrite folds to one base generation")
-      val afterFold = sourceRows(dM).count() // materialize BEFORE the append
-      Maintenance.appendChangePage(spark, dM, pages.head) // post-fold page
-      assert(sourceRows(dM).count() > afterFold,
-        "appends keep landing after the fold")
-    }
+    // (the "rename twin" of the name is now a test-local recompute
+    // from the inputs — the rename protocol is gone)
+    val wantAll = canon(pages.reduce(_ unionByName _))
+    val dM = tmpDir("ctm") + "/chg"
+    pages.foreach(Maintenance.appendChangePage(spark, dM, _))
+    pages.foreach(Maintenance.appendChangePage(spark, dM, _)) // retries
+    assert(canon(sourceRows(dM)) == wantAll,
+      "the change table must serve every appended page through the " +
+        "DSv2 source (retried pages dedup on their content keys)")
+    val watermark = pages.flatMap(_.select("change_version").as[Long]
+      .collect()).sorted.apply(100)
+    Maintenance.maintainChangeTable(spark, dM, watermark, watermark, 2)
+    assert(sourceRows(dM).filter($"change_version" <= watermark).isEmpty,
+      "expiry must hold through the manifest fold")
+    assert(ManifestSwap.readDataPaths(spark, dM).size == 1,
+      "the rewrite folds to one base generation")
+    val afterFold = sourceRows(dM).count() // materialize BEFORE the append
+    Maintenance.appendChangePage(spark, dM, pages.head) // post-fold page
+    assert(sourceRows(dM).count() > afterFold,
+      "appends keep landing after the fold")
   }
 
   // -------------------------------------------------- aggview log --
@@ -301,34 +281,32 @@ class ManifestFamiliesSpec extends SparkSpec {
       "compactLog's trim actually TRIMS — the manifest log stays " +
       "bounded instead of growing a no-op'd in-place tail") {
     import graft.streaming.StreamingAggView
-    manifest {
-      val root = tmpDir("avm") + "/aggview"
-      StreamingAggView.applyBatch(spark, sf, root,
-        graft.cdc.TombstoneCdc.changedInvoicesOps(spark, sf, 0L, 700L), 0L)
-      StreamingAggView.applyBatch(spark, sf, root,
-        graft.cdc.TombstoneCdc.changedInvoicesOps(spark, sf, 700L, 1500L), 1L)
-      // redelivery of batch 1: the key makes the append a no-op
-      StreamingAggView.applyBatch(spark, sf, root,
-        graft.cdc.TombstoneCdc.changedInvoicesOps(spark, sf, 700L, 1500L), 1L)
-      assert(ManifestSwap.appliedKeys(spark, s"$root/log") ==
-        Set("batch-0", "batch-1"))
-      val direct = graft.cdc.AggView.directView(spark, sf, 1500L)
-      val got = StreamingAggView.currentView(spark, root)
-      assert(got.exceptAll(direct).isEmpty && direct.exceptAll(got).isEmpty,
-        "manifest-log fold diverged from the direct view")
-      StreamingAggView.compactLog(spark, root)
-      assert(ManifestSwap.appliedKeys(spark, s"$root/log").isEmpty,
-        "the trim must retire the absorbed batch keys (bounded manifest)")
-      assert(StreamingAggView.stateGen(spark, root) == 1L)
-      // the fold continues over the compacted checkpoint
-      StreamingAggView.applyBatch(spark, sf, root,
-        graft.cdc.TombstoneCdc.changedInvoicesOps(spark, sf, 1500L, 2500L), 2L)
-      val direct2 = graft.cdc.AggView.directView(spark, sf, 2500L)
-      val got2 = StreamingAggView.currentView(spark, root)
-      assert(got2.exceptAll(direct2).isEmpty &&
-        direct2.exceptAll(got2).isEmpty,
-        "fold after manifest-log compaction diverged")
-    }
+    val root = tmpDir("avm") + "/aggview"
+    StreamingAggView.applyBatch(spark, sf, root,
+      graft.cdc.TombstoneCdc.changedInvoicesOps(spark, sf, 0L, 700L), 0L)
+    StreamingAggView.applyBatch(spark, sf, root,
+      graft.cdc.TombstoneCdc.changedInvoicesOps(spark, sf, 700L, 1500L), 1L)
+    // redelivery of batch 1: the key makes the append a no-op
+    StreamingAggView.applyBatch(spark, sf, root,
+      graft.cdc.TombstoneCdc.changedInvoicesOps(spark, sf, 700L, 1500L), 1L)
+    assert(ManifestSwap.appliedKeys(spark, s"$root/log") ==
+      Set("batch-0", "batch-1"))
+    val direct = graft.cdc.AggView.directView(spark, sf, 1500L)
+    val got = StreamingAggView.currentView(spark, root)
+    assert(got.exceptAll(direct).isEmpty && direct.exceptAll(got).isEmpty,
+      "manifest-log fold diverged from the direct view")
+    StreamingAggView.compactLog(spark, root)
+    assert(ManifestSwap.appliedKeys(spark, s"$root/log").isEmpty,
+      "the trim must retire the absorbed batch keys (bounded manifest)")
+    assert(StreamingAggView.stateGen(spark, root) == 1L)
+    // the fold continues over the compacted checkpoint
+    StreamingAggView.applyBatch(spark, sf, root,
+      graft.cdc.TombstoneCdc.changedInvoicesOps(spark, sf, 1500L, 2500L), 2L)
+    val direct2 = graft.cdc.AggView.directView(spark, sf, 2500L)
+    val got2 = StreamingAggView.currentView(spark, root)
+    assert(got2.exceptAll(direct2).isEmpty &&
+      direct2.exceptAll(got2).isEmpty,
+      "fold after manifest-log compaction diverged")
   }
 
   // ----------------------------------------------------- postings --
@@ -346,38 +324,39 @@ class ManifestFamiliesSpec extends SparkSpec {
     def serve(p: String) = canon(SimSearch.hybridTopKIndexed(
       emb, p, "doc_id", "vec_id", "embedding", terms, queryId = 0L,
       k = 10))
+    // (the "rename twin" of the name is now a test-local recompute
+    // from the inputs — the rename protocol is gone)
+    // one fresh build over the whole corpus: the appended index must
+    // score bit-identically
     val pR = tmpDir("por") + "/idx"
-    SimSearch.buildPostingsIndex(base, "doc_id", "text", pR)
-    SimSearch.appendPostingsIndex(batch, "doc_id", "text", pR)
+    SimSearch.buildPostingsIndex(docs, "doc_id", "text", pR)
     val want = serve(pR)
-    manifest {
-      val pM = tmpDir("pom") + "/idx"
-      SimSearch.buildPostingsIndex(base, "doc_id", "text", pM)
-      SimSearch.appendPostingsIndex(batch, "doc_id", "text", pM)
-      SimSearch.appendPostingsIndex(batch, "doc_id", "text", pM) // retry
-      assert(serve(pM) == want,
-        "manifest postings serving must equal the rename twin")
-      SimSearch.compactPostingsIndex(spark, pM)
-      assert(serve(pM) == want, "compaction changed the serving")
-      assert(ManifestSwap.readDataPaths(spark, s"$pM/postings").size == 1,
-        "compaction folds the postings to one generation")
-      // crash window: df committed (fold + ledger), manifest key not
-      // yet published — the serving path must heal it
-      val batch2 = docs.filter($"doc_id" % 7 === 3)
-        .withColumn("text", concat($"text", lit(" zz")))
-      ManifestSwap.failpoint = Some(("postings", "beforeCommit"))
-      val e = try intercept[RuntimeException] {
-        SimSearch.appendPostingsIndex(batch2, "doc_id", "text", pM)
-      } finally ManifestSwap.failpoint = None
-      assert(e.getMessage.contains("failpoint"))
-      val healed = serve(pM) // runs recoverManifestPostings
-      val retried = { // the appender's own retry also converges
-        SimSearch.appendPostingsIndex(batch2, "doc_id", "text", pM)
-        serve(pM)
-      }
-      assert(healed == retried,
-        "serving-path heal and appender retry must converge identically")
+    val pM = tmpDir("pom") + "/idx"
+    SimSearch.buildPostingsIndex(base, "doc_id", "text", pM)
+    SimSearch.appendPostingsIndex(batch, "doc_id", "text", pM)
+    SimSearch.appendPostingsIndex(batch, "doc_id", "text", pM) // retry
+    assert(serve(pM) == want,
+      "appended postings serving must equal a fresh full build")
+    SimSearch.compactPostingsIndex(spark, pM)
+    assert(serve(pM) == want, "compaction changed the serving")
+    assert(ManifestSwap.readDataPaths(spark, s"$pM/postings").size == 1,
+      "compaction folds the postings to one generation")
+    // crash window: df committed (fold + ledger), manifest key not
+    // yet published — the serving path must heal it
+    val batch2 = docs.filter($"doc_id" % 7 === 3)
+      .withColumn("text", concat($"text", lit(" zz")))
+    ManifestSwap.failpoint = Some(("postings", "beforeCommit"))
+    val e = try intercept[RuntimeException] {
+      SimSearch.appendPostingsIndex(batch2, "doc_id", "text", pM)
+    } finally ManifestSwap.failpoint = None
+    assert(e.getMessage.contains("failpoint"))
+    val healed = serve(pM) // runs recoverManifestPostings
+    val retried = { // the appender's own retry also converges
+      SimSearch.appendPostingsIndex(batch2, "doc_id", "text", pM)
+      serve(pM)
     }
+    assert(healed == retried,
+      "serving-path heal and appender retry must converge identically")
   }
 
   test("LIVE race, manifest z-order: an appender+fold maintainer with " +
@@ -392,45 +371,43 @@ class ManifestFamiliesSpec extends SparkSpec {
     def batch(i: Int) = ((i * 100) until (i * 100 + 50))
       .map(x => (x.toLong % 1000, (x * 37L) % 1000, x.toLong))
       .toDF("a", "b", "payload").localCheckpoint(true)
-    manifest {
-      val p = tmpDir("zlive") + "/lay"
-      ZOrder.layoutN(batch(0), p, dims, 2)
-      @volatile var stop = false
-      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-      var reads = 0
-      val reader = new Thread(() => {
-        try while (!stop) {
-          // a consistent snapshot is base + k committed appends: every
-          // batch is 50 distinct rows, so any complete snapshot counts
-          // a positive multiple of 50 — a torn or part-reaped read
-          // cannot (grace 3 s sits above the loaded read latency)
-          val n = ZOrder.prunedScanN(spark, p,
-            Seq(("a", 0L, 999L), ("b", 0L, 999L))).count()
-          if (n % 50 != 0 || n < 50)
-            throw new AssertionError(s"torn snapshot read: $n rows")
-          reads += 1
-        } catch { case e: Throwable => errors.add(e); () }
-      })
-      val rival = new Thread(() => {
-        try (11 to 13).foreach(i => ZOrder.appendN(batch(i), p, dims, 1))
-        catch { case e: Throwable => errors.add(e); () }
-      })
-      reader.start(); rival.start()
-      (1 to 6).foreach { i =>
-        ZOrder.appendN(batch(i), p, dims, 1)
-        if (i % 3 == 0) ZOrder.rebuild(spark, p, dims, 2)
-        ManifestSwap.gc(spark, p, keepManifests = 2, graceMs = 3000L)
-      }
-      rival.join()
-      stop = true
-      reader.join()
-      assert(errors.isEmpty, s"race errors: ${errors.toArray.toSeq}")
-      assert(reads >= 1, "the reader never completed a scan")
-      val settled = canon(ZOrder.prunedScanN(spark, p,
-        Seq(("a", 0L, 999L), ("b", 0L, 999L))).select("payload"))
-      assert(settled.size == 500 && settled.distinct.size == 500,
-        s"settled layout is not the exactly-once union: ${settled.size}")
+    val p = tmpDir("zlive") + "/lay"
+    ZOrder.layoutN(batch(0), p, dims, 2)
+    @volatile var stop = false
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    var reads = 0
+    val reader = new Thread(() => {
+      try while (!stop) {
+        // a consistent snapshot is base + k committed appends: every
+        // batch is 50 distinct rows, so any complete snapshot counts
+        // a positive multiple of 50 — a torn or part-reaped read
+        // cannot (grace 3 s sits above the loaded read latency)
+        val n = ZOrder.prunedScanN(spark, p,
+          Seq(("a", 0L, 999L), ("b", 0L, 999L))).count()
+        if (n % 50 != 0 || n < 50)
+          throw new AssertionError(s"torn snapshot read: $n rows")
+        reads += 1
+      } catch { case e: Throwable => errors.add(e); () }
+    })
+    val rival = new Thread(() => {
+      try (11 to 13).foreach(i => ZOrder.appendN(batch(i), p, dims, 1))
+      catch { case e: Throwable => errors.add(e); () }
+    })
+    reader.start(); rival.start()
+    (1 to 6).foreach { i =>
+      ZOrder.appendN(batch(i), p, dims, 1)
+      if (i % 3 == 0) ZOrder.rebuild(spark, p, dims, 2)
+      ManifestSwap.gc(spark, p, keepManifests = 2, graceMs = 3000L)
     }
+    rival.join()
+    stop = true
+    reader.join()
+    assert(errors.isEmpty, s"race errors: ${errors.toArray.toSeq}")
+    assert(reads >= 1, "the reader never completed a scan")
+    val settled = canon(ZOrder.prunedScanN(spark, p,
+      Seq(("a", 0L, 999L), ("b", 0L, 999L))).select("payload"))
+    assert(settled.size == 500 && settled.distinct.size == 500,
+      s"settled layout is not the exactly-once union: ${settled.size}")
   }
 
   test("keyed append, migration guard: appending into an in-place " +
@@ -438,46 +415,10 @@ class ManifestFamiliesSpec extends SparkSpec {
       "manifest that hides the existing data") {
     val root = tmpDir("mig") + "/lay"
     Seq(1L, 2L).toDF("v").write.mode("overwrite").parquet(root)
-    manifest {
-      val e = intercept[UnsupportedOperationException] {
-        ManifestSwap.appendKeyed(spark, root, "t", "b1")(
-          Seq(3L).toDF("v").write.mode("overwrite").parquet(_))
-      }
-      assert(e.getMessage.contains("in-place"), e.getMessage)
+    val e = intercept[UnsupportedOperationException] {
+      ManifestSwap.appendKeyed(spark, root, "t", "b1")(
+        Seq(3L).toDF("v").write.mode("overwrite").parquet(_))
     }
-  }
-
-  test("z-order, migration (round-14 ADVICE): an IN-PLACE layout under " +
-      "a manifest config folds into a base generation on the first " +
-      "rebuild — no appendN/rebuild deadlock — and serves identically " +
-      "before and after") {
-    import graft.ops.ZOrder
-    val dims = Seq(ZOrder.Dim("a", 0, 999), ZOrder.Dim("b", 0, 999))
-    val base = (0L until 300L).map(i => (i % 1000, (i * 37) % 1000, i))
-      .toDF("a", "b", "payload")
-    val batch = (1000L until 1080L)
-      .map(i => (i % 1000, (i * 37) % 1000, i)).toDF("a", "b", "payload")
-    def box(p: String) =
-      ZOrder.prunedScanN(spark, p, Seq(("a", 100L, 300L), ("b", 0L, 999L)))
-    val p = tmpDir("zmig") + "/lay"
-    ZOrder.layoutN(base, p, dims, 4) // rename protocol: in-place layout
-    val want = canon(box(p))
-    manifest {
-      // pre-migration append refuses (the guard) instead of hiding rows
-      intercept[UnsupportedOperationException] {
-        ZOrder.appendN(batch, p, dims, 2)
-      }
-      // the guard's prescribed migration: rebuild folds the in-place
-      // layout into the first manifest base (was a silent no-op that
-      // deadlocked the family)
-      ZOrder.rebuild(spark, p, dims, 4)
-      assert(DirSwap.isManifestRoot(spark, p),
-        "rebuild must have installed a manifest base")
-      assert(canon(box(p)) == want, "migration must preserve every row")
-      ZOrder.appendN(batch, p, dims, 2) // now admitted
-      assert(canon(ZOrder.prunedScanN(spark, p,
-        Seq(("a", 0L, 999L), ("b", 0L, 999L)))).size == 380,
-        "post-migration append must serve base + batch")
-    }
+    assert(e.getMessage.contains("in-place"), e.getMessage)
   }
 }

@@ -1,15 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.{DirSwap, ManifestSwap}
+import graft.streaming.ManifestSwap
 
-/** Protocol tests for the object-store publish path (round-12 verdict
-  * ask #1): immutable generations + atomic manifest-pointer commit,
-  * the [[ManifestSwap]] twin of DirSwap, the scheme gate routing, the
-  * rename-bound-site refusal, and the materialized view's keyed
-  * manifest (atomic whole-page cutover). Crash windows are exercised
-  * at every failpoint; the cross-process live race lives in
-  * HealRaceSpec (manifest phase). */
+/** Protocol tests for the publish protocol (round-12 verdict ask #1):
+  * immutable generations + atomic manifest-pointer commit, the
+  * conditional-create gate, gc, the structural read of raw in-place
+  * data, and the materialized view's keyed manifest (atomic whole-page
+  * cutover). Crash windows are exercised at every failpoint; the
+  * cross-process live race lives in HealRaceSpec. */
 class ManifestSwapSpec extends SparkSpec {
   import spark.implicits._
 
@@ -102,41 +101,26 @@ class ManifestSwapSpec extends SparkSpec {
     assert(lsNames(s"$root/_gens").size == 2)
   }
 
-  test("the scheme gate: forceManifest routes DirSwap's entry points " +
-      "to the manifest protocol — no bak/tmp siblings, restoreIfTorn " +
-      "a no-op, readPath resolving the committed generation") {
-    val root = tmpDir("mswap-gate") + "/t"
-    DirSwap.forceManifest = true
-    try {
-      DirSwap.install(spark, root, "gate")(writeVals(7L))
-      DirSwap.restoreIfTorn(spark, root, "gate") // must be a no-op
-      val got = DirSwap.readOrEmpty(spark, root,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType))), "gate")
-        .as[Long].collect().toSeq
-      assert(got == Seq(7L))
-      assert(DirSwap.readPath(spark, root, "gate").exists(
-        _.contains("_gens/")))
-      val sibs = lsNames(new java.io.File(root).getParent)
-        .filter(n => n.contains("-bak") || n.contains("-tmp"))
-      assert(sibs.isEmpty, s"rename-protocol siblings under manifest: $sibs")
-      assert(lsNames(root).toSet == Set("_gens", "_ptr"))
-    } finally DirSwap.forceManifest = false
-  }
-
   test("the formerly rename-bound sites ROUTE under manifest mode " +
       "(round-14: every append-style family is manifest-native — " +
       "ManifestFamiliesSpec exercises each; this pins that the old " +
       "refusals are gone and no rename artifacts appear)") {
-    DirSwap.forceManifest = true
-    try {
-      // StagedAppend.recover on a fresh root: a structural no-op now
-      graft.streaming.StagedAppend.recover(spark, tmpDir("msg") + "/lay")
-      // change-table maintenance on a never-written table: a no-op
-      graft.cdc.Maintenance.maintainChangeTable(spark,
-        tmpDir("msg") + "/chg", 0L, 0L, 1)
-    } finally DirSwap.forceManifest = false
+    // change-table maintenance on a never-written table: a no-op
+    val chg = tmpDir("msg") + "/chg"
+    graft.cdc.Maintenance.maintainChangeTable(spark, chg, 0L, 0L, 1)
+    assert(!new java.io.File(chg).exists(),
+      "maintenance of a never-written table must not create it")
+    // a whole-snapshot site publishes with no swap siblings: the root
+    // holds only the protocol's own dirs, the parent nothing else
+    val root = tmpDir("msg") + "/state"
+    graft.streaming.StreamingMerge.applyBatch(spark, root,
+      Seq((1L, 10L, "I")).toDF("invoice_id", "change_version",
+        "change_operation"))
+    assert(lsNames(root).toSet == Set("_gens", "_ptr"))
+    assert(lsNames(new java.io.File(root).getParent) == Seq("state"),
+      "no -tmp/-bak siblings beside a published root")
+    assert(graft.streaming.StreamingMerge.stateTable(spark, root)
+      .as[(Long, Long, String)].collect().toSeq == Seq((1L, 10L, "I")))
   }
 
   // ------------------------ conditional-create gate (round-14 #2) --
@@ -264,22 +248,36 @@ class ManifestSwapSpec extends SparkSpec {
   test("materialized view, manifest protocol: build+refresh+read equals " +
       "the dir-protocol view row-for-row, and an emptied bucket leaves " +
       "the manifest") {
-    val pDir = tmpDir("mv-dir") + "/v"
+    // (name kept from when a per-bucket rename protocol existed; the
+    // reference is now a test-local recompute from the inputs)
     val pMan = tmpDir("mv-man") + "/v"
-    val mvD = new graft.ops.MaterializedView(spark, sf, pDir,
-      nBuckets = 8, protocol = "dir")
     val mvM = new graft.ops.MaterializedView(spark, sf, pMan,
       nBuckets = 8, protocol = "manifest")
-    mvD.build(); mvM.build()
-    mvD.refresh(Seq(1L, 7L, 32L)); mvM.refresh(Seq(1L, 7L, 32L))
-    def canon(mv: graft.ops.MaterializedView) =
-      mv.read().orderBy("invoice_id", "line_no", "qty", "price_cents",
+    mvM.build()
+    mvM.refresh(Seq(1L, 7L, 32L))
+    // test-local recompute straight from the inputs: the denormalized
+    // header⋈line view, bucketed by pmod(invoice_id, 8)
+    val o = Tables.orders(spark, sf)
+    val li = Tables.lineitem(spark, sf)
+    val want = o.join(li, o("o_orderkey") === li("l_orderkey"))
+      .select(
+        col("o_orderkey").as("invoice_id"),
+        col("o_custkey").as("customer_key"),
+        col("o_orderdate").as("invoice_date"),
+        col("o_orderstatus").as("status"),
+        col("l_linenumber").as("line_no"),
+        col("l_partkey").as("part_key"),
+        round(col("l_quantity")).cast("long").as("qty"),
+        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+        pmod(col("o_orderkey"), lit(8L)).cast("int").as("bucket"))
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("invoice_id", "line_no", "qty", "price_cents",
         "part_key").collect().toSeq
-    assert(canon(mvM) == canon(mvD),
-      "manifest and dir protocols must serve identical views")
-    assert(mvM.read().schema == mvD.read().schema,
-      "schema parity incl. the bucket partition type")
-    // no rename-protocol artifacts anywhere under the manifest view
+    assert(canon(mvM.read()) == canon(want),
+      "the published view must equal the recompute from its inputs")
+    assert(mvM.read().schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)),
+      "schema parity incl. the int bucket column")
     assert(lsNames(pMan).toSet == Set("_gens", "_ptr"))
   }
 
@@ -313,9 +311,7 @@ class ManifestSwapSpec extends SparkSpec {
     // simulate commitPtr crashing between mkdirs(_ptr) and the first
     // pointer file: an empty pointer dir over live in-place data
     assert(new java.io.File(s"$root/_ptr").mkdirs())
-    assert(!DirSwap.isManifestRoot(spark, root),
-      "an empty _ptr must NOT make a data-holding root a manifest root")
-    assert(DirSwap.readDataPaths(spark, root, "t") == Seq(root),
+    assert(ManifestSwap.dataPaths(spark, root) == Seq(root),
       "readers must serve the in-place data, not an empty manifest")
     val e = intercept[UnsupportedOperationException] {
       ManifestSwap.appendKeyed(spark, root, "t", "b1")(writeVals(9L))
@@ -325,7 +321,8 @@ class ManifestSwapSpec extends SparkSpec {
     // migration: a full-snapshot install (what the families' rebuild/
     // compaction fallbacks run) flips the root to manifest
     ManifestSwap.install(spark, root, "t")(writeVals(1L, 2L, 3L))
-    assert(DirSwap.isManifestRoot(spark, root))
+    assert(ManifestSwap.dataPaths(spark, root).forall(_.contains("_gens/")),
+      "a committed manifest must take over the root's reads")
     assert(readVals(root) == Seq(1L, 2L, 3L))
     ManifestSwap.appendKeyed(spark, root, "t", "b1")(writeVals(9L))
     assert(ManifestSwap.readDataPaths(spark, root).size == 2,
@@ -336,9 +333,8 @@ class ManifestSwapSpec extends SparkSpec {
       "root: a first delivery in flight serves empty, not an error") {
     val root = tmpDir("mswap-empty") + "/t"
     assert(new java.io.File(s"$root/_ptr").mkdirs())
-    assert(DirSwap.isManifestRoot(spark, root),
-      "nothing in-place to hide: the root resolves as manifest")
-    assert(DirSwap.readDataPaths(spark, root, "t").isEmpty)
+    assert(ManifestSwap.dataPaths(spark, root).isEmpty,
+      "nothing in-place to hide: the root resolves as an empty manifest")
     assert(readVals(root).isEmpty)
   }
 

@@ -18,8 +18,11 @@ class MaterializedViewSpec extends SparkSpec {
 
     // corrupt two buckets to simulate staleness, then refresh exactly them
     val victims = Seq(3L, 7L)
+    val served = graft.streaming.ManifestSwap.resolveRaw(spark, path).get._2
     victims.foreach { b =>
-      val d = new java.io.File(s"$path/bucket=$b")
+      val d = new java.io.File(new org.apache.hadoop.fs.Path(
+        graft.streaming.ManifestSwap.entryPath(path, served(s"bucket=$b")))
+        .toUri.getPath)
       d.listFiles().foreach(_.delete())
     }
     assert(mv.read().count() < expectedCount, "staleness simulated")

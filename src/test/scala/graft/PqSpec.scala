@@ -6,6 +6,20 @@ import graft.llm.{Pq, SimSearch}
 /** [[graft.llm.Pq]]: code-table shape, ADC+rerank recall against the
   * exact baseline, and the exactness of returned scores. */
 class PqSpec extends SparkSpec {
+
+  /** An IVF-PQ layout published as one committed generation — the
+    * shape incremental appends land on. */
+  private def publishIvfPq(emb: org.apache.spark.sql.DataFrame,
+                           cb: org.apache.spark.sql.DataFrame,
+                           path: String): Unit =
+    graft.streaming.ManifestSwap.install(spark, path, "vecidx")(
+      Pq.writeIvfPq(emb, "vec_id", "embedding", cb, m, dims, 6, _))
+
+  /** Every row of the layout's committed generations, one read per
+    * generation so each discovers its own bucket partitions. */
+  private def layoutRows(path: String) =
+    graft.streaming.ManifestSwap.dataPaths(spark, path)
+      .map(spark.read.parquet(_)).reduce(_ unionByName _)
   import org.apache.spark.sql.Encoders
 
   private val (m, dims, ks) = (8, 64, 16)
@@ -99,10 +113,10 @@ class PqSpec extends SparkSpec {
     val path = tmpDir("ivfpq-append")
     val base = emb.filter(col("vec_id") % 2 === 0)
     val batch = emb.filter(col("vec_id") % 2 =!= 0)
-    Pq.writeIvfPq(base, "vec_id", "embedding", cb, m, dims, 6, path)
-    val baseRows = spark.read.parquet(path).count()
+    publishIvfPq(base, cb, path)
+    val baseRows = layoutRows(path).count()
     Pq.appendIvfPq(batch, "vec_id", "embedding", cb, m, dims, 6, path)
-    val idx = spark.read.parquet(path)
+    val idx = layoutRows(path)
     assert(idx.count() == emb.count() && baseRows == base.count(),
       "append must add exactly the batch's codes")
     // a probe over the union finds neighbors from BOTH generations
@@ -121,14 +135,13 @@ class PqSpec extends SparkSpec {
     val cb = Pq.trainCodebooks(emb, "vec_id", "embedding", m, dims, ks,
       iters = 1)
     val path = tmpDir("ivfpq-diverge")
-    Pq.writeIvfPq(emb.filter(col("vec_id") < 100), "vec_id", "embedding",
-      cb, m, dims, 6, path)
-    val n = spark.read.parquet(path).count()
+    publishIvfPq(emb.filter(col("vec_id") < 100), cb, path)
+    val n = layoutRows(path).count()
     // a retry carrying the SAME (id, vector) rows is a silent no-op —
     // the membership guard's whole purpose
     Pq.appendIvfPq(emb.filter(col("vec_id") < 50), "vec_id", "embedding",
       cb, m, dims, 6, path)
-    assert(spark.read.parquet(path).count() == n,
+    assert(layoutRows(path).count() == n,
       "a same-vector retry must be a no-op")
     // but an existing id arriving with a DIFFERENT vector is an
     // upstream contract violation (a re-embedding routed through
@@ -140,7 +153,7 @@ class PqSpec extends SparkSpec {
     // the probe then provably sees a's indexed row. (100 ids over 64
     // buckets pigeonholes such a pair.)
     import scala.jdk.CollectionConverters._
-    val rows = spark.read.parquet(path)
+    val rows = layoutRows(path)
       .select(col("vec_id"), col("bucket").cast("long").as("bkt"),
         col("codes"))
       .collect()
@@ -164,7 +177,7 @@ class PqSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("DIFFERENT vector"),
       s"wrong failure: ${e.getMessage}")
-    assert(spark.read.parquet(path).count() == n,
+    assert(layoutRows(path).count() == n,
       "the refused batch must not have landed anything")
   }
 
@@ -180,12 +193,12 @@ class PqSpec extends SparkSpec {
     val path = s"$root/layout"
     val embDir = s"$root/corpus"
     emb.write.parquet(embDir)
-    Pq.writeIvfPq(emb, "vec_id", "embedding", cb, m, dims, 6, path)
+    publishIvfPq(emb, cb, path)
     // pick ids a, b living in DIFFERENT buckets: id a re-embedded with
     // b's vector probes only b's bucket, so a's indexed row is outside
     // the membership guard's partition-pruned read — the documented
     // blind spot, constructed deterministically
-    val byBucket = spark.read.parquet(path)
+    val byBucket = layoutRows(path)
       .select(col("vec_id"), col("bucket").cast("long").as("bkt"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val (aId, aBkt) = byBucket.minBy(_._1)
@@ -201,12 +214,12 @@ class PqSpec extends SparkSpec {
     // the append SUCCEEDS (the guard cannot see a's old row) and the
     // layout now carries two rows under one id — the poisoned state
     Pq.appendIvfPq(mutated, "vec_id", "embedding", cb, m, dims, 6, path)
-    assert(spark.read.parquet(path)
+    assert(layoutRows(path)
         .filter(col("vec_id") === aId).count() == 2,
       "fixture must reach the duplicate-id layout the blind spot allows")
     // the re-embedding also lands in the corpus the retrain re-encodes
     mutated.write.mode("append").parquet(embDir)
-    val before = spark.read.parquet(path).count()
+    val before = layoutRows(path).count()
     val e = intercept[IllegalArgumentException] {
       graft.cdc.Maintenance.maintainVectorIndex(spark,
         graft.cdc.Maintenance.VectorIndex(embDir, path,
@@ -216,7 +229,7 @@ class PqSpec extends SparkSpec {
         e.getMessage.contains(aId.toString),
       s"retrain must name the duplicated id: ${e.getMessage}")
     // the refusal is pre-install: the old layout still serves intact
-    assert(spark.read.parquet(path).count() == before,
+    assert(layoutRows(path).count() == before,
       "a refused retrain must leave the serving layout untouched")
   }
 

@@ -16,6 +16,12 @@ class StreamingAggViewSpec extends SparkSpec {
   private def page(lo: Long, hi: Long): DataFrame =
     TombstoneCdc.changedInvoicesOps(spark, sf, lo, hi)
 
+  /** The maintainer's step 1 alone — batch `id`'s keyed log append
+    * lands, the folds do not: the torn window a crash leaves. */
+  private def tornAppend(root: String, torn: DataFrame, id: Long): Unit =
+    graft.streaming.ManifestSwap.appendKeyed(spark, s"$root/log",
+      "aggviewlog", s"batch-$id")(torn.write.mode("overwrite").parquet(_))
+
   private def freshRoot(tag: String): String = {
     val root = s"/tmp/graft-aggview-spec-$tag-${System.nanoTime()}"
     root
@@ -63,8 +69,7 @@ class StreamingAggViewSpec extends SparkSpec {
         col("m.change_version").as("change_version"),
         col("m.change_operation").as("change_operation"))
       .withColumn("batch_id", lit(1L))
-    torn.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$root/log")
+    tornAppend(root, torn, 1L)
     assert(StreamingAggView.viewGen(spark, root) == 0L,
       "view must not have advanced past batch 0")
     // restart redelivers batch 1 in full
@@ -102,25 +107,20 @@ class StreamingAggViewSpec extends SparkSpec {
         col("m.change_version").as("change_version"),
         col("m.change_operation").as("change_operation"))
       .withColumn("batch_id", lit(1L))
-    torn.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$root/log")
+    tornAppend(root, torn, 1L)
     StreamingAggView.applyMinMaxBatch(spark, sf, root, page(1500L, 2500L), 1L)
     assertSame(StreamingAggView.currentMinMaxView(spark, root),
       AggView.directMinMaxView(spark, sf, 2500L),
       "min/max replay over the torn log diverges")
   }
 
-  /** The batch_id=N partition dirs present under the log (listing, not
-    * a parquet read — a fully-compacted log has no files to infer a
-    * schema from). */
+  /** The batch ids the log still holds rows of (empty for a fully
+    * compacted log, which has no files to infer a schema from). */
   private def logParts(root: String): Set[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$root/log")
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).toSet
+    val dirs = graft.streaming.ManifestSwap.readDataPaths(spark, s"$root/log")
+    if (dirs.isEmpty) Set.empty
+    else spark.read.parquet(dirs: _*).select("batch_id").distinct()
+      .collect().map(_.getLong(0)).toSet
   }
 
   test("log compaction preserves the fold: compact mid-stream, keep folding") {
@@ -158,8 +158,7 @@ class StreamingAggViewSpec extends SparkSpec {
         col("m.change_version").as("change_version"),
         col("m.change_operation").as("change_operation"))
       .withColumn("batch_id", lit(1L))
-    torn.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$root/log")
+    tornAppend(root, torn, 1L)
     // even an EXPLICIT over-ask must clamp to the folded generation —
     // folding the torn partition would make its replay a zero delta
     StreamingAggView.compactLog(spark, root, upTo = Some(1L))
@@ -185,8 +184,8 @@ class StreamingAggViewSpec extends SparkSpec {
     StreamingAggView.compactLog(spark, root)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucketDirs = fs.listStatus(
-      new org.apache.hadoop.fs.Path(s"$root/statecp"))
+    val bucketDirs = fs.listStatus(new org.apache.hadoop.fs.Path(
+        graft.streaming.ManifestSwap.readPath(spark, s"$root/statecp").get))
       .map(_.getPath.getName).count(_.startsWith("ebkt="))
     // a 3-entity page: at most 3 of the 16 buckets can be touched
     val small = page(0L, 200L).limit(3).localCheckpoint(true)
@@ -270,9 +269,8 @@ class StreamingAggViewSpec extends SparkSpec {
     assert(sketchViewOf(root) == before, "sketch redelivery changed the view")
     // torn window: batch 1's log partition lands, the fold does not
     val torn = page(1500L, 2500L).withColumn("batch_id", lit(1L))
-    torn.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$root/log")
-    assert(StreamingAggView.viewGen(spark, root, "viewsk", "aggviewsk") == 0L)
+    tornAppend(root, torn, 1L)
+    assert(StreamingAggView.viewGen(spark, root, "viewsk") == 0L)
     StreamingAggView.applySketchBatch(spark, root, page(1500L, 2500L), 1L)
     assert(sketchViewOf(root) ==
       directSketchView(Seq((0L, 1500L), (1500L, 2500L))),

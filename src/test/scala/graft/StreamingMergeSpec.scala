@@ -35,24 +35,6 @@ class StreamingMergeSpec extends SparkSpec {
     assertStateEqualsSnapshot(state)
   }
 
-  test("a torn swap (state moved aside, new state not installed) restores from bak") {
-    val state = tmpDir("smerge-torn") + "/state"
-    Merge.liveSnapshot(spark, sf, 1000L)
-      .write.mode("overwrite").parquet(state)
-    val before = spark.read.parquet(state).count()
-    assert(before > 0)
-    // simulate a crash between the two renames: the state dir is gone,
-    // the only copy lives under .merge-bak
-    val moved = new java.io.File(state)
-      .renameTo(new java.io.File(state + ".merge-bak"))
-    assert(moved, "test setup: could not move the state dir aside")
-    val restored = StreamingMerge.stateTable(spark, state)
-    assert(restored.count() == before,
-      "stateTable must restore the bak copy, not start from empty")
-    assert(new java.io.File(state).exists() &&
-      !new java.io.File(state + ".merge-bak").exists())
-  }
-
   test("crash between state swap and checkpoint commit converges on restart") {
     val table = writeChangeTable()
     val state = tmpDir("smerge-crash-state") + "/state"

@@ -9,6 +9,10 @@ import graft.ops.ZOrder
   * sort cannot. */
 class ZOrderSpec extends SparkSpec {
 
+  /** Every row of the layout's committed generations. */
+  private def layoutRows(dir: String) = spark.read.parquet(
+    graft.streaming.ManifestSwap.readDataPaths(spark, dir): _*)
+
   private def refZ(a: Long, b: Long): Long = {
     var z = 0L
     for (i <- 0 until 16) {
@@ -51,7 +55,7 @@ class ZOrderSpec extends SparkSpec {
       .write.mode("overwrite").parquet(ldir)
 
     // per-file stats envelopes — what a stats-index scan would consult
-    val zStats = spark.read.parquet(zdir)
+    val zStats = layoutRows(zdir)
       .groupBy(input_file_name()).agg(min("user_id").as("ulo"),
         max("user_id").as("uhi"), min("cents").as("clo"),
         max("cents").as("chi")).collect()
@@ -71,7 +75,7 @@ class ZOrderSpec extends SparkSpec {
       s"z-layout should skip files on the 2-D box: hit $zHit/$zAll")
 
     // the layout is lossless and the clustered read serves the same rows
-    assert(spark.read.parquet(zdir).count() == ev.count())
+    assert(layoutRows(zdir).count() == ev.count())
 
     // prunedScan plans ONLY the intersecting files off the _ZSTATS
     // index, and re-filtering keeps it byte-identical to the full scan
@@ -82,7 +86,7 @@ class ZOrderSpec extends SparkSpec {
     val hotFiles = zStats.filter(intersects).map(_.getString(0)).toSet
     assert(scannedFiles.subsetOf(hotFiles),
       s"pruned scan read a cold file: ${scannedFiles -- hotFiles}")
-    val full = spark.read.parquet(zdir)
+    val full = layoutRows(zdir)
       .filter(col("user_id").between(uLo, uHi) &&
         col("cents").between(cMin, cHi))
     assert(pruned.orderBy("event_id").collect()
@@ -103,11 +107,11 @@ class ZOrderSpec extends SparkSpec {
     val base = ev.filter(col("event_id") % 2 === 0)
     val batch = ev.filter(col("event_id") % 2 =!= 0)
     ZOrder.layout(base, dir, "user_id", uMin, uMax, "cents", cMin, cMax, 4)
-    val baseFiles = spark.read.parquet(dir)
+    val baseFiles = layoutRows(dir)
       .select(input_file_name()).distinct().collect()
       .map(_.getString(0)).toSet
     ZOrder.append(batch, dir, "user_id", uMin, uMax, "cents", cMin, cMax, 2)
-    val allFiles = spark.read.parquet(dir)
+    val allFiles = layoutRows(dir)
       .select(input_file_name()).distinct().collect()
       .map(_.getString(0)).toSet
     assert(baseFiles.subsetOf(allFiles) && allFiles.size > baseFiles.size,
@@ -186,7 +190,8 @@ class ZOrderSpec extends SparkSpec {
       .write.mode("overwrite").parquet(ldir)
 
     def hotCount(dir: String): (Long, Long) = {
-      val stats = spark.read.parquet(dir)
+      val stats = (if (dir == zdir) layoutRows(dir)
+          else spark.read.parquet(dir))
         .groupBy(input_file_name()).agg(
           min("user_id"), max("user_id"), min("cents"), max("cents"),
           min("event_id"), max("event_id")).collect()
@@ -204,7 +209,7 @@ class ZOrderSpec extends SparkSpec {
 
     // prunedScanN off _ZSTATS is output-invisible vs the full scan
     val pruned = ZOrder.prunedScanN(spark, zdir, box)
-    val full = spark.read.parquet(zdir).filter(box.map {
+    val full = layoutRows(zdir).filter(box.map {
       case (c, lo, hi) => col(c).between(lo, hi) }.reduce(_ && _))
     assert(pruned.count() > 0 &&
       pruned.orderBy("event_id").collect()
@@ -227,34 +232,42 @@ class ZOrderSpec extends SparkSpec {
     ZOrder.layoutN(ev.filter(col("event_id") % 4 === 0), dir, dims, 4)
     (1 to 3).foreach(i =>
       ZOrder.appendN(ev.filter(col("event_id") % 4 === i), dir, dims, 2))
-    def dataFiles(): Set[String] = new java.io.File(dir).listFiles()
+    def gens(): Seq[java.io.File] =
+      graft.streaming.ManifestSwap.readDataPaths(spark, dir)
+        .map(g => new java.io.File(
+          new org.apache.hadoop.fs.Path(g).toUri.getPath))
+    def dataFiles(): Set[String] = gens().flatMap(_.listFiles())
       .filter(f => f.isFile && !f.getName.startsWith("_") &&
         !f.getName.startsWith("."))
-      .map(_.getName).toSet
-    def statsLines(): Int = scala.io.Source.fromFile(
-      new java.io.File(dir, "_ZSTATS")).getLines().count(_.nonEmpty)
+      .map(_.getPath).toSet
+    def statsLines(): Int = gens().map(g => scala.io.Source.fromFile(
+      new java.io.File(g, "_ZSTATS")).getLines().count(_.nonEmpty)).sum
     assert(dataFiles().size == 10 && statsLines() == 10,
       s"fixture: 4 + 3x2 appended files, got ${dataFiles().size}")
 
-    val before = spark.read.parquet(dir).collect()
+    val before = layoutRows(dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     ZOrder.rebuild(spark, dir, dims, 4)
     assert(dataFiles().size == 4 && statsLines() == 4,
       s"rebuild must fold to the target: ${dataFiles().size} files, " +
         s"${statsLines()} index lines")
-    val after = spark.read.parquet(dir).collect()
+    val after = layoutRows(dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(after == before, "rebuild must be lossless")
 
-    // crash window: generation moved aside, not yet installed — the
-    // next pruned scan heals the swap and serves the same rows
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".zorder-bak")))
+    // crash window: a second rebuild dies with its generation written
+    // and its pointer not yet committed — the pruned scan keeps serving
+    // the same rows off the committed layout, and the retry converges
     val box = dims.map(d => (d.name, d.min, d.max))
+    graft.streaming.ManifestSwap.failpoint = Some(("zorder", "beforeCommit"))
+    try intercept[RuntimeException](ZOrder.rebuild(spark, dir, dims, 4))
+    finally graft.streaming.ManifestSwap.failpoint = None
     assert(ZOrder.prunedScanN(spark, dir, box).count() == before.size,
-      "a scan in the crash window must heal the swap")
+      "a scan in the crash window must serve the committed layout")
+    ZOrder.rebuild(spark, dir, dims, 4)
+    assert(dataFiles().size == 4 &&
+      ZOrder.prunedScanN(spark, dir, box).count() == before.size,
+      "the retried rebuild must converge")
   }
 
   test("layout_zorder_scan declared query returns the box aggregate") {

@@ -50,20 +50,9 @@ for SF in 0.001 0.01; do
     "$OUT/verify-sf$SF" | tail -1
 done
 
-step "gate 2a: Verify + oracle at sf0.001 under the FORCED manifest"\
-  "protocol (round-14: every append family object-store-native — the"\
-  "whole registry must stay green when every publish runs manifest)"
-rm -rf "$OUT/verify-manifest"
-SPARK_GRAFT_CPUS=8 SPARK_GRAFT_SWAP_PROTOCOL=manifest sbt -batch \
-  "runMain graft.Verify /root/testdata/sf0.001 $OUT/verify-manifest" \
-  > "$OUT/verify-manifest.log" 2>&1
-if grep "\[verify\]" "$OUT/verify-manifest.log"; then
-  echo "verify dump failures under forced manifest protocol"; exit 1
-fi
-python3 tools/check_oracle.py /root/testdata/sf0.001 \
-  "$OUT/verify-manifest" | tail -1
-python3 tools/diff_verify.py "$OUT/verify-sf0.001" \
-  "$OUT/verify-manifest" | tail -1
+# (gate 2a — the same sweep under a forced manifest protocol, diffed
+# against the rename dump — is gone with the rename protocol: gate 2
+# runs the only publish protocol there is.)
 
 step "gate 2b: kNN-graph recall vs DuckDB's own exact kNN (engine-"\
   "outside, round-14 ask #3; input = gate 2's edge exports)"
@@ -111,27 +100,6 @@ python3 tools/check_oracle.py /root/testdata/sf0.1 "$OUT/verify-sf0.1" \
 python3 tools/knn_recall.py /root/testdata/sf0.1 \
   >> "bench/KNNG_RECALL_r${R}.json"
 tail -1 "bench/KNNG_RECALL_r${R}.json"
-
-# Gate 6b (forced-manifest registry sweep AT sf0.1) was the round-14
-# verdict's ONE-round promotion; round 15 measured full parity (181
-# pass, 183/183 byte-identical vs the rename dump —
-# bench/VERIFY_SF01_r15.json), so per the ask it drops back to the
-# sf0.001 sweep (gate 2a). Re-promote with SPARK_GRAFT_GATE6B=1 after
-# any round that touches the manifest/appendKeyed/fold protocol paths.
-if [ "${SPARK_GRAFT_GATE6B:-0}" = "1" ]; then
-  step "gate 6b: forced-manifest registry sweep AT sf0.1 (re-promoted)"
-  rm -rf "$OUT/verify-sf0.1-manifest"
-  SPARK_GRAFT_CPUS=16 SPARK_GRAFT_SWAP_PROTOCOL=manifest sbt -batch \
-    "runMain graft.Verify /root/testdata/sf0.1 $OUT/verify-sf0.1-manifest" \
-    > "$OUT/verify-sf0.1-manifest.log" 2>&1
-  if grep "\[verify\]" "$OUT/verify-sf0.1-manifest.log"; then
-    echo "verify dump failures under forced manifest at sf0.1"; exit 1
-  fi
-  python3 tools/check_oracle.py /root/testdata/sf0.1 \
-    "$OUT/verify-sf0.1-manifest" 600 | tail -1
-  python3 tools/diff_verify.py "$OUT/verify-sf0.1" \
-    "$OUT/verify-sf0.1-manifest" | tail -1
-fi
 
 step "gate 6c: NON-DEGENERATE large-corpus recall (round-14 verdict"\
   "ask #2 — the exact-clone sf1 corpus reads 1.0 by construction;"\
