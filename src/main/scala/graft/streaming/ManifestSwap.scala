@@ -184,7 +184,7 @@ private[graft] object ManifestSwap {
 
   /** The highest committed (manifestNumber, payload), or None before
     * the first commit. The pointer file is complete by construction on
-    * every branch (rename publishes whole files; an object PUT is
+    * every branch (link(2) publishes a whole file; an object PUT is
     * all-or-nothing), so the read never sees a torn payload. A pointer
     * created between our listing and our read is fine — we return a
     * slightly stale but fully-committed snapshot, exactly the reader
