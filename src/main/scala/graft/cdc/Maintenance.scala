@@ -95,8 +95,10 @@ object Maintenance {
     * page append structurally idempotent, something a plain
     * `mode=append` never was. A table a producer wrote in place must
     * go through one [[maintainChangeTable]] first (the keyed append
-    * refuses to hide its raw rows). Readers (the graft-cdc source,
-    * [[maintainChangeTable]]) resolve the layout structurally. */
+    * refuses to hide its raw rows); after that, keyed pages and the
+    * producer's plain in-place appends are both served. Readers (the
+    * graft-cdc source, [[maintainChangeTable]]) resolve the layout
+    * structurally. */
   def appendChangePage(spark: SparkSession, changeDir: String,
                        page: org.apache.spark.sql.DataFrame): Unit =
     graft.streaming.StagedAppend.append(changeDir, page, "retain")(gen =>
@@ -111,23 +113,27 @@ object Maintenance {
     * snapshot, never a mid-rewrite directory), dropping the absorbed
     * page keys — page tags are content fingerprints whose idempotence
     * window only needs to span producer retries, not retention cycles,
-    * and an unbounded ledger would grow the manifest forever. A table
-    * its producer wrote in place (no committed manifest yet) is read
-    * through [[ManifestSwap.dataPaths]] and becomes the first base. */
+    * and an unbounded ledger would grow the manifest forever. The
+    * files its producer wrote in place (the whole table before the
+    * first run, any `mode=append` page since) are absorbed into the
+    * same base and recorded in the same commit
+    * ([[ManifestSwap.foldSnapshotInPlace]]); they stay on disk for
+    * readers of older snapshots until the gc grace has passed. */
   def maintainChangeTable(spark: SparkSession, changeDir: String,
                           watermark: Long, compactUpTo: Long,
                           nFiles: Int): Unit = {
-    // dirs and absorbed keys from ONE resolution (foldSnapshot) so a
-    // page committing mid-rewrite keeps its own generation
-    val (d0, absorbed) = ManifestSwap.foldSnapshot(spark, changeDir)
-    val dirs =
-      if (d0.nonEmpty) d0 else ManifestSwap.dataPaths(spark, changeDir)
+    // dirs and absorbed keys from ONE resolution so a page committing
+    // (or a producer file landing) mid-rewrite keeps being served
+    val (dirs, absorbed, inPlace) =
+      ManifestSwap.foldSnapshotInPlace(spark, changeDir)
     if (dirs.isEmpty) return
     val kept = logCompactRows(
       Retention.expire(spark.read.parquet(dirs: _*), watermark),
       compactUpTo)
     ManifestSwap.installFold(spark, changeDir, "retain", absorbed,
-      keepLedger = _ => false)(Retention.writeCompacted(kept, _, nFiles))
+      keepLedger = _ => false, absorbedInPlace = Some(inPlace))(
+      Retention.writeCompacted(kept, _, nFiles))
+    ManifestSwap.reap(spark, changeDir)
   }
 
   /** A serving IVF-PQ vector index due for its periodic
@@ -181,6 +187,7 @@ object Maintenance {
       cb.write.mode("overwrite")
         .parquet(tmp.stripSuffix("/") + "/_codebook")
     }
+    ManifestSwap.reap(spark, vi.layoutPath)
   }
 
   /** A manifest-published table root due for generation GC in this
@@ -193,7 +200,10 @@ object Maintenance {
     * run hours; the 15-minute default fits serving-sized tables, not
     * that). Superseded generations cost storage until the grace
     * elapses, never correctness — err long. gc logs loudly when it
-    * reaps under a sub-default grace. */
+    * reaps under a sub-default grace. The rewrite sites themselves
+    * reap under the 15-minute default ([[ManifestSwap.reap]]), so a
+    * longer grace here protects a table only while no rewrite site
+    * runs on it. */
   case class ManifestGc(root: String,
                         graceMs: Long =
                           ManifestSwap.DefaultGraceMs,

@@ -142,6 +142,7 @@ object SimSearch {
     graft.streaming.ManifestSwap.installFold(spark, path, "ivflayout",
       absorbed, keepLedger = _ => true)(
       writeBucketedRaw(emb, idCol, vecCol, planes, _))
+    graft.streaming.ManifestSwap.reap(spark, path)
   }
 
   /** The raw bucket-partitioned write into `dir` — for the publish
@@ -703,8 +704,10 @@ object SimSearch {
     }
     // superseded/orphan generations are reaped HERE and only here —
     // the append path's ledgered generations must never be gc'd
-    // before their publish recovery can key them
+    // before their publish recovery can key them. The df table (one
+    // generation per append) holds no such references.
     graft.streaming.ManifestSwap.gc(spark, s"$path/postings")
+    graft.streaming.ManifestSwap.gc(spark, s"$path/df")
   }
 
   /** The lexical top-`poolSize` served from the postings index: read

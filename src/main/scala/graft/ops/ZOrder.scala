@@ -141,10 +141,12 @@ object ZOrder {
     * parquet readers off it). The index is one aggregate over the
     * written files, file-count rows to the driver. */
   def layoutN(df: DataFrame, path: String, dims: Seq[Dim],
-              files: Int): Unit =
+              files: Int): Unit = {
     // the build is one committed generation
     graft.streaming.ManifestSwap.install(df.sparkSession, path, "zorder")(
       rawLayout(df, _, dims, files))
+    graft.streaming.ManifestSwap.reap(df.sparkSession, path)
+  }
 
   /** One complete layout generation written INTO `dir`: the z-sorted
     * data files plus their `_ZSTATS` index. */
@@ -226,6 +228,7 @@ object ZOrder {
     graft.streaming.ManifestSwap.installFold(spark, path, "zorder",
       absorbed, keepLedger = _ => true)(
       rawLayout(spark.read.parquet(dirs: _*), _, dims, files))
+    graft.streaming.ManifestSwap.reap(spark, path)
   }
 
   private def fsOf(spark: SparkSession,

@@ -237,8 +237,10 @@ object DocumentSink {
     * exactly-once layer). The survivors are derived from the SAME
     * resolution as the absorbed keys (foldSnapshot), so a page landing
     * mid-compaction keeps its own generation, neither folded nor
-    * hidden. Run it like the reference runs its retention cleanup: as
-    * a scheduled maintenance window. */
+    * hidden. The folded generations are reaped once the gc grace has
+    * passed ([[graft.streaming.ManifestSwap.reap]]). Run it like the
+    * reference runs its retention cleanup: as a scheduled maintenance
+    * window. */
   def compact(spark: SparkSession, dir: String,
               schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
     val (gens, absorbed) =
@@ -253,5 +255,6 @@ object DocumentSink {
           expr(s"change_version div $VersionsPerBucket"))
         .repartition(col("version_bucket")), gen)
     }
+    graft.streaming.ManifestSwap.reap(spark, dir)
   }
 }

@@ -205,14 +205,16 @@ object CdcFiles {
     val fs = FileSystem.get(p.toUri, conf)
     // A MANIFEST-published change table (round-14: the retention
     // rewrite's object-store layout) resolves structurally — one
-    // committed snapshot's base + appended page generations — so the
-    // catalog never sees a half-published page or a mid-rewrite state.
-    // Plain directories keep the in-place listing.
+    // committed snapshot's base + appended page generations + the
+    // producer's not-yet-folded in-place files — so the catalog never
+    // sees a half-published page or a mid-rewrite state. Plain
+    // directories keep the in-place listing.
+    if (!fs.exists(p))
+      throw new java.io.FileNotFoundException(
+        s"graft-cdc: no change table at $p")
     val roots: Seq[Path] =
-      if (fs.exists(new Path(p, "_ptr")))
-        graft.streaming.ManifestSwap.readDataPathsFs(fs, opts.path)
-          .map(new Path(_))
-      else Seq(p)
+      graft.streaming.ManifestSwap.dataPathsFs(fs, opts.path)
+        .map(new Path(_))
     val all = roots.flatMap { root =>
       val st = fs.getFileStatus(root)
       if (st.isDirectory) fs.listStatus(root).toSeq else Seq(st)

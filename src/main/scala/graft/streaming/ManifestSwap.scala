@@ -44,7 +44,9 @@ import org.apache.spark.sql.types.StructType
   * Data that never went through this protocol — producer-written
   * change tables, the testdata, [[graft.llm.CorpusCache]] layouts —
   * is read structurally by [[dataPaths]]: a root with no committed
-  * manifest serves its in-place files.
+  * manifest serves its in-place files, and a committed change table
+  * also serves every in-place entry no fold has absorbed yet (its
+  * producer keeps writing it in place; see [[RawPrefix]]).
   *
   * GC safety: [[gc]] guarantees a resolved snapshot stays readable for
   * at least `graceMs` after the resolve — the grace is measured from
@@ -371,6 +373,9 @@ private[graft] object ManifestSwap {
       val cur = resolveRaw(spark, path)
       val next = cur.map(_._1 + 1).getOrElse(0L)
       val merged = update(cur.map(_._2).getOrElse(Map.empty))
+      // a no-op update commits nothing: N concurrent healers of the
+      // same window make ONE commit between them, not N
+      if (cur.exists(_._2 == merged)) return merged
       trip(tag, "beforeCommit")
       if (commitPtr(fs, path, next, renderPayload(merged))) {
         trip(tag, "afterCommit")
@@ -386,7 +391,7 @@ private[graft] object ManifestSwap {
         // history preference.
         if (next > 0 && next % TrimEvery == 0)
           trimPtrs(fs, path, keepManifests = TrimEvery,
-            graceMs = trimGraceMs)
+            graceMs = housekeepingGraceMs)
         return merged
       }
       attempts += 1
@@ -413,12 +418,16 @@ private[graft] object ManifestSwap {
   }
 
   /** Write one immutable generation via `write(genDir)` and commit it
-    * as the whole snapshot, dropping every other key. Concurrent
-    * installs converge: last committed pointer wins, and every
-    * committed pointer names a COMPLETE generation. */
+    * as the whole snapshot, dropping every other key but the
+    * in-place records ([[RawPrefix]], [[InPlaceKey]]: absorbed
+    * in-place files must stay hidden until [[gc]] deletes them).
+    * Concurrent installs converge: last committed pointer wins, and
+    * every committed pointer names a COMPLETE generation. */
   def install(spark: SparkSession, path: String, tag: String = "merge")
              (write: String => Unit): Unit = {
-    publish(spark, path, tag)(write)((gen, _) => Map(DataKey -> gen))
+    publish(spark, path, tag)(write)((gen, m) =>
+      m.filter { case (k, _) => k == InPlaceKey || k.startsWith(RawPrefix) } +
+        (DataKey -> gen))
     ()
   }
 
@@ -438,33 +447,69 @@ private[graft] object ManifestSwap {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
 
-  /** Does `root` hold in-place data — any entry not `_`/`.`-prefixed?
-    * True for raw-written inputs; a protocol root keeps everything
+  /** The in-place entries of `path` — every entry not `_`/`.`-prefixed.
+    * Raw-written inputs hold them; a protocol root keeps everything
     * under `_gens`/`_ptr`. */
-  private def hasInPlaceData(fs: FileSystem, root: Path): Boolean =
-    fs.exists(root) && fs.listStatus(root).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+  private def inPlaceEntries(fs: FileSystem, path: String): Seq[Path] = {
+    val root = new Path(path.stripSuffix("/"))
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath).filter { p =>
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    }.sortBy(_.getName)
+  }
+
+  /** Manifest key marking a root its producer writes IN PLACE (a
+    * change table, `mode("append").parquet(dir)`): set by the table's
+    * fold ([[installFold]] with `absorbedInPlace`), it makes readers
+    * serve every in-place entry the manifest does not record under
+    * [[RawPrefix]] beside the committed generations. Every other
+    * committed root serves its manifest only. */
+  private[graft] val InPlaceKey = "in-place"
+
+  /** Key prefix recording an in-place entry a fold absorbed:
+    * `raw:<entry name> -> `[[FoldedVal]]. The fold reads the entries no
+    * manifest records yet, absorbs their rows into its new base, and
+    * records their names in the SAME commit, so from that snapshot on
+    * readers skip them, while entries landing later stay served beside
+    * the manifest until the next fold. The entries themselves stay on
+    * disk for readers that resolved an older snapshot; [[gc]] deletes
+    * them (and then drops their keys) once the grace has passed. */
+  private[graft] val RawPrefix = "raw:"
+
+  /** In-place entries of `path` that manifest `m` does not record as
+    * absorbed. */
+  private def unabsorbed(fs: FileSystem, path: String,
+                         m: Map[String, String]): Seq[Path] =
+    inPlaceEntries(fs, path).filterNot(p =>
+      m.contains(RawPrefix + p.getName))
 
   /** The data directories a reader of `path` scans, resolved per call
     * so a concurrent commit's cutover is picked up: a root with a
     * COMMITTED manifest serves its base plus every unfolded append
-    * ([[readDataPaths]]); a root with in-place data and no committed
-    * manifest is raw input that never went through this protocol
-    * (producer-written change tables, the testdata, CorpusCache
-    * layouts) and serves itself; anything else is empty.
+    * ([[readDataPaths]]) — plus, for a change table ([[InPlaceKey]]),
+    * every in-place entry no fold has absorbed; a root with in-place
+    * data and no committed manifest is raw input that never went
+    * through this protocol (producer-written change tables, the
+    * testdata, CorpusCache layouts) and serves itself; anything else is
+    * empty.
     *
     * "Committed", not "`_ptr` exists": the first commit mkdirs `_ptr`
     * before its pointer file lands, so a crash in that window leaves
     * an empty `_ptr` over whatever raw data the root held — keying on
     * existence served NOTHING instead of that data (round-14 ADVICE). */
-  def dataPaths(spark: SparkSession, path: String): Seq[String] = {
-    val fs = fsOf(spark, path)
-    if (hasCommittedFs(fs, path)) readDataPathsFs(fs, path)
-    else if (hasInPlaceData(fs, new Path(path.stripSuffix("/")))) Seq(path)
-    else Seq.empty
-  }
+  def dataPaths(spark: SparkSession, path: String): Seq[String] =
+    dataPathsFs(fsOf(spark, path), path)
+
+  /** [[dataPaths]] over a caller-supplied FileSystem. */
+  private[graft] def dataPathsFs(fs: FileSystem,
+                                 path: String): Seq[String] =
+    resolveRawFs(fs, path) match {
+      case Some((_, m)) if m.contains(InPlaceKey) =>
+        manifestDirs(path, m) ++ unabsorbed(fs, path, m).map(_.toString)
+      case Some((_, m)) => manifestDirs(path, m)
+      case None =>
+        if (inPlaceEntries(fs, path).nonEmpty) Seq(path) else Seq.empty
+    }
 
   // ------------------------------------- keyed-append (Iceberg shape) --
 
@@ -508,13 +553,15 @@ private[graft] object ManifestSwap {
     // existence — a first-commit crash leaves an empty `_ptr` that
     // must not wave the append through (round-14 ADVICE).
     val fs = fsOf(spark, path)
-    if (!hasCommittedFs(fs, path) &&
-        hasInPlaceData(fs, new Path(path.stripSuffix("/"))))
+    if (!hasCommittedFs(fs, path) && inPlaceEntries(fs, path).nonEmpty)
       throw new UnsupportedOperationException(
         s"graft manifest: $path holds in-place (non-manifest) data — a " +
-          "keyed append would publish a manifest that hides it. " +
-          "Fold it first: rewrite the layout through its rebuild/" +
-          "compaction (a full-snapshot install), then append.")
+          "keyed append would publish a manifest that hides it. A " +
+          "change table is folded in place by " +
+          "Maintenance.maintainChangeTable; any other layout must be " +
+          "rebuilt from its source into a fresh root (ZOrder.layoutN, " +
+          "SimSearch.writeBucketed, Pq.writeIvfPq and the like) before " +
+          "it takes appends.")
     val full = AppPrefix + key
     if (resolveRaw(spark, path).exists(_._2.contains(full))) return
     publish(spark, path, tag)(write)((gen, m) =>
@@ -538,12 +585,21 @@ private[graft] object ManifestSwap {
   /** [[readDataPaths]] over a caller-supplied FileSystem. */
   private[graft] def readDataPathsFs(fs: FileSystem,
                                      path: String): Seq[String] =
-    resolveRawFs(fs, path).map(_._2.toSeq
+    resolveRawFs(fs, path).map(r => manifestDirs(path, r._2))
+      .getOrElse(Seq.empty)
+
+  /** The data dirs manifest `m` lists — base plus unfolded appends, in
+    * stable key order. */
+  private def manifestDirs(path: String,
+                           m: Map[String, String]): Seq[String] =
+    m.toSeq
       .filter { case (k, v) =>
         v != FoldedVal && (k == DataKey || k.startsWith(AppPrefix)) }
-      .sortBy(_._1)
-      .map { case (_, rel) => entryPath(path, rel) })
-      .getOrElse(Seq.empty)
+      .sortBy(_._1).map { case (_, rel) => entryPath(path, rel) }
+
+  /** The append keys of manifest `m`, prefix stripped. */
+  private def appKeys(m: Map[String, String]): Set[String] =
+    m.keySet.filter(_.startsWith(AppPrefix)).map(_.stripPrefix(AppPrefix))
 
   /** ONE-RESOLVE snapshot for a row-preserving fold: the data dirs to
     * absorb and the append keys of THAT SAME payload. Load-bearing
@@ -557,14 +613,23 @@ private[graft] object ManifestSwap {
       : (Seq[String], Set[String]) =
     resolveRaw(spark, path) match {
       case None => (Seq.empty, Set.empty)
-      case Some((_, m)) =>
-        val dirs = m.toSeq
-          .filter { case (k, v) =>
-            v != FoldedVal && (k == DataKey || k.startsWith(AppPrefix)) }
-          .sortBy(_._1).map { case (_, rel) => entryPath(path, rel) }
-        (dirs, m.keySet.filter(_.startsWith(AppPrefix))
-          .map(_.stripPrefix(AppPrefix)))
+      case Some((_, m)) => (manifestDirs(path, m), appKeys(m))
     }
+
+  /** [[foldSnapshot]] of a root its producer also writes IN PLACE (a
+    * change table): the dirs additionally name every in-place entry no
+    * commit has absorbed yet — the whole raw layout before the first
+    * commit — and the third value carries their names, for
+    * [[installFold]]'s `absorbedInPlace`. Same one resolution, so an
+    * entry landing after it is neither absorbed nor hidden. */
+  def foldSnapshotInPlace(spark: SparkSession, path: String)
+      : (Seq[String], Set[String], Set[String]) = {
+    val fs = fsOf(spark, path)
+    val m = resolveRawFs(fs, path).map(_._2).getOrElse(Map.empty)
+    val fresh = unabsorbed(fs, path, m)
+    (manifestDirs(path, m) ++ fresh.map(_.toString), appKeys(m),
+      fresh.map(_.getName).toSet)
+  }
 
   /** Row-PRESERVING compaction of a keyed-append root: write the folded
     * snapshot into one generation, then CAS it in as the new base while
@@ -579,9 +644,13 @@ private[graft] object ManifestSwap {
     * Contrast [[install]], the row-SUPERSEDING rebuild: it replaces the
     * whole payload, dropping every append key (a retrain re-derives
     * all rows; replaying an old batch into it violates the single-
-    * maintainer caller contract). */
+    * maintainer caller contract). `absorbedInPlace`, given for a
+    * change table, names the in-place entries the fold read
+    * ([[foldSnapshotInPlace]]); the same commit records them under
+    * [[RawPrefix]] and marks the root [[InPlaceKey]]. */
   def installFold(spark: SparkSession, path: String, tag: String,
-                  absorbed: Set[String], keepLedger: String => Boolean)
+                  absorbed: Set[String], keepLedger: String => Boolean,
+                  absorbedInPlace: Option[Set[String]] = None)
                  (write: String => Unit): Unit = {
     publish(spark, path, tag)(write) { (gen, m) =>
       val folded = m.flatMap {
@@ -591,7 +660,9 @@ private[graft] object ManifestSwap {
           else None
         case kv => Some(kv)
       }
-      folded + (DataKey -> gen)
+      val inPlace = absorbedInPlace.toSeq.flatMap(names =>
+        names.map(RawPrefix + _ -> FoldedVal) + (InPlaceKey -> FoldedVal))
+      folded ++ inPlace + (DataKey -> gen)
     }
     ()
   }
@@ -600,10 +671,22 @@ private[graft] object ManifestSwap {
 
   /** Commit-time trim cadence; see [[commitUpdate]]. */
   private[graft] val TrimEvery = 32
-  /** Grace the commit-time trim applies — [[DefaultGraceMs]] in
-    * production; tests shrink it to exercise deletion without
-    * waiting out a 15-minute window. */
-  @volatile private[graft] var trimGraceMs: Long = DefaultGraceMs
+  /** Grace of the protocol's own housekeeping — the commit-time trim
+    * and [[reap]] — [[DefaultGraceMs]] in production; tests shrink it
+    * to exercise deletion without waiting out a 15-minute window. */
+  @volatile private[graft] var housekeepingGraceMs: Long = DefaultGraceMs
+
+  /** [[gc]] under the housekeeping grace, run by every rewrite site
+    * right after its commit: each install supersedes a whole copy of
+    * its table, and a per-batch maintainer would otherwise keep one
+    * copy per batch on disk. The postings root is the one site that
+    * does not: its append path stages generations that only its
+    * publish recovery keys in, so only its compaction gc's it, after
+    * that recovery. */
+  def reap(spark: SparkSession, path: String): Unit = {
+    gc(spark, path, graceMs = housekeepingGraceMs)
+    ()
+  }
 
   /** Trim superseded manifest FILES (and aged `.tmp-*` commit-crash
     * orphans) from `_ptr`, keeping exactly what the reader guarantee
@@ -717,12 +800,25 @@ private[graft] object ManifestSwap {
     val protectedM = manifests.filter { case (n, _) =>
       mStar.forall(n >= _)
     } ++ manifests.take(keepManifests)
-    val live: Set[String] = protectedM.flatMap { case (_, st) =>
-      parsePayload(readFully(fs, st.getPath)).values
-        // an entry may point INSIDE a generation (g-x/bucket_part=3):
-        // liveness is by generation dir, the unit gc deletes
-        .map(_.split("/")(0))
-    }.toSet
+    val payloads: Map[Long, Map[String, String]] = protectedM.map {
+      case (n, st) => n -> parsePayload(readFully(fs, st.getPath))
+    }.toMap
+    val live: Set[String] = payloads.values.flatMap(_.values
+      // an entry may point INSIDE a generation (g-x/bucket_part=3):
+      // liveness is by generation dir, the unit gc deletes
+      .map(_.split("/")(0))).toSet
+    // absorbed in-place entries: once the manifest at the grace horizon
+    // records one, every reader that could still serve it resolved
+    // before that horizon (the same proof as below) — delete it, then
+    // drop its key so the manifest does not grow with every file a
+    // producer ever wrote
+    val rawDone = mStar.toSeq.flatMap(payloads(_).keys)
+      .filter(_.startsWith(RawPrefix))
+    if (rawDone.nonEmpty) {
+      rawDone.foreach(k => fs.delete(
+        new Path(path.stripSuffix("/"), k.stripPrefix(RawPrefix)), true))
+      commitUpdate(spark, path, "gc")(_ -- rawDone)
+    }
     // newest OBJECT mtime under a generation — the orphan age basis
     // (directory statuses lie on object stores; see the scaladoc)
     def newestObjectMtime(gen: Path): Long = {

@@ -113,6 +113,18 @@ object StreamingAggView {
     try out.write(gen.toString.getBytes("UTF-8")) finally out.close()
   }
 
+  /** Publish one view fold as a single-file generation stamped with
+    * `batchId`, then reap the view copies it superseded — a view is
+    * rewritten whole on every batch. */
+  private def installView(spark: SparkSession, dir: String, tag: String,
+                          view: DataFrame, batchId: Long): Unit = {
+    ManifestSwap.install(spark, dir, tag) { tmp =>
+      view.coalesce(1).write.mode("overwrite").parquet(tmp)
+      writeGenInto(spark, tmp, batchId)
+    }
+    ManifestSwap.reap(spark, dir)
+  }
+
   /** Latest-op-wins collapse WITHIN one batch (T5). */
   private def collapse(batch: DataFrame): DataFrame =
     batch.groupBy(col("invoice_id"))
@@ -242,10 +254,7 @@ object StreamingAggView {
     val newView = AggView.applyDelta(oldView,
       AggView.contributions(spark, sfDir, st.touched0),
       AggView.contributions(spark, sfDir, st.newLive))
-    ManifestSwap.install(spark, s"$root/view", "aggview") { tmp =>
-      newView.coalesce(1).write.mode("overwrite").parquet(tmp)
-      writeGenInto(spark, tmp, batchId)
-    }
+    installView(spark, s"$root/view", "aggview", newView, batchId)
   }
 
   /** The min/max fold: its own generation-stamped view. The rescan
@@ -265,10 +274,7 @@ object StreamingAggView {
       groups => AggView.viewMinMax(
         AggView.contributions(spark, sfDir, snap1)
           .join(groups, Seq("grp"), "left_semi")))
-    ManifestSwap.install(spark, s"$root/viewmm", "aggviewmm") { tmp =>
-      newView.coalesce(1).write.mode("overwrite").parquet(tmp)
-      writeGenInto(spark, tmp, batchId)
-    }
+    installView(spark, s"$root/viewmm", "aggviewmm", newView, batchId)
   }
 
   /** The SKETCH view fold — the sketch-table family
@@ -307,10 +313,7 @@ object StreamingAggView {
       .groupBy("grp")
       .agg(expr("theta_union_agg(sketch, 18)").as("sketch"),
         sum(col("n_rows")).as("n_rows"))
-    ManifestSwap.install(spark, s"$root/viewsk", "aggviewsk") { tmp =>
-      newView.coalesce(1).write.mode("overwrite").parquet(tmp)
-      writeGenInto(spark, tmp, batchId)
-    }
+    installView(spark, s"$root/viewsk", "aggviewsk", newView, batchId)
   }
 
   /** The HEAVY-HITTERS view fold (Misra–Gries, the bounded-size
@@ -387,10 +390,7 @@ object StreamingAggView {
     }) // r16: no second checkpoint — `merged` is already staged for
        // its three consumers; the exact-regime fast path was
        // re-materializing it verbatim, the capped path has one consumer
-    ManifestSwap.install(spark, s"$root/viewtk", "aggviewtk") { tmp =>
-      newView.coalesce(1).write.mode("overwrite").parquet(tmp)
-      writeGenInto(spark, tmp, batchId)
-    }
+    installView(spark, s"$root/viewtk", "aggviewtk", newView, batchId)
   }
 
   /** Fold one micro-batch into the log and the count/sum view.
@@ -528,6 +528,7 @@ object StreamingAggView {
           .write.mode("overwrite").partitionBy("ebkt").parquet(tmp)
         writeGenInto(spark, tmp, bound)
       }
+      ManifestSwap.reap(spark, s"$root/statecp")
     }
     // trim = fold the tail into a fresh base. The keys of batches at or
     // below the bound DROP (batch ids are checkpoint-monotonic and never
@@ -548,6 +549,7 @@ object StreamingAggView {
     ManifestSwap.installFold(spark, logDir, "aggviewlog", absorbed,
       keepLedger = _.stripPrefix("batch-").toLong > bound)(gen =>
       tail.write.mode("overwrite").parquet(gen))
+    ManifestSwap.reap(spark, logDir)
   }
 
   /** The current view (empty before the first fold). */

@@ -38,7 +38,8 @@ object StreamingScd2 {
 
   /** One maintenance step: rebuild the touched entities' histories
     * from (stored changes ∪ batch changes), pass untouched entities
-    * through, publish ([[ManifestSwap.install]]). `batch` columns:
+    * through, publish ([[ManifestSwap.install]]) and reap the
+    * superseded copies ([[ManifestSwap.reap]]). `batch` columns:
     * (invoice_id, change_version, change_operation). */
   private[graft] def applyBatch(spark: SparkSession, historyPath: String,
                                     batch: DataFrame): Unit = {
@@ -55,6 +56,7 @@ object StreamingScd2 {
       rebuilt.select(untouched.columns.toIndexedSeq.map(col): _*))
     ManifestSwap.install(spark, historyPath)(tmp =>
       next.write.mode("overwrite").parquet(tmp))
+    ManifestSwap.reap(spark, historyPath)
   }
 
   /** Launch continuous history maintenance over a change-table file —

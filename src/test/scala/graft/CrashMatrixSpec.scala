@@ -574,6 +574,53 @@ class CrashMatrixSpec extends SparkSpec {
     }
   }
 
+  test("concurrent healers: a committed-but-unpublished postings " +
+      "window survives 8 racing recover calls with ONE key commit") {
+    import graft.llm.SimSearch
+    val docs = Tables.documents(spark, sf)
+    val base = docs.filter($"doc_id" % 2 === 0)
+    val batch = docs.filter($"doc_id" % 2 === 1)
+    def postings(idx: String) = served(s"$idx/postings")
+      .select($"term", $"doc_id", $"tf")
+      .as[(String, Long, Long)].collect().toSet
+    def head(idx: String) = graft.streaming.ManifestSwap
+      .resolveRaw(spark, s"$idx/postings").map(_._1).getOrElse(-1L)
+    val clean = tmpDir("race-clean") + "/idx"
+    SimSearch.buildPostingsIndex(base, "doc_id", "text", clean)
+    SimSearch.appendPostingsIndex(batch, "doc_id", "text", clean)
+    // the exact window: df committed, postings key not yet published
+    val idx = tmpDir("race-idx") + "/idx"
+    SimSearch.buildPostingsIndex(base, "doc_id", "text", idx)
+    killAt("postingsdf", "afterCommit") {
+      SimSearch.appendPostingsIndex(batch, "doc_id", "text", idx)
+    }
+    val before = head(idx)
+    // every serving read heals first, so N readers arriving inside the
+    // window all race the same key: each lost CAS must re-read and find
+    // the winner's key, never commit it again or throw
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val tasks = (1 to 8).map { _ =>
+      pool.submit(new Runnable {
+        def run(): Unit = {
+          gate.await()
+          try SimSearch.recoverManifestPostings(spark, idx)
+          catch { case t: Throwable => errs.add(t) }
+        }
+      })
+    }
+    gate.countDown()
+    tasks.foreach(_.get())
+    pool.shutdown()
+    assert(errs.isEmpty,
+      s"racing postings healers threw: ${errs.toArray.mkString("; ")}")
+    assert(head(idx) == before + 1,
+      s"8 healers of one key made ${head(idx) - before} commits")
+    assert(postings(idx) == postings(clean),
+      "racing healers corrupted the published postings")
+  }
+
   test("staged append (bucketed vector layout): a kill at every " +
       "protocol window neither loses nor double-ingests the batch") {
     import graft.llm.SimSearch

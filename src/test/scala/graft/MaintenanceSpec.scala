@@ -331,10 +331,9 @@ class MaintenanceSpec extends SparkSpec {
     // must be invisible to it
     Maintenance.maintainChangeTable(spark, dir,
       watermark = 0L, compactUpTo = 3L, nFiles = 2)
-    // once the table carries a manifest, the producer appends through
-    // the table's keyed page append
-    Maintenance.appendChangePage(spark, dir, Seq((2L, 5L, "U"))
-      .toDF("entity_id", "change_version", "change_operation"))
+    Seq((2L, 5L, "U"))
+      .toDF("entity_id", "change_version", "change_operation")
+      .write.mode("append").parquet(dir)
     drain()
     val out = spark.read.parquet(sink)
       .select("entity_id", "change_version")
@@ -343,5 +342,64 @@ class MaintenanceSpec extends SparkSpec {
       (2L, 5L)),
       s"only the post-checkpoint version may arrive after compaction; " +
         s"got ${out.toSeq}")
+  }
+
+  test("a producer's plain append beside a folded change table is " +
+      "served, absorbed by the next window, and its files reaped after " +
+      "the grace") {
+    import spark.implicits._
+    val dir = tmpDir("minplace")
+    def page(rows: (Long, Long, String)*) =
+      rows.toDF("entity_id", "change_version", "change_operation")
+    def rows() = spark.read.parquet(served(dir): _*)
+      .select("entity_id", "change_version").as[(Long, Long)]
+      .collect().toSeq.sorted
+    // the graft-cdc source lists the table through its own catalog
+    def cdcRows() = spark.read.format("graft-cdc").option("path", dir)
+      .load().select("entity_id", "change_version").as[(Long, Long)]
+      .collect().toSeq.sorted
+    def rawFiles() = new java.io.File(dir).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(_.getName).toSet
+    def rawKeys() = graft.streaming.ManifestSwap.resolveRaw(spark, dir)
+      .map(_._2.keySet.filter(
+        _.startsWith(graft.streaming.ManifestSwap.RawPrefix)))
+      .getOrElse(Set.empty)
+
+    page((1L, 1L, "I"), (2L, 2L, "I")).write.mode("overwrite").parquet(dir)
+    val firstRaw = rawFiles()
+    // expire nothing, collapse nothing: the rows must pass unchanged
+    def window(): Unit = Maintenance.maintainChangeTable(spark, dir,
+      watermark = 0L, compactUpTo = 0L, nFiles = 1)
+    window()
+    val two = Seq((1L, 1L), (2L, 2L))
+    assert(rows() == two && cdcRows() == two)
+    // the fold records what it absorbed; the files stay on disk for
+    // readers that resolved the pre-fold snapshot
+    assert(rawFiles() == firstRaw && rawKeys().size == firstRaw.size,
+      s"absorbed files ${rawFiles()} vs recorded ${rawKeys()}")
+
+    page((3L, 3L, "I")).write.mode("append").parquet(dir)
+    val three = two :+ ((3L, 3L))
+    assert(rows() == three,
+      s"a plain append beside the manifest must be served, the absorbed " +
+        s"files not twice: ${rows()}")
+    assert(cdcRows() == three, s"graft-cdc catalog: ${cdcRows()}")
+
+    window()
+    assert(rows() == three && cdcRows() == three,
+      s"the next window must absorb the append exactly once: ${rows()}")
+    assert(rawKeys().size == rawFiles().size)
+
+    // once the grace has passed, gc deletes every absorbed file and
+    // forgets its key; the rows live on in the folded base
+    graft.streaming.ManifestSwap.gc(spark, dir, graceMs = 0L)
+    assert(rawFiles().isEmpty && rawKeys().isEmpty,
+      s"left after gc: files ${rawFiles()}, keys ${rawKeys()}")
+    assert(rows() == three && cdcRows() == three)
+
+    page((4L, 4L, "I")).write.mode("append").parquet(dir)
+    assert(rows() == three :+ ((4L, 4L)) && cdcRows() == rows(),
+      s"an append after the reap must be served: ${rows()}")
   }
 }

@@ -343,13 +343,13 @@ class ManifestSwapSpec extends SparkSpec {
       "committed entry") {
     val root = tmpDir("mswap-trim") + "/t"
     val n = 3 * ManifestSwap.TrimEvery + 5
-    ManifestSwap.trimGraceMs = 0L
+    ManifestSwap.housekeepingGraceMs = 0L
     try {
       (0 until n).foreach { i =>
         ManifestSwap.commitUpdate(spark, root, "t")(
           m => m + (s"app:k$i" -> "g"))
       }
-    } finally ManifestSwap.trimGraceMs = ManifestSwap.DefaultGraceMs
+    } finally ManifestSwap.housekeepingGraceMs = ManifestSwap.DefaultGraceMs
     val ptrs = lsNames(s"$root/_ptr").filter(_.endsWith(".mf"))
     assert(ptrs.size <= 2 * ManifestSwap.TrimEvery,
       s"pointer listing must stay bounded: ${ptrs.size} files after $n commits")

@@ -61,4 +61,28 @@ class StreamingMergeSpec extends SparkSpec {
     q2.awaitTermination(180000)
     assertStateEqualsSnapshot(state)
   }
+
+  test("the state root keeps a bounded number of generations however " +
+      "many batches it applies") {
+    import spark.implicits._
+    import graft.streaming.ManifestSwap
+    val state = tmpDir("smerge-gc") + "/state"
+    def gens() = Option(new java.io.File(s"$state/_gens").listFiles())
+      .map(_.length).getOrElse(0)
+    def batch(v: Long) = Seq((v % 3, v, "U"))
+      .toDF("invoice_id", "change_version", "change_operation")
+    // inside the gc grace every superseded copy stays for its readers
+    (1L to 3L).foreach(v => StreamingMerge.applyBatch(spark, state, batch(v)))
+    assert(gens() == 3, s"copies inside the grace: ${gens()}")
+    // past it, each batch reaps what it superseded
+    ManifestSwap.housekeepingGraceMs = 0L
+    try (4L to 9L).foreach { v =>
+      StreamingMerge.applyBatch(spark, state, batch(v))
+      assert(gens() <= 2, s"after batch $v: ${gens()} generations")
+    } finally ManifestSwap.housekeepingGraceMs = ManifestSwap.DefaultGraceMs
+    val got = StreamingMerge.stateTable(spark, state)
+      .select("invoice_id", "change_version").as[(Long, Long)]
+      .collect().toSeq.sorted
+    assert(got == Seq((0L, 9L), (1L, 7L), (2L, 8L)), s"state: $got")
+  }
 }
