@@ -85,13 +85,25 @@ object InvoiceCdc {
     * Integer-safe fields so the JSON text is byte-identical across engines:
     * qty is integral in the testdata; price is carried as cents. */
   def nestedLines(li: DataFrame): DataFrame =
+    lineArrays(li).select(col("invoice_id"), renderLines(col("lines")).as("lines"))
+
+  /** The lines of each invoice as a sorted `array<struct>`: the document
+    * fields of [[nestedLines]] in its sort order, plus the raw
+    * `l_quantity`, which the materialized view rounds where the document
+    * truncates. It only breaks ties the document fields leave, so the
+    * order of the rendered fields is [[nestedLines]]' order. */
+  private def lineArrays(li: DataFrame): DataFrame =
     li.groupBy(col("l_orderkey").as("invoice_id"))
-      .agg(to_json(sort_array(collect_list(struct(
+      .agg(sort_array(collect_list(struct(
         col("l_linenumber").cast("long").as("line_no"),
         col("l_partkey").as("part_key"),
         col("l_quantity").cast("long").as("qty"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents")
-      )))).as("lines"))
+        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
+        col("l_quantity")))).as("lines"))
+
+  /** The JSON text of a [[lineArrays]] array: the document fields only. */
+  private def renderLines(lines: Column): Column =
+    to_json(transform(lines, _.dropFields("l_quantity")))
 
   /** The document projection shared by the single-plan page query and
     * the serving path — ONE definition, so the two can never drift from
@@ -183,8 +195,8 @@ object InvoiceCdc {
   }
 
   /** The columns of the current-state index, one row per invoice id. */
-  private val stateColumns =
-    Seq("invoice_id", "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice", "lines")
+  private val stateColumns = Seq("invoice_id", "o_orderkey", "o_custkey", "o_orderdate",
+    "o_orderstatus", "o_totalprice", "lines")
 
   /** The current-state index of every (SparkContext, dir). */
   private val stateIndexes = new SnapshotRegistry[DataFrame](_.unpersist())
@@ -198,20 +210,22 @@ object InvoiceCdc {
   private val buildMs = ThreadLocal.withInitial[Long](() => 0L)
 
   /** The persisted current-state index of `dir` for the session's
-    * SparkContext: `invoice_id`, the header columns and nested `lines`,
-    * one row per id that has a header, lines or both, plus the build tag.
+    * SparkContext: `invoice_id`, the header columns and the sorted
+    * `lines` array ([[lineArrays]]), one row per id that has a header,
+    * lines or both, plus the build tag. Document paths render `lines`
+    * as JSON after their join, so only the page's rows pay it.
     * Entries of a stopped SparkContext are dropped, never served. */
   private[graft] def stateIndex(spark: SparkSession, dir: String): DataFrame =
     stateIndexes.current(spark, dir) {
       val t0 = System.nanoTime()
       val hdr = Tables.orders(spark, dir)
-      val lines = nestedLines(Tables.lineitem(spark, dir))
+      val lines = lineArrays(Tables.lineitem(spark, dir))
       val joined = hdr.join(lines, hdr("o_orderkey") === lines("invoice_id"), "full_outer")
       val rows = SnapshotSlot.materialize(joined
         .select(
           coalesce(hdr("o_orderkey"), lines("invoice_id")).cast("long").as("invoice_id"),
-          col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_totalprice"),
-          col("lines"), lit(stateBuilds.incrementAndGet()).as("state_build"))
+          col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_orderstatus"),
+          col("o_totalprice"), col("lines"), lit(stateBuilds.incrementAndGet()).as("state_build"))
         .repartition(spark.sparkContext.defaultParallelism, col("invoice_id")))
       buildMs.set(buildMs.get + (System.nanoTime() - t0) / 1000000L)
       (rows, FeedSnapshot.of(joined))
@@ -219,6 +233,11 @@ object InvoiceCdc {
 
   private def stateRows(spark: SparkSession, dir: String): DataFrame =
     stateIndex(spark, dir).select(stateColumns.map(col): _*)
+
+  /** The current state of every id that has a header — the inner join
+    * on `orders` — with `lines` still the sorted array. */
+  private[graft] def headerRows(spark: SparkSession, dir: String): DataFrame =
+    stateRows(spark, dir).filter(col("o_orderkey").isNotNull)
 
   /** `body`'s result and the milliseconds the calling thread spent in it
     * building state indexes (0 when every lookup was a hit) — how a
@@ -239,9 +258,8 @@ object InvoiceCdc {
     * rehydration join on `orders`. The page is broadcast and read once;
     * the cached index streams past it. */
   private[graft] def withHeaders(spark: SparkSession, dir: String, page: DataFrame): DataFrame =
-    broadcast(page).join(
-      stateRows(spark, dir).filter(col("o_orderkey").isNotNull),
-      Seq("invoice_id"))
+    broadcast(page).join(headerRows(spark, dir), Seq("invoice_id"))
+      .withColumn("lines", renderLines(col("lines")))
 
   /** Every row of a bounded `page` keyed by `invoice_id` with the current
     * state of its id, null where the id has none: a left join, so an id
@@ -253,6 +271,7 @@ object InvoiceCdc {
     val hit = stateRows(spark, dir)
       .join(broadcast(page.select(col("invoice_id"))), Seq("invoice_id"), "left_semi")
     page.join(broadcast(hit), Seq("invoice_id"), "left")
+      .withColumn("lines", renderLines(col("lines")))
   }
 
   /** S3/A4 — snapshot bound: CHANGE_TRACKING_CURRENT_VERSION().

@@ -200,10 +200,9 @@ object Maintenance {
     * run hours; the 15-minute default fits serving-sized tables, not
     * that). Superseded generations cost storage until the grace
     * elapses, never correctness — err long. gc logs loudly when it
-    * reaps under a sub-default grace. The rewrite sites themselves
-    * reap under the 15-minute default ([[ManifestSwap.reap]]), so a
-    * longer grace here protects a table only while no rewrite site
-    * runs on it. */
+    * reaps under a sub-default grace. The window records the grace in
+    * the table's manifest ([[ManifestSwap.recordGrace]]), so the
+    * table's rewrite sites ([[ManifestSwap.reap]]) keep it too. */
   case class ManifestGc(root: String,
                         graceMs: Long =
                           ManifestSwap.DefaultGraceMs,
@@ -245,8 +244,10 @@ object Maintenance {
       graft.streaming.StreamingAggView.compactLog(spark, _))
     // manifest-published roots: reap superseded/orphan generations
     // under each table's own grace (see [[ManifestGc]]'s sizing rule)
-    manifestGcs.foreach(g => ManifestSwap.gc(
-      spark, g.root, g.keepManifests, g.graceMs))
+    manifestGcs.foreach { g =>
+      ManifestSwap.recordGrace(spark, g.root, g.graceMs)
+      ManifestSwap.gc(spark, g.root, g.keepManifests, g.graceMs)
+    }
     // through the Hadoop FileSystem like every other path here — a
     // java.io walk would silently report 0 on hdfs://-style stores
     def filesUnder(dir: String, suffix: String): Long = {

@@ -1,168 +1,148 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import org.apache.spark.sql.types._
+import graft.cdc.InvoiceCdc
 import graft.streaming.ManifestSwap
 
 /** Incrementally-maintained materialization of the denormalized BI view
   * (vw_invoice_header_line) — the Superset serving layer kept fresh from
   * the changefeed instead of rebuilt.
   *
-  * Layout: a [[ManifestSwap]] root whose manifest holds one
-  * `bucket=N -> generation-relative dir` entry per bucket of
-  * `pmod(invoice_id, nBuckets)`. A change page touches a bounded set of
-  * invoices → a bounded set of buckets; `refresh` recomputes ONLY those
-  * buckets (join reduced by the bucket predicate — honest note: that
-  * prunes ROWS, not IO, since `pmod(invoice_id)` is no partition
-  * column of the base tables; at deployment scale the recompute side
-  * reads a bucket-aligned state layout
-  * ([[graft.plans.StateLayout]]-style) so touched-bucket IO is pruned
-  * too), writes them into ONE fresh generation and CAS-commits the
-  * bucket→dir map. At 100 TB a poll-page refresh REWRITES O(page)
-  * buckets while the other ~nBuckets keep serving their old
-  * generations — write cost proportional to the change rate, not the
-  * view size.
+  * Layout: a [[ManifestSwap]] root whose manifest maps each bucket of
+  * `pmod(invoice_id, nBuckets)` to the generation holding its rows
+  * (`bucket=N -> <gen>/n=<k>`, `k` the number of buckets that generation
+  * was written with). A change page touches a bounded set of invoices →
+  * a bounded set of buckets; `refresh` recomputes ONLY those buckets from
+  * the current-state index ([[InvoiceCdc.headerRows]], each invoice's
+  * sorted lines inlined), writes them as ONE generation of at most the
+  * index's partition count in files, and CAS-commits the bucket map.
+  * The present buckets come from an [[Observation]] on that write. At
+  * 100 TB a page refresh rewrites O(page) buckets while the others keep
+  * serving their old generations.
   *
   * The whole page cuts over in ONE atomic pointer commit: a reader can
   * never observe a half-refreshed page, a crash leaves only an
   * invisible orphan generation (no heal step), and the protocol is
-  * sound on object stores. Dynamic partition overwrite would not do:
-  * Spark's committer DELETES each touched partition directory before
-  * moving the new files in, so a reader that planned against the old
-  * files loses its inputs, and a crash inside the commit leaves NO
-  * copy of the bucket.
+  * sound on object stores.
+  *
+  * A read scans the distinct generations the manifest references with
+  * the declared [[MaterializedView.Schema]], filtering a generation by
+  * bucket only when a later refresh superseded some of its buckets. A
+  * refresh keeps that count within Spark's parallel-listing threshold —
+  * past it, the oldest generation's buckets join the refresh — so a
+  * read lists its files on the driver, never in a job.
   *
   * `protocol` names the publish protocol and accepts only "manifest",
   * the one protocol there is; it remains a parameter because callers
-  * written when a rename protocol also existed pass it by name. */
+  * written when a rename protocol also existed pass it by name.
+  * `gcGraceMs` is the table's gc grace, recorded in its manifest
+  * ([[ManifestSwap.GraceKey]]). */
 class MaterializedView(spark: SparkSession, dir: String, path: String,
                        nBuckets: Int = 64, protocol: String = "manifest",
                        gcGraceMs: Long = ManifestSwap.DefaultGraceMs) {
+  import MaterializedView._
   require(protocol == "manifest",
     s"unknown mview protocol '$protocol' (only \"manifest\" exists)")
 
-  private def fs = new Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def bucketOf(id: Column): Column = pmod(id, lit(nBuckets.toLong)).cast("int")
 
-  private def flatView(onlyBuckets: Option[Seq[Int]]): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val li = Tables.lineitem(spark, dir)
-    val base = o.join(li, o("o_orderkey") === li("l_orderkey"), "inner")
-      .select(
-        col("o_orderkey").as("invoice_id"),
-        col("o_custkey").as("customer_key"),
-        col("o_orderdate").as("invoice_date"),
-        col("o_orderstatus").as("status"),
-        col("l_linenumber").as("line_no"),
-        col("l_partkey").as("part_key"),
-        round(col("l_quantity")).cast("long").as("qty"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
-      .withColumn("bucket", pmod(col("invoice_id"), lit(nBuckets.toLong)))
-    // r16: co-locate each bucket in ONE task before the partitioned
-    // write — one file per bucket dir (the scan planned 3 input
-    // splits, so every bucket dir got 3 tiny files and the parquet
-    // encode ran 3-wide); the explicit partition count keeps AQE from
-    // coalescing the tiny-at-sf0.1 exchange back into one writer.
-    // nBuckets is the layout-time "one bucket ≈ one task" knob (class
-    // doc), so this is the §6 file-sizing shape at any scale.
-    val out = onlyBuckets.fold(base)(bs =>
-      base.filter(col("bucket").isInCollection(bs)))
-    out.repartition(nBuckets, col("bucket"))
+  /** The view rows of `buckets` (every bucket when None): each id with a
+    * header in the current-state index, one row per line. */
+  private def flatView(buckets: Option[Seq[Int]]): DataFrame = {
+    val state = InvoiceCdc.headerRows(spark, dir)
+    val cols = Seq(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+      col("o_orderstatus"), col("line_no"), col("part_key"), round(col("l_quantity")),
+      col("price_cents"), bucketOf(col("o_orderkey")))
+    buckets.fold(state)(bs => state.filter(bucketOf(col("invoice_id")).isin(bs: _*)))
+      .select(col("*"), inline(col("lines")))
+      .select(Schema.fields.toSeq.zip(cols).map { case (f, c) => c.cast(f.dataType).as(f.name) }: _*)
+  }
+
+  /** The generations manifest `m` serves: each one's served buckets and
+    * the number of buckets it was written with. */
+  private def generations(m: Map[String, String]): Map[String, (Seq[Int], Int)] =
+    m.toSeq.collect { case (k, v) if k.startsWith("bucket=") =>
+      val Array(gen, n) = v.split("/")
+      (gen, k.stripPrefix("bucket=").toInt, n.stripPrefix("n=").toInt)
+    }.groupBy(_._1).map { case (g, es) => g -> (es.map(_._2).sorted, es.head._3) }
+
+  /** `buckets` plus, when the generations a read would resolve after the
+    * refresh exceed Spark's listing threshold, the buckets of the oldest
+    * generations over it. */
+  private def withOldest(m: Map[String, String], buckets: Seq[Int]): Seq[Int] = {
+    val threshold = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32").toInt
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val kept = generations(m).map { case (g, (bs, _)) => g -> bs.filterNot(buckets.contains) }
+      .filter(_._2.nonEmpty)
+    val excess = kept.size + 1 - threshold
+    if (excess <= 0) buckets
+    else buckets ++ kept.keys.toSeq.sortBy(g => fs.getFileStatus(new Path(
+      ManifestSwap.entryPath(path, g), ManifestSwap.GenStartMarker)).getModificationTime)
+      .take(excess).flatMap(kept)
+  }
+
+  /** Write the rows of `buckets` (every bucket when None) as ONE fresh
+    * generation, then CAS-merge the bucket map: present buckets point at
+    * it, recomputed-empty ones leave the map (atomic with the installs,
+    * so an emptied bucket never serves its dead rows), the rest keep
+    * serving their old generations. Superseded generations are reaped
+    * under the table's grace — a reader mid-scan on the old snapshot
+    * never loses its files. */
+  private def publish(buckets: Option[Seq[Int]]): Unit = {
+    val touched = buckets.map(withOldest(
+      ManifestSwap.resolveRaw(spark, path).map(_._2).getOrElse(Map.empty), _))
+    val written = Observation()
+    ManifestSwap.publish(spark, path, "mview") { genDir =>
+      flatView(touched).observe(written, collect_set(col("bucket")).as("buckets"))
+        .write.mode(SaveMode.Append).parquet(genDir) // keeps the generation's start marker
+    } { (gen, m) =>
+      val present = written.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSet
+      val drops = touched.getOrElse(0 until nBuckets).filterNot(present)
+      val adds = present.map(b => s"bucket=$b" -> s"$gen/n=${present.size}")
+      ManifestSwap.withGrace(m -- drops.map(b => s"bucket=$b") ++ adds, gcGraceMs)
+    }
+    ManifestSwap.gc(spark, path, graceMs = gcGraceMs)
+    ()
   }
 
   /** Full build — done once; later refreshes are incremental. Published
     * the same way a refresh is (one generation + one pointer commit). */
-  def build(): Unit =
-    publish(flatView(None), removeAbsent = true)
-
-  /** The publish shared by build and refresh: write the recomputed
-    * buckets into ONE fresh generation (partitioned by a `bucket_part`
-    * twin column so the real `bucket` column stays in the data files —
-    * resolved generation dirs are read WITHOUT partition discovery),
-    * then CAS-merge the bucket→dir map: touched present buckets point
-    * into the new generation, recomputed-empty buckets leave the map
-    * (atomic with the installs, so an emptied bucket never serves its
-    * dead rows), untouched buckets keep serving their old generations.
-    * Superseded/orphan generations are reaped by [[ManifestSwap.gc]]
-    * after the commit — age-graced, so a reader mid-scan on the old
-    * snapshot never loses its files. */
-  private def publish(out: DataFrame, removeAbsent: Boolean,
-                      touched: Seq[Int] = Nil): Unit = {
-    var present = Set.empty[Int]
-    ManifestSwap.publish(spark, path, "mview") { genDir =>
-      // r16 (verdict #4): the present-bucket set used to come from a
-      // cache() + distinct().collect() BEFORE the write — a full extra
-      // materialization of the view (measured 2.9 s of the 6 s cold
-      // build at sf0.1). The partitioned write itself publishes exactly
-      // one `bucket_part=N` dir per present bucket, so ONE pass writes
-      // the generation and the present set is one listing of it
-      // (a row-less bucket writes no dir, the same emptiness the
-      // distinct saw).
-      out.withColumn("bucket_part", col("bucket"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket_part").parquet(genDir)
-      present = fs.listStatus(new Path(genDir))
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("bucket_part=") =>
-          n.stripPrefix("bucket_part=").toInt }
-        .toSet
-    } { (gen, m) =>
-      val adds = present.toSeq.sorted
-        .map(b => s"bucket=$b" -> s"$gen/bucket_part=$b")
-      val drops =
-        if (removeAbsent) (0 until nBuckets).filterNot(present)
-        else touched.filterNot(present)
-      m -- drops.map(b => s"bucket=$b") ++ adds
-    }
-    // per-table grace (round-13 verdict #2): size it above the
-    // longest plausible scan of one committed snapshot — a reader
-    // that resolved at T keeps its files until T + gcGraceMs
-    ManifestSwap.gc(spark, path, graceMs = gcGraceMs)
-    ()
-  }
+  def build(): Unit = publish(None)
 
   /** Incremental refresh from a change page: recompute and publish only
     * the buckets containing changed invoices, in one commit. A bucket
     * whose recompute came back empty (its last invoice was deleted)
     * leaves the manifest in the same commit. */
-  def refresh(changedInvoiceIds: Seq[Long]): Unit = {
-    if (changedInvoiceIds.isEmpty) return
-    val buckets = changedInvoiceIds
-      .map(id => (((id % nBuckets) + nBuckets) % nBuckets).toInt).distinct
-    publish(flatView(Some(buckets)), removeAbsent = false,
-      touched = buckets)
-  }
+  def refresh(changedInvoiceIds: Seq[Long]): Unit =
+    if (changedInvoiceIds.nonEmpty)
+      publish(Some(changedInvoiceIds
+        .map(id => (((id % nBuckets) + nBuckets) % nBuckets).toInt).distinct))
 
   /** Serving read: resolve ONE committed snapshot and read exactly its
-    * generation dirs — an atomic view of the last whole refresh page. */
+    * generations — an atomic view of the last whole refresh page. */
   def read(): DataFrame = {
-    val dirs = ManifestSwap.resolveRaw(spark, path)
-      .map(_._2.toSeq.sortBy(_._1)
-        .map { case (_, rel) => ManifestSwap.entryPath(path, rel) })
-      .getOrElse(Seq.empty)
-    if (dirs.isEmpty) {
-      val schema = org.apache.spark.sql.types.StructType(
-        flatView(None).schema.map(f =>
-          if (f.name == "bucket")
-            f.copy(dataType = org.apache.spark.sql.types.IntegerType)
-          else f))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else
-      // generation dirs carry `bucket` IN the data files (the
-      // bucket_part twin was the partition column); `bucket` reads as
-      // int, the type partition discovery gave the bucket dirs
-      spark.read.parquet(dirs: _*)
-        .withColumn("bucket", col("bucket").cast("int"))
-        .select(MaterializedView.Columns.map(col): _*)
+    val gens = generations(ManifestSwap.resolveRaw(spark, path).map(_._2).getOrElse(Map.empty))
+    val (whole, partial) = gens.partition { case (_, (bs, n)) => bs.size == n }
+    def scan(gs: Iterable[String]) =
+      spark.read.schema(Schema).parquet(gs.toSeq.sorted.map(ManifestSwap.entryPath(path, _)): _*)
+    val scans = (if (whole.isEmpty) Nil else Seq(scan(whole.keys))) ++
+      partial.toSeq.map { case (g, (bs, _)) => scan(Seq(g)).filter(col("bucket").isin(bs: _*)) }
+    scans.reduceOption(_ unionByName _).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schema))
   }
 }
 
 object MaterializedView {
-  /** The view's columns in `flatView`'s order: a read names them without
-    * planning `flatView`, whose two table reads each infer a schema. */
-  private val Columns = Seq("invoice_id", "customer_key", "invoice_date", "status",
-    "line_no", "part_key", "qty", "price_cents", "bucket")
+  /** The view's declared columns: every generation is written with them
+    * and read with them, so a read infers no schema. */
+  val Schema: StructType = StructType(Seq(
+    StructField("invoice_id", LongType), StructField("customer_key", LongType),
+    StructField("invoice_date", TimestampNTZType), StructField("status", StringType),
+    StructField("line_no", IntegerType), StructField("part_key", LongType),
+    StructField("qty", LongType), StructField("price_cents", LongType),
+    StructField("bucket", IntegerType)))
 }

@@ -391,7 +391,7 @@ private[graft] object ManifestSwap {
         // history preference.
         if (next > 0 && next % TrimEvery == 0)
           trimPtrs(fs, path, keepManifests = TrimEvery,
-            graceMs = housekeepingGraceMs)
+            graceMs = graceOf(merged, housekeepingGraceMs))
         return merged
       }
       attempts += 1
@@ -418,15 +418,17 @@ private[graft] object ManifestSwap {
   }
 
   /** Write one immutable generation via `write(genDir)` and commit it
-    * as the whole snapshot, dropping every other key but the
-    * in-place records ([[RawPrefix]], [[InPlaceKey]]: absorbed
-    * in-place files must stay hidden until [[gc]] deletes them).
+    * as the whole snapshot, dropping every other key but the table's
+    * recorded grace ([[GraceKey]]) and the in-place records
+    * ([[RawPrefix]], [[InPlaceKey]]: absorbed in-place files must stay
+    * hidden until [[gc]] deletes them).
     * Concurrent installs converge: last committed pointer wins, and
     * every committed pointer names a COMPLETE generation. */
   def install(spark: SparkSession, path: String, tag: String = "merge")
              (write: String => Unit): Unit = {
     publish(spark, path, tag)(write)((gen, m) =>
-      m.filter { case (k, _) => k == InPlaceKey || k.startsWith(RawPrefix) } +
+      m.filter { case (k, _) =>
+        k == InPlaceKey || k == GraceKey || k.startsWith(RawPrefix) } +
         (DataKey -> gen))
     ()
   }
@@ -540,9 +542,10 @@ private[graft] object ManifestSwap {
     * appender retried with the same content-derived key converges
     * because the commit and the ledger line are ONE atomic pointer
     * write. Concurrent readers resolve either the pre-append or the
-    * post-append manifest, never a partial batch. */
+    * post-append manifest, never a partial batch. Returns the data dir
+    * that serves the key's batch, or None once a fold absorbed it. */
   def appendKeyed(spark: SparkSession, path: String, tag: String,
-                  key: String)(write: String => Unit): Unit = {
+                  key: String)(write: String => Unit): Option[String] = {
     // IN-PLACE GUARD: appending a manifest entry into a root that holds
     // raw in-place data (a producer-written table) without a COMMITTED
     // manifest would publish a manifest listing ONLY the new batch —
@@ -563,10 +566,10 @@ private[graft] object ManifestSwap {
           "SimSearch.writeBucketed, Pq.writeIvfPq and the like) before " +
           "it takes appends.")
     val full = AppPrefix + key
-    if (resolveRaw(spark, path).exists(_._2.contains(full))) return
-    publish(spark, path, tag)(write)((gen, m) =>
-      if (m.contains(full)) m else m + (full -> gen))
-    ()
+    val m = resolveRaw(spark, path).map(_._2).filter(_.contains(full)).getOrElse(
+      publish(spark, path, tag)(write)((gen, m) =>
+        if (m.contains(full)) m else m + (full -> gen)))
+    m.get(full).filter(_ != FoldedVal).map(entryPath(path, _))
   }
 
   /** The applied-batch keys of the current manifest (committed data
@@ -676,6 +679,34 @@ private[graft] object ManifestSwap {
     * to exercise deletion without waiting out a 15-minute window. */
   @volatile private[graft] var housekeepingGraceMs: Long = DefaultGraceMs
 
+  /** Manifest key recording a table's own gc grace in milliseconds,
+    * for tables whose scans may outlast [[DefaultGraceMs]]: every gc of
+    * the root — [[reap]] at its rewrite sites, the commit-time trim,
+    * [[gc]] itself — keeps the larger of it and the caller's grace.
+    * [[install]] carries it forward like the in-place records. */
+  private[graft] val GraceKey = "grace-ms"
+
+  /** The larger of `graceMs` and the grace manifest `m` records. */
+  private def graceOf(m: Map[String, String], graceMs: Long): Long =
+    m.get(GraceKey).map(v => math.max(v.toLong, graceMs)).getOrElse(graceMs)
+
+  /** The manifest update that records `graceMs` as a table's grace. A
+    * grace no longer than the default is recorded as no key: the
+    * housekeeping grace already covers it. */
+  private[graft] def withGrace(m: Map[String, String],
+                               graceMs: Long): Map[String, String] =
+    if (graceMs <= DefaultGraceMs) m - GraceKey
+    else m + (GraceKey -> graceMs.toString)
+
+  /** Record `graceMs` as the grace of the committed root at `path`; a
+    * root with no committed manifest is left alone (a commit there
+    * would hide its in-place data). */
+  def recordGrace(spark: SparkSession, path: String, graceMs: Long): Unit =
+    if (hasCommittedFs(fsOf(spark, path), path)) {
+      commitUpdate(spark, path, "grace")(withGrace(_, graceMs))
+      ()
+    }
+
   /** [[gc]] under the housekeeping grace, run by every rewrite site
     * right after its commit: each install supersedes a whole copy of
     * its table, and a per-batch maintainer would otherwise keep one
@@ -759,6 +790,9 @@ private[graft] object ManifestSwap {
     * n' > n has mtime > T; gc deletes n's generations only once some
     * n' > n has mtime ≤ now − graceMs, hence now ≥ T + graceMs.
     *
+    * The grace used is the larger of `graceMs` and the one the newest
+    * manifest records ([[GraceKey]]).
+    *
     * Never-committed ORPHANS (crashed writers) have no supersession
     * event; they age by the NEWEST OBJECT mtime under the generation
     * (the [[GenStartMarker]] minted with it, or any staged data file)
@@ -778,7 +812,7 @@ private[graft] object ManifestSwap {
     * a superseded manifest file never strands a reader mid-scan).
     * Returns generation directories deleted. */
   def gc(spark: SparkSession, path: String, keepManifests: Int = 2,
-         graceMs: Long = 15 * 60 * 1000L): Int = {
+         graceMs: Long = DefaultGraceMs): Int = {
     require(keepManifests >= 1, "gc must keep at least the current manifest")
     val fs = fsOf(spark, path)
     val pd = ptrDir(path)
@@ -791,11 +825,12 @@ private[graft] object ManifestSwap {
       }
     }.sortBy(-_._1)
     if (manifests.isEmpty) return 0
+    val grace = graceOf(parsePayload(readFully(fs, manifests.head._2.getPath)), graceMs)
     val now = System.currentTimeMillis()
     // newest manifest older than the grace: the max at the horizon.
     // None ⇒ every manifest is young ⇒ protect them all
     val mStar: Option[Long] = manifests
-      .find { case (_, st) => now - st.getModificationTime >= graceMs }
+      .find { case (_, st) => now - st.getModificationTime >= grace }
       .map(_._1)
     val protectedM = manifests.filter { case (n, _) =>
       mStar.forall(n >= _)
@@ -846,19 +881,19 @@ private[graft] object ManifestSwap {
     var deleted = 0
     fs.listStatus(gr).foreach { st =>
       if (!live.contains(st.getPath.getName) &&
-          now - newestObjectMtime(st.getPath) >= graceMs) {
+          now - newestObjectMtime(st.getPath) >= grace) {
         fs.delete(st.getPath, true)
         deleted += 1
       }
     }
-    if (deleted > 0 && graceMs < DefaultGraceMs)
+    if (deleted > 0 && grace < DefaultGraceMs)
       System.err.println(
         s"graft manifest gc: reaped $deleted generation(s) at $path " +
-          s"under a SUB-DEFAULT grace (${graceMs}ms < ${DefaultGraceMs}ms) " +
+          s"under a SUB-DEFAULT grace (${grace}ms < ${DefaultGraceMs}ms) " +
           "— the reader guarantee only covers scans shorter than the " +
           "grace; make sure no scan of this table runs longer")
     // manifest FILES (and aged commit-crash tmps) — the shared rule
-    trimPtrs(fs, path, keepManifests, graceMs)
+    trimPtrs(fs, path, keepManifests, grace)
     deleted
   }
 }

@@ -14,7 +14,8 @@ import graft.cdc.{AggView, Merge}
   *
   * Layout under `root`:
   *  - `log/` — the change LOG, one keyed [[ManifestSwap]] generation
-  *    per micro-batch (`batch_id` rides in the data; never rewritten —
+  *    per micro-batch, which the batch's folds read the page back from
+  *    (`batch_id` rides in the data; never rewritten —
   *    [[graft.cdc.Maintenance]]'s log-compaction pattern bounds it in
   *    steady state);
   *  - `statecp/ebkt=K/` — the COMPACTED per-entity state checkpoint,
@@ -217,27 +218,36 @@ object StreamingAggView {
       priorState(spark, root, Some(page), batchId)
     lazy val newLive: DataFrame = Merge.mergeUpsert(touched0, page)
     def snapFull(): DataFrame = priorState(spark, root, None, batchId)
+    private var staged: DataFrame = null
+    /** The batch's signed (grp, measure, w) contribution delta, looked
+      * up in `sfDir`'s current-state index and staged once — at most
+      * two rows per page row, in one partition — for every view fold
+      * of the batch. */
+    def delta(sfDir: String): DataFrame = {
+      if (staged == null)
+        staged = AggView.signedDelta(
+          AggView.contributions(spark, sfDir, touched0),
+          AggView.contributions(spark, sfDir, newLive))
+          .coalesce(1).localCheckpoint(true)
+      staged
+    }
   }
 
   private def appendAndDerive(spark: SparkSession, root: String,
                               batch: DataFrame, batchId: Long): BatchState = {
-    val logDir = s"$root/log"
-    // r16: the log generation IS the page's materialization — the
-    // collapse runs once inside the append write, and every fold reads
-    // the page back from the just-committed log generation instead of a
-    // separate localCheckpoint (one fewer eager action per batch; the
-    // read-back is the same bytes the replay path would see, so
-    // redelivery semantics are unchanged by construction)
-    val collapsed = collapse(batch)
-    // each batch is one keyed generation — the key makes redelivery a
+    // the log generation IS the page's materialization: the collapse
+    // runs once inside the append write, and every fold reads the page
+    // back from that generation (the same bytes a replay would see).
+    // Each batch is one keyed generation — the key makes redelivery a
     // structural no-op
-    ManifestSwap.appendKeyed(spark, logDir, "aggviewlog",
+    val gen = ManifestSwap.appendKeyed(spark, s"$root/log", "aggviewlog",
       s"batch-$batchId") { gen =>
-      collapsed.withColumn("batch_id", lit(batchId))
+      collapse(batch).withColumn("batch_id", lit(batchId))
         .write.mode("overwrite").parquet(gen)
     }
-    val page = readLog(spark, root)
-      .filter(col("batch_id") === batchId)
+    // a batch a log trim already absorbed lives on in the folded base
+    val page = gen.fold(readLog(spark, root).filter(col("batch_id") === batchId))(
+      spark.read.schema(logSchema).parquet(_))
       .select("invoice_id", "change_version", "change_operation")
     new BatchState(page, spark, root, batchId)
   }
@@ -246,34 +256,35 @@ object StreamingAggView {
                            st: BatchState, batchId: Long): Unit = {
     if (viewGen(spark, root) >= batchId) return
     val oldView = ManifestSwap.readOrEmpty(spark, s"$root/view", viewSchema)
-    // r16: no checkpoint — newView's one consumer is the install
-    // write below (the old view generation is immutable, so laziness is
-    // crash-equivalent); an
-    // eager stage here was one more driver action per batch, and the
-    // per-batch action count IS the streaming cold cost at small SFs
-    val newView = AggView.applyDelta(oldView,
-      AggView.contributions(spark, sfDir, st.touched0),
-      AggView.contributions(spark, sfDir, st.newLive))
-    installView(spark, s"$root/view", "aggview", newView, batchId)
+    // no checkpoint: newView's one consumer is the install write (the
+    // old view generation is immutable, so laziness is crash-equivalent)
+    installView(spark, s"$root/view", "aggview",
+      AggView.foldDelta(oldView, st.delta(sfDir)), batchId)
   }
 
-  /** The min/max fold: its own generation-stamped view. The rescan
-    * branch recomputes dirty groups from (snap0 minus touched) ∪
-    * newLive — the v1 state derived from the log, no extra pass. */
+  /** Min/max folds that rescanned dirty groups in this JVM. */
+  private[graft] val minMaxRescans = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The min/max fold: its own generation-stamped view. The dirty groups
+    * are collected first (at most one row per group); only when some
+    * group is dirty does the fold rescan them, from the v1 state derived
+    * from the log — (prior snapshot minus the page) ∪ newLive — looked
+    * up in the current-state index. */
   private def foldMinMax(spark: SparkSession, sfDir: String, root: String,
                          st: BatchState, batchId: Long): Unit = {
     if (viewGen(spark, root, "viewmm") >= batchId) return
-    val snap1 = st.snapFull().join(st.page.select("invoice_id"),
-      Seq("invoice_id"), "left_anti").unionByName(st.newLive)
     val oldView = ManifestSwap.readOrEmpty(spark, s"$root/viewmm",
       minMaxSchema)
-    // r16: no checkpoint — single consumer (see foldCountSum)
-    val newView = AggView.applyMinMaxDelta(oldView,
-      AggView.contributions(spark, sfDir, st.touched0),
-      AggView.contributions(spark, sfDir, st.newLive),
-      groups => AggView.viewMinMax(
-        AggView.contributions(spark, sfDir, snap1)
-          .join(groups, Seq("grp"), "left_semi")))
+    val delta = st.delta(sfDir)
+    val dirty = AggView.dirtyGroups(oldView, delta)
+    val newView = AggView.foldMinMax(oldView, delta, dirty) {
+      minMaxRescans.incrementAndGet()
+      val snap1 = st.snapFull().join(st.page.select("invoice_id"),
+        Seq("invoice_id"), "left_anti").unionByName(st.newLive)
+      // the group filter reaches the index scan below the join
+      AggView.viewMinMax(AggView.contributions(spark, sfDir, snap1)
+        .filter(col("grp").isin(dirty: _*)))
+    }
     installView(spark, s"$root/viewmm", "aggviewmm", newView, batchId)
   }
 
@@ -395,7 +406,8 @@ object StreamingAggView {
 
   /** Fold one micro-batch into the log and the count/sum view.
     * Idempotent for any redelivery pattern (see object doc). `sfDir`
-    * locates the dimension side of the contribution join (orders). */
+    * locates the tables whose current-state index gives each id's
+    * contribution. */
   def applyBatch(spark: SparkSession, sfDir: String, root: String,
                  batch: DataFrame, batchId: Long): Unit =
     foldCountSum(spark, sfDir, root,

@@ -16,15 +16,12 @@ class MaterializedViewSpec extends SparkSpec {
     val expectedCount = Tables.lineitem(spark, sf).count()
     assert(full.count() == expectedCount)
 
-    // corrupt two buckets to simulate staleness, then refresh exactly them
+    // point two buckets at an empty generation to simulate staleness,
+    // then refresh exactly them
     val victims = Seq(3L, 7L)
-    val served = graft.streaming.ManifestSwap.resolveRaw(spark, path).get._2
-    victims.foreach { b =>
-      val d = new java.io.File(new org.apache.hadoop.fs.Path(
-        graft.streaming.ManifestSwap.entryPath(path, served(s"bucket=$b")))
-        .toUri.getPath)
-      d.listFiles().foreach(_.delete())
-    }
+    val (empty, _) = graft.streaming.ManifestSwap.newGeneration(spark, path)
+    graft.streaming.ManifestSwap.commitUpdate(spark, path, "stale")(
+      _ ++ victims.map(b => s"bucket=$b" -> s"$empty/n=${victims.size}"))
     assert(mv.read().count() < expectedCount, "staleness simulated")
 
     // invoices whose ids map to the victim buckets
@@ -72,8 +69,10 @@ class MaterializedViewSpec extends SparkSpec {
     val after = mvB.read()
     assert(after.filter($"bucket" === victim).isEmpty,
       "deleted bucket must not serve stale rows")
-    assert(!new java.io.File(s"$path/bucket=$victim").exists(),
-      "empty-recompute bucket dir removed")
+    assert(!graft.streaming.ManifestSwap.resolveRaw(spark, path).get._2
+      .contains(s"bucket=$victim"), "empty-recompute bucket left the manifest")
+    assert(after.filter(pmod($"invoice_id", lit(nB.toLong)) === victim).isEmpty,
+      "no served row is in the emptied bucket")
     // other buckets untouched
     assert(after.count() ==
       lines.join(orders.filter(pmod($"o_orderkey", lit(nB.toLong)) =!= victim),
