@@ -85,21 +85,23 @@ object InvoiceCdc {
     * Integer-safe fields so the JSON text is byte-identical across engines:
     * qty is integral in the testdata; price is carried as cents. */
   def nestedLines(li: DataFrame): DataFrame =
-    lineArrays(li).select(col("invoice_id"), renderLines(col("lines")).as("lines"))
+    li.groupBy(col("l_orderkey").as("invoice_id"))
+      .agg(to_json(sort_array(collect_list(struct(lineFields: _*)))).as("lines"))
+
+  /** The document fields of one line, in [[nestedLines]]' sort order. */
+  private def lineFields: Seq[Column] = Seq(
+    col("l_linenumber").cast("long").as("line_no"),
+    col("l_partkey").as("part_key"),
+    col("l_quantity").cast("long").as("qty"),
+    round(col("l_extendedprice") * 100).cast("long").as("price_cents"))
 
   /** The lines of each invoice as a sorted `array<struct>`: the document
-    * fields of [[nestedLines]] in its sort order, plus the raw
-    * `l_quantity`, which the materialized view rounds where the document
-    * truncates. It only breaks ties the document fields leave, so the
-    * order of the rendered fields is [[nestedLines]]' order. */
+    * fields plus the raw `l_quantity`, which the materialized view rounds
+    * where the document truncates. It only breaks ties the document
+    * fields leave, so the rendered order is [[nestedLines]]' order. */
   private def lineArrays(li: DataFrame): DataFrame =
     li.groupBy(col("l_orderkey").as("invoice_id"))
-      .agg(sort_array(collect_list(struct(
-        col("l_linenumber").cast("long").as("line_no"),
-        col("l_partkey").as("part_key"),
-        col("l_quantity").cast("long").as("qty"),
-        round(col("l_extendedprice") * 100).cast("long").as("price_cents"),
-        col("l_quantity")))).as("lines"))
+      .agg(sort_array(collect_list(struct(lineFields :+ col("l_quantity"): _*))).as("lines"))
 
   /** The JSON text of a [[lineArrays]] array: the document fields only. */
   private def renderLines(lines: Column): Column =
