@@ -3,7 +3,7 @@
 
 Usage:
   python3 tools/probe_ab.py --base <commit> --head <commit> --keys k1,k2
-      [--pairs 3] [--sf /path/to/sf0.1] [--cpus N] [--scratch DIR] [--out ab.json]
+      [--pairs 3] [--sf SF_DIR] [--cpus N] [--scratch DIR] [--out ab.json]
 
 Each commit is exported with `git archive` into its own directory under
 --scratch (as perfbench/ab.py does) and compiled once. Pair i then runs
@@ -24,8 +24,15 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROBE = re.compile(r"^PROBE (\S+)\s+cold=\s*([\d.]+) warm=\s*([\d.]+)?(?: warm2=\s*([\d.]+))?")
-SBT_OPTS = ("-Dsbt.override.build.repos=true -Dsbt.repository.config=/root/.sbt/repositories "
-            "-Dsbt.offline=true -Xmx4g")
+
+
+def sbt_opts():
+    """Offline sbt, with the user's repository override when there is one."""
+    opts = ["-Dsbt.offline=true", "-Xmx4g"]
+    repos = os.path.expanduser("~/.sbt/repositories")
+    if os.path.exists(repos):
+        opts += ["-Dsbt.override.build.repos=true", f"-Dsbt.repository.config={repos}"]
+    return " ".join(opts)
 
 
 def export(commit, dest):
@@ -69,14 +76,15 @@ def main():
     ap.add_argument("--head", required=True)
     ap.add_argument("--keys", required=True)
     ap.add_argument("--pairs", type=int, default=3)
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf", help="scale-factor dir (default: BenchProbe's own)")
     ap.add_argument("--cpus", default=str(os.cpu_count()))
     ap.add_argument("--scratch", default="/tmp/graft-probe-ab")
     ap.add_argument("--out")
     a = ap.parse_args()
     keys = a.keys.split(",")
-    env = dict(os.environ, COURSIER_MODE="offline", SBT_OPTS=SBT_OPTS,
-               SPARK_GRAFT_SF_DIR=a.sf, SPARK_GRAFT_CPUS=a.cpus)
+    env = dict(os.environ, COURSIER_MODE="offline", SBT_OPTS=sbt_opts(), SPARK_GRAFT_CPUS=a.cpus)
+    if a.sf:
+        env["SPARK_GRAFT_SF_DIR"] = a.sf
     sides = {"base": os.path.join(a.scratch, "probe-base"),
              "head": os.path.join(a.scratch, "probe-head")}
     for side, commit in (("base", a.base), ("head", a.head)):
@@ -90,7 +98,8 @@ def main():
         for side in (("base", "head") if i % 2 == 0 else ("head", "base")):
             runs[side].append(probe(sides[side], env, keys))
             print(f"pair {i} {side}: {json.dumps(runs[side][-1])}", file=sys.stderr, flush=True)
-    report = {"base": a.base, "head": a.head, "pairs": a.pairs, "sf": a.sf, "cpus": a.cpus,
+    report = {"base": a.base, "head": a.head, "pairs": a.pairs,
+              "sf": env.get("SPARK_GRAFT_SF_DIR"), "cpus": a.cpus,
               "keys": {}}
     for k in keys:
         row = {}
