@@ -102,7 +102,7 @@ object Maintenance {
   def appendChangePage(spark: SparkSession, changeDir: String,
                        page: org.apache.spark.sql.DataFrame): Unit =
     graft.streaming.StagedAppend.append(changeDir, page, "retain")(gen =>
-      page.write.mode("overwrite").parquet(gen))
+      page.write.mode("append").parquet(gen))
 
   /** Expire + log-compact + version-ordered rewrite of a parquet
     * change table (tag "retain"). The table follows the feed schema
@@ -133,7 +133,6 @@ object Maintenance {
     ManifestSwap.installFold(spark, changeDir, "retain", absorbed,
       keepLedger = _ => false, absorbedInPlace = Some(inPlace))(
       Retention.writeCompacted(kept, _, nFiles))
-    ManifestSwap.reap(spark, changeDir)
   }
 
   /** A serving IVF-PQ vector index due for its periodic
@@ -184,10 +183,9 @@ object Maintenance {
         vi.m, vi.dims, vi.ks, vi.iters)
       graft.llm.Pq.writeIvfPq(emb, vi.idCol, vi.vecCol, cb,
         vi.m, vi.dims, vi.planes, tmp)
-      cb.write.mode("overwrite")
+      cb.write.mode("append")
         .parquet(tmp.stripSuffix("/") + "/_codebook")
     }
-    ManifestSwap.reap(spark, vi.layoutPath)
   }
 
   /** A manifest-published table root due for generation GC in this
@@ -201,8 +199,8 @@ object Maintenance {
     * that). Superseded generations cost storage until the grace
     * elapses, never correctness — err long. gc logs loudly when it
     * reaps under a sub-default grace. The window records the grace in
-    * the table's manifest ([[ManifestSwap.recordGrace]]), so the
-    * table's rewrite sites ([[ManifestSwap.reap]]) keep it too. */
+    * the table's manifest ([[ManifestSwap.recordGrace]]), so the reap
+    * every superseding commit of the table runs keeps it too. */
   case class ManifestGc(root: String,
                         graceMs: Long =
                           ManifestSwap.DefaultGraceMs,

@@ -43,5 +43,5 @@ object Retention {
     changes
       .repartitionByRange(nFiles, col("change_version"))
       .sortWithinPartitions(col("change_version"))
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
+      .write.mode(SaveMode.Append).parquet(outPath)
 }

@@ -208,7 +208,7 @@ object Pq {
         SimSearch.hyperplaneSignature(col(vecCol), planes).as("bucket"))
       .join(encode(emb, idCol, vecCol, cb, m, dims), Seq(idCol))
       .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+      .write.mode("append").partitionBy("bucket").parquet(path)
   }
 
   /** Incremental ingest into a [[writeIvfPq]] index: sign + encode the
@@ -340,7 +340,7 @@ object Pq {
       fresh.select(col(idCol), col("bucket"))
         .join(encode(rows, idCol, vecCol, cb, m, dims), Seq(idCol))
         .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(gen)
+        .write.mode("append").partitionBy("bucket").parquet(gen)
     }
   }
 

@@ -142,7 +142,6 @@ object SimSearch {
     graft.streaming.ManifestSwap.installFold(spark, path, "ivflayout",
       absorbed, keepLedger = _ => true)(
       writeBucketedRaw(emb, idCol, vecCol, planes, _))
-    graft.streaming.ManifestSwap.reap(spark, path)
   }
 
   /** The raw bucket-partitioned write into `dir` — for the publish
@@ -162,7 +161,7 @@ object SimSearch {
     emb.select(col(idCol), col(vecCol),
       hyperplaneSignature(col(vecCol), planes).as("bucket"))
       .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+      .write.mode("append").partitionBy("bucket").parquet(dir)
   }
 
   /** Incremental ingest into the [[writeBucketed]] IVF layout: sign the
@@ -185,7 +184,7 @@ object SimSearch {
     graft.streaming.StagedAppend.append(path, rows) { gen =>
       rows.withColumn("bucket", hyperplaneSignature(col(vecCol), planes))
         .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(gen)
+        .write.mode("append").partitionBy("bucket").parquet(gen)
     }
   }
 
@@ -456,7 +455,7 @@ object SimSearch {
     graft.streaming.ManifestSwap.install(spark, s"$path/postings",
       "postings") { dir =>
       tf.repartition(termBuckets, col("tbkt"))
-        .write.mode("overwrite").partitionBy("tbkt").parquet(dir)
+        .write.mode("append").partitionBy("tbkt").parquet(dir)
     }
     // df from the WRITTEN postings — no second tokenize pass. The
     // corpus row count and the applied-batch ledger live INSIDE the
@@ -470,7 +469,7 @@ object SimSearch {
     graft.streaming.ManifestSwap.install(spark, s"$path/df",
       "postingsdf") { tmp =>
       dfRows.repartition(termBuckets, col("tbkt"))
-        .write.mode("overwrite").partitionBy("tbkt").parquet(tmp)
+        .write.mode("append").partitionBy("tbkt").parquet(tmp)
       writeSidecar(spark, tmp, "_N", n.toString)
       writeSidecar(spark, tmp, "_APPLIED", "")
     }
@@ -554,11 +553,12 @@ object SimSearch {
     * A crash between 2 and 3 leaves df counting rows no reader sees,
     * healed by [[recoverManifestPostings]], which every serving read
     * and compaction runs first: any ledgered generation missing its
-    * manifest key is keyed in (generations are never gc'd outside the
-    * compaction path, so the ledger's generation reference stays
-    * live). Retries converge at every phase: the ledger decides
-    * phase 2, the manifest key phase 3. CrashMatrixSpec kills every
-    * window.
+    * manifest key is keyed in. Only the build (whose df install resets
+    * the ledger) and the compaction (which keys every ledgered
+    * generation before its fold) reap the postings root, so the
+    * ledger's generation reference stays live. Retries converge at
+    * every phase: the ledger decides phase 2, the manifest key phase
+    * 3. CrashMatrixSpec kills every window.
     *
     * Writer contract: ONE maintainer per index, the same single-writer
     * contract as every state maintainer here (the CDC consumer model —
@@ -597,7 +597,7 @@ object SimSearch {
         .withColumn("tbkt", pmod(xxhash64(col("term")),
           lit(termBuckets.toLong)))
         .repartition(col("tbkt"))
-        .write.mode("overwrite").partitionBy("tbkt").parquet(genDir)
+        .write.mode("append").partitionBy("tbkt").parquet(genDir)
       // 2. COMMIT — fold + ledger(tag -> gen) + _N as one generation
       val staged = spark.read.schema(postingsSchema).parquet(genDir)
         .select("term", "doc_id", "tf", "tbkt")
@@ -618,7 +618,7 @@ object SimSearch {
       graft.streaming.ManifestSwap.install(spark, s"$path/df",
         "postingsdf") { tmp =>
         nextDf.repartition(termBuckets, col("tbkt"))
-          .write.mode("overwrite").partitionBy("tbkt").parquet(tmp)
+          .write.mode("append").partitionBy("tbkt").parquet(tmp)
         writeSidecar(spark, tmp, "_N", nNext.toString)
         writeSidecar(spark, tmp, "_APPLIED", lines.mkString("\n"))
       }
@@ -700,14 +700,10 @@ object SimSearch {
     graft.streaming.ManifestSwap.installFold(spark, s"$path/postings",
       "postings", absorbed, keepLedger = _ => true) { gen =>
       rows.repartition(termBuckets, col("tbkt"))
-        .write.mode("overwrite").partitionBy("tbkt").parquet(gen)
+        .write.mode("append").partitionBy("tbkt").parquet(gen)
     }
-    // superseded/orphan generations are reaped HERE and only here —
-    // the append path's ledgered generations must never be gc'd
-    // before their publish recovery can key them. The df table (one
-    // generation per append) holds no such references.
-    graft.streaming.ManifestSwap.gc(spark, s"$path/postings")
-    graft.streaming.ManifestSwap.gc(spark, s"$path/df")
+    // the fold's commit reaps superseded and orphan generations: safe,
+    // as the recovery above keyed every ledgered generation first
   }
 
   /** The lexical top-`poolSize` served from the postings index: read

@@ -37,12 +37,10 @@ import graft.streaming.ManifestSwap
   *
   * `protocol` names the publish protocol and accepts only "manifest",
   * the one protocol there is; it remains a parameter because callers
-  * written when a rename protocol also existed pass it by name.
-  * `gcGraceMs` is the table's gc grace, recorded in its manifest
-  * ([[ManifestSwap.GraceKey]]). */
+  * written when a rename protocol also existed pass it by name. A longer
+  * gc grace is recorded like any table's ([[ManifestSwap.recordGrace]]). */
 class MaterializedView(spark: SparkSession, dir: String, path: String,
-                       nBuckets: Int = 64, protocol: String = "manifest",
-                       gcGraceMs: Long = ManifestSwap.DefaultGraceMs) {
+                       nBuckets: Int = 64, protocol: String = "manifest") {
   import MaterializedView._
   require(protocol == "manifest",
     s"unknown mview protocol '$protocol' (only \"manifest\" exists)")
@@ -89,9 +87,9 @@ class MaterializedView(spark: SparkSession, dir: String, path: String,
     * generation, then CAS-merge the bucket map: present buckets point at
     * it, recomputed-empty ones leave the map (atomic with the installs,
     * so an emptied bucket never serves its dead rows), the rest keep
-    * serving their old generations. Superseded generations are reaped
-    * under the table's grace — a reader mid-scan on the old snapshot
-    * never loses its files. */
+    * serving their old generations. The commit reaps superseded
+    * generations under the table's recorded grace — a reader mid-scan
+    * on the old snapshot never loses its files. */
   private def publish(buckets: Option[Seq[Int]]): Unit = {
     val touched = buckets.map(withOldest(
       ManifestSwap.resolveRaw(spark, path).map(_._2).getOrElse(Map.empty), _))
@@ -103,10 +101,8 @@ class MaterializedView(spark: SparkSession, dir: String, path: String,
       val present = written.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSet
       val drops = touched.getOrElse(0 until nBuckets).filterNot(present)
       val adds = present.map(b => s"bucket=$b" -> s"$gen/n=${present.size}")
-      ManifestSwap.withGrace(m -- drops.map(b => s"bucket=$b") ++ adds, gcGraceMs)
+      m -- drops.map(b => s"bucket=$b") ++ adds
     }
-    ManifestSwap.gc(spark, path, graceMs = gcGraceMs)
-    ()
   }
 
   /** Full build — done once; later refreshes are incremental. Published

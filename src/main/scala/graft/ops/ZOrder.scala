@@ -145,7 +145,6 @@ object ZOrder {
     // the build is one committed generation
     graft.streaming.ManifestSwap.install(df.sparkSession, path, "zorder")(
       rawLayout(df, _, dims, files))
-    graft.streaming.ManifestSwap.reap(df.sparkSession, path)
   }
 
   /** One complete layout generation written INTO `dir`: the z-sorted
@@ -162,7 +161,7 @@ object ZOrder {
       .repartitionByRange(files, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("append").parquet(dir)
 
   /** 2-D [[layoutN]] — the original form. */
   def layout(df: DataFrame, path: String,
@@ -228,7 +227,6 @@ object ZOrder {
     graft.streaming.ManifestSwap.installFold(spark, path, "zorder",
       absorbed, keepLedger = _ => true)(
       rawLayout(spark.read.parquet(dirs: _*), _, dims, files))
-    graft.streaming.ManifestSwap.reap(spark, path)
   }
 
   private def fsOf(spark: SparkSession,

@@ -107,7 +107,7 @@ object DocumentSink {
     * `version_bucket` kept as a data column. */
   private def writeBuckets(docs: DataFrame, gen: String): Unit =
     docs.withColumn("vb_part", col("version_bucket"))
-      .write.mode("overwrite").partitionBy("vb_part").json(gen)
+      .write.mode("append").partitionBy("vb_part").json(gen)
 
   /** The sink's json leaf directories: every `vb_part=` partition dir
     * across the committed generations, optionally pruned to one bucket
@@ -237,8 +237,8 @@ object DocumentSink {
     * exactly-once layer). The survivors are derived from the SAME
     * resolution as the absorbed keys (foldSnapshot), so a page landing
     * mid-compaction keeps its own generation, neither folded nor
-    * hidden. The folded generations are reaped once the gc grace has
-    * passed ([[graft.streaming.ManifestSwap.reap]]). Run it like the
+    * hidden. The commit reaps the folded generations once the gc grace
+    * has passed. Run it like the
     * reference runs its retention cleanup: as a scheduled maintenance
     * window. */
   def compact(spark: SparkSession, dir: String,
@@ -255,6 +255,5 @@ object DocumentSink {
           expr(s"change_version div $VersionsPerBucket"))
         .repartition(col("version_bucket")), gen)
     }
-    graft.streaming.ManifestSwap.reap(spark, dir)
   }
 }

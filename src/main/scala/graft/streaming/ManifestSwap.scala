@@ -61,7 +61,7 @@ private[graft] object ManifestSwap {
   val DataKey = "data"
 
   /** Test-only failpoint: when set to (tag, window), every publish
-    * ([[publish]], [[commitUpdate]]) for a matching tag throws at that
+    * ([[commitGeneration]], [[commitUpdate]]) for a matching tag throws at that
     * window — "afterGenWrite" (generation staged, pointer untouched:
     * the orphan window), "beforeCommit" (between
     * resolving the next number and the atomic create: the CAS window),
@@ -404,15 +404,38 @@ private[graft] object ManifestSwap {
 
   // ------------------------------------------------------- publish --
 
-  /** THE publish step every write here shares: stage one immutable
-    * generation via `write(genDir)`, then CAS-merge `update(gen, m)`
-    * over the freshest manifest `m`. Returns the committed map. */
+  /** THE publish step of every commit that supersedes data ([[install]],
+    * [[installFold]], the materialized view's bucket map): commit one
+    * generation ([[commitGeneration]]), then reap — [[gc]] under the
+    * housekeeping grace or the table's longer recorded one — because
+    * each such commit leaves a whole superseded copy behind. The
+    * postings root reaps too: its build's df install resets the append
+    * ledger, and its compaction keys every ledgered generation before
+    * the fold. Returns the committed map. */
   private[graft] def publish(spark: SparkSession, path: String, tag: String)
+      (write: String => Unit)
+      (update: (String, Map[String, String]) => Map[String, String])
+      : Map[String, String] = {
+    val m = commitGeneration(spark, path, tag)(write)(update)
+    gc(spark, path, graceMs = housekeepingGraceMs)
+    m
+  }
+
+  /** Mint one generation with its [[GenStartMarker]], fill it via
+    * `write(genDir)` — in APPEND mode: an overwrite deletes the marker
+    * [[gc]] ages orphans by, and is refused before anything commits —
+    * then CAS-merge `update(gen, m)` over the freshest manifest `m`. */
+  private def commitGeneration(spark: SparkSession, path: String, tag: String)
       (write: String => Unit)
       (update: (String, Map[String, String]) => Map[String, String])
       : Map[String, String] = {
     val (gen, dir) = newGeneration(spark, path)
     write(dir)
+    if (!fsOf(spark, path).exists(new Path(dir, GenStartMarker)))
+      throw new IllegalStateException(
+        s"graft manifest: the writer of table $path (tag $tag) deleted " +
+          s"its generation's $GenStartMarker marker — generation " +
+          "writers must write in append mode, never overwrite")
     trip(tag, "afterGenWrite")
     commitUpdate(spark, path, tag)(update(gen, _))
   }
@@ -421,8 +444,8 @@ private[graft] object ManifestSwap {
     * as the whole snapshot, dropping every other key but the table's
     * recorded grace ([[GraceKey]]) and the in-place records
     * ([[RawPrefix]], [[InPlaceKey]]: absorbed in-place files must stay
-    * hidden until [[gc]] deletes them).
-    * Concurrent installs converge: last committed pointer wins, and
+    * hidden until [[gc]] deletes them); [[publish]] reaps what it
+    * superseded. Concurrent installs converge: last committed pointer wins, and
     * every committed pointer names a COMPLETE generation. */
   def install(spark: SparkSession, path: String, tag: String = "merge")
              (write: String => Unit): Unit = {
@@ -538,7 +561,8 @@ private[graft] object ManifestSwap {
     * `app:key -> gen` unless the key is already present (committed
     * data or a folded ledger line), in which case the stage is
     * abandoned as an orphan (gc reaps it; committing nothing twice is
-    * the point). No pending dirs, no publish step, no heal: a crashed
+    * the point). An append supersedes nothing, so it does not reap. No
+    * pending dirs, no heal: a crashed
     * appender retried with the same content-derived key converges
     * because the commit and the ledger line are ONE atomic pointer
     * write. Concurrent readers resolve either the pre-append or the
@@ -567,7 +591,7 @@ private[graft] object ManifestSwap {
           "it takes appends.")
     val full = AppPrefix + key
     val m = resolveRaw(spark, path).map(_._2).filter(_.contains(full)).getOrElse(
-      publish(spark, path, tag)(write)((gen, m) =>
+      commitGeneration(spark, path, tag)(write)((gen, m) =>
         if (m.contains(full)) m else m + (full -> gen)))
     m.get(full).filter(_ != FoldedVal).map(entryPath(path, _))
   }
@@ -650,7 +674,8 @@ private[graft] object ManifestSwap {
     * maintainer caller contract). `absorbedInPlace`, given for a
     * change table, names the in-place entries the fold read
     * ([[foldSnapshotInPlace]]); the same commit records them under
-    * [[RawPrefix]] and marks the root [[InPlaceKey]]. */
+    * [[RawPrefix]] and marks the root [[InPlaceKey]]; [[publish]]
+    * reaps what it superseded. */
   def installFold(spark: SparkSession, path: String, tag: String,
                   absorbed: Set[String], keepLedger: String => Boolean,
                   absorbedInPlace: Option[Set[String]] = None)
@@ -675,13 +700,14 @@ private[graft] object ManifestSwap {
   /** Commit-time trim cadence; see [[commitUpdate]]. */
   private[graft] val TrimEvery = 32
   /** Grace of the protocol's own housekeeping — the commit-time trim
-    * and [[reap]] — [[DefaultGraceMs]] in production; tests shrink it
-    * to exercise deletion without waiting out a 15-minute window. */
+    * and the reap of every [[publish]] — [[DefaultGraceMs]] in
+    * production; tests shrink it to exercise deletion without waiting
+    * out a 15-minute window. */
   @volatile private[graft] var housekeepingGraceMs: Long = DefaultGraceMs
 
   /** Manifest key recording a table's own gc grace in milliseconds,
     * for tables whose scans may outlast [[DefaultGraceMs]]: every gc of
-    * the root — [[reap]] at its rewrite sites, the commit-time trim,
+    * the root — the reap of every [[publish]], the commit-time trim,
     * [[gc]] itself — keeps the larger of it and the caller's grace.
     * [[install]] carries it forward like the in-place records. */
   private[graft] val GraceKey = "grace-ms"
@@ -693,8 +719,8 @@ private[graft] object ManifestSwap {
   /** The manifest update that records `graceMs` as a table's grace. A
     * grace no longer than the default is recorded as no key: the
     * housekeeping grace already covers it. */
-  private[graft] def withGrace(m: Map[String, String],
-                               graceMs: Long): Map[String, String] =
+  private def withGrace(m: Map[String, String],
+                        graceMs: Long): Map[String, String] =
     if (graceMs <= DefaultGraceMs) m - GraceKey
     else m + (GraceKey -> graceMs.toString)
 
@@ -706,18 +732,6 @@ private[graft] object ManifestSwap {
       commitUpdate(spark, path, "grace")(withGrace(_, graceMs))
       ()
     }
-
-  /** [[gc]] under the housekeeping grace, run by every rewrite site
-    * right after its commit: each install supersedes a whole copy of
-    * its table, and a per-batch maintainer would otherwise keep one
-    * copy per batch on disk. The postings root is the one site that
-    * does not: its append path stages generations that only its
-    * publish recovery keys in, so only its compaction gc's it, after
-    * that recovery. */
-  def reap(spark: SparkSession, path: String): Unit = {
-    gc(spark, path, graceMs = housekeepingGraceMs)
-    ()
-  }
 
   /** Trim superseded manifest FILES (and aged `.tmp-*` commit-crash
     * orphans) from `_ptr`, keeping exactly what the reader guarantee

@@ -115,16 +115,14 @@ object StreamingAggView {
   }
 
   /** Publish one view fold as a single-file generation stamped with
-    * `batchId`, then reap the view copies it superseded — a view is
-    * rewritten whole on every batch. */
+    * `batchId`; the install reaps the view copies it superseded — a
+    * view is rewritten whole on every batch. */
   private def installView(spark: SparkSession, dir: String, tag: String,
-                          view: DataFrame, batchId: Long): Unit = {
+                          view: DataFrame, batchId: Long): Unit =
     ManifestSwap.install(spark, dir, tag) { tmp =>
-      view.coalesce(1).write.mode("overwrite").parquet(tmp)
+      view.coalesce(1).write.mode("append").parquet(tmp)
       writeGenInto(spark, tmp, batchId)
     }
-    ManifestSwap.reap(spark, dir)
-  }
 
   /** Latest-op-wins collapse WITHIN one batch (T5). */
   private def collapse(batch: DataFrame): DataFrame =
@@ -243,7 +241,7 @@ object StreamingAggView {
     val gen = ManifestSwap.appendKeyed(spark, s"$root/log", "aggviewlog",
       s"batch-$batchId") { gen =>
       collapse(batch).withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").parquet(gen)
+        .write.mode("append").parquet(gen)
     }
     // a batch a log trim already absorbed lives on in the folded base
     val page = gen.fold(readLog(spark, root).filter(col("batch_id") === batchId))(
@@ -537,10 +535,9 @@ object StreamingAggView {
         // repartition on ebkt so every bucket dir is written by exactly
         // one task — one file per bucket, the pruning-friendly layout
         next.repartition(stateBuckets, col("ebkt"))
-          .write.mode("overwrite").partitionBy("ebkt").parquet(tmp)
+          .write.mode("append").partitionBy("ebkt").parquet(tmp)
         writeGenInto(spark, tmp, bound)
       }
-      ManifestSwap.reap(spark, s"$root/statecp")
     }
     // trim = fold the tail into a fresh base. The keys of batches at or
     // below the bound DROP (batch ids are checkpoint-monotonic and never
@@ -560,8 +557,7 @@ object StreamingAggView {
       .localCheckpoint(true)
     ManifestSwap.installFold(spark, logDir, "aggviewlog", absorbed,
       keepLedger = _.stripPrefix("batch-").toLong > bound)(gen =>
-      tail.write.mode("overwrite").parquet(gen))
-    ManifestSwap.reap(spark, logDir)
+      tail.write.mode("append").parquet(gen))
   }
 
   /** The current view (empty before the first fold). */

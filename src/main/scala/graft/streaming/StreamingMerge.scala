@@ -51,14 +51,13 @@ object StreamingMerge {
         col("m.change_operation").as("change_operation"))
 
   /** One maintenance step: merge a collapsed batch into the state
-    * table and publish the new state ([[ManifestSwap.install]]), then
-    * reap the copies it superseded ([[ManifestSwap.reap]]). */
+    * table and publish the new state ([[ManifestSwap.install]], which
+    * also reaps the copies it superseded). */
   private[graft] def applyBatch(spark: SparkSession, statePath: String,
                                     collapsed: DataFrame): Unit = {
     val next = Merge.mergeUpsert(stateTable(spark, statePath), collapsed)
     ManifestSwap.install(spark, statePath)(tmp =>
-      next.write.mode("overwrite").parquet(tmp))
-    ManifestSwap.reap(spark, statePath)
+      next.write.mode("append").parquet(tmp))
   }
 
   /** Launch continuous state maintenance over a change-table file —

@@ -38,8 +38,8 @@ object StreamingScd2 {
 
   /** One maintenance step: rebuild the touched entities' histories
     * from (stored changes ∪ batch changes), pass untouched entities
-    * through, publish ([[ManifestSwap.install]]) and reap the
-    * superseded copies ([[ManifestSwap.reap]]). `batch` columns:
+    * through and publish ([[ManifestSwap.install]], which also reaps
+    * the superseded copies). `batch` columns:
     * (invoice_id, change_version, change_operation). */
   private[graft] def applyBatch(spark: SparkSession, historyPath: String,
                                     batch: DataFrame): Unit = {
@@ -55,8 +55,7 @@ object StreamingScd2 {
     val next = untouched.unionByName(
       rebuilt.select(untouched.columns.toIndexedSeq.map(col): _*))
     ManifestSwap.install(spark, historyPath)(tmp =>
-      next.write.mode("overwrite").parquet(tmp))
-    ManifestSwap.reap(spark, historyPath)
+      next.write.mode("append").parquet(tmp))
   }
 
   /** Launch continuous history maintenance over a change-table file —

@@ -93,7 +93,7 @@ object HealRaceChild {
       val rv = rival
       graft.streaming.ManifestSwap.install(spark, mfRoot, "hrmf") { d =>
         spark.range(8).selectExpr(s"CAST($rv AS BIGINT) AS v")
-          .write.mode("overwrite").parquet(d)
+          .write.mode("append").parquet(d)
       }
     }
     if (mfReads == 0L) sys.error("manifest reader loop never resolved")
@@ -176,7 +176,7 @@ object HealRaceChild {
     graft.streaming.ManifestSwap.appendKeyed(spark, p11b, "hr11",
       "slow-batch") { dir =>
       spark.range(1000L, 1050L).selectExpr("id AS v")
-        .write.mode("overwrite").parquet(dir)
+        .write.mode("append").parquet(dir)
       val d = new java.io.File(dir)
       var held = 0
       while (held < 10) {

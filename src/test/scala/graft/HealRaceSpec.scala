@@ -44,7 +44,7 @@ class HealRaceSpec extends SparkSpec {
     def mfInstall(v: Long): Unit =
       graft.streaming.ManifestSwap.install(spark, mfRoot, "hrmf") { d =>
         spark.range(8).selectExpr(s"CAST($v AS BIGINT) AS v")
-          .write.mode("overwrite").parquet(d)
+          .write.mode("append").parquet(d)
       }
     mfInstall(0L)
 
@@ -66,12 +66,12 @@ class HealRaceSpec extends SparkSpec {
     def p11aInstall(v: Long): Unit =
       graft.streaming.ManifestSwap.install(spark, p11aRoot, "hr11") { d =>
         spark.range(8).selectExpr(s"CAST($v AS BIGINT) AS v")
-          .write.mode("overwrite").parquet(d)
+          .write.mode("append").parquet(d)
       }
     val p11bRoot = tmpDir("healrace-p11b") + "/t"
     graft.streaming.ManifestSwap.install(spark, p11bRoot, "hr11") { d =>
       spark.range(0L, 50L).selectExpr("id AS v")
-        .write.mode("overwrite").parquet(d)
+        .write.mode("append").parquet(d)
     }
 
     // ---- launch the second JVM (CorpusCacheSpec precedent: same
@@ -266,7 +266,7 @@ class HealRaceSpec extends SparkSpec {
           graft.streaming.ManifestSwap.appendKeyed(spark, p11bRoot,
             "hr11", "parent-batch") { d =>
             spark.range(2000L, 2050L).selectExpr("id AS v")
-              .write.mode("overwrite").parquet(d)
+              .write.mode("append").parquet(d)
           }
           rivalDone = true
         }

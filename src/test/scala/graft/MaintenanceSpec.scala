@@ -93,7 +93,7 @@ class MaintenanceSpec extends SparkSpec {
     import graft.streaming.ManifestSwap
     (1 to 3).foreach { i =>
       ManifestSwap.install(spark, root, "t") { d =>
-        Seq(i.toLong).toDF("v").write.mode("overwrite").parquet(d)
+        Seq(i.toLong).toDF("v").write.mode("append").parquet(d)
       }
     }
     def gens = new java.io.File(s"$root/_gens").list().length

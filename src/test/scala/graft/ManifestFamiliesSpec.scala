@@ -52,6 +52,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     ZOrder.appendN(batch, pM, dims, 2)
     assert(canon(box(pM)) == want,
       "a late retry of a folded batch must not re-ingest")
+    assertGenerationsMarked(pM)
   }
 
   private def lsGens(root: String): Seq[String] =
@@ -117,6 +118,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     SimSearch.appendBucketed(batch, "vec_id", "embedding", 6, pM)
     assert(canon(top(pM)) == want,
       "a late retry after the rebuild must skip on the kept ledger")
+    assertGenerationsMarked(pM)
   }
 
   test("IVF-PQ layout, manifest: retrain installs codes+codebook as one " +
@@ -149,7 +151,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     ManifestSwap.install(spark, pM, "vecidx") { tmp =>
       graft.llm.Pq.writeIvfPq(base, "vec_id", "embedding", cb, 8, 64,
         6, tmp)
-      cb.write.mode("overwrite").parquet(tmp.stripSuffix("/") +
+      cb.write.mode("append").parquet(tmp.stripSuffix("/") +
         "/_codebook")
     }
     graft.llm.Pq.appendIvfPq(batch, "vec_id", "embedding", cb, 8, 64,
@@ -165,6 +167,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     val served = serve(pM)
     assert(served.nonEmpty && served.size == want.size,
       "post-retrain probes must serve k rows")
+    assertGenerationsMarked(pM)
   }
 
   // ---------------------------------------------------- document sink --
@@ -210,6 +213,7 @@ class ManifestFamiliesSpec extends SparkSpec {
       "sink pages carry no ledger contract — absorbed keys drop")
     assert(ManifestSwap.readDataPaths(spark, dM).size == 1,
       "compaction folds to one served generation")
+    assertGenerationsMarked(dM)
   }
 
   test("document sink, manifest: a crash inside a page delivery (gen " +
@@ -272,6 +276,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     Maintenance.appendChangePage(spark, dM, pages.head) // post-fold page
     assert(sourceRows(dM).count() > afterFold,
       "appends keep landing after the fold")
+    assertGenerationsMarked(dM)
   }
 
   // -------------------------------------------------- aggview log --
@@ -307,6 +312,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     assert(got2.exceptAll(direct2).isEmpty &&
       direct2.exceptAll(got2).isEmpty,
       "fold after manifest-log compaction diverged")
+    assertGenerationsMarked(s"$root/log")
   }
 
   // ----------------------------------------------------- postings --
@@ -357,6 +363,8 @@ class ManifestFamiliesSpec extends SparkSpec {
     }
     assert(healed == retried,
       "serving-path heal and appender retry must converge identically")
+    assertGenerationsMarked(s"$pM/postings")
+    assertGenerationsMarked(s"$pM/df")
   }
 
   test("LIVE race, manifest z-order: an appender+fold maintainer with " +
@@ -417,7 +425,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     Seq(1L, 2L).toDF("v").write.mode("overwrite").parquet(root)
     val e = intercept[UnsupportedOperationException] {
       ManifestSwap.appendKeyed(spark, root, "t", "b1")(
-        Seq(3L).toDF("v").write.mode("overwrite").parquet(_))
+        Seq(3L).toDF("v").write.mode("append").parquet(_))
     }
     assert(e.getMessage.contains("in-place"), e.getMessage)
   }

@@ -13,7 +13,7 @@ class ManifestGraceSpec extends SparkSpec {
   private def gens(root: String): Int = new java.io.File(s"$root/_gens").list().length
 
   private def installVals(root: String, v: Long): Unit =
-    ManifestSwap.install(spark, root, "t")(Seq(v).toDF("v").write.mode("overwrite").parquet(_))
+    ManifestSwap.install(spark, root, "t")(Seq(v).toDF("v").write.mode("append").parquet(_))
 
   test("a recorded grace outlives a rewrite-site reap; a root without one reaps as before") {
     val kept = tmpDir("grace-kept") + "/t"
@@ -25,7 +25,6 @@ class ManifestGraceSpec extends SparkSpec {
         if (root == kept) ManifestSwap.recordGrace(spark, root, hour)
         installVals(root, 2L)
         installVals(root, 3L)
-        ManifestSwap.reap(spark, root)
       }
     } finally ManifestSwap.housekeepingGraceMs = ManifestSwap.DefaultGraceMs
     assert(ManifestSwap.resolveRaw(spark, kept).get._2.get(ManifestSwap.GraceKey)
@@ -37,9 +36,18 @@ class ManifestGraceSpec extends SparkSpec {
 
   test("a materialized view records its grace; a default grace records none") {
     val long = tmpDir("grace-mv") + "/v"
-    new graft.ops.MaterializedView(spark, sf, long, nBuckets = 4, gcGraceMs = hour).build()
+    val mv = new graft.ops.MaterializedView(spark, sf, long, nBuckets = 4)
+    mv.build()
+    ManifestSwap.recordGrace(spark, long, hour)
+    ManifestSwap.housekeepingGraceMs = 0L
+    try {
+      // ids 0-3 touch every bucket: each refresh supersedes the whole view
+      mv.refresh(Seq(0L, 1L, 2L, 3L))
+      mv.refresh(Seq(0L, 1L, 2L, 3L))
+    } finally ManifestSwap.housekeepingGraceMs = ManifestSwap.DefaultGraceMs
     assert(ManifestSwap.resolveRaw(spark, long).get._2.get(ManifestSwap.GraceKey)
-      .contains(hour.toString))
+      .contains(hour.toString), "the bucket-map commits carry the grace forward")
+    assert(gens(long) == 3, "the 1-hour grace keeps every superseded generation")
     val default = tmpDir("grace-mv-default") + "/v"
     new graft.ops.MaterializedView(spark, sf, default, nBuckets = 4).build()
     assert(!ManifestSwap.resolveRaw(spark, default).get._2.contains(ManifestSwap.GraceKey))

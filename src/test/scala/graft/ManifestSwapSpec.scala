@@ -13,7 +13,7 @@ class ManifestSwapSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeVals(vs: Long*)(d: String): Unit =
-    vs.toDF("v").write.mode("overwrite").parquet(d)
+    vs.toDF("v").write.mode("append").parquet(d)
 
   private def readVals(root: String): Seq[Long] =
     ManifestSwap.readPath(spark, root)
@@ -75,6 +75,22 @@ class ManifestSwapSpec extends SparkSpec {
       "the raced install must still land (rival superseded, LWW)")
     val ptrs = lsNames(s"$root/_ptr").filter(_.endsWith(".mf"))
     assert(ptrs.size == 3, s"0,1(rival),2 expected: $ptrs")
+  }
+
+  test("a generation writer in overwrite mode deletes the gc marker: the " +
+      "publish refuses loudly before any commit") {
+    val root = tmpDir("mswap-ow") + "/t"
+    ManifestSwap.install(spark, root, "t")(writeVals(1L))
+    val before = ManifestSwap.resolveRaw(spark, root)
+    val e = intercept[IllegalStateException] {
+      ManifestSwap.install(spark, root, "t")(
+        Seq(2L).toDF("v").write.mode("overwrite").parquet(_))
+    }
+    assert(e.getMessage.contains(root) && e.getMessage.contains("append"),
+      e.getMessage)
+    assert(ManifestSwap.resolveRaw(spark, root) == before,
+      "nothing may commit: same manifest number, same payload")
+    assert(readVals(root) == Seq(1L))
   }
 
   test("gc: reaps superseded and orphan generations past the grace " +

@@ -77,6 +77,7 @@ class MaterializedViewSpec extends SparkSpec {
     assert(after.count() ==
       lines.join(orders.filter(pmod($"o_orderkey", lit(nB.toLong)) =!= victim),
         $"l_orderkey" === $"o_orderkey").count())
+    assertGenerationsMarked(path)
   }
 
   test("refresh with an empty change set is a no-op") {

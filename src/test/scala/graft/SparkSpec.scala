@@ -27,6 +27,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     p +: (p.children ++ inner).flatMap(planNodes)
   }
+
+  /** Every generation a committed manifest of the local table `root`
+    * names still holds the `_GENSTART` marker gc ages orphans by — the
+    * marker a generation writer in overwrite mode deletes. */
+  protected def assertGenerationsMarked(root: String): Unit = {
+    val manifests = Option(new java.io.File(s"$root/_ptr").listFiles())
+      .toSeq.flatten.filter(_.getName.endsWith(".mf"))
+    assert(manifests.nonEmpty, s"$root has no committed manifest")
+    val gens = manifests.flatMap(f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .split("\n").toSeq.map(_.split("\t")).collect {
+          case Array(_, v) if v.startsWith("g-") => v.takeWhile(_ != '/')
+        }).distinct
+    assert(gens.nonEmpty, s"$root: no manifest names a generation")
+    val unmarked = gens.filterNot(g =>
+      new java.io.File(s"$root/_gens/$g/_GENSTART").isFile)
+    assert(unmarked.isEmpty, s"$root: generations without _GENSTART: $unmarked")
+  }
 }
 
 object SparkSpec {

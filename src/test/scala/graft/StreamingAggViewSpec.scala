@@ -20,7 +20,7 @@ class StreamingAggViewSpec extends SparkSpec {
     * lands, the folds do not: the torn window a crash leaves. */
   private def tornAppend(root: String, torn: DataFrame, id: Long): Unit =
     graft.streaming.ManifestSwap.appendKeyed(spark, s"$root/log",
-      "aggviewlog", s"batch-$id")(torn.write.mode("overwrite").parquet(_))
+      "aggviewlog", s"batch-$id")(torn.write.mode("append").parquet(_))
 
   private def freshRoot(tag: String): String = {
     val root = s"/tmp/graft-aggview-spec-$tag-${System.nanoTime()}"
@@ -371,6 +371,8 @@ class StreamingAggViewSpec extends SparkSpec {
     StreamingAggView.compactLog(spark, s"$root/state")
     assert(StreamingAggView.stateGen(spark, s"$root/state") == 1L)
     assert(logParts(s"$root/state") == Set.empty)
+    Seq("view", "viewmm", "statecp").foreach(d =>
+      assertGenerationsMarked(s"$root/state/$d"))
   }
 
   test("the streaming maintainer drains staged pages to the direct view") {

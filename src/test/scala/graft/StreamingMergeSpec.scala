@@ -33,6 +33,7 @@ class StreamingMergeSpec extends SparkSpec {
       state, tmpDir("smerge-ckpt"), pageVersions = 800L)
     q.awaitTermination(180000)
     assertStateEqualsSnapshot(state)
+    assertGenerationsMarked(state)
   }
 
   test("crash between state swap and checkpoint commit converges on restart") {

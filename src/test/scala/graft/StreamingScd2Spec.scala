@@ -34,6 +34,7 @@ class StreamingScd2Spec extends SparkSpec {
       history, tmpDir("sscd2-ckpt"), pageVersions = 800L)
     q.awaitTermination(180000)
     assertEqualsBatchHistory(history)
+    assertGenerationsMarked(history)
   }
 
   test("crash between history swap and checkpoint commit converges on restart") {
