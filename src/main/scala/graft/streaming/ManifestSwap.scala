@@ -61,9 +61,9 @@ private[graft] object ManifestSwap {
   val DataKey = "data"
 
   /** Test-only failpoint: when set to (tag, window), every publish
-    * ([[commitGeneration]], [[commitUpdate]]) for a matching tag throws at that
-    * window — "afterGenWrite" (generation staged, pointer untouched:
-    * the orphan window), "beforeCommit" (between
+    * ([[commitGeneration]], [[commitUpdate]]) for a matching tag throws
+    * at that window — "afterGenWrite" (generation staged, pointer
+    * untouched: the orphan window), "beforeCommit" (between
     * resolving the next number and the atomic create: the CAS window),
     * "afterCommit" (pointer landed, superseded generations not yet
     * GC'd). */
@@ -445,8 +445,8 @@ private[graft] object ManifestSwap {
     * recorded grace ([[GraceKey]]) and the in-place records
     * ([[RawPrefix]], [[InPlaceKey]]: absorbed in-place files must stay
     * hidden until [[gc]] deletes them); [[publish]] reaps what it
-    * superseded. Concurrent installs converge: last committed pointer wins, and
-    * every committed pointer names a COMPLETE generation. */
+    * superseded. Concurrent installs converge: last committed pointer
+    * wins, and every committed pointer names a COMPLETE generation. */
   def install(spark: SparkSession, path: String, tag: String = "merge")
              (write: String => Unit): Unit = {
     publish(spark, path, tag)(write)((gen, m) =>
